@@ -70,7 +70,6 @@ class CrawlEngine:
         warehouse: str,
         config: "SimConfig | None" = None,
         seeds: "list | None" = None,
-        use_bloom: bool = False,
         seen_filter: "str | None" = None,
         pages_bucketed: bool = False,
         compact_seen_every: "int | None" = None,
@@ -86,9 +85,8 @@ class CrawlEngine:
         # off (asserted by tests for both implementations). Worth it when
         # the seen set dwarfs per-round candidates (the 10^10 regime); pure
         # overhead at toy scale, hence opt-in.
-        # seen_filter: None | 'bloom' | 'cuckoo' (use_bloom kept for
-        # back-compat).
-        self.seen_filter = seen_filter or ("bloom" if use_bloom else None)
+        # seen_filter: None | 'bloom' | 'cuckoo'.
+        self.seen_filter = seen_filter
         self.robots = robots_mod.RobotsCache(robots_corpus)
         self.attrs = host_attrs
         self.cat = Catalog(warehouse)
@@ -407,7 +405,7 @@ class CrawlEngine:
             # planning over the uncompacted file list
             self._mem[name] = None
 
-    def _release(self):
+    def _drop_views(self):
         # drop in-run views (incl. the compacted base — the committed
         # snapshots hold the same rows); later reads re-load from them
         self._mem = {k: None for k in self._mem}
@@ -933,7 +931,7 @@ class CrawlEngine:
                     "round int, host string, event string")
                 .repartition(1), self.round_no)
         # drop cached deltas; later reads come from the committed snapshots
-        self._release()
+        self._drop_views()
         return {"rounds": self.round_no,
                 "states": {h: d["state"] for h, d in self.dom.items()}}
 

@@ -1,35 +1,67 @@
-"""Shared localCheckpoint bookkeeping for the iterative operators
-(connected components, PageRank, HITS, BPE merge learning).
+"""Block lifetime for the iterative operators: one scope owns every table
+an operator call pins.
 
-``localCheckpoint(eager=True)`` truncates lineage but registers blocks
-that ``DataFrame.unpersist`` alone does not free; every iterative
-operator therefore tracks the persistent-RDD ids each checkpoint
-registers and releases the superseded round's blocks explicitly, so at
-most two generations of a loop's tables are ever live on executors.
-This module is the single implementation of that pattern (it previously
-existed as four identical closures).
+``localCheckpoint(eager=True)`` truncates lineage (an iterative plan that
+references the previous round more than once otherwise grows
+exponentially) but registers blocks that ``DataFrame.unpersist`` does not
+free. A ``CheckpointScope`` records the persistent-RDD ids each checkpoint
+registers, so an operator states only WHICH tables live how long:
+
+* ``scope.ckpt(df, replaces=prev)`` eagerly checkpoints ``df`` and frees
+  the superseded generation ``prev`` (a frame or a tuple of frames), so a
+  loop holds at most two generations of each table;
+* ``scope.persist(df)`` pins a layout (an edge table every round joins);
+* ``scope.keep(df)`` leaves the blocks of a checkpoint that backs the
+  operator's result live past the scope.
+
+Leaving the ``with`` block, by return or by raise, frees everything else,
+so no exit path can leak a table or free the one the caller reads.
 """
 
 from __future__ import annotations
 
 
-def ckpt_tools(sc):
-    """Return ``(ckpt, release)`` bound to a SparkContext.
+class CheckpointScope:
+    def __init__(self, sc):
+        self._sc = sc
+        self._live = {}       # id(checkpointed frame) -> (frame, rdd ids)
+        self._persisted = []
 
-    ``ckpt(df)`` eagerly localCheckpoints ``df`` and returns
-    ``(checkpointed_df, new_rdd_ids)``; ``release(rdd_ids)`` unpersists
-    those blocks (tolerating ids already collected by context GC).
-    """
-    def ckpt(df):
-        before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        out = df.localCheckpoint(eager=True)
-        new = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
-        return out, new
+    def __enter__(self):
+        return self
 
-    def release(rdd_ids):
-        jmap = sc._jsc.getPersistentRDDs()
-        for i in rdd_ids:
-            if jmap.containsKey(i):
+    def __exit__(self, *exc):
+        for df in self._persisted:
+            df.unpersist()
+        for _, ids in self._live.values():
+            self._free(ids)
+
+    def _rdd_ids(self):
+        return set(self._sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    def _free(self, ids):
+        jmap = self._sc._jsc.getPersistentRDDs()
+        for i in ids:
+            if jmap.containsKey(i):  # context GC may have collected it
                 jmap.get(i).unpersist()
 
-    return ckpt, release
+    def ckpt(self, df, replaces=None):
+        """Eagerly localCheckpoint ``df``; then free ``replaces``. A
+        replaced frame this scope did not checkpoint (a lazy round-0
+        projection) owns no blocks and frees nothing."""
+        before = self._rdd_ids()
+        out = df.localCheckpoint(eager=True)
+        self._live[id(out)] = (out, self._rdd_ids() - before)
+        for prev in replaces if isinstance(replaces, tuple) else (replaces,):
+            self._free(self._live.pop(id(prev), (None, ()))[1])
+        return out
+
+    def persist(self, df):
+        out = df.persist()
+        self._persisted.append(out)
+        return out
+
+    def keep(self, df):
+        """Leave the blocks of ``df``, a frame ``ckpt`` returned, live."""
+        del self._live[id(df)]
+        return df

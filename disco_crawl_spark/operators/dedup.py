@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from .ckpt import ckpt_tools
+from .ckpt import CheckpointScope
 
 _MERSENNE = (1 << 61) - 1
 # polynomial shingle-combine constant (FNV-64 prime); uint64 wrap-multiply is
@@ -366,65 +366,64 @@ def connected_components(vertices: DataFrame, pairs: DataFrame,
     # round (exponential logical-plan growth — planning itself OOMs long
     # before the data does); lineage truncation keeps every round's plan
     # flat, the same reason the crawl engine reads its deltas back.
-    # Superseded rounds' checkpoint blocks are unpersisted explicitly
-    # (via the persistent-RDD id the checkpoint call registered), so at
-    # most two label tables are ever held on executors; the final one
-    # backs the returned DataFrame and is freed by context GC with it.
-    sc = vertices.sparkSession.sparkContext
-
-    _ckpt, _release = ckpt_tools(sc)
-
+    # The operator's CheckpointScope frees each superseded round's blocks,
+    # so at most two label tables are ever held on executors; the final
+    # one backs the returned DataFrame and is freed by context GC with it.
     comp_type = dict(vertices.dtypes)[id_col]
-    # materialize the (semi-joined) edge list once: every round's message
-    # join scans it, and without this each round would re-derive the whole
-    # upstream pair-generation plan (plus the semi-joins) from scratch
-    edges, eheld = _ckpt(edges)
-    labels = vertices.select(F.col(id_col).alias("id"),
-                             F.col(id_col).alias("comp"))
-    labels, held = _ckpt(labels)
-    for rnd in range(max_iters):
-        if rnd == 0:
-            # against the identity labeling the message join degenerates
-            # to a rename of the edge list (comp(src) == src) and the
-            # pointer jump to a no-op (comp(comp(v)) == comp(v)) — round
-            # one is just edges ∪ identity, two operators cheaper than
-            # the general round, and most near-dup graphs converge in one
-            # or two rounds
-            msgs = edges.select(F.col("dst").alias("id"),
-                                F.col("src").alias("comp"),
-                                F.lit(None).cast(comp_type).alias("old"))
-            branches = [labels.select("id", "comp",
-                                      F.col("comp").alias("old")), msgs]
+    with CheckpointScope(vertices.sparkSession.sparkContext) as scope:
+        # materialize the (semi-joined) edge list once: every round's
+        # message join scans it, and without this each round would
+        # re-derive the whole upstream pair-generation plan (plus the
+        # semi-joins) from scratch
+        edges = scope.ckpt(edges)
+        labels = cur = scope.ckpt(
+            vertices.select(F.col(id_col).alias("id"),
+                            F.col(id_col).alias("comp")))
+        for rnd in range(max_iters):
+            if rnd == 0:
+                # against the identity labeling the message join
+                # degenerates to a rename of the edge list (comp(src) ==
+                # src) and the pointer jump to a no-op (comp(comp(v)) ==
+                # comp(v)) — round one is just edges ∪ identity, two
+                # operators cheaper than the general round, and most
+                # near-dup graphs converge in one or two rounds
+                msgs = edges.select(F.col("dst").alias("id"),
+                                    F.col("src").alias("comp"),
+                                    F.lit(None).cast(comp_type).alias("old"))
+                branches = [labels.select("id", "comp",
+                                          F.col("comp").alias("old")), msgs]
+            else:
+                msgs = (edges.join(labels.withColumnRenamed("id", "src"),
+                                   "src")
+                        .select(F.col("dst").alias("id"), "comp",
+                                F.lit(None).cast(comp_type).alias("old")))
+                # pointer jump: vertex v with label c learns c's current
+                # label
+                jcomp = labels.select(F.col("id").alias("comp"),
+                                      F.col("comp").alias("jcomp"))
+                jump = (labels.join(jcomp, "comp")
+                        .select("id", F.col("jcomp").alias("comp"),
+                                F.lit(None).cast(comp_type).alias("old")))
+                own = labels.select("id", "comp", F.col("comp").alias("old"))
+                branches = [own, msgs, jump]
+            unioned = branches[0]
+            for br in branches[1:]:
+                unioned = unioned.unionByName(br)
+            cur = scope.ckpt(
+                unioned
+                .groupBy("id").agg(F.min("comp").alias("comp"),
+                                   F.max("old").alias("old"))
+                .select("id", "comp",
+                        (F.col("comp") < F.col("old")).alias("chg")),
+                replaces=cur)
+            labels = cur.select("id", "comp")
+            if cur.filter("chg").isEmpty():
+                break
         else:
-            msgs = (edges.join(labels.withColumnRenamed("id", "src"), "src")
-                    .select(F.col("dst").alias("id"), "comp",
-                            F.lit(None).cast(comp_type).alias("old")))
-            # pointer jump: vertex v with label c learns c's current label
-            jump = (labels.join(labels.select(F.col("id").alias("comp"),
-                                              F.col("comp").alias("jcomp")),
-                                "comp")
-                    .select("id", F.col("jcomp").alias("comp"),
-                            F.lit(None).cast(comp_type).alias("old")))
-            own = labels.select("id", "comp", F.col("comp").alias("old"))
-            branches = [own, msgs, jump]
-        unioned = branches[0]
-        for br in branches[1:]:
-            unioned = unioned.unionByName(br)
-        new_labels, new_held = _ckpt(
-            unioned
-            .groupBy("id").agg(F.min("comp").alias("comp"),
-                               F.max("old").alias("old"))
-            .select("id", "comp", (F.col("comp") < F.col("old")).alias("chg")))
-        _release(held)
-        labels, held = new_labels.select("id", "comp"), new_held
-        if new_labels.filter("chg").isEmpty():
-            break
-    else:
-        _release(eheld)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
-            f"(component diameter > 2^{max_iters}?)")
-    _release(eheld)
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iters} "
+                f"rounds (component diameter > 2^{max_iters}?)")
+        scope.keep(cur)
     return labels
 
 

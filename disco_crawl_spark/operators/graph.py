@@ -24,7 +24,7 @@ Scale notes (the 100 TB reading):
   the outer node join), so without lineage truncation the logical plan
   grows ~3^k and planning itself becomes the bottleneck — the same
   failure mode measured for connected_components (dedup.py). Superseded
-  checkpoints are unpersisted explicitly.
+  checkpoints are freed by the operator's ``ckpt.CheckpointScope``.
 * ``anchor_text_agg`` is two map-side-combinable hash aggregations and
   nothing else — no window, no sort: the per-target winner is elected
   with ``max(struct(cnt, anchor))`` exactly like the passage-dedup winner
@@ -39,19 +39,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .ckpt import ckpt_tools
+from .ckpt import CheckpointScope
 
 __all__ = ["pagerank", "anchor_text_agg", "hits", "bfs_depth",
            "cocitation", "label_propagation", "resolve_redirects",
            "reciprocity", "opic", "harmonic_centrality"]
 
 
+# Intermediate pagerank rounds chained lazily between eager checkpoints on
+# dangling-free graphs (graphs with dangling nodes checkpoint every round).
+_PAGERANK_CKPT_EVERY = 6
+
+
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              iters: int = 5, damping: float = 0.85,
              dedup_edges: bool = True,
              personalization: DataFrame | None = None,
-             seed_col: str | None = None,
-             ckpt_every: int = 6) -> DataFrame:
+             seed_col: str | None = None) -> DataFrame:
     """Power-iteration PageRank over an edge table; returns (node, pagerank).
 
     Semantics (the textbook formulation, so the DuckDB oracle can unroll
@@ -62,7 +66,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     * r_{t+1}(v) = (1-d)/N + d * (sum_{u->v} r_t(u)/outdeg(u) + D_t/N)
       where D_t = total rank mass on dangling nodes (no out-edges)
     * exactly ``iters`` synchronous rounds, no convergence test — the
-      caller picks the round count (rank deltas decay ~d^t).
+      caller picks the round count (rank deltas decay ~d^t); ``iters=0``
+      returns r0.
 
     With ``personalization`` (a one-column DataFrame of seed node ids)
     this becomes TrustRank (Gyöngyi et al. 2004) — the spam-demotion
@@ -89,148 +94,136 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     always eagerly localCheckpoint-ed (consumers read settled blocks and
     a downstream ``count()`` measures real work). On dangling-free
     graphs a round references the previous ranks exactly once, so up to
-    ``ckpt_every`` intermediate rounds chain lazily as a straight-line
-    plan (linear work — verified with a noop sink); with dangling nodes
-    present the per-round 1-row dangling aggregate adds a second
-    reference, and lazily chained copies stop being stage-cache-
+    ``_PAGERANK_CKPT_EVERY`` intermediate rounds chain lazily as a
+    straight-line plan (linear work — verified with a noop sink); with
+    dangling nodes present the per-round 1-row dangling aggregate adds a
+    second reference, and lazily chained copies stop being stage-cache-
     deduplicatable once column pruning de-canonicalizes them (O(2^k)
     real work), so those graphs checkpoint every round.
     """
-    # checkpoint bookkeeping mirrors dedup.connected_components: track the
-    # persistent-RDD ids each localCheckpoint registers and release the
-    # superseded round's blocks explicitly (DataFrame.unpersist alone does
-    # not free a checkpoint RDD), so at most two rank tables are ever live
-    sc = edges.sparkSession.sparkContext
-
-    _ckpt, _release = ckpt_tools(sc)
-
-    # the deduped edge table feeds THREE derivations (node set, outdeg,
-    # the per-round join layout) — materialize it once so none of them
-    # re-runs the upstream lineage
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    if dedup_edges:
-        e = e.distinct()
-    e, e_held = _ckpt(e)
-    nodes = (e.select(F.col("src").alias("n"))
-             .union(e.select(F.col("dst").alias("n")))
-             .distinct())
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double")
-                               .alias("outdeg"))
-    # one edge-side shuffle for the whole run: pre-joined with outdeg,
-    # laid out by src so every round's rank join is exchange-free on the
-    # (big) edge side
-    contrib_edges = (e.join(deg, "src")
-                     .repartition("src")
-                     .sortWithinPartitions("src")
-                     .persist())
-    # ONE state table carries everything a round needs beside the edges:
-    # (n, dangling, p). Folding outdeg-existence and the teleport vector
-    # into the state removes three per-round operators AND three setup
-    # materializations the previous shape paid for — the dangling
-    # anti-join against deg, the outer join against nodes, and (for
-    # TrustRank) the pvec join — so a round is exactly: one edge join +
-    # one (dst) aggregation [+ one conditional 1-row aggregate] + one
-    # outer join back to the state.
-    state = (nodes.join(deg, nodes["n"] == deg["src"], "left")
-             .select("n", F.col("outdeg").isNull().alias("dangling")))
-    if personalization is not None:
-        scol = seed_col if seed_col is not None else personalization.columns[0]
-        seeds = (personalization.select(F.col(scol).alias("n")).distinct()
-                 .withColumn("__seed", F.lit(True)))
-        state = (state.join(seeds, "n", "left")
-                 .select("n", "dangling",
-                         F.coalesce("__seed", F.lit(False)).alias("seed")))
-    else:
-        state = state.select("n", "dangling", F.lit(False).alias("seed"))
-    state, state_held = _ckpt(state)
-    # three bounded driver scalars (one row) over the materialized blocks
-    # — NOT a per-row collect. n_dangling == 0 lets every round skip the
-    # dangling aggregation + broadcast outright (dmass ≡ 0 exactly): a
-    # data-dependent fast path that is exact at any scale, and real link
-    # graphs deduped on (src, dst) usually have few or no dangling nodes
-    counts = state.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum(F.col("dangling").cast("long")).alias("__d"),
-        F.sum(F.col("seed").cast("long")).alias("__s")).collect()[0]
-    n_nodes = counts["__n"]
-    n_dangling = counts["__d"] or 0
-    n_seeds = counts["__s"] or 0
-    if personalization is not None and n_seeds == 0:
-        contrib_edges.unpersist()
-        _release(e_held)
-        _release(state_held)
-        raise ValueError("pagerank personalization: no seed node is "
-                         "present in the graph")
-    base = (1.0 - damping) / n_nodes
-    # teleport vector p as a lazy projection over the state blocks
-    state = state.select(
-        "n", "dangling",
-        (F.when(F.col("seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
-         if personalization is not None else F.lit(0.0)).alias("p"))
-    # ranks carries the dangling flag so the per-round 1-row dangling
-    # aggregate scans the rank table alone (no join back to state)
-    ranks = state.select(
-        "n", "dangling",
-        (F.col("p") if personalization is not None
-         else F.lit(1.0 / n_nodes)).alias("r"))
-    # Round chaining: the final round is ALWAYS eagerly localCheckpoint-ed
-    # (materializing every column — so a downstream count() measures the
-    # real computation and consumers read settled blocks, exactly like the
-    # previous per-round shape). Intermediate rounds are chained lazily
-    # only on dangling-free graphs, where each round references the
-    # previous ranks exactly ONCE (the contrib join) — the chained
-    # segment is a straight-line plan whose materialization executes
-    # every exchange once (linear work, verified with a noop sink), it
-    # just pays one job-dispatch sequence instead of one per round.
-    # With dangling nodes present the per-round 1-row dangling aggregate
-    # adds a second reference to ranks (2^k duplicated subtrees per
-    # k-round segment once column pruning de-canonicalizes the copies),
-    # so those graphs keep the eager per-round checkpoint.
-    if n_dangling > 0:
-        ckpt_every = 1
-    held = set()
-    for t in range(1, iters + 1):
-        r_src = ranks.select(F.col("n").alias("src"), "r")
-        contrib = (contrib_edges.join(r_src, "src")
-                   .groupBy("dst")
-                   .agg(F.sum(F.col("r") / F.col("outdeg")).alias("contrib")))
-        joined = state.join(contrib, state["n"] == contrib["dst"], "left")
-        if n_dangling > 0:
-            # dangling mass: conditional 1-row aggregate over the rank
-            # table (same addend set as the former deg anti-join —
-            # summation order is already nondeterministic across
-            # partitions, which the 6dp round-trip tolerates by
-            # construction)
-            dangling = ranks.agg(
-                F.coalesce(F.sum(F.when(F.col("dangling"), F.col("r"))),
-                           F.lit(0.0)).alias("dmass"))
-            joined = joined.crossJoin(F.broadcast(dangling))
-            dmass = F.col("dmass")
+    with CheckpointScope(edges.sparkSession.sparkContext) as scope:
+        # the deduped edge table feeds THREE derivations (node set,
+        # outdeg, the per-round join layout) — materialize it once so
+        # none of them re-runs the upstream lineage
+        e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+        if dedup_edges:
+            e = e.distinct()
+        e = scope.ckpt(e)
+        nodes = (e.select(F.col("src").alias("n"))
+                 .union(e.select(F.col("dst").alias("n")))
+                 .distinct())
+        deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double")
+                                   .alias("outdeg"))
+        # one edge-side shuffle for the whole run: pre-joined with outdeg,
+        # laid out by src so every round's rank join is exchange-free on
+        # the (big) edge side
+        contrib_edges = scope.persist(e.join(deg, "src")
+                                      .repartition("src")
+                                      .sortWithinPartitions("src"))
+        # ONE state table carries everything a round needs beside the
+        # edges: (n, dangling, p). Folding outdeg-existence and the
+        # teleport vector into the state removes three per-round
+        # operators AND three setup materializations the previous shape
+        # paid for — the dangling anti-join against deg, the outer join
+        # against nodes, and (for TrustRank) the pvec join — so a round is
+        # exactly: one edge join + one (dst) aggregation [+ one
+        # conditional 1-row aggregate] + one outer join back to the state.
+        state = (nodes.join(deg, nodes["n"] == deg["src"], "left")
+                 .select("n", F.col("outdeg").isNull().alias("dangling")))
+        if personalization is not None:
+            scol = (seed_col if seed_col is not None
+                    else personalization.columns[0])
+            seeds = (personalization.select(F.col(scol).alias("n"))
+                     .distinct().withColumn("__seed", F.lit(True)))
+            state = (state.join(seeds, "n", "left")
+                     .select("n", "dangling",
+                             F.coalesce("__seed", F.lit(False))
+                             .alias("seed")))
         else:
-            dmass = F.lit(0.0)
-        if personalization is None:
-            ranks = joined.select(
-                "n", "dangling",
-                (F.lit(base) + F.lit(damping)
-                 * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + dmass / F.lit(float(n_nodes)))).alias("r"))
-        else:
-            ranks = joined.select(
-                "n", "dangling",
-                (F.lit(1.0 - damping) * F.col("p") + F.lit(damping)
-                 * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + dmass * F.col("p"))).alias("r"))
-        if t % ckpt_every == 0 or t == iters:
-            ranks, new_held = _ckpt(ranks)
-            _release(held)
-            held = new_held
-    # the final round is materialized — nothing downstream references the
-    # edge layout or the setup state any more; only the final rank blocks
-    # stay live
-    contrib_edges.unpersist()
-    _release(e_held)
-    _release(state_held)
-    return ranks.select(F.col("n").alias("node"), F.col("r").alias("pagerank"))
+            state = state.select("n", "dangling", F.lit(False).alias("seed"))
+        flags = scope.ckpt(state)
+        # three bounded driver scalars (one row) over the materialized
+        # blocks — NOT a per-row collect. n_dangling == 0 lets every round
+        # skip the dangling aggregation + broadcast outright (dmass ≡ 0
+        # exactly): a data-dependent fast path that is exact at any scale,
+        # and real link graphs deduped on (src, dst) usually have few or
+        # no dangling nodes
+        counts = flags.agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.sum(F.col("dangling").cast("long")).alias("__d"),
+            F.sum(F.col("seed").cast("long")).alias("__s")).collect()[0]
+        n_nodes = counts["__n"]
+        n_dangling = counts["__d"] or 0
+        n_seeds = counts["__s"] or 0
+        if personalization is not None and n_seeds == 0:
+            raise ValueError("pagerank personalization: no seed node is "
+                             "present in the graph")
+        base = (1.0 - damping) / n_nodes
+        # teleport vector p as a lazy projection over the state blocks
+        state = flags.select(
+            "n", "dangling",
+            (F.when(F.col("seed"), F.lit(1.0 / n_seeds))
+             .otherwise(F.lit(0.0))
+             if personalization is not None else F.lit(0.0)).alias("p"))
+        # ranks carries the dangling flag so the per-round 1-row dangling
+        # aggregate scans the rank table alone (no join back to state)
+        ranks = state.select(
+            "n", "dangling",
+            (F.col("p") if personalization is not None
+             else F.lit(1.0 / n_nodes)).alias("r"))
+        # Round chaining: the final round is ALWAYS eagerly
+        # localCheckpoint-ed (materializing every column — so a downstream
+        # count() measures the real computation and consumers read settled
+        # blocks). Intermediate rounds are chained lazily only on
+        # dangling-free graphs, where each round references the previous
+        # ranks exactly ONCE (the contrib join) — the chained segment is a
+        # straight-line plan whose materialization executes every exchange
+        # once (linear work, verified with a noop sink), it just pays one
+        # job-dispatch sequence instead of one per round. With dangling
+        # nodes present the per-round 1-row dangling aggregate adds a
+        # second reference to ranks (2^k duplicated subtrees per k-round
+        # segment once column pruning de-canonicalizes the copies), so
+        # those graphs keep the eager per-round checkpoint.
+        every = 1 if n_dangling > 0 else _PAGERANK_CKPT_EVERY
+        last = None
+        for t in range(1, iters + 1):
+            r_src = ranks.select(F.col("n").alias("src"), "r")
+            contrib = (contrib_edges.join(r_src, "src")
+                       .groupBy("dst")
+                       .agg(F.sum(F.col("r") / F.col("outdeg"))
+                            .alias("contrib")))
+            joined = state.join(contrib, state["n"] == contrib["dst"], "left")
+            if n_dangling > 0:
+                # dangling mass: conditional 1-row aggregate over the rank
+                # table (same addend set as the former deg anti-join —
+                # summation order is already nondeterministic across
+                # partitions, which the 6dp round-trip tolerates by
+                # construction)
+                dangling = ranks.agg(
+                    F.coalesce(F.sum(F.when(F.col("dangling"), F.col("r"))),
+                               F.lit(0.0)).alias("dmass"))
+                joined = joined.crossJoin(F.broadcast(dangling))
+                dmass = F.col("dmass")
+            else:
+                dmass = F.lit(0.0)
+            if personalization is None:
+                ranks = joined.select(
+                    "n", "dangling",
+                    (F.lit(base) + F.lit(damping)
+                     * (F.coalesce(F.col("contrib"), F.lit(0.0))
+                        + dmass / F.lit(float(n_nodes)))).alias("r"))
+            else:
+                ranks = joined.select(
+                    "n", "dangling",
+                    (F.lit(1.0 - damping) * F.col("p") + F.lit(damping)
+                     * (F.coalesce(F.col("contrib"), F.lit(0.0))
+                        + dmass * F.col("p"))).alias("r"))
+            if t % every == 0 or t == iters:
+                ranks = last = scope.ckpt(ranks, replaces=last)
+        # iters=0 returns r0, a projection over the state blocks
+        scope.keep(ranks if iters else flags)
+        return ranks.select(F.col("n").alias("node"),
+                            F.col("r").alias("pagerank"))
 
 
 def anchor_text_agg(links: DataFrame, target: str = "target",
@@ -280,81 +273,77 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     folded back as a literal (bit-identical IEEE division, no broadcast
     exchange, and the norm never re-runs the edge join — the simhash
     lesson applied to a 1-row aggregate). Superseded blocks are released
-    explicitly (the connected-components pattern)."""
+    by the operator's ``CheckpointScope``."""
     if iters < 1:
         raise ValueError("hits() needs iters >= 1 (scores are only "
                          "L1-normalized after a full round)")
-    sc = edges.sparkSession.sparkContext
+    with CheckpointScope(edges.sparkSession.sparkContext) as scope:
+        # the deduped edge table feeds THREE derivations (the two
+        # persisted join layouts and the node set) — materialize it once
+        # so none of them re-runs the upstream lineage (the pagerank setup
+        # lesson)
+        e = scope.ckpt(
+            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+            .distinct())
+        nodes = (e.select(F.col("src").alias("n"))
+                 .union(e.select(F.col("dst").alias("n")))
+                 .distinct())
+        by_src = scope.persist(e.repartition("src")
+                               .sortWithinPartitions("src"))
+        by_dst = scope.persist(e.repartition("dst")
+                               .sortWithinPartitions("dst"))
 
-    _ckpt, _release = ckpt_tools(sc)
+        def _l1_over_ckpt(ckpted, key, col):
+            # ckpted is a materialized (localCheckpointed) raw-score
+            # table: the 1-row L1 norm is collected as a bounded driver
+            # scalar over its blocks (one double — the pagerank n_nodes
+            # idiom) and folded back as a literal; a Python float IS an
+            # IEEE-754 double, so the division is bit-identical to the
+            # former broadcast-column form while skipping one
+            # broadcast-exchange job per half-step
+            norm = ckpted.agg(F.sum(col)).collect()[0][0]
+            return ckpted.select(F.col(key).alias("n"),
+                                 F.round(F.col(col) / F.lit(norm),
+                                         round_dp).alias(col))
 
-    # the deduped edge table feeds THREE derivations (the two persisted
-    # join layouts and the node set) — materialize it once so none of
-    # them re-runs the upstream lineage (the pagerank setup lesson)
-    e, e_held = _ckpt(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct())
-    nodes = (e.select(F.col("src").alias("n"))
-             .union(e.select(F.col("dst").alias("n")))
-             .distinct())
-    by_src = e.repartition("src").sortWithinPartitions("src").persist()
-    by_dst = e.repartition("dst").sortWithinPartitions("dst").persist()
-
-    def _l1_over_ckpt(ckpted, key, col):
-        # ckpted is a materialized (localCheckpointed) raw-score table:
-        # the 1-row L1 norm is collected as a bounded driver scalar over
-        # its blocks (one double — the pagerank n_nodes idiom) and folded
-        # back as a literal; a Python float IS an IEEE-754 double, so the
-        # division is bit-identical to the former broadcast-column form
-        # while skipping one broadcast-exchange job per half-step
-        norm = ckpted.agg(F.sum(col)).collect()[0][0]
-        return ckpted.select(F.col(key).alias("n"),
-                             F.round(F.col(col) / F.lit(norm),
-                                     round_dp).alias(col))
-
-    # Internal states are SPARSE: a score table only carries nodes whose
-    # raw sum has a contributing edge — a dense zero row neither moves
-    # any L1 norm (adds 0.0) nor any push/pull sum (joins contribute 0),
-    # so the per-half-step outer join against the full node set that the
-    # previous shape paid for is equivalent to one left join at the END
-    # that re-attaches 0.0 for never-scored nodes. A half-step checkpoint
-    # is now exactly: edge join + (dst|src) aggregation — the eager
-    # per-half-step cadence stays, because the L1 norm aggregate
-    # references the raw scores a second time (a lazily chained segment
-    # would re-execute each half-step's join once per reference after
-    # column pruning de-canonicalizes the copies).
-    # h0 over out-edge sources only (other nodes' hub 1.0 feeds no push).
-    h = by_src.select(F.col("src").alias("n")).distinct() \
-        .select("n", F.lit(1.0).alias("hub"))
-    a = None
-    a_held, h_held = set(), set()
-    for _ in range(iters):
-        raw_a, na_held = _ckpt(
-            by_src.join(h.select(F.col("n").alias("src"), "hub"), "src")
-            .groupBy("dst").agg(F.sum("hub").alias("authority")))
-        _release(a_held)
-        a, a_held = _l1_over_ckpt(raw_a, "dst", "authority"), na_held
-        raw_h, nh_held = _ckpt(
-            by_dst.join(a.select(F.col("n").alias("dst"), "authority"),
-                        "dst")
-            .groupBy("src").agg(F.sum("authority").alias("hub")))
-        _release(h_held)
-        h, h_held = _l1_over_ckpt(raw_h, "src", "hub"), nh_held
-    # materialize the full output once (every column — a downstream
-    # count() then measures the real computation, and the zero-attach
-    # left joins cannot be pruned away), then free the loop state
-    out, _out_held = _ckpt(
-        nodes.join(a, "n", "left").join(h, "n", "left")
-        .select(F.col("n").alias("node"),
-                F.round(F.coalesce("authority", F.lit(0.0)), 6)
-                .alias("authority"),
-                F.round(F.coalesce("hub", F.lit(0.0)), 6).alias("hub")))
-    by_src.unpersist()
-    by_dst.unpersist()
-    _release(e_held)
-    _release(a_held)
-    _release(h_held)
-    return out
+        # Internal states are SPARSE: a score table only carries nodes
+        # whose raw sum has a contributing edge — a dense zero row neither
+        # moves any L1 norm (adds 0.0) nor any push/pull sum (joins
+        # contribute 0), so the per-half-step outer join against the full
+        # node set that the previous shape paid for is equivalent to one
+        # left join at the END that re-attaches 0.0 for never-scored
+        # nodes. A half-step checkpoint is now exactly: edge join +
+        # (dst|src) aggregation — the eager per-half-step cadence stays,
+        # because the L1 norm aggregate references the raw scores a second
+        # time (a lazily chained segment would re-execute each half-step's
+        # join once per reference after column pruning de-canonicalizes
+        # the copies).
+        # h0 over out-edge sources only (other nodes' hub 1.0 feeds no push).
+        h = by_src.select(F.col("src").alias("n")).distinct() \
+            .select("n", F.lit(1.0).alias("hub"))
+        raw_a = raw_h = None
+        for _ in range(iters):
+            raw_a = scope.ckpt(
+                by_src.join(h.select(F.col("n").alias("src"), "hub"), "src")
+                .groupBy("dst").agg(F.sum("hub").alias("authority")),
+                replaces=raw_a)
+            a = _l1_over_ckpt(raw_a, "dst", "authority")
+            raw_h = scope.ckpt(
+                by_dst.join(a.select(F.col("n").alias("dst"), "authority"),
+                            "dst")
+                .groupBy("src").agg(F.sum("authority").alias("hub")),
+                replaces=raw_h)
+            h = _l1_over_ckpt(raw_h, "src", "hub")
+        # materialize the full output once (every column — a downstream
+        # count() then measures the real computation, and the zero-attach
+        # left joins cannot be pruned away)
+        return scope.keep(scope.ckpt(
+            nodes.join(a, "n", "left").join(h, "n", "left")
+            .select(F.col("n").alias("node"),
+                    F.round(F.coalesce("authority", F.lit(0.0)), 6)
+                    .alias("authority"),
+                    F.round(F.coalesce("hub", F.lit(0.0)), 6)
+                    .alias("hub"))))
 
 
 def bfs_depth(edges: DataFrame, seeds: DataFrame, src: str = "src",
@@ -391,59 +380,52 @@ def bfs_depth(edges: DataFrame, seeds: DataFrame, src: str = "src",
     The emptiness test reads the round's already-materialized frontier
     blocks (no second job over lineage); the output is consolidated into
     ONE checkpoint at the end and the per-round blocks are released."""
-    sc = edges.sparkSession.sparkContext
-    _ckpt, _release = ckpt_tools(sc)
-
     if seed_col is None:
         seed_col = seeds.columns[0]
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct()
-         .repartition("src").sortWithinPartitions("src").persist())
-    frontier, fheld = _ckpt(
-        seeds.select(F.col(seed_col).alias("node")).distinct()
-        .withColumn("depth", F.lit(0).cast("long")))
-    # settled is a LAZY union of the checkpointed per-round frontiers —
-    # each round's anti-join scans the union of O(diameter) materialized
-    # narrow blocks instead of paying a second materialization per round
-    # for a dense settled table (halves the round's checkpoint jobs; web
-    # diameters keep the union width tiny)
-    frontiers, helds = [frontier], [fheld]
-    empty = False
+    with CheckpointScope(edges.sparkSession.sparkContext) as scope:
+        e = scope.persist(
+            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+            .distinct().repartition("src").sortWithinPartitions("src"))
+        reached = _expand_frontiers(
+            scope, e, seeds.select(F.col(seed_col).alias("node")).distinct()
+            .withColumn("depth", F.lit(0).cast("long")),
+            [], "depth", max_iters, "bfs_depth")
+        # consolidate the O(diameter) per-round frontier blocks into ONE
+        # materialized table — callers hold a single checkpoint
+        return scope.keep(scope.ckpt(reached))
+
+
+def _expand_frontiers(scope, e, frontier, carry, level, max_iters, name):
+    """Synchronous frontier expansion over the src-partitioned edge table
+    ``e`` — the BFS loop of ``bfs_depth`` and exact
+    ``harmonic_centrality``. ``frontier`` holds the level-0 rows
+    ``(node, *carry, level)``; round t checkpoints exactly the
+    ``(node, *carry)`` keys first reached at distance t. Returns the lazy
+    union of every round's checkpointed frontier; raises if a frontier is
+    still non-empty after ``max_iters`` rounds."""
+    keys = ["node", *carry]
+    frontiers = [scope.ckpt(frontier)]
     for t in range(1, max_iters + 1):
+        # settled is a LAZY union of the checkpointed per-round frontiers
+        # — each round's anti-join scans the union of O(diameter)
+        # materialized narrow blocks instead of paying a second
+        # materialization per round for a dense settled table (halves the
+        # round's checkpoint jobs; web diameters keep the union width tiny)
         settled = frontiers[0]
         for f in frontiers[1:]:
             settled = settled.unionByName(f)
-        new_frontier, nfheld = _ckpt(
-            e.join(frontier.select(F.col("node").alias("src")), "src")
-            .select(F.col("dst").alias("node")).distinct()
-            .join(settled.select("node"), "node", "left_anti")
-            .withColumn("depth", F.lit(t).cast("long")))
-        frontier = new_frontier
+        frontier = scope.ckpt(
+            e.join(frontiers[-1].select(F.col("node").alias("src"), *carry),
+                   "src")
+            .select(F.col("dst").alias("node"), *carry).distinct()
+            .join(settled.select(*keys), keys, "left_anti")
+            .withColumn(level, F.lit(t).cast("long")))
         if frontier.isEmpty():
-            _release(nfheld)
-            empty = True
-            break
+            return settled
         frontiers.append(frontier)
-        helds.append(nfheld)
-    if not empty:
-        # the last frontier was still non-empty
-        e.unpersist()
-        for hd in helds:
-            _release(hd)
-        raise RuntimeError(
-            f"bfs_depth did not exhaust the frontier in {max_iters} "
-            f"rounds (graph deeper than the recursion bound the "
-            f"oracle mirrors)")
-    e.unpersist()
-    out = frontiers[0]
-    for f in frontiers[1:]:
-        out = out.unionByName(f)
-    # consolidate the O(diameter) per-round frontier blocks into ONE
-    # materialized table and free them — callers hold a single checkpoint
-    out, _out_held = _ckpt(out)
-    for hd in helds:
-        _release(hd)
-    return out
+    raise RuntimeError(
+        f"{name} frontier still non-empty after {max_iters} rounds — raise "
+        f"max_iters AND the oracle's recursion bound together")
 
 
 def cocitation(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -498,46 +480,44 @@ def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
     symmetrized edge table is repartitioned on the join key and persisted
     ONCE; labels are the only narrow table that moves per round, each
     generation localCheckpoint-ed and the superseded one released
-    (the connected_components pattern).
+    (``CheckpointScope``).
     """
     a, b = F.col(src).alias("a"), F.col(dst).alias("b")
-    und = (edges.select(a, b)
-           .union(edges.select(F.col(dst).alias("a"),
-                               F.col(src).alias("b")))
-           .filter(F.col("a") != F.col("b"))
-           .distinct()
-           .repartition("b")
-           .sortWithinPartitions("b")
-           .persist())
-    labels = (und.select(F.col("a").alias("n")).distinct()
-              .select("n", F.col("n").alias("lab")))
-    sc = edges.sparkSession.sparkContext
-    _ckpt, _release = ckpt_tools(sc)
-    # the identity labeling is never joined (round one degenerates, see
-    # below) — no point materializing it; iters=0 returns it lazily
-    held = set()
-    for rnd in range(iters):
-        if rnd == 0:
-            # identity labels: every neighbor label is distinct (und is a
-            # deduped pair set), so the frequency vote degenerates to the
-            # -label tie-break — round one is exactly min(neighbor id)
-            # per node: one aggregation, no join, no second groupBy
-            new = (und.groupBy("a").agg(F.min("b").alias("lab"))
-                   .select(F.col("a").alias("n"), "lab"))
-        else:
-            nb = und.join(labels.withColumnRenamed("n", "b"), "b")
-            cnt = nb.groupBy("a", "lab").agg(F.count(F.lit(1)).alias("cnt"))
-            new = (cnt.groupBy("a")
-                   .agg(F.max(F.struct(F.col("cnt"),
-                                       (-F.col("lab")).alias("neg")))
-                        .alias("w"))
-                   .select(F.col("a").alias("n"),
-                           (-F.col("w.neg")).alias("lab")))
-        new, new_held = _ckpt(new)
-        _release(held)
-        labels, held = new, new_held
-    und.unpersist()
-    return labels.select("n", F.col("lab").alias("community"))
+    with CheckpointScope(edges.sparkSession.sparkContext) as scope:
+        und = scope.persist(edges.select(a, b)
+                            .union(edges.select(F.col(dst).alias("a"),
+                                                F.col(src).alias("b")))
+                            .filter(F.col("a") != F.col("b"))
+                            .distinct()
+                            .repartition("b")
+                            .sortWithinPartitions("b"))
+        # the identity labeling is never joined (round one degenerates,
+        # see below) — no point materializing it; iters=0 returns it lazily
+        labels = (und.select(F.col("a").alias("n")).distinct()
+                  .select("n", F.col("n").alias("lab")))
+        for rnd in range(iters):
+            if rnd == 0:
+                # identity labels: every neighbor label is distinct (und
+                # is a deduped pair set), so the frequency vote
+                # degenerates to the -label tie-break — round one is
+                # exactly min(neighbor id) per node: one aggregation, no
+                # join, no second groupBy
+                new = (und.groupBy("a").agg(F.min("b").alias("lab"))
+                       .select(F.col("a").alias("n"), "lab"))
+            else:
+                nb = und.join(labels.withColumnRenamed("n", "b"), "b")
+                cnt = nb.groupBy("a", "lab").agg(F.count(F.lit(1))
+                                                 .alias("cnt"))
+                new = (cnt.groupBy("a")
+                       .agg(F.max(F.struct(F.col("cnt"),
+                                           (-F.col("lab")).alias("neg")))
+                            .alias("w"))
+                       .select(F.col("a").alias("n"),
+                               (-F.col("w.neg")).alias("lab")))
+            labels = scope.ckpt(new, replaces=labels)
+        if iters:
+            scope.keep(labels)
+        return labels.select("n", F.col("lab").alias("community"))
 
 
 def resolve_redirects(redirects: DataFrame, src: str = "src",
@@ -577,31 +557,28 @@ def resolve_redirects(redirects: DataFrame, src: str = "src",
     URLs); every stage is hash-partitioned on the URL — no driver-side
     state, no collect.
     """
-    sc = redirects.sparkSession.sparkContext
-    _ckpt, _release = ckpt_tools(sc)
-
     m = redirects.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    jump = m.select("a", "b", F.lit(1).cast("long").alias("s"))
-    jump, held = _ckpt(jump)
-    dup = (jump.groupBy("a").count().filter(F.col("count") > 1).isEmpty())
-    if not dup:
-        _release(held)
-        raise ValueError("resolve_redirects needs a functional map: "
-                         "a src with two dsts has no single chain")
-    rounds = max(1, (max_hops - 1).bit_length())  # ceil(log2(max_hops))
-    for _ in range(rounds):
-        nxt = (jump.alias("l")
-               .join(jump.select(F.col("a").alias("b"),
-                                 F.col("b").alias("b2"),
-                                 F.col("s").alias("s2")).alias("r"),
-                     "b", "left")
-               .select(F.col("l.a").alias("a"),
-                       F.coalesce("r.b2", "l.b").alias("b"),
-                       (F.col("l.s")
-                        + F.coalesce("r.s2", F.lit(0))).alias("s")))
-        nxt, nheld = _ckpt(nxt)
-        _release(held)
-        jump, held = nxt, nheld
+    with CheckpointScope(redirects.sparkSession.sparkContext) as scope:
+        jump = scope.ckpt(m.select("a", "b",
+                                   F.lit(1).cast("long").alias("s")))
+        dup = (jump.groupBy("a").count().filter(F.col("count") > 1)
+               .isEmpty())
+        if not dup:
+            raise ValueError("resolve_redirects needs a functional map: "
+                             "a src with two dsts has no single chain")
+        rounds = max(1, (max_hops - 1).bit_length())  # ceil(log2(max_hops))
+        for _ in range(rounds):
+            nxt = (jump.alias("l")
+                   .join(jump.select(F.col("a").alias("b"),
+                                     F.col("b").alias("b2"),
+                                     F.col("s").alias("s2")).alias("r"),
+                         "b", "left")
+                   .select(F.col("l.a").alias("a"),
+                           F.coalesce("r.b2", "l.b").alias("b"),
+                           (F.col("l.s")
+                            + F.coalesce("r.s2", F.lit(0))).alias("s")))
+            jump = scope.ckpt(nxt, replaces=jump)
+        scope.keep(jump)
     srcs = m.select(F.col("a").alias("t")).distinct()
     uni = (m.select(F.col("a").alias("url"))
            .union(m.select(F.col("b").alias("url"))).distinct())
@@ -670,7 +647,8 @@ def opic(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     * node set = distinct src ∪ dst endpoints; multi-edges collapse when
       ``dedup_edges``
-    * cash_0(v) = ``cash0`` micros, history_0(v) = 0
+    * cash_0(v) = ``cash0`` micros, history_0(v) = 0 (what ``iters=0``
+      returns)
     * each round, synchronously: every node banks its cash into history
       and distributes it — ``cash DIV outdeg`` to each out-neighbor;
       DANGLING nodes distribute ``cash DIV n_nodes`` to every node (the
@@ -696,43 +674,38 @@ def opic(edges: DataFrame, src: str = "src", dst: str = "dst",
              .union(e.select(F.col("dst").alias("n")))
              .distinct())
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    contrib_edges = (e.join(deg, "src")
-                     .repartition("src")
-                     .sortWithinPartitions("src")
-                     .persist())
-    sc = edges.sparkSession.sparkContext
-    _ckpt, _release = ckpt_tools(sc)
-    nodes, nodes_held = _ckpt(nodes)
-    deg, deg_held = _ckpt(deg)
-    n_nodes = nodes.count()  # bounded driver scalar, like pagerank's
+    with CheckpointScope(edges.sparkSession.sparkContext) as scope:
+        contrib_edges = scope.persist(e.join(deg, "src")
+                                      .repartition("src")
+                                      .sortWithinPartitions("src"))
+        nodes = scope.ckpt(nodes)
+        deg = scope.ckpt(deg)
+        n_nodes = nodes.count()  # bounded driver scalar, like pagerank's
 
-    state = nodes.select(
-        "n", F.lit(int(cash0)).cast("long").alias("cash"),
-        F.lit(0).cast("long").alias("hist"))
-    held = set()
-    for _ in range(iters):
-        c_src = state.select(F.col("n").alias("src"), "cash")
-        recv = (contrib_edges.join(c_src, "src")
-                .groupBy("dst")
-                .agg(F.sum(F.expr("cash div outdeg")).alias("recv")))
-        dangling = (state.join(deg, state["n"] == deg["src"], "left_anti")
-                    .agg(F.coalesce(F.sum("cash"), F.lit(0))
-                         .cast("long").alias("dcash")))
-        new_state = (state.join(recv, state["n"] == recv["dst"], "left")
-                     .crossJoin(F.broadcast(dangling))
-                     .select(
-                         state["n"],
-                         (F.coalesce(F.col("recv"), F.lit(0))
-                          + F.expr(f"dcash div {n_nodes}"))
-                         .cast("long").alias("cash"),
-                         (F.col("hist") + F.col("cash")).cast("long")
-                         .alias("hist")))
-        state, new_held = _ckpt(new_state)
-        _release(held)
-        held = new_held
-    contrib_edges.unpersist()
-    _release(nodes_held)
-    _release(deg_held)
+        state = nodes.select(
+            "n", F.lit(int(cash0)).cast("long").alias("cash"),
+            F.lit(0).cast("long").alias("hist"))
+        for _ in range(iters):
+            c_src = state.select(F.col("n").alias("src"), "cash")
+            recv = (contrib_edges.join(c_src, "src")
+                    .groupBy("dst")
+                    .agg(F.sum(F.expr("cash div outdeg")).alias("recv")))
+            dangling = (state.join(deg, state["n"] == deg["src"],
+                                   "left_anti")
+                        .agg(F.coalesce(F.sum("cash"), F.lit(0))
+                             .cast("long").alias("dcash")))
+            new_state = (state.join(recv, state["n"] == recv["dst"], "left")
+                         .crossJoin(F.broadcast(dangling))
+                         .select(
+                             state["n"],
+                             (F.coalesce(F.col("recv"), F.lit(0))
+                              + F.expr(f"dcash div {n_nodes}"))
+                             .cast("long").alias("cash"),
+                             (F.col("hist") + F.col("cash")).cast("long")
+                             .alias("hist")))
+            state = scope.ckpt(new_state, replaces=state)
+        # iters=0 returns the round-0 state, a projection over the nodes
+        scope.keep(state if iters else nodes)
     return state.select(F.col("n").alias("node"), "cash", "hist",
                         (F.col("cash") + F.col("hist"))
                         .alias("importance_micro"))
@@ -780,74 +753,38 @@ def harmonic_centrality(edges: DataFrame, src: str = "src",
     Both modes shuffle the edge table ONCE (repartitioned by src,
     persisted); every round joins the narrow frontier/sketch table
     against that fixed layout. Round state is localCheckpoint-ed with
-    superseded blocks released (the pagerank/bfs bookkeeping). Exact mode
+    superseded blocks released (``CheckpointScope``). Exact mode
     raises past ``max_iters`` non-empty frontiers, mirroring the oracle's
     recursion bound; hyperball stops early when no register rises.
     """
-    sc = edges.sparkSession.sparkContext
-    _ckpt, _release = ckpt_tools(sc)
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-         .distinct()
-         .repartition("src").sortWithinPartitions("src").persist())
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct())
-
-    if mode == "exact":
-        frontier, fheld = _ckpt(
-            nodes.select("node", F.col("node").alias("origin"),
-                         F.lit(0).cast("long").alias("dist")))
-        # settled is a LAZY union of the checkpointed per-round pair
-        # frontiers (the bfs_depth shape): each round's anti-join scans
-        # O(diameter) materialized narrow blocks instead of paying a
-        # second materialization per round for a dense settled table
-        frontiers, helds = [frontier], [fheld]
-        empty = False
-        for t in range(1, max_iters + 1):
-            settled = frontiers[0]
-            for f in frontiers[1:]:
-                settled = settled.unionByName(f)
-            new_frontier, nfheld = _ckpt(
-                e.join(frontier.select(F.col("node").alias("src"),
-                                       "origin"), "src")
-                .select(F.col("dst").alias("node"), "origin").distinct()
-                .join(settled.select("node", "origin"),
-                      ["node", "origin"], "left_anti")
-                .withColumn("dist", F.lit(t).cast("long")))
-            frontier = new_frontier
-            if frontier.isEmpty():
-                _release(nfheld)
-                empty = True
-                break
-            frontiers.append(frontier)
-            helds.append(nfheld)
-        if not empty:
-            e.unpersist()
-            for hd in helds:
-                _release(hd)
-            raise RuntimeError(
-                f"harmonic_centrality(exact) frontier still non-empty "
-                f"after {max_iters} rounds — raise max_iters AND the "
-                f"oracle's recursion bound together")
-        settled = frontiers[0]
-        for f in frontiers[1:]:
-            settled = settled.unionByName(f)
-        out = (settled.filter(F.col("dist") > 0)
-               .groupBy("node")
-               .agg(F.sum(F.floor(F.lit(1000000) / F.col("dist")))
-                    .cast("long").alias("harmonic_micro"),
-                    F.count(F.lit(1)).cast("long").alias("n_reachers")))
-        # one materializing pass before releasing the inputs it reads
-        out, oheld = _ckpt(out)
-        e.unpersist()
-        for hd in helds:
-            _release(hd)
-        return out
-
-    if mode != "hyperball":
+    if mode not in ("exact", "hyperball"):
         raise ValueError(f"unknown mode {mode!r}")
+    with CheckpointScope(edges.sparkSession.sparkContext) as scope:
+        e = scope.persist(
+            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+            .filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
+            .distinct().repartition("src").sortWithinPartitions("src"))
+        nodes = (e.select(F.col("src").alias("node"))
+                 .union(e.select(F.col("dst").alias("node")))
+                 .distinct())
+        if mode == "exact":
+            settled = _expand_frontiers(
+                scope, e, nodes.select("node", F.col("node").alias("origin"),
+                                       F.lit(0).cast("long").alias("dist")),
+                ["origin"], "dist", max_iters, "harmonic_centrality(exact)")
+            return scope.keep(scope.ckpt(
+                settled.filter(F.col("dist") > 0)
+                .groupBy("node")
+                .agg(F.sum(F.floor(F.lit(1000000) / F.col("dist")))
+                     .cast("long").alias("harmonic_micro"),
+                     F.count(F.lit(1)).cast("long").alias("n_reachers"))))
+        return scope.keep(_hyperball(scope, e, nodes, max_iters, log2m,
+                                     seed))
 
+
+def _hyperball(scope, e, nodes, max_iters, log2m, seed):
+    """The ``mode="hyperball"`` rounds of ``harmonic_centrality``; returns
+    the checkpointed (node, harmonic_est) table."""
     m = 1 << log2m
     if m >= 128:
         alpha = 0.7213 / (1.0 + 1.079 / m)
@@ -875,24 +812,22 @@ def harmonic_centrality(edges: DataFrame, src: str = "src",
                      ).otherwise(raw)
         return per.select("node", est.alias("est"))
 
-    regs, rheld = _ckpt(nodes.select("node", idx.alias("idx"),
-                                     rho.alias("rho")))
-    acc, aheld = _ckpt(estimate(regs).select(
+    regs = scope.ckpt(nodes.select("node", idx.alias("idx"),
+                                   rho.alias("rho")))
+    acc = scope.ckpt(estimate(regs).select(
         "node", F.lit(0.0).alias("h"), F.col("est").alias("prev_est")))
     for t in range(1, max_iters + 1):
         nbr = (e.join(regs.select(F.col("node").alias("src"),
                                   "idx", "rho"), "src")
                .select(F.col("dst").alias("node"), "idx", "rho"))
-        merged = (regs.unionByName(nbr)
-                  .groupBy("node", "idx")
-                  .agg(F.max("rho").alias("rho")))
-        merged, mheld = _ckpt(merged)
+        merged = scope.ckpt(regs.unionByName(nbr)
+                            .groupBy("node", "idx")
+                            .agg(F.max("rho").alias("rho")))
         changed = (merged.alias("m")
                    .join(regs.alias("r"), ["node", "idx"], "left")
                    .filter(F.col("r.rho").isNull()
                            | (F.col("m.rho") > F.col("r.rho"))))
         if changed.isEmpty():
-            _release(mheld)
             break
         new_acc = (acc.join(estimate(merged), "node")
                    .select("node",
@@ -901,16 +836,10 @@ def harmonic_centrality(edges: DataFrame, src: str = "src",
                                          F.lit(0.0)) / F.lit(float(t)))
                            .alias("h"),
                            F.col("est").alias("prev_est")))
-        new_acc, naheld = _ckpt(new_acc)
-        _release(rheld)
-        _release(aheld)
-        regs, rheld = merged, mheld
-        acc, aheld = new_acc, naheld
-    out, oheld = _ckpt(acc.select("node", F.col("h").alias("harmonic_est")))
-    e.unpersist()
-    _release(rheld)
-    _release(aheld)
-    return out
+        # the (regs, acc) generation is superseded together
+        acc = scope.ckpt(new_acc, replaces=(regs, acc))
+        regs = merged
+    return scope.ckpt(acc.select("node", F.col("h").alias("harmonic_est")))
 
 
 def degree_powerlaw(edges: DataFrame, src: str = "src", dst: str = "dst",

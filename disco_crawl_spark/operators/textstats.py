@@ -17,7 +17,7 @@ from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from .. import refsem
-from .ckpt import ckpt_tools
+from .ckpt import CheckpointScope
 
 STOPWORDS_EN = (
     "the a an and or of to in is are was were be been it this that for on "
@@ -1048,10 +1048,10 @@ def bpe_learn_merges(df: DataFrame, text_col: str,
     aggregation, a 1-row TakeOrdered collect (count desc, pair asc — the
     deterministic tie-break), and a row-local literal rewrite of the
     symbol sequences. Per-step sequences are eagerly localCheckpointed
-    with the superseded round's blocks explicitly released (the
-    connected-components pattern), so plans stay flat and at most two
-    vocabulary tables are held. At 100 TB the vocab is millions of rows,
-    not billions — every iteration is seconds.
+    with the superseded round's blocks released by a ``CheckpointScope``,
+    so plans stay flat and at most two vocabulary tables are held. At
+    100 TB the vocab is millions of rows, not billions — every iteration
+    is seconds.
 
     Merge application: the symbol sequence is a single-space-joined
     string with sentinel spaces, and a merge applies as TWO leftmost
@@ -1064,52 +1064,47 @@ def bpe_learn_merges(df: DataFrame, text_col: str,
     grouping in both, which may differ from strict greedy-left — the
     cross-engine agreement is the contract)."""
     spark = df.sparkSession
-    sc = spark.sparkContext
-
-    _ckpt, _release = ckpt_tools(sc)
-
     toks = _ws_tokens_nn(text_col)
     words = (df.select(F.explode(toks).alias("w"))
              .groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
-    seq, held = _ckpt(words.select(
-        F.concat(F.lit(" "), F.concat_ws(" ", F.split("w", "")),
-                 F.lit(" </w> ")).alias("s"),
-        "cnt"))
     merges = []
-    for step in range(1, n_merges + 1):
-        syms = F.filter(F.split("s", " "), lambda x: x != "")
-        pair_arr = F.when(
-            F.size(syms) >= 2,
-            F.transform(F.sequence(F.lit(0), F.size(syms) - 2),
-                        lambda i: F.struct(
-                            F.element_at(syms, (i + 1).cast("int"))
-                            .alias("l"),
-                            F.element_at(syms, (i + 2).cast("int"))
-                            .alias("r")))
-        ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
-        best = (seq.select(F.explode(pair_arr).alias("p"), "cnt")
-                .groupBy("p.l", "p.r").agg(F.sum("cnt").alias("c"))
-                .orderBy(F.col("c").desc(), F.col("l").asc(),
-                         F.col("r").asc())
-                .limit(1).collect())
-        if not best:
-            break
-        l, r, c = best[0]["l"], best[0]["r"], int(best[0]["c"])
-        merges.append((step, l, r, c))
-        pat, rep = F.lit(f" {l} {r} "), F.lit(f" {l}{r} ")
-        # the merge rewrite is a NARROW projection over the vocabulary —
-        # chain up to 4 of them lazily instead of materializing each one
-        # (each step's pair-count job then re-runs at most 3 pending
-        # replace passes over the checkpointed vocab blocks, a map-only
-        # cost far below the per-step checkpoint job it replaces)
-        seq = seq.select(
-            F.replace(F.replace("s", pat, rep), pat, rep).alias("s"),
-            "cnt")
-        if step % 4 == 0:
-            new_seq, new_held = _ckpt(seq)
-            _release(held)
-            seq, held = new_seq, new_held
-    _release(held)
+    with CheckpointScope(spark.sparkContext) as scope:
+        seq = base = scope.ckpt(words.select(
+            F.concat(F.lit(" "), F.concat_ws(" ", F.split("w", "")),
+                     F.lit(" </w> ")).alias("s"),
+            "cnt"))
+        for step in range(1, n_merges + 1):
+            syms = F.filter(F.split("s", " "), lambda x: x != "")
+            pair_arr = F.when(
+                F.size(syms) >= 2,
+                F.transform(F.sequence(F.lit(0), F.size(syms) - 2),
+                            lambda i: F.struct(
+                                F.element_at(syms, (i + 1).cast("int"))
+                                .alias("l"),
+                                F.element_at(syms, (i + 2).cast("int"))
+                                .alias("r")))
+            ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
+            best = (seq.select(F.explode(pair_arr).alias("p"), "cnt")
+                    .groupBy("p.l", "p.r").agg(F.sum("cnt").alias("c"))
+                    .orderBy(F.col("c").desc(), F.col("l").asc(),
+                             F.col("r").asc())
+                    .limit(1).collect())
+            if not best:
+                break
+            l, r, c = best[0]["l"], best[0]["r"], int(best[0]["c"])
+            merges.append((step, l, r, c))
+            pat, rep = F.lit(f" {l} {r} "), F.lit(f" {l}{r} ")
+            # the merge rewrite is a NARROW projection over the vocabulary
+            # — chain up to 4 of them lazily instead of materializing each
+            # one (each step's pair-count job then re-runs at most 3
+            # pending replace passes over the checkpointed vocab blocks, a
+            # map-only cost far below the per-step checkpoint job it
+            # replaces)
+            seq = seq.select(
+                F.replace(F.replace("s", pat, rep), pat, rep).alias("s"),
+                "cnt")
+            if step % 4 == 0:
+                seq = base = scope.ckpt(seq, replaces=base)
     return spark.createDataFrame(
         merges, "step long, sym_l string, sym_r string, pair_count long")
 

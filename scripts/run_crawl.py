@@ -67,7 +67,8 @@ def main():
         eng = CrawlEngine.resume(spark, pages, robots, attrs, args.warehouse)
     else:
         eng = CrawlEngine(spark, pages, robots, attrs, args.warehouse,
-                          seeds=seeds, use_bloom=args.bloom)
+                          seeds=seeds,
+                          seen_filter="bloom" if args.bloom else None)
     eng.run(max_rounds=eng.round_no + args.rounds)
     order = eng.crawl_order()
     summary = {

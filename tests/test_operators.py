@@ -465,20 +465,113 @@ def test_connected_components_ignores_foreign_pair_endpoints(spark):
     assert out == {3: 3, 4: 3, 5: 5, 6: 6, 7: 7}
 
 
-def test_connected_components_releases_superseded_checkpoints(spark):
-    # each round's labels supersede the previous round's localCheckpoint;
-    # the superseded blocks must be unpersisted as the loop advances, so
-    # the run ends holding only the final label table (<= 2 during it)
-    sc = spark.sparkContext
-    base = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+def _edges(spark, rows):
+    return spark.createDataFrame(rows, "src int, dst int")
+
+
+def _seeds(spark, ids):
+    return spark.createDataFrame([(i,) for i in ids], "n int")
+
+
+_HUB_EDGES = [(0, 1), (0, 2), (0, 3), (1, 2), (2, 1), (2, 3), (4, 0)]
+_MULTI_EDGES = [(0, 1), (0, 1), (0, 1), (1, 0), (1, 2)]
+_CHAIN7 = [(i, i + 1) for i in range(6)]
+_BFS_EDGES = [(i, i + 1) for i in range(9)] + [(0, 5), (20, 21)]
+_CLIQUES = ([(i, j) for i in range(5) for j in range(5) if i < j]
+            + [(i, j) for i in range(10, 15) for j in range(10, 15) if i < j]
+            + [(4, 10)])
+_REDIRECTS = ([("a", "b"), ("b", "c"), ("c", "T")]
+              + [(f"h{i}", f"h{i+1}") for i in range(6)]
+              + [("x", "y"), ("y", "x"), ("z", "x")])
+_OPIC_EDGES = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "a"),
+               ("c", "e")]
+
+
+def _chain40(spark, max_iters=20):
     docs = spark.createDataFrame([(i, "x") for i in range(40)],
                                  "doc_id long, text string")
     pairs = spark.createDataFrame([(i, i + 1) for i in range(39)],
                                   "a long, b long")
-    out = dedup.connected_components(docs, pairs, "doc_id")
-    held = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - base
-    assert len(held) <= 1, f"superseded CC checkpoints leaked: {held}"
-    assert {r["comp"] for r in out.collect()} == {0}
+    return dedup.connected_components(docs, pairs, "doc_id",
+                                      max_iters=max_iters)
+
+
+def _bpe(spark):
+    words = ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
+    df = spark.createDataFrame([(0, " ".join(words))],
+                               "doc_id long, text string")
+    return textstats.bpe_learn_merges(df, "text", n_merges=6)
+
+
+# case -> (operator call, blocks its result may keep live, expected raise)
+_LIFETIME_CASES = {
+    "pagerank": (lambda sp, g: g.pagerank(_edges(sp, _MULTI_EDGES),
+                                          iters=6), 1, None),
+    "pagerank_iters0": (lambda sp, g: g.pagerank(_edges(sp, _HUB_EDGES),
+                                                 iters=0), 1, None),
+    "trustrank": (lambda sp, g: g.pagerank(
+        _edges(sp, _HUB_EDGES), iters=5,
+        personalization=_seeds(sp, [0, 4, 99])), 1, None),
+    "trustrank_iters0": (lambda sp, g: g.pagerank(
+        _edges(sp, _HUB_EDGES), iters=0,
+        personalization=_seeds(sp, [0, 4, 99])), 1, None),
+    "trustrank_no_seed_in_graph": (lambda sp, g: g.pagerank(
+        _edges(sp, _HUB_EDGES), personalization=_seeds(sp, [99])),
+        0, ValueError),
+    "hits": (lambda sp, g: g.hits(_edges(sp, _HUB_EDGES), iters=5), 1, None),
+    "hits_iters0": (lambda sp, g: g.hits(_edges(sp, _HUB_EDGES), iters=0),
+                    0, ValueError),
+    "bfs_depth": (lambda sp, g: g.bfs_depth(_edges(sp, _BFS_EDGES),
+                                            _seeds(sp, [0, 8])), 1, None),
+    "bfs_depth_past_max_iters": (lambda sp, g: g.bfs_depth(
+        _edges(sp, _CHAIN7), _seeds(sp, [0]), max_iters=3),
+        0, RuntimeError),
+    "label_propagation": (lambda sp, g: g.label_propagation(
+        _edges(sp, _CLIQUES), iters=4), 1, None),
+    "resolve_redirects": (lambda sp, g: g.resolve_redirects(
+        sp.createDataFrame(_REDIRECTS, ["src", "dst"]), max_hops=4),
+        1, None),
+    "resolve_redirects_not_functional": (lambda sp, g: g.resolve_redirects(
+        sp.createDataFrame([("a", "b"), ("a", "c")], ["src", "dst"])),
+        0, ValueError),
+    "opic": (lambda sp, g: g.opic(
+        sp.createDataFrame(_OPIC_EDGES, "src string, dst string"),
+        iters=3), 1, None),
+    "opic_iters0": (lambda sp, g: g.opic(
+        sp.createDataFrame(_OPIC_EDGES, "src string, dst string"),
+        iters=0), 1, None),
+    "harmonic_exact": (lambda sp, g: g.harmonic_centrality(
+        _edges(sp, _BFS_EDGES), mode="exact"), 1, None),
+    "harmonic_exact_past_max_iters": (lambda sp, g: g.harmonic_centrality(
+        _edges(sp, _CHAIN7), mode="exact", max_iters=3), 0, RuntimeError),
+    "harmonic_hyperball": (lambda sp, g: g.harmonic_centrality(
+        _edges(sp, _BFS_EDGES), mode="hyperball"), 1, None),
+    "connected_components": (lambda sp, g: _chain40(sp), 1, None),
+    "connected_components_no_convergence": (
+        lambda sp, g: _chain40(sp, max_iters=1), 0, RuntimeError),
+    "bpe_learn_merges": (lambda sp, g: _bpe(sp), 0, None),
+}
+
+
+@pytest.mark.parametrize("case", list(_LIFETIME_CASES))
+def test_iterative_operator_block_lifetime(spark, case):
+    # every iterative operator frees all the blocks it pinned (edge
+    # layouts, superseded and final loop tables) on every exit path; only
+    # the checkpoint backing its result survives a return, and that
+    # result must still be readable
+    from disco_crawl_spark.operators import graph
+    run, blocks, raises = _LIFETIME_CASES[case]
+    sc = spark.sparkContext
+    base = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    if raises is None:
+        out = run(spark, graph)
+    else:
+        with pytest.raises(raises):
+            run(spark, graph)
+    live = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - base
+    assert len(live) <= blocks, f"{case} leaked blocks: {live}"
+    if raises is None:
+        assert out.collect()
 
 
 def test_lsh_batch_query_prunes_and_matches_per_query_path(spark, tmp_path):
@@ -638,30 +731,27 @@ def test_pagerank_matches_numpy_and_conserves_mass(spark):
     # a graph with a dangling node (3), a hub (0), and a 2-cycle
     edges = [(0, 1), (0, 2), (0, 3), (1, 2), (2, 1), (2, 3), (4, 0)]
     edf = spark.createDataFrame(edges, "src int, dst int")
-    got = {r["node"]: r["pagerank"]
-           for r in graph.pagerank(edf, iters=5).collect()}
-    want = _numpy_pagerank(edges, iters=5)
-    assert set(got) == set(want)
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-12, (k, got[k], want[k])
-    # total rank mass is conserved (teleport + dangling redistribution)
-    assert abs(sum(got.values()) - 1.0) < 1e-9
+    for iters in (5, 0):  # iters=0 is r0 = 1/N
+        got = {r["node"]: r["pagerank"]
+               for r in graph.pagerank(edf, iters=iters).collect()}
+        want = _numpy_pagerank(edges, iters=iters)
+        assert set(got) == set(want)
+        for k in want:
+            assert abs(got[k] - want[k]) < 1e-12, (k, got[k], want[k])
+        # total rank mass is conserved (teleport + dangling redistribution)
+        assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
 def test_pagerank_collapses_multi_edges_and_releases_checkpoints(spark):
     from disco_crawl_spark.operators import graph
-    # multi-edge (0,1)x3 must count once; iters=6 leaves exactly ONE live
-    # checkpointed rank table (superseded rounds unpersisted)
-    edges = [(0, 1), (0, 1), (0, 1), (1, 0), (1, 2)]
-    edf = spark.createDataFrame(edges, "src int, dst int")
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    # multi-edge (0,1)x3 must count once (the live-block count after the
+    # run is checked by test_iterative_operator_block_lifetime)
+    edf = spark.createDataFrame(_MULTI_EDGES, "src int, dst int")
     got = {r["node"]: r["pagerank"]
            for r in graph.pagerank(edf, iters=6).collect()}
     want = _numpy_pagerank([(0, 1), (1, 0), (1, 2)], iters=6)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-12
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
-    assert after - before <= 1
 
 
 def test_anchor_text_agg_winner_tiebreak(spark):
@@ -1192,10 +1282,8 @@ def test_hits_matches_numpy_and_releases_checkpoints(spark):
     # 4 points at the hub
     edges = [(0, 1), (0, 2), (0, 3), (1, 2), (2, 1), (2, 3), (4, 0)]
     edf = spark.createDataFrame(edges, "src int, dst int")
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
     got = {r["node"]: (r["authority"], r["hub"])
            for r in graph.hits(edf, iters=5).collect()}
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
     # independent numpy recomputation with the same per-step 9dp rounding
     nodes = sorted({n for e in edges for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -1214,9 +1302,6 @@ def test_hits_matches_numpy_and_releases_checkpoints(spark):
     # the pure authority (3) has zero hub score; the hub (0) dominates hubs
     assert got[3][1] == 0.0
     assert got[0][1] == max(v[1] for v in got.values())
-    # superseded per-round checkpoints were released (a, h + the
-    # materialized node set)
-    assert after - before <= 3
     with pytest.raises(ValueError):
         graph.hits(edf, iters=0)
 
@@ -1334,18 +1419,13 @@ def test_bfs_depth_chain_unreachable_and_raise(spark):
     edges = [(i, i + 1) for i in range(9)] + [(0, 5), (20, 21)]
     edf = spark.createDataFrame(edges, "src int, dst int")
     seeds = spark.createDataFrame([(0,), (8,)], "n int")
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
     got = {r["node"]: r["depth"]
            for r in graph.bfs_depth(edf, seeds).collect()}
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
     want = {0: 0, 8: 0,               # seeds
             1: 1, 2: 2, 3: 3, 4: 4,  # chain from 0
             5: 1, 6: 2, 7: 3,        # via the 0->5 shortcut
             9: 1}                    # via seed 8, not the long chain
     assert got == want                # 20, 21 unreached -> absent
-    # superseded per-round checkpoints released: at most the final
-    # settled table (plus nothing else) stays live
-    assert after - before <= 1
     # a chain deeper than max_iters must raise, not return a partial BFS
     deep = spark.createDataFrame([(i, i + 1) for i in range(6)],
                                  "src int, dst int")
@@ -1364,11 +1444,6 @@ def test_trustrank_matches_numpy_and_uniform_path_unchanged(spark):
     edges = [(0, 1), (0, 2), (0, 3), (1, 2), (2, 1), (2, 3), (4, 0)]
     edf = spark.createDataFrame(edges, "src int, dst int")
     seeds = spark.createDataFrame([(0,), (4,), (99,)], "n int")  # 99 absent
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
-    got = {r["node"]: r["pagerank"]
-           for r in graph.pagerank(edf, iters=5,
-                                   personalization=seeds).collect()}
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
     # independent numpy recomputation: teleport uniform over seeds {0, 4}
     nodes = sorted({n for e in edges for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -1379,22 +1454,25 @@ def test_trustrank_matches_numpy_and_uniform_path_unchanged(spark):
     p = np.zeros(len(nodes))
     for sd in (0, 4):
         p[idx[sd]] = 1.0 / 2
-    r = p.copy()
-    for _ in range(5):
-        nxt = (1 - d) * p.copy()
-        dang = sum(r[idx[v]] for v in nodes if v not in out)
-        nxt += d * dang * p
-        for a, targets in out.items():
-            share = r[idx[a]] / len(targets)
-            for b in targets:
-                nxt[idx[b]] += d * share
-        r = nxt
-    for n in nodes:
-        assert abs(got[n] - r[idx[n]]) < 1e-12, (n, got[n], r[idx[n]])
-    # mass conserved; non-seed-reachable-only nodes got demoted vs seeds
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-    # superseded per-round checkpoints released (final ranks + pvec at most)
-    assert after - before <= 2
+    for iters in (5, 0):  # iters=0 is r0 = p
+        got = {r["node"]: r["pagerank"]
+               for r in graph.pagerank(edf, iters=iters,
+                                       personalization=seeds).collect()}
+        r = p.copy()
+        for _ in range(iters):
+            nxt = (1 - d) * p.copy()
+            dang = sum(r[idx[v]] for v in nodes if v not in out)
+            nxt += d * dang * p
+            for a, targets in out.items():
+                share = r[idx[a]] / len(targets)
+                for b in targets:
+                    nxt[idx[b]] += d * share
+            r = nxt
+        for n in nodes:
+            assert abs(got[n] - r[idx[n]]) < 1e-12, (n, got[n], r[idx[n]])
+        # mass conserved; non-seed-reachable-only nodes got demoted vs
+        # seeds
+        assert abs(sum(got.values()) - 1.0) < 1e-9
     # uniform path must be bit-identical to before the personalization arg
     uni = {r2["node"]: r2["pagerank"]
            for r2 in graph.pagerank(edf, iters=5).collect()}
@@ -1563,10 +1641,8 @@ def test_label_propagation_planted_communities(spark):
     cliq_b = [(i, j) for i in range(10, 15) for j in range(10, 15) if i < j]
     edges = cliq_a + cliq_b + [(4, 10)]
     edf = spark.createDataFrame(edges, "src int, dst int")
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
     got = {r["n"]: r["community"]
            for r in graph.label_propagation(edf, iters=4).collect()}
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
 
     # independent python mirror of the synchronous deterministic rule
     und = {}
@@ -1589,8 +1665,6 @@ def test_label_propagation_planted_communities(spark):
              for v in set(got.values())}
     assert frozenset(range(5)) in comms
     assert frozenset(range(10, 15)) in comms
-    # superseded round checkpoints were released (final labels stay live)
-    assert after - before <= 2
 
 
 def test_fuzzy_edit_plan_keeps_lev_out_of_joins(spark):
@@ -2339,37 +2413,39 @@ def test_opic_mass_conservation_and_determinism(spark):
     # dangling sink: edges point at 'e' which never links out
     edges.append(("c", "e"))
     df = spark.createDataFrame(edges, "src string, dst string")
-    iters, cash0 = 3, 1_000_000
-    out = {r["node"]: (r["cash"], r["hist"], r["importance_micro"])
-           for r in graph.opic(df, iters=iters, cash0=cash0).collect()}
+    cash0 = 1_000_000
+    for iters in (0, 3):  # iters=0 is cash = cash0, hist = 0
+        out = {r["node"]: (r["cash"], r["hist"], r["importance_micro"])
+               for r in graph.opic(df, iters=iters, cash0=cash0).collect()}
 
-    # scalar simulation with identical floor-div semantics
-    nodes = sorted({x for e in edges for x in e})
-    outs = {}
-    for s, d in edges:
-        outs.setdefault(s, []).append(d)
-    n = len(nodes)
-    cash = {v: cash0 for v in nodes}
-    hist = {v: 0 for v in nodes}
-    for _ in range(iters):
-        recv = {v: 0 for v in nodes}
-        dang = sum(c for v, c in cash.items() if v not in outs)
-        for v, ds in outs.items():
-            share = cash[v] // len(ds)
-            for d in ds:
-                recv[d] += share
+        # scalar simulation with identical floor-div semantics
+        nodes = sorted({x for e in edges for x in e})
+        outs = {}
+        for s, d in edges:
+            outs.setdefault(s, []).append(d)
+        n = len(nodes)
+        cash = {v: cash0 for v in nodes}
+        hist = {v: 0 for v in nodes}
+        for _ in range(iters):
+            recv = {v: 0 for v in nodes}
+            dang = sum(c for v, c in cash.items() if v not in outs)
+            for v, ds in outs.items():
+                share = cash[v] // len(ds)
+                for d in ds:
+                    recv[d] += share
+            for v in nodes:
+                hist[v] += cash[v]
+            for v in nodes:
+                cash[v] = recv[v] + dang // n
         for v in nodes:
-            hist[v] += cash[v]
-        for v in nodes:
-            cash[v] = recv[v] + dang // n
-    for v in nodes:
-        assert out[v] == (cash[v], hist[v], cash[v] + hist[v]), v
+            assert out[v] == (cash[v], hist[v], cash[v] + hist[v]), v
 
-    # mass decays only by retired floor remainders, monotonically bounded
-    total = sum(c for c, _, _ in out.values())
-    assert total <= n * cash0
-    assert total >= n * cash0 - iters * n * max(
-        len(ds) for ds in outs.values()) - iters * n * n
+        # mass decays only by retired floor remainders, monotonically
+        # bounded
+        total = sum(c for c, _, _ in out.values())
+        assert total <= n * cash0
+        assert total >= n * cash0 - iters * n * max(
+            len(ds) for ds in outs.values()) - iters * n * n
 
     out2 = {r["node"]: (r["cash"], r["hist"], r["importance_micro"])
             for r in graph.opic(df, iters=iters, cash0=cash0).collect()}
