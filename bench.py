@@ -216,7 +216,7 @@ def run_crawl_wide(master: str, n_hosts: int, sections: int = 8,
     # 48g for BOTH legs of the wide rung: the 64000h corpus is ~41 GB
     # in-cache, and at 32g the local[16] leg OOMs (16 concurrent
     # SMJ+Arrow tasks squeezed against a storage pool pinned by the
-    # cache — BENCH/worker_err_crawl_wide_1787224724.log) while local[4]
+    # cache — BENCH/CRAWL_BISECT.md, round-5 follow-up) while local[4]
     # survives. A real N->4N cluster scales TOTAL memory 4x with the
     # executors; a fixed single-JVM heap starves only the 4N leg — a
     # proxy artifact, not a job property — so the heap is sized off the
@@ -746,8 +746,8 @@ def _write_scaling_report(this_run: "dict | None", corpus_pages: int,
         watch = [big] + ([most] if most["m"] != big["m"] else [])
         big_windows = ""
         # per-window OWN rates (BENCH/window_rates.jsonl, one row per
-        # completed measurement window, appended by roundscale_topup and
-        # backfilled from the per-pass stderr logs): the history records
+        # completed measurement window; how each was taken is in
+        # BENCH/CRAWL_BISECT.md): the history records
         # above carry cumulative best-per-master merges, so their
         # window-over-window eff deltas mix rates from DIFFERENT windows;
         # this table is each window's own c16/(4*c4), the honest
@@ -847,10 +847,11 @@ def _write_scaling_report(this_run: "dict | None", corpus_pages: int,
         if rs.get("salvaged_from"):
             provenance = (
                 f"\nProvenance: this record was reconstructed from the "
-                f"per-pass stderr log `BENCH/{rs['salvaged_from']}` of a "
+                f"per-pass stderr log `BENCH/{rs['salvaged_from']}` (no "
+                f"longer kept; see BENCH/CRAWL_BISECT.md) of a "
                 f"run whose harness process was killed after the last "
-                f"logged measurement (scripts/salvage_roundscale.py "
-                f"re-applies measure()'s exact best-of-pass aggregation); "
+                f"logged measurement, by re-applying measure()'s exact "
+                f"best-of-pass aggregation; "
                 f"the passes column shows how many interleaved passes "
                 f"each rung completed before the kill.\n")
         roundscale_section = f"""

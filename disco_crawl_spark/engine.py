@@ -37,9 +37,7 @@ Scale notes (100 TB / 10^10-URL design; local runs verify correctness):
   the O(rounds x parallelism) small-file growth that natural-parallelism
   delta commits trade for scaling (``compact_tables``).
 - hot politeness groups are serialized by the group lock; AQE skew-join
-  splitting covers hot-host fetch joins; optionally a per-partition
-  Bloom/cuckoo filter (operators/bloom.py) screens the bulk of candidates
-  before the exact anti-join.
+  splitting covers hot-host fetch joins.
 
 Reference-faithful quirks reproduced (see refsim module docstring for the
 full list): seen-at-schedule-time, blacklist-then-cap, cap-exit-not-
@@ -70,7 +68,6 @@ class CrawlEngine:
         warehouse: str,
         config: "SimConfig | None" = None,
         seeds: "list | None" = None,
-        seen_filter: "str | None" = None,
         pages_bucketed: bool = False,
         compact_seen_every: "int | None" = None,
         compact_tables_every: "int | None" = None,
@@ -78,15 +75,6 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = config or SimConfig()
-        # Approximate-membership pre-pass over the seen set (north_star:
-        # 'Bloom/cuckoo URL-seen filter'): candidates the filter proves new
-        # skip the exact anti-join; the anti-join stays the authority for
-        # 'maybe seen' rows, so results are identical with the filter on or
-        # off (asserted by tests for both implementations). Worth it when
-        # the seen set dwarfs per-round candidates (the 10^10 regime); pure
-        # overhead at toy scale, hence opt-in.
-        # seen_filter: None | 'bloom' | 'cuckoo'.
-        self.seen_filter = seen_filter
         self.robots = robots_mod.RobotsCache(robots_corpus)
         self.attrs = host_attrs
         self.cat = Catalog(warehouse)
@@ -95,19 +83,6 @@ class CrawlEngine:
         self.t_log = self.cat.table("crawl_log")
         self.t_metrics = self.cat.table("metrics")
         self.robots_allow = udfs.make_robots_allow(spark, robots_corpus)
-        # Delta commits write at the job's NATURAL parallelism (0 = no
-        # coalesce, the default). The previous one-file-per-commit
-        # coalesce(1) was measured to be the round loop's scaling killer:
-        # coalesce collapses everything after the delta plan's last
-        # exchange — the fetch-parse UDF, the frontier window — into ONE
-        # task, a serial term that grows linearly with round width
-        # (BENCH/BASELINE.md §3: efficiency pinned at ~0.2 across 1x-16x
-        # round sizes until this fix). Small files per round are the
-        # correct Iceberg-shaped trade; compaction (compact_seen) is the
-        # remedy, never a serial write path. Set DISCO_COMMIT_FILES=N to
-        # force small fixed fan-in where a tiny corpus makes file-count
-        # dominate.
-        self._commit_files = int(os.environ.get("DISCO_COMMIT_FILES", "0"))
         if "redirect_to" not in pages.columns:
             pages = pages.withColumn("redirect_to", F.lit(None).cast("string"))
         if pages_bucketed:
@@ -303,8 +278,15 @@ class CrawlEngine:
         # must be seeded from the committed parquet history, not from this
         # delta alone (reading after the append would double-count it).
         cur = self._view(name)
-        if self._commit_files:
-            delta = delta.coalesce(self._commit_files)
+        # The delta is written at the job's NATURAL parallelism, never
+        # coalesced. The previous one-file-per-commit coalesce(1) was
+        # measured to be the round loop's scaling killer: coalesce collapses
+        # everything after the delta plan's last exchange — the fetch-parse
+        # UDF, the frontier window — into ONE task, a serial term that grows
+        # linearly with round width (BENCH/BASELINE.md §3: efficiency pinned
+        # at ~0.2 across 1x-16x round sizes until this fix). Small files per
+        # round are the correct Iceberg-shaped trade; compaction
+        # (compact_seen) is the remedy, never a serial write path.
         _t1 = _time.time()
         _, data_dir = self._table(name).append(delta, self.round_no)
         _t2 = _time.time()
@@ -761,27 +743,10 @@ class CrawlEngine:
         cand = (cand
                 .withColumn("url_key", udfs.url_seen_key(F.col("link")))
                 .withColumn("host_group", cf.host_group(F.col("host"))))
-        # authoritative anti-join against this session's seen keys, with an
-        # optional Bloom pre-pass that lets provably-new candidates skip it
+        # anti-join against this session's seen keys
         segments = [s for s in (self._seen_base, self._view("url_seen"))
                     if s is not None]
-        if segments and self.seen_filter:
-            seen = (segments[0] if len(segments) == 1
-                    else segments[0].unionByName(segments[1]))
-            cur_seen = (seen.join(F.broadcast(sess.select("host", "session")),
-                                  ["host", "session"])
-                        .select("host", "url_key").distinct())
-            if self.seen_filter == "cuckoo":
-                from .operators import cuckoo as filter_mod
-            else:
-                from .operators import bloom as filter_mod
-            sidecar = filter_mod.build_sidecar(
-                cur_seen, "url_key", "host", num_buckets=16)
-            definitely_new, maybe = filter_mod.screen(
-                cand, sidecar, "url_key", "host", num_buckets=16)
-            cand = definitely_new.unionByName(
-                maybe.join(cur_seen, ["host", "url_key"], "left_anti"))
-        elif segments:
+        if segments:
             # one anti-join per segment (equivalent to anti-joining the
             # union): the compacted base is bucketed+sorted on exactly
             # (host, url_key), so its scan feeds the SortMergeJoin with NO

@@ -1,32 +1,15 @@
-"""Per-partition Bloom-filter sidecar for the URL-seen set.
+"""Bloom-filter bit indexes derived from md5-hex URL-seen keys.
 
-The north_star design point: at a 10^10-URL frontier the exact seen
-anti-join shuffles every candidate link; a Bloom pre-pass answers
-"definitely new" for the overwhelming majority of links partition-locally,
-so only "maybe seen" candidates reach the exact anti-join (which stays the
-authority — Bloom has false positives, never false negatives, so results
-are byte-identical with the filter on or off; tests assert this).
-
-Layout: the seen keys bucket by ``xxhash64(host_group) % num_buckets``
-(same bucketing as the frontier, so screening co-partitions); one bitmap
-row per bucket, built with ``applyInPandas`` (vectorized numpy, k indexes
-derived from the md5 key material itself — no extra hashing pass). The
-sidecar is itself a small DataFrame/table: (bucket, bitmap, n_keys).
+The seen keys (worker.py:120-128) are md5 hexdigests: 128 bits of key
+material, so a Bloom filter's k bit positions can be sliced straight out
+of the key with no rehashing. ``_indexes`` does that slicing, vectorized
+over a batch; ``streaming.run_seen_filter_stream`` uses it for its
+per-group Bloom state.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (BinaryType, IntegerType, LongType,
-                               StructField, StructType)
-
-SIDECAR_SCHEMA = StructType([
-    StructField("bucket", IntegerType()),
-    StructField("bitmap", BinaryType()),
-    StructField("n_keys", LongType()),
-])
 
 
 def _split_u64(keys) -> "tuple[np.ndarray, np.ndarray]":
@@ -65,67 +48,3 @@ def _indexes(keys, bits: int, k: int) -> np.ndarray:
             sl = ((lo >> np.uint64(s)) | (hi << np.uint64(64 - s))) & mask24
         out[:, j] = (sl % np.uint64(bits)).astype(np.int64)
     return out
-
-
-def bucket_col(group_col, num_buckets: int):
-    return F.pmod(F.xxhash64(group_col), F.lit(num_buckets)).cast("int")
-
-
-def build_sidecar(seen: DataFrame, key_col: str, group_col: str,
-                  num_buckets: int = 16, bits: int = 1 << 20,
-                  k: int = 4) -> DataFrame:
-    """One Bloom bitmap per bucket from the seen-key table."""
-    with_bucket = seen.select(
-        bucket_col(F.col(group_col), num_buckets).alias("bucket"),
-        F.col(key_col).alias("key"))
-
-    def make(pdf: pd.DataFrame) -> pd.DataFrame:
-        bm = np.zeros(bits // 8, dtype=np.uint8)
-        idx = _indexes(pdf["key"], bits, k).ravel()
-        np.bitwise_or.at(bm, idx // 8, (1 << (idx % 8)).astype(np.uint8))
-        return pd.DataFrame({
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "bitmap": [bm.tobytes()],
-            "n_keys": [len(pdf)],
-        })
-
-    return with_bucket.groupBy("bucket").applyInPandas(make, SIDECAR_SCHEMA)
-
-
-def screen(cand: DataFrame, sidecar: DataFrame, key_col: str,
-           group_col: str, num_buckets: int = 16, bits: int = 1 << 20,
-           k: int = 4) -> "tuple[DataFrame, DataFrame]":
-    """Split candidates into (definitely_new, maybe_seen). definitely_new
-    rows skip the exact anti-join entirely."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BooleanType
-
-    withb = cand.withColumn("__bucket",
-                            bucket_col(F.col(group_col), num_buckets))
-    joined = withb.join(
-        F.broadcast(sidecar.withColumnRenamed("bucket", "__bucket")),
-        "__bucket", "left")
-
-    @pandas_udf(BooleanType())
-    def may_contain(key: pd.Series, bitmap: pd.Series) -> pd.Series:
-        """Vectorized membership: index derivation for the whole batch at
-        once, then one gather per distinct bitmap (≤ num_buckets of them)."""
-        out = np.zeros(len(key), dtype=bool)
-        if not len(key):
-            return pd.Series(out)
-        idx = _indexes(key, bits, k)             # (n, k)
-        codes, uniques = pd.factorize(bitmap)    # None → code -1
-        for c, bm in enumerate(uniques):
-            rows = np.nonzero(codes == c)[0]
-            arr = np.frombuffer(bm, dtype=np.uint8)
-            pos = idx[rows]
-            hit = (arr[pos // 8] >> (pos % 8)) & 1
-            out[rows] = hit.all(axis=1)
-        return pd.Series(out)
-
-    flagged = joined.withColumn(
-        "__maybe", may_contain(F.col(key_col), F.col("bitmap")))
-    keep_cols = cand.columns
-    definitely_new = flagged.filter(~F.col("__maybe")).select(*keep_cols)
-    maybe = flagged.filter(F.col("__maybe")).select(*keep_cols)
-    return definitely_new, maybe

@@ -1894,7 +1894,9 @@ def vocab_drift_tvd(df: DataFrame, text_col: str, id_col: str,
     two products to DECIMAL(38,0) — documented contract limit, same
     class as growth_fit's. Returns the ``top_k`` most-drifted terms
     ``(term, cnt_a, cnt_b, tvd_micro)`` with ``(tvd_micro DESC, term)``
-    as the exact deterministic order.
+    as the exact deterministic order. When one slice is empty the TVD
+    is undefined and ``tvd_micro`` is NULL (the oracle's integer ``//``
+    by zero), not an ANSI divide-by-zero error.
 
     Scale shape: ONE (term)-keyed hash aggregation with map-side combine
     (conditional sums fold both slices in a single pass — no per-slice
@@ -1912,7 +1914,7 @@ def vocab_drift_tvd(df: DataFrame, text_col: str, id_col: str,
     return (per_term.crossJoin(F.broadcast(totals))
             .select("term", "cnt_a", "cnt_b",
                     F.expr("(abs(cnt_a * tb - cnt_b * ta) * 1000000) "
-                           "div (2 * ta * tb)")
+                           "div nullif(2 * ta * tb, 0)")
                     .cast("long").alias("tvd_micro"))
             .orderBy(F.col("tvd_micro").desc(), "term")
             .limit(int(top_k)))

@@ -173,9 +173,8 @@ def run_seen_filter_stream(
     Error direction matters: a Bloom false positive here could only ever
     misclassify, never lose, a row — the operator is LOSSLESS (round-3
     ADVICE; the prior fail-open design still dropped sub-saturation FP
-    rows, the unrecoverable direction). Mirroring the batch sidecar's
-    ``bloom.screen()`` contract, every first in-batch occurrence of a key
-    is emitted exactly once, tagged by a ``verdict`` column:
+    rows, the unrecoverable direction). Every first in-batch occurrence of
+    a key is emitted exactly once, tagged by a ``verdict`` column:
 
     - ``new`` — no Bloom bit was set: PROVABLY first-seen, no downstream
       check needed;
@@ -187,9 +186,8 @@ def run_seen_filter_stream(
       dropped row.
 
     Repeated keys within one micro-batch are exact in-batch duplicates
-    (no FP involved) and are still dropped. Same index derivation as the
-    batch Bloom sidecar (operators/bloom.py): md5-hex key material sliced
-    directly, no rehash."""
+    (no FP involved) and are still dropped. Bit indexes come from
+    operators/bloom.py: md5-hex key material sliced directly, no rehash."""
     import numpy as np
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

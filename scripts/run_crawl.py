@@ -6,7 +6,7 @@ Usage:
     python scripts/build_pyfiles.py                       # -> dist/disco_crawl_spark.zip
     spark-submit --py-files dist/disco_crawl_spark.zip \
         scripts/run_crawl.py --warehouse /path/wh \
-        [--pages /path/pages_parquet] [--rounds N] [--resume] [--bloom]
+        [--pages /path/pages_parquet] [--rounds N] [--resume]
 
 Without --pages a deterministic synthetic corpus is generated (robots and
 host attributes derived from it). With --pages, robots/attrs default to
@@ -30,7 +30,6 @@ def main():
     ap.add_argument("--pages", default=None)
     ap.add_argument("--rounds", type=int, default=10)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--bloom", action="store_true")
     ap.add_argument("--seeds", nargs="*", default=None)
     args = ap.parse_args()
 
@@ -67,8 +66,7 @@ def main():
         eng = CrawlEngine.resume(spark, pages, robots, attrs, args.warehouse)
     else:
         eng = CrawlEngine(spark, pages, robots, attrs, args.warehouse,
-                          seeds=seeds,
-                          seen_filter="bloom" if args.bloom else None)
+                          seeds=seeds)
     eng.run(max_rounds=eng.round_no + args.rounds)
     order = eng.crawl_order()
     summary = {

@@ -198,7 +198,7 @@ def test_pages_cache_partitions_sized_by_data_not_cores(
     of spark.sql.shuffle.partitions: at wide-64000h the bare
     repartition(url) inherited the core count, so local[16] unrolled 16
     concurrent ~2.5 GB cache blocks and OOMed the 32 GB driver JVM
-    (BENCH/worker_err_crawl_wide_1787218761.log, 2026-08-20) while the
+    (BENCH/CRAWL_BISECT.md round 5, 2026-08-20) while the
     identical corpus at local[4] survived. pages_cache_partitions pins the
     layout to the DATA; the crawl result must be byte-identical to the
     oracle regardless of the count."""

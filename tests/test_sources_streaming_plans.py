@@ -136,26 +136,6 @@ def test_tpch_q1_plan_quality(spark):
     assert "l_orderkey" not in plans.scan_schema(df)
 
 
-@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
-def test_engine_seen_filter_path_equivalent(spark, tmp_warehouse, seen_filter):
-    from disco_crawl_spark import refsim
-    from disco_crawl_spark.engine import CrawlEngine
-    c = corpus_mod.generate(n_agencies=3, n_govcms=1, n_sections=2,
-                            pages_per_section=2)
-    sim = refsim.Simulator(c).run()
-    pages = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"], r["lang"],
-              r.get("redirect_to"))
-         for r in c.page_rows()],
-        "url string, warc_ts timestamp, html binary, text string, lang string, redirect_to string")
-    eng = CrawlEngine(spark, pages, c.robots, c.hosts, tmp_warehouse,
-                      seeds=c.seeds, seen_filter=seen_filter)
-    eng.run()
-    assert eng.crawl_order() == sim.order
-    sim_seen = {(g, k) for g, ks in sim.url_seen.items() for k in ks}
-    assert eng.url_seen_set() == sim_seen
-
-
 # ---------------------------------------------------------------------------
 # bucketed state tables (the 10^10-frontier layout)
 # ---------------------------------------------------------------------------
