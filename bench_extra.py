@@ -8,7 +8,8 @@ NOT the driver bench — bench.py is frozen for measurement. This tool:
   noop  <q> [<q>...]   same but with the noop sink (computes every column;
                        isolates computation from the count() shortcut)
   plan  <q> [<q>...]   write .explain(formatted) to plans/r06/<q>_<tag>.txt
-  jobs  <q> [<q>...]   job/stage/task counts per query via the status tracker
+  jobs  <q> [<q>...]   job/stage/task counts per query, counted as perfbench
+                       counts them (perfbench/tracing.py JobCounter)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 Flags: --repeats N (default 3), --tag before|after (plan file suffix).
@@ -22,6 +23,7 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
@@ -48,22 +50,22 @@ def main():
     tag = opts.get("tag", "before")
 
     from disco_crawl_spark import queries as q
+    from disco_crawl_spark.plans import explain_str
     reg = q.queries()
     if names == ["all"]:
         import bench
         names = bench.HEADLINE
 
+    from tracing import JobCounter
     spark = _spark()
-    sc = spark.sparkContext
+    jobs = JobCounter(spark.sparkContext)
     out = {}
     try:
         for name in names:
             fn = reg[name]
             if mode == "plan":
                 os.makedirs(os.path.join(REPO, "plans", "r06"), exist_ok=True)
-                df = fn(spark, SF_DIR)
-                txt = df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted")
+                txt = explain_str(fn(spark, SF_DIR))
                 p = os.path.join(REPO, "plans", "r06", f"{name}_{tag}.txt")
                 with open(p, "w") as f:
                     f.write(txt)
@@ -74,28 +76,15 @@ def main():
                 _gc(spark)
                 continue
             if mode == "jobs":
-                t = sc.statusTracker()
-                before = set(t.getJobIdsForGroup(None) or [])
-                sc.setJobGroup(f"jobs-{name}", name)
+                lo = jobs.last_job_id(settle=True)
                 t0 = time.time()
                 fn(spark, SF_DIR).count()
                 dt = time.time() - t0
-                after = set(t.getJobIdsForGroup(f"jobs-{name}") or [])
-                njobs = len(after - before) or len(after)
-                nst = 0
-                ntask = 0
-                for j in after:
-                    ji = t.getJobInfo(j)
-                    if ji:
-                        nst += len(ji.stageIds)
-                        for s in ji.stageIds:
-                            si = t.getStageInfo(s)
-                            if si:
-                                ntask += si.numTasks
-                sc.setJobGroup(None, None)
-                print(f"{name}: {njobs} jobs, {nst} stages, {ntask} tasks, "
+                ids = range(lo + 1, jobs.last_job_id(settle=True) + 1)
+                nst, ntask = jobs.stages_tasks(ids)
+                print(f"{name}: {len(ids)} jobs, {nst} stages, {ntask} tasks, "
                       f"{dt:.3f}s (cold)")
-                out[name] = njobs
+                out[name] = len(ids)
                 _gc(spark)
                 continue
             # time / noop

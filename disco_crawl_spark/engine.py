@@ -265,9 +265,6 @@ class CrawlEngine:
                 "crawl_log": self.t_log}[name]
 
     def _append(self, name: str, delta: DataFrame):
-        import time as _time
-        _prof = os.environ.get("DISCO_PROFILE") == "1"
-        _t0 = _time.time()
         # Commit the delta to parquet (ONE Spark action), then use the
         # written files as the in-run view. Reading back the files both
         # truncates lineage (without this, every round's plan nests the
@@ -287,19 +284,13 @@ class CrawlEngine:
         # at ~0.2 across 1x-16x round sizes until this fix). Small files per
         # round are the correct Iceberg-shaped trade; compaction
         # (compact_seen) is the remedy, never a serial write path.
-        _t1 = _time.time()
         _, data_dir = self._table(name).append(delta, self.round_no)
-        _t2 = _time.time()
         # explicit schema: parquet reads without one spend a driver job on
         # footer/schema inference — at round-loop cadence that is one
         # wasted dispatch per append (3/round), pure serial cost
         delta_view = self.spark.read.schema(delta.schema).parquet(data_dir)
         self._mem[name] = (delta_view if cur is None
                            else cur.unionByName(delta_view))
-        if _prof:
-            print(f"#   append[{name}] view={_t1 - _t0:.2f} "
-                  f"write={_t2 - _t1:.2f} reread={_time.time() - _t2:.2f}",
-                  flush=True)
         return delta_view
 
     def _view(self, name: str) -> "DataFrame | None":
@@ -511,18 +502,8 @@ class CrawlEngine:
     # one crawl round
     # ------------------------------------------------------------------
     def step(self):
-        import time as _time
-        _prof = os.environ.get("DISCO_PROFILE") == "1"
-        _marks: list = []
-
-        def _mark(label):
-            if _prof:
-                _marks.append((label, _time.time()))
-
         rnd = self.round_no
-        _mark("begin")
         self._start_domains()
-        _mark("start_domains")
 
         # -- schedule: per-host pos range [cursor, cursor+budget) ------
         bounds_rows = []
@@ -616,7 +597,6 @@ class CrawlEngine:
                 )
             )
             results = self._append("crawl_log", results)
-            _mark("fetch_parse_log")
             # one aggregation drives BOTH new-domain discovery and the
             # per-host fetch/parse metrics (statsd-counter taxonomy of
             # worker.py:466,492,499-501), recorded in the round-state
@@ -661,7 +641,6 @@ class CrawlEngine:
             stats_rows = stats_df.collect()
         else:
             stats_rows = []
-        _mark("build_generations")
 
         # -- per-host fetch/parse metrics + new-domain discovery -------
         discovered_all = set()
@@ -680,7 +659,6 @@ class CrawlEngine:
             discovered_all.update(r["discovered"])
         for d in sorted(discovered_all):
             self._seen_host(d, rnd)
-        _mark("stats_rows")
 
         # -- snapshot the driver state (the round checkpoint) ----------
         self.t_log.commit_state(rnd, self._state_dict())
@@ -688,12 +666,6 @@ class CrawlEngine:
         # commit leaves the deltas pending for the next attempt
         self._ckpt_events = len(self.events)
         self._ckpt_metrics = len(self.metrics)
-        _mark("commit_state")
-        if _prof:
-            parts = " ".join(
-                f"{lbl}={_marks[i][1] - _marks[i - 1][1]:.2f}"
-                for i, (lbl, _) in enumerate(_marks) if i)
-            print(f"# round {rnd}: {parts}", flush=True)
         self.round_no += 1
         if self.compact_seen_every and \
                 self.round_no % self.compact_seen_every == 0:
@@ -710,16 +682,6 @@ class CrawlEngine:
         whole round runs ONE driver action beyond its three table
         commits; returns the collected rows for the caller's metrics
         accounting."""
-        import time as _time
-        _prof = os.environ.get("DISCO_PROFILE") == "1"
-        _t = _time.time()
-
-        def _mark(lbl):
-            nonlocal _t
-            if _prof:
-                now = _time.time()
-                print(f"#   build_gen {lbl}={now - _t:.2f}", flush=True)
-                _t = now
         sess = self.spark.createDataFrame(
             [(h, self.dom[h]["session"], self.dom[h]["gen"],
               self.dom[h]["scheme"]) for h in hosts],
@@ -760,7 +722,6 @@ class CrawlEngine:
                 cand = cand.join(seg_seen, ["host", "url_key"], "left_anti")
         # within-batch key dedup: first raw link per key wins (the oracle
         # marks keys sequentially in sorted order)
-        _mark("plan_cand")
         wk = Window.partitionBy("host", "url_key").orderBy("link")
         cand = (cand.withColumn("rn", F.row_number().over(wk))
                 .filter(F.col("rn") == 1).drop("rn").persist())
@@ -775,7 +736,6 @@ class CrawlEngine:
         # bench widths; ~1.5 M keys ≈ 100 MB per file at any width, so
         # wide rounds keep writing many files in parallel)
         n_cand = cand.count()
-        _mark("cand_fill")
         # every survivor is seen-inserted, even ones the cap then drops
         new_seen = (cand.join(F.broadcast(sess.select("host", "session")), "host")
                     .select("host", "session", "host_group", "url_key")
@@ -807,7 +767,6 @@ class CrawlEngine:
                 lambda: self._append("frontier", self._prepare(nxt)))
             prepared_delta = f_front.result()
             f_seen.result()
-        _mark("seen_frontier_append")
         # ONE collect for everything the driver needs this round: raw
         # next-gen size (finish decision — an all-robots-filtered gen
         # still stays active one round, like the reference), prepared
@@ -820,7 +779,6 @@ class CrawlEngine:
         if stats_df is not None:
             counts_df = stats_df.join(counts_df, "host", "full_outer")
         stats = counts_df.collect()
-        _mark("counts_collect")
         raw_counts = {r["host"]: (r["raw_n"] or 0) for r in stats}
         counts = {r["host"]: (r["prep_n"] or 0) for r in stats}
         cand.unpersist()
@@ -927,8 +885,7 @@ class CrawlEngine:
         eng.dom = st["dom"]
         # events/metrics are per-round deltas (one per state snapshot):
         # replay every checkpoint up to and including the chosen one, in
-        # commit order. Old-style full-list keys ("events"/"metrics")
-        # replace instead of extend, so pre-delta checkpoints still load.
+        # commit order.
         eng.events, eng.metrics = [], []
         for s in eng.t_log.history():
             if s["op"] != "state" or not s.get("state"):
@@ -936,11 +893,7 @@ class CrawlEngine:
             if s["id"] > ckpt["id"]:
                 break
             ss = s["state"]
-            if "events" in ss:
-                eng.events = [tuple(e) for e in ss["events"]]
             eng.events.extend(tuple(e) for e in ss.get("events_delta", []))
-            if "metrics" in ss:
-                eng.metrics = list(ss["metrics"])
             eng.metrics.extend(ss.get("metrics_delta", []))
         eng._ckpt_events = len(eng.events)
         eng._ckpt_metrics = len(eng.metrics)

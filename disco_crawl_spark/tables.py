@@ -97,15 +97,12 @@ class Table:
 
     @staticmethod
     def _files_at(snapshots: list, snapshot_id: int) -> list:
-        """Replay file-lineage deltas up to and including snapshot_id.
-        Legacy records carry a full ``files`` list and behave as a reset."""
+        """Replay file-lineage deltas up to and including snapshot_id."""
         cur: list = []
         for s in snapshots:
             if s["id"] > snapshot_id:
                 break
-            if "files" in s:                      # legacy full-list record
-                cur = list(s["files"])
-            elif s.get("files_reset"):
+            if s.get("files_reset"):
                 cur = list(s.get("files_delta") or [])
             else:
                 cur = cur + list(s.get("files_delta") or [])
@@ -115,8 +112,7 @@ class Table:
         if snap is None:
             return None
         out = dict(snap)
-        if "files" not in out:
-            out["files"] = self._files_at(meta["snapshots"], snap["id"])
+        out["files"] = self._files_at(meta["snapshots"], snap["id"])
         return out
 
     def current_snapshot(self) -> "dict | None":
@@ -135,32 +131,20 @@ class Table:
 
     # -- writes -------------------------------------------------------
     def _write_data(self, df, round_no: int) -> "tuple[str, list]":
-        import time as _time
-        _prof = os.environ.get("DISCO_PROFILE") == "1"
         rel = f"data/r{round_no:05d}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, rel)
-        _t0 = _time.time()
         df.write.mode("overwrite").parquet(out)
-        _t1 = _time.time()
         # per-file lineage + column min/max from parquet footers — no
         # extra Spark job. The stats are what Iceberg keeps per data file
         # in its manifests; ``read(..., eq=...)`` uses them to skip files
         # at planning time (manifest-level pruning), the layout feature a
         # per-host point query at 10 TB lives on.
         files = []
-        try:
-            ds = pads.dataset(out, format="parquet")
-            for f in ds.files:
-                md = papq.ParquetFile(f).metadata
-                files.append({"file": os.path.relpath(f, self.path),
-                              "rows": md.num_rows,
-                              "stats": _footer_stats(md)})
-        except Exception:
-            pass
-        if _prof:
-            print(f"#     table[{self.name}] job={_t1 - _t0:.2f} "
-                  f"footers={_time.time() - _t1:.2f} n={len(files)}",
-                  flush=True)
+        for f in pads.dataset(out, format="parquet").files:
+            md = papq.ParquetFile(f).metadata
+            files.append({"file": os.path.relpath(f, self.path),
+                          "rows": md.num_rows,
+                          "stats": _footer_stats(md)})
         return rel, files
 
     def _new_snapshot(self, data_dirs: list, round_no: int, op: str,

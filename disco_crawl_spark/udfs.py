@@ -119,11 +119,6 @@ def domainize(host: pd.Series, link: pd.Series, scheme: pd.Series) -> pd.Series:
     ])
 
 
-@pandas_udf(StringType())
-def host_group(host: pd.Series) -> pd.Series:
-    return host.map(refsem.host_group)
-
-
 def make_robots_allow(spark, robots_corpus: dict):
     """Robots filter as a broadcast-join-style UDF: the (tiny) robots corpus
     is a Spark broadcast; each executor parses a host's robots.txt once
@@ -149,11 +144,6 @@ def make_robots_allow(spark, robots_corpus: dict):
 # ---------------------------------------------------------------------------
 # Column-expression helpers (JVM-side, no Python)
 # ---------------------------------------------------------------------------
-
-
-def url_host(col):
-    """Host of a URL, JVM-side."""
-    return F.parse_url(col, F.lit("HOST"))
 
 
 def sha256_url(col):

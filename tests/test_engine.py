@@ -2,6 +2,9 @@
 simulator — the north_rule checks: identical crawl ordering, identical
 URL-seen set, byte-identical extracted text — plus checkpoint/resume."""
 
+import importlib.util
+import os
+
 import pytest
 
 from disco_crawl_spark import corpus as corpus_mod, refsim
@@ -68,6 +71,46 @@ def test_engine_matches_oracle(engine, sim, c):
     assert "via-redirect.gov.au" in crawled_hosts
     sim_redir = {r["url"] for r in sim.crawl_log if r.get("redirect_to")}
     assert set(redir) == sim_redir
+
+
+def test_round_phases_traceable_without_engine_code(engine):
+    # perfbench times a round's phases by wrapping the engine's methods on
+    # the instance (perfbench/tracing.py); that only works while step()
+    # calls its phases through self — a phase called any other way would
+    # silently drop out of the traced per-layer metrics
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench", "tracing.py")
+    spec = importlib.util.spec_from_file_location("perfbench_tracing", path)
+    tracing = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tracing)
+    tr = tracing.Tracer(tracing.JobCounter(engine.spark.sparkContext))
+    for m in ("step", "_start_domains", "_build_generations"):
+        tr.wrap(engine, m, m)
+    for t in (engine.t_frontier, engine.t_seen, engine.t_log):
+        tr.wrap(t, "append", f"append.{t.name}")
+    tr.wrap(engine.t_log, "commit_state", "commit_state")
+    engine.step()
+
+    (step,) = tr.named("step")
+    by_id = {s["id"]: s for s in tr.spans}
+
+    def under_step(span):
+        while span["parent"] is not None:
+            span = by_id[span["parent"]]
+            if span is step:
+                return True
+        return False
+
+    phases = ("_start_domains", "_build_generations", "append.frontier",
+              "append.url_seen", "append.crawl_log", "commit_state")
+    for name in phases:
+        spans = tr.named(name)
+        assert spans, name
+        assert all(under_step(s) for s in spans), name
+    for name in ("_start_domains", "_build_generations"):
+        assert tr.job_ids(tr.named(name)), name
+    children = [s for s in tr.spans if s["parent"] == step["id"]]
+    assert sum(tr.duration(s) for s in children) <= tr.duration(step)
 
 
 def test_engine_resume_equals_uninterrupted(spark, c, sim, tmp_warehouse):

@@ -3,6 +3,9 @@ overwrite snapshots, time travel, state commits, lineage counts, GC."""
 
 import os
 
+import pytest
+
+from disco_crawl_spark import tables
 from disco_crawl_spark.tables import Catalog, Table
 
 
@@ -77,6 +80,41 @@ def test_manifest_minmax_file_skipping(spark, tmp_warehouse):
 
     # integer stats prune too
     assert 0 < len(t.prune_files(snap, {"n": 250})) < n_files
+
+
+def test_append_footer_failure_commits_nothing(spark, tmp_warehouse,
+                                              monkeypatch):
+    # a footer read failing partway through the new files must abort the
+    # append: committing the files read so far would leave a snapshot whose
+    # lineage lists only some of them, and read(eq=) prunes to that list
+    t = Table(tmp_warehouse, "hosts")
+
+    def hosts_df(lo, hi):
+        return (spark.range(lo, hi)
+                .selectExpr("concat('h', cast(id % 4 as string)) as host",
+                            "id as n")
+                .repartitionByRange(4, "host"))
+
+    t.append(hosts_df(0, 40), round_no=0)
+    before = t.history()
+    real = tables.papq.ParquetFile
+    calls = []
+
+    def flaky(path, *a, **kw):
+        calls.append(path)
+        if len(calls) == 2:
+            raise OSError("injected footer read failure")
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(tables.papq, "ParquetFile", flaky)
+    with pytest.raises(OSError, match="injected"):
+        t.append(hosts_df(40, 80), round_no=1)
+    monkeypatch.undo()
+    assert t.history() == before
+    assert t.read(spark).count() == 40
+    per_host = sum(t.read(spark, eq={"host": f"h{i}"})
+                   .filter(f"host = 'h{i}'").count() for i in range(4))
+    assert per_host == 40
 
 
 def test_compact_rewrites_small_files(spark, tmp_warehouse):
