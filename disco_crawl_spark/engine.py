@@ -28,14 +28,11 @@ Scale notes (100 TB / 10^10-URL design; local runs verify correctness):
 - **pages** can be a url-bucketed catalog table (``pages_bucketed=True``
   + ``sources.write_pages(buckets=N)``): the fetch join then exchanges
   only the per-round schedule, never the corpus (plan-asserted in tests).
-- **url_seen** compacts every K rounds (``compact_seen_every``) into a
-  table bucketed+sorted on exactly the anti-join key (host, url_key): the
-  generation-build anti-join reads it in place — no exchange of the seen
-  side — while the between-compactions tail stays broadcast-sized.
-- **frontier/crawl_log** compact every K rounds (``compact_tables_every``)
-  via the icelite rewrite-data-files op into host-sorted files, bounding
-  the O(rounds x parallelism) small-file growth that natural-parallelism
-  delta commits trade for scaling (``compact_tables``).
+- **frontier / url_seen / crawl_log** compact every K rounds
+  (``compact_every``) through the icelite rewrite-data-files op into
+  host-range-sorted files (url_seen also sorts on ``url_key``, the
+  anti-join key), bounding the O(rounds x parallelism) small-file growth
+  that natural-parallelism delta commits trade for scaling.
 - hot politeness groups are serialized by the group lock; AQE skew-join
   splitting covers hot-host fetch joins.
 
@@ -69,8 +66,7 @@ class CrawlEngine:
         config: "SimConfig | None" = None,
         seeds: "list | None" = None,
         pages_bucketed: bool = False,
-        compact_seen_every: "int | None" = None,
-        compact_tables_every: "int | None" = None,
+        compact_every: "int | None" = None,
         pages_cache_partitions: "int | None" = None,
     ):
         self.spark = spark
@@ -143,11 +139,7 @@ class CrawlEngine:
         self._probe_tbl_path = os.path.join(warehouse, "root_probes.cache")
         self._probe_tbl_ready = False
         self._probe_cache: dict = {}   # host -> probe dict | None (absent)
-        # compacted url_seen base (bucketed catalog table) + per-round tail;
-        # see compact_seen()
-        self._seen_base = None
-        self.compact_seen_every = compact_seen_every
-        self.compact_tables_every = compact_tables_every
+        self.compact_every = compact_every
         self.dom: dict = {}          # host -> driver state dict
         self.events: list = []       # (round, host, event)
         self.metrics: list = []      # per-round per-host fetch/parse stats
@@ -283,7 +275,8 @@ class CrawlEngine:
         # linearly with round width (BENCH/BASELINE.md §3: efficiency pinned
         # at ~0.2 across 1x-16x round sizes until this fix). Small files per
         # round are the correct Iceberg-shaped trade; compaction
-        # (compact_seen) is the remedy, never a serial write path.
+        # (_compact, every ``compact_every`` rounds) is the remedy, never a
+        # serial write path.
         _, data_dir = self._table(name).append(delta, self.round_no)
         # explicit schema: parquet reads without one spend a driver job on
         # footer/schema inference — at round-loop cadence that is one
@@ -295,67 +288,27 @@ class CrawlEngine:
 
     def _view(self, name: str) -> "DataFrame | None":
         if self._mem[name] is None:
-            if name == "url_seen" and self._seen_base is not None:
-                # the compacted base holds the whole committed history;
-                # the tail view stays empty until the next append
-                return None
             self._mem[name] = self._table(name).read(self.spark)
         return self._mem[name]
 
-    def _seen_view(self) -> "DataFrame | None":
-        """Full url_seen view: compacted bucketed base ∪ per-round tail."""
-        parts = [p for p in (self._seen_base, self._view("url_seen"))
-                 if p is not None]
-        if not parts:
-            return None
-        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-
-    def compact_seen(self, buckets: int = 16):
-        """Compact url_seen into a catalog table bucketed AND sorted by the
-        anti-join key (host, url_key). After this, the generation-build
-        anti-join never exchanges the seen side: the bucketed scan feeds the
-        SortMergeJoin directly and only the (per-round, small) candidate
-        side shuffles — the layout the north_star names for the 10^10-URL
-        frontier. Per-round deltas after the compaction form a small tail
-        that anti-joins separately (broadcast-sized between compactions)."""
-        full = self._seen_view()
-        if full is None:
-            return
-        import uuid as _uuid
-        rel = f"data/compact-r{self.round_no:05d}-{_uuid.uuid4().hex[:8]}"
-        out = os.path.join(self.t_seen.path, rel)
-        name = f"url_seen_b{buckets}_{_uuid.uuid4().hex[:8]}"
-        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (full.write.mode("overwrite").format("parquet")
-         .bucketBy(buckets, "host", "url_key").sortBy("host", "url_key")
-         .option("path", out).saveAsTable(name))
-        # an overwrite snapshot: the compacted dir replaces the delta chain
-        # (same rows, bucketed layout) — time travel to older snapshots and
-        # resume both keep working through the ordinary read path
-        self.t_seen._new_snapshot([rel], self.round_no, "compact", [], None,
-                                  files_reset=True)
-        self._seen_base = self.spark.table(name)
-        self._mem["url_seen"] = None  # tail restarts empty (guarded above)
-
-    def compact_tables(self, target_files: "int | None" = None):
+    def _compact(self, names):
         """Iceberg ``rewrite_data_files`` maintenance pass over the
         delta-accumulating tables. The r4 scaling fix commits every
         round's deltas at the job's NATURAL parallelism (the serial
         ``coalesce(1)`` was the round loop's Amdahl killer,
         BENCH/CRAWL_BISECT.md) — the deliberate trade is
         O(rounds x parallelism) small files on a long-lived table. This
-        is the remedy: every ``compact_tables_every`` rounds, frontier
-        and crawl_log rewrite their whole delta chain into
-        ``target_files`` host-range-sorted files (ES's implicit segment
-        merge is the reference analog that kept worker.py:244-280 resume
-        scans viable). Host-sorting makes the per-file min/max footer
-        stats disjoint, so ``Table.read(eq={'host': h})`` manifest
-        pruning touches O(1) files after compaction. Time travel,
+        is the remedy: every ``compact_every`` rounds each table rewrites
+        its whole delta chain into ``max(2, parallelism // 2)``
+        host-range-sorted files (ES's implicit segment merge is the
+        reference analog that kept worker.py:244-280 resume scans
+        viable). Host-sorting makes the per-file min/max footer stats
+        disjoint, so ``Table.read(eq={'host': h})`` manifest pruning
+        touches O(1) files after compaction; url_seen also sorts on
+        ``url_key``, the generation-build anti-join key. Time travel,
         rollback, and mid-crawl resume are unaffected: the compact
         snapshot holds the same rows, and older snapshots keep their
-        dirs until an explicit ``expire_before``. url_seen has its own
-        bucketed-layout path (``compact_seen``) tuned for the anti-join
-        and is not touched here.
+        dirs until an explicit ``expire_before``.
 
         The compact snapshot is stamped with the LAST CHECKPOINTED round
         (the hook runs after ``round_no`` advances): resume rolls each
@@ -363,26 +316,33 @@ class CrawlEngine:
         so a compaction stamped with the not-yet-run next round would be
         discarded on every resume; stamped with the finished round it IS
         the snapshot resume lands on."""
-        tf = target_files or max(
-            2, self.spark.sparkContext.defaultParallelism // 2)
+        tf = max(2, self.spark.sparkContext.defaultParallelism // 2)
         rnd = max(self.round_no - 1, 0)
-        for name in ("frontier", "crawl_log"):
+        for name in names:
             t = self._table(name)
             cur = t.current_snapshot()
             if not cur or not cur["data"] or len(cur.get("files", ())) <= tf:
                 continue                    # nothing worth rewriting
             t.compact(self.spark, rnd, target_files=tf,
-                      sort_cols=["host"])
+                      sort_cols=(["host", "url_key"] if name == "url_seen"
+                                 else ["host"]))
             # re-seed the in-run view from the compacted snapshot: the
             # old view stays correct (old dirs persist) but would keep
             # planning over the uncompacted file list
             self._mem[name] = None
 
+    def compact_seen(self):
+        """Compact url_seen (see ``_compact``)."""
+        self._compact(["url_seen"])
+
+    def compact_tables(self):
+        """Compact frontier and crawl_log (see ``_compact``)."""
+        self._compact(["frontier", "crawl_log"])
+
     def _drop_views(self):
-        # drop in-run views (incl. the compacted base — the committed
-        # snapshots hold the same rows); later reads re-load from them
+        # drop in-run views (the committed snapshots hold the same rows);
+        # later reads re-load from them
         self._mem = {k: None for k in self._mem}
-        self._seen_base = None
 
     # ------------------------------------------------------------------
     # generation preparation (worker.py:685-693): normalize + robots filter,
@@ -667,12 +627,8 @@ class CrawlEngine:
         self._ckpt_events = len(self.events)
         self._ckpt_metrics = len(self.metrics)
         self.round_no += 1
-        if self.compact_seen_every and \
-                self.round_no % self.compact_seen_every == 0:
-            self.compact_seen()
-        if self.compact_tables_every and \
-                self.round_no % self.compact_tables_every == 0:
-            self.compact_tables()
+        if self.compact_every and self.round_no % self.compact_every == 0:
+            self._compact(["frontier", "url_seen", "crawl_log"])
 
     def _build_generations(self, hosts: list, schedule: "DataFrame | None",
                            stats_df: "DataFrame | None" = None):
@@ -706,20 +662,12 @@ class CrawlEngine:
                 .withColumn("url_key", udfs.url_seen_key(F.col("link")))
                 .withColumn("host_group", cf.host_group(F.col("host"))))
         # anti-join against this session's seen keys
-        segments = [s for s in (self._seen_base, self._view("url_seen"))
-                    if s is not None]
-        if segments:
-            # one anti-join per segment (equivalent to anti-joining the
-            # union): the compacted base is bucketed+sorted on exactly
-            # (host, url_key), so its scan feeds the SortMergeJoin with NO
-            # exchange — only the per-round candidate side shuffles; the
-            # un-compacted tail is broadcast-sized between compactions
-            for seg in segments:
-                seg_seen = (seg.join(
-                    F.broadcast(sess.select("host", "session")),
-                    ["host", "session"])
+        seen = self._view("url_seen")
+        if seen is not None:
+            seen = (seen.join(F.broadcast(sess.select("host", "session")),
+                              ["host", "session"])
                     .select("host", "url_key").distinct())
-                cand = cand.join(seg_seen, ["host", "url_key"], "left_anti")
+            cand = cand.join(seen, ["host", "url_key"], "left_anti")
         # within-batch key dedup: first raw link per key wins (the oracle
         # marks keys sequentially in sorted order)
         wk = Window.partitionBy("host", "url_key").orderBy("link")
@@ -913,7 +861,7 @@ class CrawlEngine:
         return [(r["round"], r["host"], r["seq"], r["url"]) for r in rows]
 
     def url_seen_set(self) -> set:
-        df = self._seen_view()
+        df = self._view("url_seen")
         if df is None:
             return set()
         return {(r["host_group"], r["url_key"])

@@ -27,11 +27,6 @@ def should_be_crawled(host: Column) -> Column:
     return in_scope & ~blacklisted
 
 
-def suspicious_host(host: Column) -> Column:
-    """Discovered-domain guard (worker.py:405-407)."""
-    return host.contains(":") | host.contains("@")
-
-
 # ---------------------------------------------------------------------------
 # Jurisdiction classifier (parser.py:279-293)
 # ---------------------------------------------------------------------------
@@ -97,11 +92,6 @@ def host_group(host: Column) -> Column:
 def is_html(content_type: Column) -> Column:
     """Body-fetch gate (worker.py:496-497)."""
     return content_type.startswith("text/")
-
-
-def url_too_long(url: Column) -> Column:
-    """Internal-link cap (worker.py:394-397)."""
-    return F.length(url) >= 1024
 
 
 def filename_guess(url: Column) -> Column:

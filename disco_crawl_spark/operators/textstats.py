@@ -254,6 +254,29 @@ def _ws_tokens_nn(text_col: str):
     return _ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
 
 
+def _segment_lines(df: DataFrame, cols: list, t, segmenter: str,
+                   k_tokens: int) -> DataFrame:
+    """``df`` projected to ``cols`` plus ``__lines``: the text column ``t``
+    split into lines (``segmenter="newline"``) or into fixed
+    ``k_tokens``-token blocks (``"tokens"``, for corpora without line
+    structure). The token-block segmenter references the tokenized array
+    inside a per-segment lambda: it is staged as a real column first, or
+    interpreted higher-order eval re-tokenizes the document per segment
+    (the fingerprints O(n^3) lesson; >=2 references keep CollapseProject
+    from undoing the staging)."""
+    if segmenter == "newline":
+        return df.select(*cols, F.split(t, "\n").alias("__lines"))
+    if segmenter != "tokens":
+        raise ValueError(f"unknown segmenter {segmenter!r}")
+    s0 = df.select(*cols, _ws_tokens(t).alias("__tk"))
+    n_seg = F.ceil(F.size("__tk") / F.lit(k_tokens)).cast("int")
+    return s0.select("*", F.transform(
+        F.sequence(F.lit(0), F.greatest(n_seg, F.lit(1)) - 1),
+        lambda i: F.array_join(
+            F.slice("__tk", i * k_tokens + 1, k_tokens), " "))
+        .alias("__lines")).drop("__tk")
+
+
 def lm_perplexity(df: DataFrame, text_col: str, id_col: str,
                   ref_df: "DataFrame | None" = None,
                   approx: bool = False) -> DataFrame:
@@ -454,25 +477,8 @@ def c4_line_filter(df: DataFrame, text_col: str, id_col: str,
     composes with any downstream exchange.
     """
     t = F.coalesce(F.col(text_col), F.lit(""))
-    # the token-block segmenter references the tokenized array inside a
-    # per-segment lambda: stage it as a real column first, or interpreted
-    # higher-order eval re-tokenizes the document per segment (the
-    # fingerprints O(n^3) lesson; >=2 references below keep
-    # CollapseProject from undoing the staging)
-    if segmenter == "newline":
-        pre = df.select(F.col(id_col), t.alias("__t"),
-                        F.split(t, "\n").alias("__lines"))
-    elif segmenter == "tokens":
-        s0 = df.select(F.col(id_col), t.alias("__t"),
-                       _ws_tokens(t).alias("__tk"))
-        n_seg = F.ceil(F.size("__tk") / F.lit(k_tokens)).cast("int")
-        pre = s0.select(F.col(id_col), "__t", F.transform(
-            F.sequence(F.lit(0), F.greatest(n_seg, F.lit(1)) - 1),
-            lambda i: F.array_join(
-                F.slice("__tk", i * k_tokens + 1, k_tokens), " "))
-            .alias("__lines"))
-    else:
-        raise ValueError(f"unknown segmenter {segmenter!r}")
+    pre = _segment_lines(df, [F.col(id_col), t.alias("__t")], t, segmenter,
+                         k_tokens)
     lines = F.col("__lines")
     wc = lambda ln: F.size(F.filter(F.split(ln, r"\s+"),
                                     lambda x: x != ""))
@@ -1353,25 +1359,9 @@ def host_line_dedup(df: DataFrame, text_col: str, id_col: str,
     filtering.
     """
     t = F.coalesce(F.col(text_col), F.lit(""))
-    # stage the token array before the per-segment lambda (the
-    # fingerprints O(n^3) lesson: interpreted higher-order eval would
-    # re-tokenize the document per segment otherwise)
-    if segmenter == "newline":
-        pre = df.select(F.col(id_col).alias("id"),
-                        F.col(group_col).alias("grp"),
-                        F.split(t, "\n").alias("__lines"))
-    elif segmenter == "tokens":
-        s0 = df.select(F.col(id_col).alias("id"),
-                       F.col(group_col).alias("grp"),
-                       _ws_tokens(t).alias("__tk"))
-        n_seg = F.ceil(F.size("__tk") / F.lit(k_tokens)).cast("int")
-        pre = s0.select("id", "grp", F.transform(
-            F.sequence(F.lit(0), F.greatest(n_seg, F.lit(1)) - 1),
-            lambda i: F.array_join(
-                F.slice("__tk", i * k_tokens + 1, k_tokens), " "))
-            .alias("__lines"))
-    else:
-        raise ValueError(f"unknown segmenter {segmenter!r}")
+    pre = _segment_lines(df, [F.col(id_col).alias("id"),
+                              F.col(group_col).alias("grp")], t, segmenter,
+                         k_tokens)
     seg = pre.select("id", "grp",
                      F.posexplode("__lines").alias("pos", "line"))
     seg = seg.withColumn("norm", F.lower(F.trim(F.col("line"))))

@@ -51,8 +51,3 @@ def shuffle_count(df: DataFrame) -> int:
     return sum(1 for line in s.splitlines()
                if "Exchange hashpartitioning" in line
                or "Exchange rangepartitioning" in line)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    s = explain_str(df, "simple")
-    return s.count("WholeStageCodegen")

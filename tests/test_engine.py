@@ -172,12 +172,13 @@ def test_engine_resume_after_midround_kill(spark, c, sim, tmp_warehouse):
 def test_engine_compaction_preserves_resume_and_pruned_reads(
         spark, c, sim, tmp_warehouse):
     # the icelite maintenance pass (VERDICT r4 #4): natural-parallelism
-    # delta commits trade small files for scaling; compact_tables must
+    # delta commits trade small files for scaling; compaction must
     # (a) actually shrink the file count, (b) keep per-host pruned reads
-    # identical, and (c) leave mid-crawl resume bit-identical to the
-    # oracle run
+    # identical, (c) leave mid-crawl resume bit-identical to the oracle
+    # run, and (d) register nothing in the session catalog
+    tables_before = {t.name for t in spark.catalog.listTables()}
     eng = CrawlEngine(spark, _pages_df(spark, c), c.robots, c.hosts,
-                      tmp_warehouse, seeds=c.seeds, compact_tables_every=2)
+                      tmp_warehouse, seeds=c.seeds, compact_every=2)
     for _ in range(4):      # compaction fires after rounds 2 and 4
         eng.step()
     snap = eng.t_frontier.current_snapshot()
@@ -193,18 +194,25 @@ def test_engine_compaction_preserves_resume_and_pruned_reads(
     pruned = {tuple(r) for r in spark.read.parquet(*pruned_files)
               .filter(f"host = '{host}'").collect()}
     assert pruned == full
+    seen_head = eng.t_seen.current_snapshot()
     del eng
-    # resume lands ON the compact snapshot (stamped with the finished
+    # resume lands ON the compact snapshots (stamped with the finished
     # round) and the finished crawl still matches the oracle exactly
     eng2 = CrawlEngine.resume(spark, _pages_df(spark, c), c.robots, c.hosts,
                               tmp_warehouse)
     assert eng2.round_no == 4
     assert eng2.t_frontier.current_snapshot()["op"] == "compact"
+    seen_after = eng2.t_seen.current_snapshot()
+    assert (seen_after["id"], seen_after["op"]) == \
+        (seen_head["id"], seen_head["op"])
+    assert seen_after["rows"] == eng2.t_seen.read(spark).count()
+    assert seen_after["files"]
     eng2.run()
     assert eng2.crawl_order() == sim.order
     sim_seen = {(g, k) for g, ks in sim.url_seen.items() for k in ks}
     assert eng2.url_seen_set() == sim_seen
     assert set(eng2.events) == set(sim.events)
+    assert {t.name for t in spark.catalog.listTables()} <= tables_before
 
 
 def test_dual_domain_computed_from_probes_not_flag(spark, tmp_warehouse):

@@ -186,34 +186,6 @@ def test_bucketed_pages_fetch_join_no_big_side_exchange(spark, tmp_path):
         assert plans.shuffle_count(j2) == 1
 
 
-def test_compacted_seen_anti_join_no_big_side_exchange(spark, tmp_warehouse):
-    from disco_crawl_spark.engine import CrawlEngine
-    c = corpus_mod.generate(n_agencies=3, n_govcms=1, n_sections=2,
-                            pages_per_section=2)
-    pages = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"], r["lang"],
-          r.get("redirect_to")) for r in c.page_rows()],
-        sources.PAGES_SCHEMA)
-    eng = CrawlEngine(spark, pages, c.robots, c.hosts, tmp_warehouse,
-                      seeds=c.seeds)
-    for _ in range(3):
-        eng.step()
-    eng.compact_seen(buckets=4)
-    assert eng._seen_base is not None
-    base = eng._seen_base
-    cand = spark.createDataFrame(
-        [("a.gov.au", "k%d" % i) for i in range(10)],
-        "host string, url_key string")
-    with _no_broadcast(spark):
-        j = cand.join(base.select("host", "url_key").distinct(),
-                      ["host", "url_key"], "left_anti")
-        ex = plans.explain_str(j)
-        assert "Bucketed: true" in ex
-        # one exchange total: the candidate side; the seen scan (and its
-        # distinct, satisfied by the bucketing) never move
-        assert plans.shuffle_count(j) == 1
-
-
 def test_engine_bucketed_pages_and_compaction_match_oracle(
         spark, tmp_warehouse, tmp_path):
     from disco_crawl_spark import refsim
@@ -229,8 +201,10 @@ def test_engine_bucketed_pages_and_compaction_match_oracle(
                                name="t_pages_e2e")
     eng = CrawlEngine(spark, spark.table(name), c.robots, c.hosts,
                       tmp_warehouse, seeds=c.seeds, pages_bucketed=True,
-                      compact_seen_every=2)
+                      compact_every=2)
     eng.run()
+    # url_seen went through Table.compact at least once
+    assert any(s["op"] == "compact" for s in eng.t_seen.history())
     assert eng.crawl_order() == sim.order
     sim_seen = {(g, k) for g, ks in sim.url_seen.items() for k in ks}
     assert eng.url_seen_set() == sim_seen
