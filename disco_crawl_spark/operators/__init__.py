@@ -8,4 +8,4 @@ operator is a DataFrame→DataFrame function designed for shuffle-efficiency
 at scale and exposed as a driver-checkable query in __spark_entry__.py.
 """
 
-from . import bloom, dedup, multimodal, schedule, similarity, sketch, skew, textstats  # noqa: F401
+from . import dedup, multimodal, schedule, similarity, sketch, skew, textstats  # noqa: F401

@@ -455,10 +455,6 @@ def write_minhash_signatures(df: DataFrame, text_col: str, id_col: str,
      .write.mode("overwrite").parquet(path))
 
 
-def read_minhash_signatures(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def cross_corpus_dedup(new_df: DataFrame, ref_df: DataFrame, text_col: str,
                        id_col: str, threshold: float = 0.5,
                        num_hashes: int = 32, bands: int = 8,

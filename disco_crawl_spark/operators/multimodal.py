@@ -1,11 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via mapInPandas.
+with typed metadata, decoded via mapInPandas.
 
-The Spark-side contract is fully real — schemas, partition/batch shapes,
-mapInPandas signatures, and a deterministic synthetic codec for tests. The
-actual pixel/sample decoding is stubbed behind an import-try (PIL/libav are
-not in this container): with the libs present, swap ``_decode_real`` in and
-nothing else changes.
+The Spark-side contract is real (schemas, partition/batch shapes,
+mapInPandas signatures); the payloads use a deterministic synthetic
+container because no image/audio codec library is a dependency. A real
+codec would replace the container parse in ``_decode`` and nothing else
+changes.
 
 Synthetic media format (deterministic, self-describing):
     b"SYNIMG:<width>x<height>:" + width*height bytes (row-major gray)
@@ -19,9 +19,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql import DataFrame
+from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", IntegerType()),
@@ -29,36 +29,6 @@ MEDIA_SCHEMA = StructType([
     StructField("payload", BinaryType()),       # opaque encoded bytes
     StructField("mime", StringType()),
 ])
-
-try:  # real decoders, if ever available
-    from PIL import Image  # noqa: F401
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
-
-# ---------------------------------------------------------------------------
-# synthetic codec (tests/bench; replaces network-fetched media)
-# ---------------------------------------------------------------------------
-
-
-def encode_image(width: int, height: int, seed: int) -> bytes:
-    rng = np.random.RandomState(seed)
-    px = rng.randint(0, 256, size=width * height, dtype=np.uint8)
-    return f"SYNIMG:{width}x{height}:".encode() + px.tobytes()
-
-
-def encode_audio(rate: int, n: int, seed: int) -> bytes:
-    rng = np.random.RandomState(seed)
-    return (f"SYNAUD:{rate}:{n}:".encode()
-            + rng.randint(0, 256, size=n, dtype=np.uint8).tobytes())
-
-
-def encode_video(fps: int, frames: int, w: int, h: int, seed: int) -> bytes:
-    rng = np.random.RandomState(seed)
-    return (f"SYNVID:{fps}:{frames}:{w}x{h}:".encode()
-            + rng.randint(0, 256, size=frames * w * h,
-                          dtype=np.uint8).tobytes())
 
 
 def _decode(payload: bytes) -> dict:
@@ -68,9 +38,7 @@ def _decode(payload: bytes) -> dict:
         dims, _, px = rest.partition(b":")
         w, h = (int(x) for x in dims.split(b"x"))
         arr = np.frombuffer(px, dtype=np.uint8)[: w * h]
-        return {"kind": "image", "width": w, "height": h,
-                "mean": float(arr.mean()) if arr.size else 0.0,
-                "frames": 1, "duration": 0.0,
+        return {"kind": "image", "width": w, "height": h, "frames": 1,
                 "px_sum": int(arr.sum()), "px_n": int(arr.size),
                 "dur_num": 0, "dur_den": 1}
     if head == b"SYNAUD":
@@ -78,9 +46,7 @@ def _decode(payload: bytes) -> dict:
         n_b, _, samples = rest2.partition(b":")
         rate, n = int(rate_b), int(n_b)
         arr = np.frombuffer(samples, dtype=np.uint8)[:n]
-        return {"kind": "audio", "width": 0, "height": 0,
-                "mean": float(arr.mean()) if arr.size else 0.0,
-                "frames": n, "duration": n / rate if rate else 0.0,
+        return {"kind": "audio", "width": 0, "height": 0, "frames": n,
                 "px_sum": int(arr.sum()), "px_n": int(arr.size),
                 "dur_num": n, "dur_den": rate}
     if head == b"SYNVID":
@@ -90,109 +56,11 @@ def _decode(payload: bytes) -> dict:
         fps, frames = int(fps_b), int(fr_b)
         w, h = (int(x) for x in dims.split(b"x"))
         arr = np.frombuffer(px, dtype=np.uint8)[: frames * w * h]
-        return {"kind": "video", "width": w, "height": h,
-                "mean": float(arr.mean()) if arr.size else 0.0,
-                "frames": frames, "duration": frames / fps if fps else 0.0,
+        return {"kind": "video", "width": w, "height": h, "frames": frames,
                 "px_sum": int(arr.sum()), "px_n": int(arr.size),
                 "dur_num": frames, "dur_den": fps}
     raise NotImplementedError(
         "real media decoding requires PIL/libav — not in this container")
-
-
-FEATURES_SCHEMA = StructType([
-    StructField("media_id", IntegerType()),
-    StructField("kind", StringType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("frames", IntegerType()),
-    StructField("duration", DoubleType()),
-    StructField("mean_intensity", DoubleType()),
-])
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Decode + feature-extract via mapInPandas: streams Arrow batches, so a
-    partition never holds all payloads decoded at once — the shape that
-    matters for 100 GB media partitions."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                m = _decode(payload)
-                rows.append({"media_id": int(mid), "kind": m["kind"],
-                             "width": m["width"], "height": m["height"],
-                             "frames": m["frames"], "duration": m["duration"],
-                             "mean_intensity": round(m["mean"], 6)})
-            yield pd.DataFrame(rows, columns=[f.name for f in FEATURES_SCHEMA])
-
-    return df.select("media_id", "payload").mapInPandas(run, FEATURES_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_nth: int = 2) -> DataFrame:
-    """Frame-sampling for video rows: emits one row per sampled frame with
-    its mean intensity (the UDTF/explode shape for frame pipelines)."""
-    schema = StructType([
-        StructField("media_id", IntegerType()),
-        StructField("frame", IntegerType()),
-        StructField("mean_intensity", DoubleType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                if not payload.startswith(b"SYNVID"):
-                    continue
-                head, _, rest = payload.partition(b":")
-                fps_b, _, rest2 = rest.partition(b":")
-                fr_b, _, rest3 = rest2.partition(b":")
-                dims, _, px = rest3.partition(b":")
-                frames = int(fr_b)
-                w, h = (int(x) for x in dims.split(b"x"))
-                arr = np.frombuffer(px, dtype=np.uint8)[: frames * w * h]
-                arr = arr.reshape(frames, w * h) if frames else arr
-                for f_i in range(0, frames, every_nth):
-                    out.append({"media_id": int(mid), "frame": f_i,
-                                "mean_intensity":
-                                    round(float(arr[f_i].mean()), 6)})
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
-
-    return df.select("media_id", "payload").mapInPandas(run, schema)
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Deterministic nearest-neighbor resize for image rows — the 'resize'
-    member of the brief's decode/feature/resize/frame-sample set — emitted
-    as re-encoded payloads with the same streaming mapInPandas shape as the
-    other media ops (a batch never holds more than Arrow-batch-many decoded
-    images). Non-image rows pass through unchanged. With PIL present this
-    would call ``Image.resize(..., NEAREST)``; the synthetic codec keeps
-    the Spark-side plumbing identical."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for payload in pdf["payload"]:
-                b = bytes(payload)
-                if not b.startswith(b"SYNIMG"):
-                    payloads.append(b)
-                    continue
-                _head, _, rest = b.partition(b":")
-                dims, _, px = rest.partition(b":")
-                w, h = (int(x) for x in dims.split(b"x"))
-                arr = np.frombuffer(px, dtype=np.uint8)[: w * h].reshape(h, w)
-                yi = np.arange(out_h) * h // out_h
-                xi = np.arange(out_w) * w // out_w
-                out = np.ascontiguousarray(arr[yi][:, xi])
-                payloads.append(
-                    f"SYNIMG:{out_w}x{out_h}:".encode() + out.tobytes())
-            pdf = pdf.copy()
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(run, df.schema)
 
 
 def synthesize_media_from_ids(df: DataFrame,
@@ -253,7 +121,7 @@ STATS_SCHEMA = StructType([
 
 
 def decode_stats(df: DataFrame) -> DataFrame:
-    """``extract_features`` in EXACT fixed-point: mean intensity as
+    """Decode + per-item stats in EXACT fixed-point: mean intensity as
     ``(Σpx · 10^6) div n`` and duration as floor micros, all integer
     arithmetic — no float representation ever reaches the output, so the
     result value-hashes identically cross-engine (the pack_chunks
@@ -280,19 +148,3 @@ def decode_stats(df: DataFrame) -> DataFrame:
 
     return df.select("media_id", "payload").mapInPandas(run, STATS_SCHEMA)
 
-
-def synthetic_media_df(spark, n: int = 30, seed: int = 42) -> DataFrame:
-    rows = []
-    for i in range(n):
-        kind = ("image", "audio", "video")[i % 3]
-        if kind == "image":
-            payload = encode_image(8 + i % 5, 6 + i % 4, seed + i)
-            mime = "image/syn"
-        elif kind == "audio":
-            payload = encode_audio(8000, 100 + i, seed + i)
-            mime = "audio/syn"
-        else:
-            payload = encode_video(5, 4 + i % 3, 4, 4, seed + i)
-            mime = "video/syn"
-        rows.append((i, kind, bytearray(payload), mime))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

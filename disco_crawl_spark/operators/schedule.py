@@ -943,7 +943,7 @@ def robots_crawl_delay(robots: DataFrame, host_col: str = "host",
     dropped, and fractional delays (the Yandex extension) are kept.
     The reference hardcodes its politeness interval (worker.py:450-461);
     honoring the crawled site's own declared delay is the real-web
-    extension the token-bucket stream consumes as per-host refill rates.
+    extension.
 
     Returns ``(host, delay_micro)`` for hosts whose matching group
     declares a valid delay — fixed-point micros via ``floor(value ·

@@ -409,15 +409,15 @@ SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S')
 FROM events GROUP BY 1, 2
 """)
 def windowed_event_stats(spark, sf):
-    """Tumbling 1-hour event-time windows keyed by event type — the batch
-    form of streaming.windowed_crawl_metrics (identical aggregation; the
-    stream adds the watermark)."""
-    from . import streaming as streaming_mod
+    """Tumbling 1-hour event-time windows keyed by event type: one
+    map-side-combined hash aggregation on (window, event_type)."""
     e = _t(spark, sf, "events")
-    out = streaming_mod.windowed_crawl_metrics(e)
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
-        .alias("window_start"), "event_type", "n", "total_value")
+    return (e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.round(F.sum("value"), 6).alias("total_value"))
+            .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
+                    .alias("window_start"), "event_type", "n",
+                    "total_value"))
 
 
 @q("filename_guess", """
@@ -5527,6 +5527,8 @@ WITH b AS (
                 || 'href=''https://ex/fr/p' || event_id || '''>'
                 || '<link rel=alternate hreflang=pt-br '
                 || 'href=https://ex/pt/p' || event_id || '>'
+                || '<link rel=alternate hreflang=xx href=/xx/p' || event_id
+                || '>'
                 || '</head></html>'
               WHEN event_id % 4 = 2 THEN
                 '<html><head><link rel="canonical" href="https://ex/c'
@@ -5543,12 +5545,12 @@ c AS (
         nullif(regexp_extract(t, '(?i)hreflang\s*=\s*"([^"]*)"', 1), ''),
         nullif(regexp_extract(t, '(?i)hreflang\s*=\s*''([^'']*)''', 1), ''),
         nullif(regexp_extract(t,
-          '(?i)hreflang\s*=\s*([^\s"''>/][^\s>]*)', 1), ''), ''), '')),
+          '(?i)hreflang\s*=\s*([^\s"''>][^\s>]*)', 1), ''), ''), '')),
       href := nullif(coalesce(
         nullif(regexp_extract(t, '(?i)href\s*=\s*"([^"]*)"', 1), ''),
         nullif(regexp_extract(t, '(?i)href\s*=\s*''([^'']*)''', 1), ''),
         nullif(regexp_extract(t,
-          '(?i)href\s*=\s*([^\s"''>/][^\s>]*)', 1), ''), ''), ''))),
+          '(?i)href\s*=\s*([^\s"''>][^\s>]*)', 1), ''), ''), ''))),
     s -> s.lang IS NOT NULL AND s.href IS NOT NULL) AS alts
   FROM b)
 SELECT url, len(alts)::BIGINT AS n_variants,
@@ -5564,9 +5566,9 @@ FROM c
 """)
 def hreflang_variants_q(spark, sf):
     """Language-variant collapse over synthesized heads: both attribute
-    orders, single/double/unquoted values, case-folded hreflang,
-    x-default election, rel=canonical tags correctly ignored, and
-    undeclared pages electing themselves."""
+    orders, single/double/unquoted values (an unquoted href may start
+    with ``/``), case-folded hreflang, x-default election, rel=canonical
+    tags correctly ignored, and undeclared pages electing themselves."""
     e = _t(spark, sf, "events")
     eid = F.col("event_id").cast("string")
     url = F.concat(F.lit("https://h"), (F.col("user_id") % 40).cast("string"),
@@ -5584,7 +5586,9 @@ def hreflang_variants_q(spark, sf):
                   "<link rel='alternate' hreflang='fr' "
                   "href='https://ex/fr/p"), eid, F.lit("'>"
                   "<link rel=alternate hreflang=pt-br "
-                  "href=https://ex/pt/p"), eid, F.lit("></head></html>")))
+                  "href=https://ex/pt/p"), eid, F.lit(">"
+                  "<link rel=alternate hreflang=xx href=/xx/p"), eid,
+            F.lit("></head></html>")))
         .when(F.col("event_id") % 4 == 2, F.concat(
             F.lit('<html><head><link rel="canonical" href="https://ex/c'),
             eid, F.lit('"></head></html>')))

@@ -19,15 +19,6 @@ PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, text string, "
                 "lang string, redirect_to string")
 
 
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """The canonical input table (BASELINE.json input_hint)."""
-    df = spark.read.parquet(path)
-    missing = {"url", "warc_ts", "html", "text", "lang"} - set(df.columns)
-    if missing:
-        raise ValueError(f"pages table at {path} missing columns {missing}")
-    return df
-
-
 def write_pages(df: DataFrame, path: str, buckets: int = 0,
                 name: "str | None" = None) -> "str | None":
     """Write a pages table; with buckets>0, bucket (and sort) by url — the
@@ -306,53 +297,6 @@ def meta_robots_flags(df: DataFrame, url_col: str = "url",
         (F.size(contents) > 0).cast("int").alias("declared"))
 
 
-def write_warc_shards(df: DataFrame, out_dir: str,
-                      compress: bool = True) -> DataFrame:
-    """Distributed WARC SINK: serialize a pages-shaped frame (url,
-    warc_ts, html) into one ``part-<pid>.warc[.gz]`` file per partition
-    under ``out_dir`` and return the shard MANIFEST as a DataFrame
-    (file, n_records, n_bytes) — the export path back to the
-    Common-Crawl interchange layout (the reference only ever writes to
-    S3 objects + ES docs, postprocessor/process_raw.py:43; WARC is how
-    crawl corpora are actually exchanged).
-
-    Rows are serialized in (url, warc_ts) order WITHIN each partition so
-    shard bytes are a pure function of the partitioning — repartition by
-    a url hash upstream for fully deterministic shards.  Round-trips
-    through ``read_warc`` byte-identically (same record framing as
-    ``write_warc``, shared helper).
-
-    100 TB shape: embarrassingly parallel — one task per shard, no
-    shuffle beyond whatever partitioning the caller chose; the returned
-    manifest is O(shards) rows.  In local mode ``out_dir`` is a local
-    path; on a cluster point it at a mounted/object-store path the
-    executors can write (the same contract as any file sink).
-    """
-    import os
-
-    schema = "file string, n_records long, n_bytes long"
-    cols = df.select("url", "warc_ts", "html")
-    suffix = ".warc.gz" if compress else ".warc"
-
-    def _write(pid, it):
-        rows = sorted(((r["url"], r["warc_ts"], r["html"]) for r in it),
-                      key=lambda t: (t[0], str(t[1])))
-        if not rows:
-            return
-        os.makedirs(out_dir, exist_ok=True)
-        path = os.path.join(out_dir, f"part-{pid:05d}{suffix}")
-        recs = [(u, (ts.strftime("%Y-%m-%dT%H:%M:%SZ")
-                     if hasattr(ts, "strftime") else str(ts)),
-                 bytes(b) if b is not None else b"")
-                for u, ts, b in rows]
-        with open(path, "wb") as f:
-            write_warc(recs, f, compress=compress)
-        yield path, len(recs), os.path.getsize(path)
-
-    man = cols.rdd.mapPartitionsWithIndex(_write)
-    return df.sparkSession.createDataFrame(man, schema)
-
-
 def robots_sitemaps(df: DataFrame, host_col: str,
                     body_col: str) -> DataFrame:
     """Sitemap discovery from robots.txt bodies: extract every
@@ -541,7 +485,7 @@ def hreflang_alternates(df: DataFrame, url_col: str = "url",
             F.nullif(F.regexp_extract(
                 t, "(?i)" + name + "\\s*=\\s*'([^']*)'", 1), F.lit("")),
             F.nullif(F.regexp_extract(
-                t, '(?i)' + name + '\\s*=\\s*([^\\s"\'>/][^\\s>]*)', 1),
+                t, '(?i)' + name + '\\s*=\\s*([^\\s"\'>][^\\s>]*)', 1),
                 F.lit("")),
             F.lit("")), F.lit(""))
 

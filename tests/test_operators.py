@@ -185,23 +185,6 @@ def test_readability_matches_kernel(spark, docs):
     assert got[0] == expect
 
 
-def test_multimodal_features_and_frames(spark):
-    media = multimodal.synthetic_media_df(spark, n=12)
-    feats = {r["media_id"]: r for r in
-             multimodal.extract_features(media).collect()}
-    assert len(feats) == 12
-    img = feats[0]
-    assert img["kind"] == "image" and img["width"] == 8 and img["frames"] == 1
-    vid = feats[2]
-    assert vid["kind"] == "video" and vid["duration"] > 0
-    # deterministic re-run
-    feats2 = {r["media_id"]: r for r in
-              multimodal.extract_features(media).collect()}
-    assert feats == feats2
-    frames = multimodal.sample_frames(media, every_nth=2).collect()
-    assert frames and all(r["frame"] % 2 == 0 for r in frames)
-
-
 def test_multimodal_decode_stats_pure_python_parity(spark):
     """decode_stats over the formula synthesizer == a scalar recomputation
     from (i, j) arithmetic alone (the page_content_hash style), proving
@@ -296,30 +279,6 @@ def test_ivf_ann_recall_and_pruning(spark, tmp_path):
     C2 = similarity.train_ivf_centroids(df, "embedding", "vec_id",
                                         n_centroids=10, sample_size=300)
     assert np.allclose(C, C2)
-
-
-def test_resize_images_nearest_neighbor(spark):
-    df = multimodal.synthetic_media_df(spark, n=9)
-    out = multimodal.resize_images(df, 4, 3)
-    rows = {r["media_id"]: r for r in out.collect()}
-    orig = {r["media_id"]: r for r in df.collect()}
-    feats = {r["media_id"]: r
-             for r in multimodal.extract_features(out).collect()}
-    for mid, r in rows.items():
-        if r["kind"] != "image":
-            assert bytes(r["payload"]) == bytes(orig[mid]["payload"])
-            continue
-        assert feats[mid]["width"] == 4 and feats[mid]["height"] == 3
-        # independent nearest-neighbor recompute
-        b = bytes(orig[mid]["payload"])
-        _, _, rest = b.partition(b":")
-        dims, _, px = rest.partition(b":")
-        w, h = (int(x) for x in dims.split(b"x"))
-        arr = np.frombuffer(px, dtype=np.uint8)[: w * h].reshape(h, w)
-        expect = arr[np.arange(3) * h // 3][:, np.arange(4) * w // 4]
-        got = np.frombuffer(bytes(r["payload"]).split(b":", 2)[2],
-                            dtype=np.uint8).reshape(3, 4)
-        assert (got == expect).all()
 
 
 def test_connected_components_and_dedup_keep(spark):
@@ -1041,7 +1000,7 @@ def test_cross_corpus_dedup_persisted_signature_path(spark, docs, tmp_path):
     new = docs.filter(F.col("doc_id") % 2 == 1)
     p = str(tmp_path / "ref_sigs")
     dedup.write_minhash_signatures(ref, "text", "doc_id", p, buckets=4)
-    sig = dedup.read_minhash_signatures(spark, p)
+    sig = spark.read.parquet(p)
     via_sigs = dedup.cross_corpus_dedup(new, ref, "text", "doc_id",
                                         ref_sig_df=sig).collect()
     recompute = dedup.cross_corpus_dedup(new, ref, "text",
@@ -3078,6 +3037,20 @@ def test_hreflang_alternates_orders_quotes_election(spark):
     for u in ("u3", "u4", "u5"):
         assert (got[u]["n_variants"], got[u]["declared"],
                 got[u]["canonical_variant"]) == (0, 0, u)
+
+
+def test_hreflang_alternates_unquoted_root_relative_href(spark):
+    """An unquoted href may start with ``/`` (HTML5 unquoted attribute
+    value): ``href=/en/p`` is the variant ``/en/p`` and ``href= />`` is
+    ``/``."""
+    from disco_crawl_spark import sources
+    df = spark.createDataFrame(
+        [("u1", "<head><link rel=alternate hreflang=en href=/en/p>"
+                "<link rel=alternate hreflang=de href= /></head>")],
+        "url string, html string")
+    (r,) = sources.hreflang_alternates(df).collect()
+    assert (r["n_variants"], r["declared"], r["canonical_variant"]) == \
+        (2, 1, "/")
 
 
 def test_good_turing_novelty_hand_counts(spark):

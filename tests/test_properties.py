@@ -157,18 +157,3 @@ def test_vectorized_simhash_matches_scalar_spec(docs):
             if acc[i] > 0:
                 v |= 1 << i
         assert fp == (v - (1 << 64) if v >= (1 << 63) else v)
-
-
-@given(st.lists(st.text(alphabet=string.hexdigits.lower()[:16], min_size=32,
-                        max_size=32), min_size=1, max_size=50))
-@settings(max_examples=100, deadline=None)
-def test_bloom_indexes_match_scalar_spec(keys):
-    # vectorized uint64-halves derivation == int(key,16) bit arithmetic
-    import numpy as np
-    from disco_crawl_spark.operators import bloom
-    bits, k = 1 << 20, 4
-    got = bloom._indexes(keys, bits, k)
-    for row, key in zip(got, keys):
-        h = int(key, 16)
-        for j in range(k):
-            assert row[j] == ((h >> (j * 24)) & 0xFFFFFF) % bits

@@ -251,50 +251,13 @@ def test_domain_alias_report(spark):
     assert rows == rows2
 
 
-def test_seen_filter_stream_stateful_across_restarts(spark, tmp_path):
-    # the url-seen set as applyInPandasWithState group state: keys seen in
-    # run 1 must stay deduplicated in run 2 (state restored from checkpoint)
-    import hashlib
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-
-    def rows(ids):
-        return [(f"g{i % 3}", hashlib.md5(f"u{i}".encode()).hexdigest(),
-                 f"https://g{i % 3}.gov.au/u{i}") for i in ids]
-
-    spark.createDataFrame(rows(range(20)) + rows(range(5)),  # in-batch dups
-                          "host_group string, url_key string, url string"
-                          ).coalesce(1).write.mode("append").parquet(inp)
-    q = streaming.run_seen_filter_stream(spark, inp, outp, ckpt)
-    q.awaitTermination()
-    first = spark.read.parquet(outp).collect()
-    # within-batch dups collapsed (exact, no FP involved); every distinct
-    # key emitted once, provably-new in an empty filter
-    assert len(first) == 20
-    assert all(r["verdict"] == "new" for r in first)
-
-    # run 2: 10 repeats + 10 fresh keys. The operator is LOSSLESS: the
-    # repeats are emitted tagged maybe_seen (the exact batch anti-join
-    # downstream decides), the fresh keys provably new
-    spark.createDataFrame(rows(range(10, 30)),
-                          "host_group string, url_key string, url string"
-                          ).coalesce(1).write.mode("append").parquet(inp)
-    q2 = streaming.run_seen_filter_stream(spark, inp, outp, ckpt)
-    q2.awaitTermination()
-    allrows = spark.read.parquet(outp).collect()
-    assert len(allrows) == 40
-    new_keys = {r["url_key"] for r in allrows if r["verdict"] == "new"}
-    assert len(new_keys) == 30  # state restored: repeats were NOT 'new'
-    maybe = [r for r in allrows if r["verdict"] == "maybe_seen"]
-    assert len(maybe) == 10
-    assert {r["url_key"] for r in maybe} <= new_keys  # true dups here
-
-
 def test_pyfiles_zip_is_complete_and_importable(tmp_path):
     # the spark-submit --py-files artifact must carry the whole package:
     # import it from the zip alone (cwd outside the repo) and drive kernels
     import subprocess
     import sys
-    sys.path.insert(0, "/root/repo/scripts")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "scripts"))
     try:
         from build_pyfiles import build
     finally:
@@ -427,58 +390,6 @@ def test_session6_op_plan_quality(spark):
     assert "Window" not in sc_, sc_
 
 
-def test_windowed_metrics_stream_watermark_and_batch_parity(spark, tmp_path):
-    # tumbling 1h windows, 30min watermark, availableNow runs sharing one
-    # checkpoint: append-once emission, late-row drop, batch parity
-    import datetime as dt
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    T = dt.datetime(2024, 1, 1)
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-
-    def append(rows):
-        spark.createDataFrame(
-            [(i, T + dt.timedelta(minutes=m), 0, et, v)
-             for i, (m, et, v) in enumerate(rows)], schema
-        ).coalesce(1).write.mode("append").parquet(inp)
-
-    def run():
-        q = streaming.run_windowed_metrics_stream(spark, inp, outp, ckpt)
-        q.awaitTermination()
-
-    good = [(5, "fetch", 1.0), (10, "parse", 2.0),   # hour 0
-            (65, "fetch", 3.0),                      # hour 1
-            (125, "fetch", 4.0),                     # hour 2
-            (185, "parse", 5.0)]                     # hour 3
-    append(good[:4])
-    run()  # watermark advances to 125-30=95min, persisted in ckpt
-    # run 2: a LATE row for hour 0 (15min < watermark 95min) must be
-    # dropped; a fresh hour-3 row advances the watermark further
-    append([(15, "fetch", 100.0), good[4]])
-    run()
-    # two sentinel runs flush hours 0-3 (each run emits windows ended
-    # before the PREVIOUS run's persisted watermark)
-    append([(605, "sentinel", 0.0)])
-    run()
-    append([(1300, "sentinel", 0.0)])
-    run()
-
-    got = [((r["window_start"]), r["event_type"], r["n"], r["total_value"])
-           for r in spark.read.parquet(outp).collect()
-           if r["event_type"] != "sentinel"]
-    # append-once: no (window, key) emitted twice
-    assert len({(w, k) for w, k, *_ in got}) == len(got)
-    # the late row's value appears nowhere
-    assert all(abs(tv - 100.0) > 1e-9 and n == 1 for _, _, n, tv in got)
-    # parity: emitted rows == batch aggregation of the on-time rows
-    batch_df = spark.createDataFrame(
-        [(i, T + dt.timedelta(minutes=m), 0, et, v)
-         for i, (m, et, v) in enumerate(good)], schema)
-    exp = [(r["window_start"], r["event_type"], r["n"], r["total_value"])
-           for r in streaming.windowed_crawl_metrics(batch_df).collect()]
-    assert sorted(got) == sorted(exp)
-
-
 def test_round4_late_op_plan_quality(spark):
     """Plan pins for the late-round-4 operators (DSIR, windowed metrics,
     SemDeDup): the shuffle/broadcast shapes their docstrings claim."""
@@ -544,87 +455,6 @@ def test_round4_late_op_plan_quality(spark):
     assert "Scan ExistingRDD" in sbb, sbb
 
 
-def test_politeness_gate_stream_token_bucket_and_restart(spark, tmp_path):
-    # the crawl-delay sleep as a stateful token bucket: verdicts are a pure
-    # function of event times; bucket level survives a restart
-    import datetime as dt
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    t0 = dt.datetime(2024, 1, 1)
-
-    def at(sec, host, url):
-        return (host, t0 + dt.timedelta(seconds=sec), url)
-
-    # capacity 2 tokens, refill 100 milli/s (one token per 10s)
-    batch1 = [at(0, "a", "u1"), at(1, "a", "u2"),   # drain the bucket
-              at(2, "a", "u3"),                      # deferred (0.1 tokens)
-              at(12, "a", "u4"),                     # refilled 1.2 -> allow
-              at(0, "b", "v1")]                      # independent host
-    spark.createDataFrame(batch1, "host string, ts timestamp, url string"
-                          ).coalesce(1).write.mode("append").parquet(inp)
-    q = streaming.run_politeness_gate_stream(
-        spark, inp, outp, ckpt, capacity_tokens=2, refill_milli_per_sec=100)
-    q.awaitTermination()
-    got = {r["url"]: r["verdict"] for r in spark.read.parquet(outp).collect()}
-    assert got == {"u1": "allow", "u2": "allow", "u3": "defer",
-                   "u4": "allow", "v1": "allow"}
-
-    # restart: host a's bucket carried ~0.2 tokens at t=12; at t=14 it has
-    # ~0.4 -> defer; at t=30 it has 2.0 (capped) -> allow
-    batch2 = [at(14, "a", "u5"), at(30, "a", "u6")]
-    spark.createDataFrame(batch2, "host string, ts timestamp, url string"
-                          ).coalesce(1).write.mode("append").parquet(inp)
-    q2 = streaming.run_politeness_gate_stream(
-        spark, inp, outp, ckpt, capacity_tokens=2, refill_milli_per_sec=100)
-    q2.awaitTermination()
-    got2 = {r["url"]: r["verdict"]
-            for r in spark.read.parquet(outp).collect()}
-    assert got2["u5"] == "defer" and got2["u6"] == "allow"
-    # the gate never drops: every candidate row was emitted exactly once
-    assert len(got2) == 7
-
-
-def test_politeness_gate_stream_equals_batch_budget_window(spark, tmp_path):
-    """Cross-paradigm identity (VERDICT r4 #6, the reference's
-    sleeps-vs-budget equivalence, SURVEY §4.2): one stream pass over a
-    multi-round schedule with (capacity = budget, refill·gap >= capacity)
-    must admit EXACTLY the rows the batch politeness window grants with
-    row_number <= budget per (host, round). Round scheduling timestamps
-    all of a round's candidates at the round start, so within a round the
-    bucket never refills (no time advance) and between rounds it refills
-    to full (capped) — each round independently gets `budget` tokens,
-    which is precisely the batch semantics."""
-    import datetime as dt
-    from pyspark.sql import Window
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    t0 = dt.datetime(2024, 1, 1)
-    budget, gap_s = 3, 10           # refill 300 milli/s * 10 s = capacity
-    rows = []
-    for rnd in range(3):
-        for hi in range(5):
-            # varying candidate counts: some hosts under budget
-            for u in range((hi + rnd) % 7):
-                rows.append((f"h{hi}", t0 + dt.timedelta(seconds=rnd * gap_s),
-                             f"r{rnd}u{u:02d}"))
-    sched = spark.createDataFrame(rows, "host string, ts timestamp, url string")
-    sched.coalesce(1).write.mode("append").parquet(inp)
-    q = streaming.run_politeness_gate_stream(
-        spark, inp, outp, ckpt, capacity_tokens=budget,
-        refill_milli_per_sec=budget * 1000 // gap_s)
-    q.awaitTermination()
-    out = spark.read.parquet(outp)
-    stream_allowed = {(r["host"], r["url"])
-                      for r in out.filter("verdict = 'allow'").collect()}
-    # the gate never drops: every candidate emitted exactly once
-    assert out.count() == len(rows)
-    # batch side: the engine's per-round budget window (window_budget_rank
-    # shape), tie-broken identically to the stream's (ts, url) order
-    w = Window.partitionBy("host", "ts").orderBy("url")
-    batch_allowed = {(r["host"], r["url"]) for r in
-                     sched.withColumn("rn", F.row_number().over(w))
-                     .filter(F.col("rn") <= budget).collect()}
-    assert stream_allowed == batch_allowed
-
-
 def test_rendezvous_assign_plan_has_no_exchange(spark):
     """The HRW docstring claims zero-shuffle assignment: the literal
     struct-array argmax must compile to a pure projection."""
@@ -662,82 +492,6 @@ def test_cms_plan_partial_combine_and_broadcast_probe(spark):
     est = sketch.cms_estimate(counters, df, "k", 4, 64)
     se = plans.explain_str(est, "simple")
     assert "BroadcastHashJoin" in se or "BroadcastExchange" in se, se
-
-
-def test_hot_hosts_stream_parity_and_restart(spark, tmp_path):
-    """Streaming CMS: estimates match the batch sketch bit-for-bit
-    (n_shards=1 -> same grid, same md5 family), state is the fixed
-    counter grid (restart continues counts), emission is threshold-hot
-    hosts of each batch."""
-    from disco_crawl_spark.operators import sketch
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-
-    def rows(host, n):
-        return [(host, "2024-01-01 00:00:00", f"https://{host}/u{i}")
-                for i in range(n)]
-
-    batch1 = (rows("hot.gov.au", 30) + rows("warm.gov.au", 5)
-              + [(f"t{i}.gov.au", "2024-01-01 00:00:00", "https://x/")
-                 for i in range(10)])
-    (spark.createDataFrame(batch1, "host string, ts string, url string")
-     .selectExpr("host", "cast(ts as timestamp) ts", "url")
-     .coalesce(1).write.mode("append").parquet(inp))
-    q = streaming.run_hot_hosts_stream(spark, inp, outp, ckpt,
-                                       threshold=10, n_shards=1)
-    q.awaitTermination()
-    first = {r["host"]: r["est"] for r in spark.read.parquet(outp).collect()}
-    assert set(first) == {"hot.gov.au"}          # only the hot host emitted
-    # parity: batch CMS over the same rows gives the identical estimate
-    bdf = spark.createDataFrame([(h,) for h, _, _ in batch1], ["host"])
-    best = {r["host"]: r["est"] for r in sketch.cms_estimate(
-        sketch.cms_counters(bdf, "host", 4, 256), bdf, "host",
-        4, 256).collect()}
-    assert first["hot.gov.au"] == best["hot.gov.au"]
-
-    # restart: warm crosses the threshold only with restored state (5+7)
-    (spark.createDataFrame(rows("warm.gov.au", 7),
-                           "host string, ts string, url string")
-     .selectExpr("host", "cast(ts as timestamp) ts", "url")
-     .coalesce(1).write.mode("append").parquet(inp))
-    q2 = streaming.run_hot_hosts_stream(spark, inp, outp, ckpt,
-                                        threshold=10, n_shards=1)
-    q2.awaitTermination()
-    allr = spark.read.parquet(outp).collect()
-    warm = [r for r in allr if r["host"] == "warm.gov.au"]
-    assert len(warm) == 1 and warm[0]["est"] == 12
-
-
-def test_write_warc_shards_roundtrip(spark, tmp_path):
-    import datetime
-
-    rows = [(f"https://a{i % 3}.gov.au/p{i}",
-             datetime.datetime(2024, 1, 1, 0, 0, i),
-             bytearray(f"<html>body {i}</html>".encode()))
-            for i in range(20)]
-    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, "
-                                     "html binary")
-    out = str(tmp_path / "warc_out")
-    man = sources.write_warc_shards(df.repartition(4, "url"), out).collect()
-    assert sum(r["n_records"] for r in man) == 20
-    assert all(r["file"].endswith(".warc.gz") for r in man)
-    # round-trip through the distributed reader: byte-identical bodies
-    back = {r["url"]: bytes(r["html"])
-            for r in sources.read_warc(spark, out + "/*.warc.gz").collect()}
-    assert back == {u: bytes(b) for u, _ts, b in rows}
-    # determinism: same partitioning → identical shard payloads (compare
-    # decompressed bytes — gzip headers embed an mtime)
-    import gzip as _gz
-    import hashlib
-    import os
-    out2 = str(tmp_path / "warc_out2")
-    man2 = sources.write_warc_shards(df.repartition(4, "url"), out2).collect()
-    d1 = {os.path.basename(r["file"]):
-          hashlib.md5(_gz.decompress(open(r["file"], "rb").read())).hexdigest()
-          for r in man}
-    d2 = {os.path.basename(r["file"]):
-          hashlib.md5(_gz.decompress(open(r["file"], "rb").read())).hexdigest()
-          for r in man2}
-    assert d1 == d2
 
 
 def test_robots_sitemaps_variants(spark):
@@ -809,75 +563,3 @@ def test_robots_cache_plan_actions(spark):
     assert out["b"]["action"] == "refetch"
     assert out["c"]["action"] == "fetch_first"
     assert out["c"]["age_sec"] is None
-
-
-def test_robots_ttl_stream_verdicts_and_restart(spark, tmp_path):
-    # robots freshness as stream state: fetch_first before any robots
-    # fetch, cached within TTL, refetch past it; state survives restart
-    import datetime as dt
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("rin", "rout", "rckpt"))
-    t0 = dt.datetime(2024, 1, 1)
-
-    def row(hours, host, kind, url=""):
-        return (host, t0 + dt.timedelta(hours=hours), kind, url)
-
-    schema = "host string, ts timestamp, kind string, url string"
-    batch1 = [row(0, "a", "candidate", "c0"),       # before any fetch
-              row(1, "a", "robots_fetch"),
-              row(2, "a", "candidate", "c1"),       # 1h old -> cached
-              row(26, "a", "candidate", "c2"),      # 25h old -> refetch
-              row(5, "b", "candidate", "d0")]       # never fetched
-    spark.createDataFrame(batch1, schema).coalesce(1) \
-        .write.mode("append").parquet(inp)
-    q = streaming.run_robots_ttl_stream(spark, inp, outp, ckpt)
-    q.awaitTermination()
-    got = {r["url"]: r["verdict"] for r in spark.read.parquet(outp).collect()}
-    assert got == {"c0": "fetch_first", "c1": "cached", "c2": "refetch",
-                   "d0": "fetch_first"}
-
-    # restart: host a's robots age carries across the checkpoint
-    batch2 = [row(24, "a", "candidate", "c3"),      # 23h old -> cached
-              row(30, "b", "robots_fetch"),
-              row(31, "b", "candidate", "d1")]      # 1h old -> cached
-    spark.createDataFrame(batch2, schema).coalesce(1) \
-        .write.mode("append").parquet(inp)
-    q2 = streaming.run_robots_ttl_stream(spark, inp, outp, ckpt)
-    q2.awaitTermination()
-    got2 = {r["url"]: r["verdict"]
-            for r in spark.read.parquet(outp).collect()}
-    assert got2["c3"] == "cached" and got2["d1"] == "cached"
-    assert len(got2) == 6
-
-
-def test_robots_ttl_stream_equals_batch_plan(spark, tmp_path):
-    # cross-paradigm contract: all robots_fetch events + one candidate per
-    # host at a common T == batch robots_cache_plan(hosts, log, now=T)
-    import datetime as dt
-
-    from disco_crawl_spark.operators import schedule
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("ein", "eout", "eckpt"))
-    t0 = dt.datetime(2024, 1, 1)
-    T = dt.datetime(2024, 3, 1)
-    hosts = [f"h{i}" for i in range(12)]
-    log = []
-    for i, h in enumerate(hosts):
-        if i % 4 == 0:
-            continue                       # never fetched -> fetch_first
-        # i hours before T (some within 24h, some past)
-        log.append((h, T - dt.timedelta(hours=3 * i, minutes=7), ))
-    schema = "host string, ts timestamp, kind string, url string"
-    rows = ([(h, ts, "robots_fetch", "") for h, ts in
-             [(h, t) for h, t in log]]
-            + [(h, T, "candidate", f"u-{h}") for h in hosts])
-    spark.createDataFrame(rows, schema).coalesce(1) \
-        .write.mode("append").parquet(inp)
-    q = streaming.run_robots_ttl_stream(spark, inp, outp, ckpt)
-    q.awaitTermination()
-    stream_v = {r["host"]: r["verdict"]
-                for r in spark.read.parquet(outp).collect()}
-
-    hosts_df = spark.createDataFrame([(h,) for h in hosts], "host string")
-    log_df = spark.createDataFrame(log, "host string, ts timestamp")
-    batch_v = {r["host"]: r["action"] for r in schedule.robots_cache_plan(
-        hosts_df, log_df, T.strftime("%Y-%m-%d %H:%M:%S")).collect()}
-    assert stream_v == batch_v
