@@ -46,7 +46,7 @@ engine-vs-oracle equivalence check.
 
 from __future__ import annotations
 
-import os
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -118,27 +118,12 @@ class CrawlEngine:
             self.pages = part.sortWithinPartitions("url").persist()
             # fill the sorted fetch-join cache NOW, at engine startup:
             # left lazy it materialized inside round 0's first consumer
-            # (the probe-table aggregation), charging the one-time corpus
+            # (the root-probe aggregation), charging the one-time corpus
             # sort/upload to the first crawl round — a production engine
             # warms its join layout before the loop, and for a driver-
             # built corpus the dominant cost is re-serializing the local
             # relation, which this bounds to exactly once
             self.pages.count()
-        # Index-probe state for the domain-start gauntlet (dual-domain +
-        # index HEAD, worker.py:283-353,636-644) is LAZY: no Spark work at
-        # init. On the first steward batch that needs it, one O(hosts)
-        # aggregation over the pages table is written as a small parquet
-        # table (never a URL-level collect — holds at a 10^10-URL corpus,
-        # hosts ~10^6); each batch then collects ONLY its candidate hosts'
-        # rows from that table (batch-bounded collect, memoized), so the
-        # driver never holds an all-hosts dict and a crawl that touches 50
-        # hosts pays 50 probe rows. Same dict shape as refsem.root_probes;
-        # parity with the simulator is asserted by the e2e suite.
-        # plain dir name: a leading underscore would make Spark's file
-        # index treat the path as hidden metadata in recursive listings
-        self._probe_tbl_path = os.path.join(warehouse, "root_probes.cache")
-        self._probe_tbl_ready = False
-        self._probe_cache: dict = {}   # host -> probe dict | None (absent)
         self.compact_every = compact_every
         self.dom: dict = {}          # host -> driver state dict
         self.events: list = []       # (round, host, event)
@@ -198,55 +183,27 @@ class CrawlEngine:
         return sorted(h for h, d in self.dom.items() if d["state"] == "active")
 
     # ------------------------------------------------------------------
-    # lazy root-probe lookups (index HEAD / dual-domain gauntlet inputs)
+    # root probes (index HEAD / dual-domain gauntlet inputs)
     # ------------------------------------------------------------------
-    def _ensure_probe_table(self):
-        """Materialize the O(hosts) probe table once, on first use. The
-        host key normalization (lowercased authority with userinfo
-        stripped, port kept) is IDENTICAL to refsem.root_probes — the two
-        sides previously used parse_url(HOST) vs urlparse().netloc, which
-        diverge on ports/userinfo/case (round-3 ADVICE)."""
-        if self._probe_tbl_ready:
-            return
+    @cached_property
+    def _probes(self) -> dict:
+        """refsem.root_probes over the pages table, built on the first
+        steward batch with one O(hosts) groupBy (never a URL-level
+        collect). The host key (lowercased authority, userinfo stripped,
+        port kept) and the max-redirect rule are refsem's."""
         is_root = F.col("url").rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+/$")
         auth = F.regexp_extract(
             "url", r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)", 1)
         host = F.lower(F.regexp_replace(auth, r"^[^@/]*@", ""))
-        (self.pages.select(host.alias("h"), is_root.alias("r"), "redirect_to")
-         .groupBy("h")
-         .agg(F.max("r").alias("has_root"),
-              F.max(F.when(F.col("r"), F.coalesce("redirect_to", F.lit(""))))
-               .alias("rr"))
-         # host-cardinality table (~30 B/host — tens of MB at the 10^6-host
-         # design point): one file reads fastest for the per-batch isin
-         # collects and skips the 32-file commit overhead
-         .repartition(1)
-         .write.mode("overwrite").parquet(self._probe_tbl_path))
-        self._probe_tbl_ready = True
-
-    def _probes_for(self, hosts) -> dict:
-        """Probe rows for a steward batch: the batch's hosts plus their
-        www/bare counterparts (is_dual_domain consults both). Collect is
-        bounded by the batch size; results (including known-absent hosts)
-        are memoized for the crawl's lifetime."""
-        need = set()
-        for h in hosts:
-            bare = h[4:] if h.startswith("www.") else h
-            need.update((bare, "www." + bare))
-        missing = [h for h in need if h not in self._probe_cache]
-        if missing:
-            self._ensure_probe_table()
-            rows = (self.spark.read.parquet(self._probe_tbl_path)
-                    .filter(F.col("h").isin(missing)).collect())
-            got = {
-                r["h"]: {"root": bool(r["has_root"]),
-                         "redirect": (r["rr"] or None) if r["has_root"]
-                         else None}
-                for r in rows}
-            for h in missing:
-                self._probe_cache[h] = got.get(h)
-        return {h: v for h in need
-                if (v := self._probe_cache.get(h)) is not None}
+        rows = (self.pages.select(host.alias("h"), is_root.alias("r"),
+                                  "redirect_to")
+                .groupBy("h")
+                .agg(F.max(F.when(F.col("r"),
+                                  F.coalesce("redirect_to", F.lit(""))))
+                     .alias("rr"))
+                .collect())
+        return {r["h"]: {"root": r["rr"] is not None,
+                         "redirect": r["rr"] or None} for r in rows}
 
     # ------------------------------------------------------------------
     # state-table plumbing: commit a delta to parquet AND to the in-memory
@@ -374,11 +331,10 @@ class CrawlEngine:
         active_groups = {self.dom[h]["group"] for h in self._active_hosts()}
         picks = lifecycle.pick_domains(states, groups, active_groups,
                                        self.round_no, self.cfg.steward_batch)
-        probes = self._probes_for(picks)
         fresh, resumed = [], []
         for host in picks:
             d = lifecycle.start_decision(host, self.attrs.get(host),
-                                         self.robots, probes=probes)
+                                         self.robots, probes=self._probes)
             self._inflate_host(host)
             st = self.dom[host]
             if d.action == "dual-skip":
@@ -866,13 +822,6 @@ class CrawlEngine:
             return set()
         return {(r["host_group"], r["url_key"])
                 for r in df.select("host_group", "url_key").distinct().collect()}
-
-    def metrics_df(self) -> "DataFrame | None":
-        """Per-round per-host fetch/parse metrics as a DataFrame (the
-        table-shaped view of the round-state snapshots)."""
-        if not self.metrics:
-            return None
-        return self.spark.createDataFrame(self.metrics)
 
     def texts(self) -> dict:
         df = self._view("crawl_log")

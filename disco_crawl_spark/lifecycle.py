@@ -3,11 +3,12 @@ engine driver.
 
 The reference makes these decisions per-domain-process with live probes
 (https HEAD, dual-domain probes, robots fetch, index HEAD, X-Generator
-header — worker.py:550-664). The rebuild answers the same probes from the
-corpus's host attributes. The *domains* table is tiny (thousands of hosts vs
-a 10^10-URL frontier), so this logic runs driver-side on collected state in
-both the simulator and the engine — the heavy per-URL work stays in
-DataFrames.
+header — worker.py:550-664). The rebuild answers the dual-domain and index
+probes from the pages table (``refsem.root_probes``), and the https,
+robots-timeout and X-Generator probes from the corpus's host attributes.
+The *domains* table is tiny (thousands of hosts vs a 10^10-URL frontier),
+so this logic runs driver-side on collected state in both the simulator
+and the engine — the heavy per-URL work stays in DataFrames.
 """
 
 from __future__ import annotations
@@ -44,37 +45,29 @@ class StartDecision:
 
 
 def start_decision(host: str, attrs, robots_cache: robots_mod.RobotsCache,
-                   probes: "dict | None" = None) -> StartDecision:
+                   probes: dict) -> StartDecision:
     """The domain-start gauntlet (worker.py:563-664): https probe →
     dual-domain check → robots fetch (timeout ⇒ broken) → index probe
     (failure ⇒ broken). govCMS grouping is handled by the caller via
     politeness_group().
 
-    With ``probes`` (the refsem.root_probes table both the engine and the
-    simulator build from the pages corpus) the dual decision and the index
+    ``probes`` is the refsem.root_probes table both the engine and the
+    simulator build from the pages corpus: the dual decision and the index
     probe are COMPUTED from data, exactly like the reference's 4-HEAD
     ``is_website_dualdomain`` + index HEAD (worker.py:283-353,636-644):
     dual-ness is whatever the page corpus serves, not a host attribute.
-    Without probes (legacy/unit callers) the attrs fallback applies. The
-    https scheme guess stays attribute-modeled either way: the corpus
-    serves scheme-agnostic content, so a data probe cannot distinguish it
+    The https scheme guess stays attribute-modeled: the corpus serves
+    scheme-agnostic content, so a data probe cannot distinguish it
     (documented sandbox limit; worker.py:564-577)."""
     scheme = "https" if (attrs is None or getattr(attrs, "https", True)) else "http"
-    if probes is not None:
-        dual = refsem.is_dual_domain(probes, host)
-    else:
-        dual = attrs is not None and getattr(attrs, "dual", False)
-    if dual and not host.startswith("www."):
+    if refsem.is_dual_domain(probes, host) and not host.startswith("www."):
         return StartDecision(action="dual-skip", scheme=scheme)
     if attrs is not None and getattr(attrs, "robots_broken", False):
         return StartDecision(action="broken", scheme=scheme)
-    if probes is not None:
-        # index HEAD (worker.py:636-644): only a connection error breaks a
-        # domain — a live host answers (any status); a host serving nothing
-        # is dead
-        if host not in probes:
-            return StartDecision(action="broken", scheme=scheme)
-    elif attrs is None or not getattr(attrs, "index_ok", True):
+    # index HEAD (worker.py:636-644): only a connection error breaks a
+    # domain — a live host answers (any status); a host serving nothing
+    # is dead
+    if host not in probes:
         return StartDecision(action="broken", scheme=scheme)
     rp = robots_cache.get(host)
     return StartDecision(action="crawl", scheme=scheme,

@@ -964,7 +964,10 @@ def robots_crawl_delay(robots: DataFrame, host_col: str = "host",
                   "clean", r"^\s*([A-Za-z-]+)\s*:\s*(\S*)\s*$", 1)))
               .withColumn("value", F.regexp_extract(
                   "clean", r"^\s*([A-Za-z-]+)\s*:\s*(\S*)\s*$", 2))
-              .filter(F.col("field").isin("user-agent", "crawl-delay")))
+              # rule lines stay through the group numbering: a User-agent
+              # after an Allow/Disallow opens a new group (RFC 9309 §2.1)
+              .filter(F.col("field").isin("user-agent", "crawl-delay",
+                                          "allow", "disallow")))
     w = Window.partitionBy("host").orderBy("ln")
     grouped = (parsed
                .withColumn("is_ua", (F.col("field") == "user-agent")

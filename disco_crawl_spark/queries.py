@@ -5451,7 +5451,8 @@ WITH v(vid, sfx) AS (VALUES (0, chr(233)), (1, 'e' || chr(769)),
                             (2, 'e')),
 x AS (SELECT doc_id * 3 + vid AS id, text || ' caf' || sfx AS t
       FROM documents, v),
-k AS (SELECT id, md5(nfc_normalize(t)) AS nfc_md5, md5(t) AS raw_md5
+k AS (SELECT id, md5(nfc_normalize(coalesce(t, ''))) AS nfc_md5,
+             md5(coalesce(t, '')) AS raw_md5
       FROM x)
 SELECT nfc_md5, count(*)::BIGINT AS n_docs,
        count(DISTINCT raw_md5)::BIGINT AS n_raw_forms,
@@ -5716,6 +5717,8 @@ raw AS (
               ELSE 'Disallow: /x' || chr(10) END ||
          CASE WHEN i % 4 = 0 THEN 'Crawl-delay: nonsense' || chr(10)
               ELSE '' END ||
+         CASE WHEN i % 5 = 0 THEN 'User-agent: otherbot' || chr(10)
+              || 'Crawl-delay: 9' || chr(10) ELSE '' END ||
          CASE WHEN i % 3 = 0 THEN 'User-agent: discobot' || chr(10)
               || 'Crawl-delay: 0.5' || chr(10) ELSE '' END AS robots_txt
   FROM hosts),
@@ -5730,7 +5733,7 @@ parsed AS (
                '^\s*([A-Za-z-]+)\s*:\s*(\S*)\s*$', 2) AS value
   FROM lines),
 kept AS (SELECT * FROM parsed
-         WHERE field IN ('user-agent', 'crawl-delay')),
+         WHERE field IN ('user-agent', 'crawl-delay', 'allow', 'disallow')),
 g AS (
   SELECT *, CASE WHEN field = 'user-agent' THEN 1 ELSE 0 END AS is_ua,
          coalesce(lag(CASE WHEN field = 'user-agent' THEN 1 ELSE 0 END)
@@ -5762,7 +5765,8 @@ GROUP BY d.host
 def robots_crawl_delay_q(spark, sf):
     """RFC-grouped Crawl-delay election over synthetic robots bodies:
     exact-agent (fractional 0.5s) suppresses the star group's integer
-    delay, invalid values drop, delay-less hosts emit no row."""
+    delay, invalid values drop, delay-less hosts emit no row, and a
+    Disallow closes the star group so a later agent's delay stays out."""
     e = _t(spark, sf, "events")
     hosts = e.select((F.col("user_id") % 60).alias("i")).distinct()
     nl = F.lit("\n")
@@ -5774,6 +5778,10 @@ def robots_crawl_delay_q(spark, sf):
         .otherwise(F.concat(F.lit("Disallow: /x"), nl)),
         F.when(F.col("i") % 4 == 0,
                F.concat(F.lit("Crawl-delay: nonsense"), nl))
+        .otherwise(F.lit("")),
+        F.when(F.col("i") % 5 == 0,
+               F.concat(F.lit("User-agent: otherbot"), nl,
+                        F.lit("Crawl-delay: 9"), nl))
         .otherwise(F.lit("")),
         F.when(F.col("i") % 3 == 0,
                F.concat(F.lit("User-agent: discobot"), nl,

@@ -136,8 +136,8 @@ def root_probes(url_redirects) -> dict:
     redirect: str|None}. Presence of a host (any page) models "the server
     answers"; a missing host models a connection error. The Spark engine
     computes the identical O(hosts) dict with a groupBy over the pages
-    table (never a driver-side URL scan); parity is pinned by the
-    engine-vs-simulator e2e suite.
+    table (never a driver-side URL scan); parity is pinned by
+    tests/test_engine.py::test_engine_probes_match_refsem_root_probes.
 
     A host can carry multiple root rows (e.g. an http and an https root in
     a merged table). Both implementations apply the same input-order-free

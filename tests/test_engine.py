@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from disco_crawl_spark import corpus as corpus_mod, refsim
+from disco_crawl_spark import corpus as corpus_mod, refsem, refsim
 from disco_crawl_spark.engine import CrawlEngine
 
 
@@ -241,6 +241,31 @@ def test_dual_domain_computed_from_probes_not_flag(spark, tmp_warehouse):
     assert skipped & set(dual_bare), "probe-detected dual-skip must fire"
     crawled = {h for _, h, _, _ in eng.crawl_order()}
     assert not (crawled & set(dual_bare))
+
+
+def test_engine_probes_match_refsem_root_probes(spark, tmp_warehouse):
+    # the engine's groupBy and refsem.root_probes must key hosts the same
+    # way (lowercased authority, userinfo stripped, port kept) and pick the
+    # same redirect when a host has several root rows (max rule)
+    rows = [
+        ("https://Upper.Gov.AU/", None),
+        ("https://Upper.Gov.AU/about", None),
+        ("http://crawler@auth.gov.au/", "https://auth.gov.au/"),
+        ("https://port.gov.au:8443/", None),
+        ("http://both.gov.au/", "https://both.gov.au/"),
+        ("https://both.gov.au/", "https://www.both.gov.au/"),
+        ("https://www.both.gov.au/", None),
+        ("https://deep.gov.au/a/b.html", "https://other.gov.au/"),
+        ("https://query.gov.au/?q=1", "https://elsewhere.gov.au/"),
+    ]
+    pages = spark.createDataFrame(rows, "url string, redirect_to string")
+    eng = CrawlEngine(spark, pages, {}, {}, tmp_warehouse)
+    expected = refsem.root_probes(rows)
+    assert eng._probes == expected
+    assert expected["both.gov.au"]["redirect"] == "https://www.both.gov.au/"
+    assert expected["deep.gov.au"] == {"root": False, "redirect": None}
+    assert expected["query.gov.au"] == {"root": False, "redirect": None}
+    assert {"upper.gov.au", "auth.gov.au", "port.gov.au:8443"} <= set(expected)
 
 
 def test_pages_cache_partitions_sized_by_data_not_cores(

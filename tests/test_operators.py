@@ -3113,7 +3113,8 @@ def test_sitemap_recrawl_verdicts(spark):
 
 def test_robots_crawl_delay_group_semantics(spark):
     """Exact-agent suppresses star, groups merge with MAX, fractional
-    kept, invalid/negative dropped, delay-less hosts absent."""
+    kept, invalid/negative dropped, delay-less hosts absent, and an
+    Allow/Disallow line ends a group's User-agent run."""
     from disco_crawl_spark.operators import schedule
     rows = [
         ("a", "User-agent: *\nCrawl-delay: 3\nUser-agent: discobot\n"
@@ -3125,6 +3126,10 @@ def test_robots_crawl_delay_group_semantics(spark):
         ("d", "User-agent: *\nCrawl-delay: soon\nCrawl-delay: -1"),
                                                    # invalid+negative -> none
         ("e", "User-agent: googlebot\nCrawl-delay: 9"),  # no match -> none
+        ("f", "User-agent: *\nDisallow: /x\nUser-agent: otherbot\n"
+              "Crawl-delay: 9"),                   # rule line ends star group
+        ("g", "User-agent: discobot\nDisallow: /p\nUser-agent: *\n"
+              "Crawl-delay: 7"),                   # delay-less exact -> none
     ]
     df = spark.createDataFrame(rows, "host string, robots_txt string")
     got = {r["host"]: r["delay_micro"] for r in

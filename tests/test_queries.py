@@ -147,6 +147,25 @@ def test_oracle_dtype_parity(spark, duck, name):
                      f"(col, duck, spark): {bad}")
 
 
+def test_dedup_exact_nfc_null_text_matches_oracle(spark, tmp_path):
+    # nfc_dedup reads NULL text as the empty document; the oracle must
+    # hash '' too, not NULL (absent from the sf datasets, so pinned here)
+    con = duckdb.connect()
+    con.execute("COPY (SELECT * FROM (VALUES (1::BIGINT, NULL::VARCHAR), "
+                "(2, 'caf' || chr(233))) v(doc_id, text)) "
+                f"TO '{tmp_path}/documents.parquet' (FORMAT parquet)")
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/documents.parquet')")
+    sdf = entry_mod.queries()["dedup_exact_nfc"](spark, str(tmp_path))
+    srows = [tuple(r) for r in sdf.collect()]
+    res = con.execute(entry_mod.oracle_sql()["dedup_exact_nfc"])
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    assert _rowset(dcols, drows) == _rowset(sdf.columns, srows)
+    null_class = [r for r in drows if r[dcols.index("keep_id")] == 3]
+    assert null_class and null_class[0][dcols.index("n_raw_forms")] == 1
+
+
 def test_entry_flagship(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
