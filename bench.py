@@ -89,27 +89,19 @@ def _spark(master: str):
                          else None)
 
 
-def _bench_pages(spark, c):
-    rows = [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"],
-             r["lang"], r.get("redirect_to")) for r in c.page_rows()]
-    return spark.createDataFrame(
-        rows,
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, redirect_to string")
-
-
 def run_crawl(master: str, corpus_obj=None, max_rounds: int = 30,
               steward_batch: int = 500) -> dict:
     """One full crawl at a given parallelism; returns {urls, secs, urls_per_sec}."""
     from disco_crawl_spark import corpus as corpus_mod
     from disco_crawl_spark.engine import CrawlEngine
     from disco_crawl_spark.refsim import SimConfig
+    from disco_crawl_spark.sources import pages_frame
 
     c = corpus_obj or corpus_mod.generate(**BENCH_CORPUS_KW)
     spark = _spark(master)
     wh = tempfile.mkdtemp(prefix="disco_bench_wh_")
     try:
-        pages = _bench_pages(spark, c)
+        pages = pages_frame(spark, c)
         pages.count()  # materialize input outside the timed region
         eng = CrawlEngine(spark, pages, c.robots, c.hosts, wh,
                           config=SimConfig(steward_batch=steward_batch),

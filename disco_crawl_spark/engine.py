@@ -30,9 +30,9 @@ Scale notes (100 TB / 10^10-URL design; local runs verify correctness):
   only the per-round schedule, never the corpus (plan-asserted in tests).
 - **frontier / url_seen / crawl_log** compact every K rounds
   (``compact_every``) through the icelite rewrite-data-files op into
-  host-range-sorted files (url_seen also sorts on ``url_key``, the
-  anti-join key), bounding the O(rounds x parallelism) small-file growth
-  that natural-parallelism delta commits trade for scaling.
+  host-range-sorted files (url_seen on ``host, url_key``), bounding the
+  O(rounds x parallelism) small-file growth that natural-parallelism
+  delta commits trade for scaling.
 - hot politeness groups are serialized by the group lock; AQE skew-join
   splitting covers hot-host fetch joins.
 
@@ -190,8 +190,11 @@ class CrawlEngine:
         """refsem.root_probes over the pages table, built on the first
         steward batch with one O(hosts) groupBy (never a URL-level
         collect). The host key (lowercased authority, userinfo stripped,
-        port kept) and the max-redirect rule are refsem's."""
-        is_root = F.col("url").rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+/$")
+        port kept), the max-redirect rule and the root test are refsem's:
+        path ``/`` (``;params`` allowed) with no query or fragment beyond
+        an empty ``?`` or ``#``, as ``urlparse`` splits it."""
+        is_root = F.col("url").rlike(
+            r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+/(;[^/?#]*)?\??#?$")
         auth = F.regexp_extract(
             "url", r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)", 1)
         host = F.lower(F.regexp_replace(auth, r"^[^@/]*@", ""))
@@ -259,10 +262,9 @@ class CrawlEngine:
         its whole delta chain into ``max(2, parallelism // 2)``
         host-range-sorted files (ES's implicit segment merge is the
         reference analog that kept worker.py:244-280 resume scans
-        viable). Host-sorting makes the per-file min/max footer stats
-        disjoint, so ``Table.read(eq={'host': h})`` manifest pruning
-        touches O(1) files after compaction; url_seen also sorts on
-        ``url_key``, the generation-build anti-join key. Time travel,
+        viable). Host-sorting keeps each row group's host range narrow,
+        so the parquet reader serves ``_first_generation``'s crawl_log
+        ``host IN`` filter from row-group footer stats. Time travel,
         rollback, and mid-crawl resume are unaffected: the compact
         snapshot holds the same rows, and older snapshots keep their
         dirs until an explicit ``expire_before``.
@@ -316,12 +318,6 @@ class CrawlEngine:
             .select("host", "session", "gen", "pos", "link")
         )
 
-    def _commit_frontier(self, prepared: DataFrame) -> dict:
-        """Append new generation rows; return per-host row counts."""
-        delta = self._append("frontier", prepared)
-        return {r["host"]: r["count"]
-                for r in delta.groupBy("host").count().collect()}
-
     # ------------------------------------------------------------------
     # domain starts (steward + start gauntlet)
     # ------------------------------------------------------------------
@@ -331,7 +327,7 @@ class CrawlEngine:
         active_groups = {self.dom[h]["group"] for h in self._active_hosts()}
         picks = lifecycle.pick_domains(states, groups, active_groups,
                                        self.round_no, self.cfg.steward_batch)
-        fresh, resumed = [], []
+        started = []
         for host in picks:
             d = lifecycle.start_decision(host, self.attrs.get(host),
                                          self.robots, probes=self._probes)
@@ -351,68 +347,64 @@ class CrawlEngine:
             st.update(state="active", scheme=d.scheme, budget=d.budget,
                       gen=1, cursor=0, crawled=0, gen_size=0,
                       session=st["session"] + 1)
-            (resumed if st["ever_crawled"] else fresh).append(host)
+            started.append(host)
+        if started:
+            self._first_generation(started)
 
-        new_frontier = []
-        if fresh:
-            rows = [(h, self.dom[h]["session"], 1, 0,
-                     f"{self.dom[h]['scheme']}://{h}/") for h in fresh]
-            # one slice: the bootstrap frame is <= steward_batch rows, and
-            # a parallelized local relation pays ~0.15 s per SLICE on
-            # every downstream interaction in this environment (the
-            # repartition(1) end-of-run lesson) — 32 four-row slices made
-            # round 0's frontier prepare+commit a multi-second job
-            df = self.spark.createDataFrame(
-                rows,
-                "host string, session int, gen int, ord int, link_raw string"
-            ).repartition(1)
-            new_frontier.append(self._prepare(df))
-        if resumed:
-            new_frontier.append(self._resume_kickstart(resumed))
-        if new_frontier:
-            prepared = new_frontier[0]
-            for extra in new_frontier[1:]:
-                prepared = prepared.unionByName(extra)
-            counts = self._commit_frontier(prepared)
-            for h in fresh + resumed:
-                self.dom[h]["gen_size"] = counts.get(h, 0)
-
-    def _resume_kickstart(self, hosts: list) -> DataFrame:
-        """Resume from the crawl log (worker.py:244-280): blacklist-seed with
-        every previously fetched URL's key; kickstart = their internal links
-        minus fetched, sorted, capped. Kickstart links are NOT seen-inserted
-        (reference-faithful)."""
-        logs = self._view("crawl_log").filter(F.col("host").isin(hosts))
+    def _first_generation(self, hosts: list):
+        """Commit the started hosts' first generation, as refsim's
+        ``_start_domain``: kick links from the crawl log, else the root.
+        A host crawled in an earlier session resumes from its log
+        (worker.py:244-280): url_seen is blacklist-seeded with every
+        previously fetched URL's key, and the kickstart is their internal
+        links minus fetched, sorted, capped. Kickstart links are NOT
+        seen-inserted (reference-faithful). A host with no kick links,
+        fresh or with every logged link already crawled (worker.py:678-679
+        'if not next_links'), starts from its root."""
+        # one slice: the frame is <= steward_batch rows, and a
+        # parallelized local relation pays ~0.15 s per SLICE on every
+        # downstream interaction in this environment (the repartition(1)
+        # end-of-run lesson) — 32 four-row slices made round 0's frontier
+        # prepare+commit a multi-second job
         sess = self.spark.createDataFrame(
             [(h, self.dom[h]["session"], self.dom[h]["scheme"])
              for h in hosts],
-            "host string, session int, scheme string")
-        crawled = (logs.select("host", "url").distinct()
-                   .withColumn("url_key", udfs.url_seen_key(F.col("url"))))
-        seen_rows = (crawled.join(F.broadcast(sess.select("host", "session")),
-                                  "host")
-                     .withColumn("host_group", cf.host_group(F.col("host")))
-                     .select("host", "session", "host_group", "url_key"))
-        self._append("url_seen", seen_rows)
-        kick = (logs.select("host", F.explode("links").alias("link_raw"))
-                .distinct()
-                .withColumn("url_key", udfs.url_seen_key(F.col("link_raw")))
-                .join(crawled.select("host", "url_key"),
-                      ["host", "url_key"], "left_anti"))
-        w = Window.partitionBy("host").orderBy("link_raw")
-        kick = (kick.withColumn("ord", F.row_number().over(w))
-                .filter(F.col("ord") <= self.cfg.max_pages)
-                .join(F.broadcast(sess.select("host", "session")), "host")
-                .withColumn("gen", F.lit(1))
-                .select("host", "session", "gen", "ord", "link_raw"))
-        # a host whose every logged link was already crawled restarts from
-        # its root (worker.py:678-679 'if not next_links'), like a fresh start
-        roots = (sess.join(kick.select("host").distinct(), "host", "left_anti")
-                 .select("host", "session", F.lit(1).alias("gen"),
-                         F.lit(0).alias("ord"),
-                         F.concat(F.col("scheme"), F.lit("://"), F.col("host"),
-                                  F.lit("/")).alias("link_raw")))
-        return self._prepare(kick.unionByName(roots))
+            "host string, session int, scheme string").repartition(1)
+        roots = sess
+        kick = None
+        resumed = [h for h in hosts if self.dom[h]["ever_crawled"]]
+        if resumed:
+            logs = self._view("crawl_log").filter(F.col("host").isin(resumed))
+            crawled = (logs.select("host", "url").distinct()
+                       .withColumn("url_key", udfs.url_seen_key(F.col("url"))))
+            sk = F.broadcast(sess.select("host", "session"))
+            self._append("url_seen", crawled.join(sk, "host")
+                         .withColumn("host_group", cf.host_group(F.col("host")))
+                         .select("host", "session", "host_group", "url_key"))
+            kick = (logs.select("host", F.explode("links").alias("link_raw"))
+                    .distinct()
+                    .withColumn("url_key", udfs.url_seen_key(F.col("link_raw")))
+                    .join(crawled.select("host", "url_key"),
+                          ["host", "url_key"], "left_anti"))
+            w = Window.partitionBy("host").orderBy("link_raw")
+            kick = (kick.withColumn("ord", F.row_number().over(w))
+                    .filter(F.col("ord") <= self.cfg.max_pages)
+                    .join(sk, "host")
+                    .select("host", "session", F.lit(1).alias("gen"), "ord",
+                            "link_raw"))
+            roots = sess.join(kick.select("host").distinct(), "host",
+                              "left_anti")
+        raw = roots.select("host", "session", F.lit(1).alias("gen"),
+                           F.lit(0).alias("ord"),
+                           F.concat(F.col("scheme"), F.lit("://"),
+                                    F.col("host"), F.lit("/")).alias("link_raw"))
+        if kick is not None:
+            raw = kick.unionByName(raw)
+        delta = self._append("frontier", self._prepare(raw))
+        counts = {r["host"]: r["count"]
+                  for r in delta.groupBy("host").count().collect()}
+        for h in hosts:
+            self.dom[h]["gen_size"] = counts.get(h, 0)
 
     # ------------------------------------------------------------------
     # one crawl round
@@ -843,6 +835,7 @@ def selftest(tmpdir: "str | None" = None, **corpus_kwargs) -> bool:
 
     from . import corpus as corpus_mod, refsim
     from .session import build_session
+    from .sources import pages_frame
 
     c = corpus_mod.generate(**corpus_kwargs)
     sim = refsim.Simulator(c).run()
@@ -850,12 +843,8 @@ def selftest(tmpdir: "str | None" = None, **corpus_kwargs) -> bool:
     spark = build_session("disco-selftest")
     wh = tmpdir or tempfile.mkdtemp(prefix="disco_wh_")
     try:
-        pages = spark.createDataFrame(
-            [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"], r["lang"],
-              r.get("redirect_to"))
-             for r in c.page_rows()],
-            "url string, warc_ts timestamp, html binary, text string, lang string, redirect_to string")
-        eng = CrawlEngine(spark, pages, c.robots, c.hosts, wh, seeds=c.seeds)
+        eng = CrawlEngine(spark, pages_frame(spark, c), c.robots, c.hosts, wh,
+                          seeds=c.seeds)
         eng.run()
         ok = True
         order_s, order_e = sim.order, eng.crawl_order()

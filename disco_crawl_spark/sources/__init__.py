@@ -19,6 +19,15 @@ PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, text string, "
                 "lang string, redirect_to string")
 
 
+def pages_frame(spark: SparkSession, corpus) -> DataFrame:
+    """A generated corpus' pages (``corpus.generate``) as a driver-built
+    DataFrame over ``PAGES_SCHEMA``."""
+    return spark.createDataFrame(
+        [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"], r["lang"],
+          r.get("redirect_to")) for r in corpus.page_rows()],
+        PAGES_SCHEMA)
+
+
 def write_pages(df: DataFrame, path: str, buckets: int = 0,
                 name: "str | None" = None) -> "str | None":
     """Write a pages table; with buckets>0, bucket (and sort) by url — the

@@ -13,9 +13,10 @@ the same API shape, over plain parquet + JSON manifests:
 - **time travel / resume**: any snapshot id can be read back; the crawl
   engine commits one snapshot per round, which IS the checkpoint
   (north_star: resumable mid-crawl);
-- **per-partition lineage**: commit metadata records per-file row counts
-  read from parquet footers (no extra Spark job), plus arbitrary
-  engine-supplied state (round number, domain cursors).
+- **per-partition lineage**: each commit records its data files as
+  ``{file, rows}`` entries, row counts read from parquet footers (no
+  extra Spark job), plus engine-supplied state on ``commit_state``
+  snapshots (round number, domain cursors).
 
 At production scale this maps 1:1 onto Iceberg: append→fast-append commit,
 overwrite→REPLACE, meta→snapshot summary, read(snapshot)→time travel. Swap
@@ -31,35 +32,6 @@ import uuid
 
 import pyarrow.dataset as pads
 import pyarrow.parquet as papq
-
-
-def _footer_stats(md) -> dict:
-    """JSON-storable per-file column min/max, merged across row groups.
-    Only string/int columns are recorded (the table keys — host, url_key,
-    session, gen — are these; floats/binaries don't drive point lookups).
-    A column with any stats-less or non-storable chunk is omitted, which
-    read-side pruning treats as "may contain anything" (fail-safe)."""
-    out: dict = {}
-    bad: set = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name or name in bad:      # nested: skip
-                continue
-            st = col.statistics
-            if (st is None or not st.has_min_max
-                    or not isinstance(st.min, (str, int))
-                    or isinstance(st.min, bool)):
-                bad.add(name)
-                out.pop(name, None)
-                continue
-            lo, hi = st.min, st.max
-            if name in out:
-                lo, hi = min(lo, out[name][0]), max(hi, out[name][1])
-            out[name] = [lo, hi]
-    return out
 
 
 class Table:
@@ -134,21 +106,15 @@ class Table:
         rel = f"data/r{round_no:05d}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, rel)
         df.write.mode("overwrite").parquet(out)
-        # per-file lineage + column min/max from parquet footers — no
-        # extra Spark job. The stats are what Iceberg keeps per data file
-        # in its manifests; ``read(..., eq=...)`` uses them to skip files
-        # at planning time (manifest-level pruning), the layout feature a
-        # per-host point query at 10 TB lives on.
-        files = []
-        for f in pads.dataset(out, format="parquet").files:
-            md = papq.ParquetFile(f).metadata
-            files.append({"file": os.path.relpath(f, self.path),
-                          "rows": md.num_rows,
-                          "stats": _footer_stats(md)})
+        # per-file lineage: row counts from parquet footers, no extra
+        # Spark job
+        files = [{"file": os.path.relpath(f, self.path),
+                  "rows": papq.ParquetFile(f).metadata.num_rows}
+                 for f in pads.dataset(out, format="parquet").files]
         return rel, files
 
     def _new_snapshot(self, data_dirs: list, round_no: int, op: str,
-                      files_delta: list, state: "dict | None",
+                      files_delta: list, state: "dict | None" = None,
                       files_reset: bool = False) -> int:
         """Commit a snapshot. ``files_delta`` lists only the files THIS
         commit adds (``files_reset`` starts the lineage over — overwrite /
@@ -200,8 +166,7 @@ class Table:
                 st["dom"] = json.load(f)["dom"]
         return st
 
-    def append(self, df, round_no: int = 0,
-               state: "dict | None" = None) -> "tuple[int, str]":
+    def append(self, df, round_no: int = 0) -> "tuple[int, str]":
         """Commit an append snapshot; returns (snapshot_id, new data dir) so
         callers can cheaply re-read just the delta."""
         meta = self._load_meta()
@@ -209,13 +174,12 @@ class Table:
         prev_dirs = last["data"] if last else []
         rel, files = self._write_data(df, round_no)
         sid = self._new_snapshot(prev_dirs + [rel], round_no, "append",
-                                 files, state)
+                                 files)
         return sid, os.path.join(self.path, rel)
 
-    def overwrite(self, df, round_no: int = 0,
-                  state: "dict | None" = None) -> "tuple[int, str]":
+    def overwrite(self, df, round_no: int = 0) -> "tuple[int, str]":
         rel, files = self._write_data(df, round_no)
-        sid = self._new_snapshot([rel], round_no, "overwrite", files, state,
+        sid = self._new_snapshot([rel], round_no, "overwrite", files,
                                  files_reset=True)
         return sid, os.path.join(self.path, rel)
 
@@ -229,50 +193,15 @@ class Table:
                                   "state", [], state)
 
     # -- reads --------------------------------------------------------
-    def read(self, spark, snapshot_id: "int | None" = None,
-             eq: "dict | None" = None):
+    def read(self, spark, snapshot_id: "int | None" = None):
         """DataFrame of the table at a snapshot (default: current).
-        Returns None when the table has no data yet.
-
-        ``eq`` ({column: value}, all conjunctive) enables manifest-level
-        file skipping: only data files whose footer [min, max] range can
-        contain every value are scanned — the Iceberg manifest-pruning
-        behavior, so a per-host point query over a long-lived table reads
-        a handful of files instead of every delta. Files with no recorded
-        stats for a column are kept (fail-safe), and the caller still
-        applies the actual filter — pruning is a scan reduction, never a
-        semantic one."""
+        Returns None when the table has no data yet."""
         snap = (self.snapshot(snapshot_id) if snapshot_id is not None
                 else self.current_snapshot())
         if not snap or not snap["data"]:
             return None
-        if not eq or not snap.get("files"):
-            # no predicate, or file lineage unavailable: full snapshot scan
-            dirs = [os.path.join(self.path, d) for d in snap["data"]]
-            return spark.read.parquet(*dirs)
-        files = self.prune_files(snap, eq)
-        if not files:
-            # no file can contain the values: an empty frame with the
-            # table's schema (read metadata only, skip all rows)
-            dirs = [os.path.join(self.path, d) for d in snap["data"]]
-            return spark.read.parquet(*dirs).limit(0)
-        return spark.read.parquet(*files)
-
-    def prune_files(self, snap: dict, eq: dict) -> list:
-        """Absolute paths of the snapshot's data files whose stats ranges
-        may contain every {column: value} in ``eq``."""
-        kept = []
-        for f in snap.get("files", []):
-            stats = f.get("stats") or {}
-            keep = True
-            for col, val in eq.items():
-                rng = stats.get(col)
-                if rng is not None and not (rng[0] <= val <= rng[1]):
-                    keep = False
-                    break
-            if keep:
-                kept.append(os.path.join(self.path, f["file"]))
-        return kept
+        return spark.read.parquet(
+            *[os.path.join(self.path, d) for d in snap["data"]])
 
     def compact(self, spark, round_no: int = 0,
                 target_files: "int | None" = None,
@@ -284,9 +213,9 @@ class Table:
         snapshot with the file lineage reset. Same rows, new layout;
         time travel to pre-compaction snapshots and ``rollback`` keep
         working because old data dirs are only removed by an explicit
-        ``expire_before``. ``sort_cols`` sorts within output files so the
-        per-file min/max footer stats become selective for ``read(eq=)``
-        manifest pruning (the Iceberg sort-order + rewrite recipe).
+        ``expire_before``. ``sort_cols`` range-partitions and sorts the
+        output files (the Iceberg sort-order + rewrite recipe), so a
+        filter on them skips row groups by their parquet footer stats.
         Returns the new snapshot id, or None for an empty table."""
         cur = self.current_snapshot()
         if not cur or not cur["data"]:
@@ -299,7 +228,7 @@ class Table:
         if sort_cols:
             df = df.sortWithinPartitions(*sort_cols)
         rel, files = self._write_data(df, round_no)
-        return self._new_snapshot([rel], round_no, "compact", files, None,
+        return self._new_snapshot([rel], round_no, "compact", files,
                                   files_reset=True)
 
     def rollback(self, snapshot_id: "int | None"):
@@ -350,9 +279,3 @@ class Catalog:
 
     def table(self, name: str) -> Table:
         return Table(self.warehouse, name)
-
-    def tables(self) -> list:
-        return sorted(
-            d for d in os.listdir(self.warehouse)
-            if os.path.isdir(os.path.join(self.warehouse, d))
-        )

@@ -37,6 +37,7 @@ def main():
     from disco_crawl_spark import corpus as corpus_mod
     from disco_crawl_spark.engine import CrawlEngine
     from disco_crawl_spark.corpus import HostAttrs
+    from disco_crawl_spark.sources import pages_frame
 
     spark = (SparkSession.builder.appName("disco-crawl")
              .config("spark.sql.adaptive.enabled", "true")
@@ -55,11 +56,7 @@ def main():
         seeds = args.seeds or sorted(hosts)[:10]
     else:
         c = corpus_mod.generate()
-        pages = spark.createDataFrame(
-            [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"],
-              r["lang"], r.get("redirect_to")) for r in c.page_rows()],
-            "url string, warc_ts timestamp, html binary, text string, "
-            "lang string, redirect_to string")
+        pages = pages_frame(spark, c)
         attrs, robots, seeds = c.hosts, c.robots, (args.seeds or c.seeds)
 
     if args.resume:

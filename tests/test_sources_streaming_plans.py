@@ -62,11 +62,7 @@ def pages_dir(spark, tmp_path_factory):
     c = corpus_mod.generate(n_agencies=3, n_govcms=1, n_sections=2,
                             pages_per_section=2)
     d = tmp_path_factory.mktemp("pages")
-    df = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"], r["lang"],
-              r.get("redirect_to"))
-         for r in c.page_rows()],
-        "url string, warc_ts timestamp, html binary, text string, lang string, redirect_to string")
+    df = sources.pages_frame(spark, c)
     df.coalesce(2).write.mode("overwrite").parquet(str(d / "pages"))
     return c, str(d / "pages"), str(d)
 
@@ -160,10 +156,7 @@ def test_bucketed_pages_fetch_join_no_big_side_exchange(spark, tmp_path):
     # schedule side; the pages scan feeds the SortMergeJoin in place
     c = corpus_mod.generate(n_agencies=2, n_govcms=0, n_sections=1,
                             pages_per_section=2)
-    pages = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"], r["lang"],
-          r.get("redirect_to")) for r in c.page_rows()],
-        sources.PAGES_SCHEMA)
+    pages = sources.pages_frame(spark, c)
     name = sources.write_pages(pages, str(tmp_path / "pages_b"), buckets=4,
                                name="t_pages_b4")
     t = spark.table(name)
@@ -193,10 +186,7 @@ def test_engine_bucketed_pages_and_compaction_match_oracle(
     c = corpus_mod.generate(n_agencies=3, n_govcms=1, n_sections=2,
                             pages_per_section=2)
     sim = refsim.Simulator(c).run()
-    pages = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"], r["lang"],
-          r.get("redirect_to")) for r in c.page_rows()],
-        sources.PAGES_SCHEMA)
+    pages = sources.pages_frame(spark, c)
     name = sources.write_pages(pages, str(tmp_path / "pages_e2e"), buckets=4,
                                name="t_pages_e2e")
     eng = CrawlEngine(spark, spark.table(name), c.robots, c.hosts,
