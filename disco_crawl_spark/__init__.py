@@ -11,7 +11,7 @@ snapshot-versioned columnar tables:
 - ``refsim``   — deterministic single-process reference simulator (the oracle
                  the Spark engine is asserted byte-equal against).
 - ``corpus``   — seeded synthetic Common-Crawl-style ``pages`` corpus.
-- ``tables``   — snapshot-per-round versioned parquet tables ("icelite", an
+- ``tables``   — snapshot-per-commit versioned parquet tables ("icelite", an
                  Iceberg-shaped shim; swap for Iceberg when the runtime jar
                  is available).
 - ``engine``   — the crawl engine: frontier / url_seen / crawl_log as

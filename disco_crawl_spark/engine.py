@@ -5,8 +5,9 @@ Design (SURVEY.md §1.3/§3.1 'Spark rewrite'):
 
 - **frontier / url_seen / crawl_log are DataFrames** backed by icelite
   snapshot tables (tables.py); collected links derive from the crawl log.
-  One crawl round commits one snapshot set — that IS the checkpoint
-  (resumable mid-crawl, north_star).
+  A round ends in one crawl_log state snapshot that names each table's
+  head snapshot — that IS the checkpoint; ``resume`` rolls every table
+  back to the heads it names (resumable mid-crawl, north_star).
 - **domains is tiny** (thousands of hosts vs 10^10 URLs): lifecycle
   decisions (steward pick, start gauntlet, budgets, cursors) run driver-side
   via the same ``lifecycle`` functions the oracle simulator uses. All
@@ -237,7 +238,7 @@ class CrawlEngine:
         # round are the correct Iceberg-shaped trade; compaction
         # (_compact, every ``compact_every`` rounds) is the remedy, never a
         # serial write path.
-        _, data_dir = self._table(name).append(delta, self.round_no)
+        _, data_dir = self._table(name).append(delta)
         # explicit schema: parquet reads without one spend a driver job on
         # footer/schema inference — at round-loop cadence that is one
         # wasted dispatch per append (3/round), pure serial cost
@@ -267,22 +268,14 @@ class CrawlEngine:
         ``host IN`` filter from row-group footer stats. Time travel,
         rollback, and mid-crawl resume are unaffected: the compact
         snapshot holds the same rows, and older snapshots keep their
-        dirs until an explicit ``expire_before``.
-
-        The compact snapshot is stamped with the LAST CHECKPOINTED round
-        (the hook runs after ``round_no`` advances): resume rolls each
-        table back to its newest snapshot with round <= the checkpoint's,
-        so a compaction stamped with the not-yet-run next round would be
-        discarded on every resume; stamped with the finished round it IS
-        the snapshot resume lands on."""
+        dirs until an explicit ``expire_before``."""
         tf = max(2, self.spark.sparkContext.defaultParallelism // 2)
-        rnd = max(self.round_no - 1, 0)
         for name in names:
             t = self._table(name)
-            cur = t.current_snapshot()
+            cur = t.snapshot()
             if not cur or not cur["data"] or len(cur.get("files", ())) <= tf:
                 continue                    # nothing worth rewriting
-            t.compact(self.spark, rnd, target_files=tf,
+            t.compact(self.spark, target_files=tf,
                       sort_cols=(["host", "url_key"] if name == "url_seen"
                                  else ["host"]))
             # re-seed the in-run view from the compacted snapshot: the
@@ -568,15 +561,18 @@ class CrawlEngine:
         for d in sorted(discovered_all):
             self._seen_host(d, rnd)
 
+        # compaction lands before the checkpoint, so the checkpoint's
+        # heads name the compact snapshots
+        if self.compact_every and (rnd + 1) % self.compact_every == 0:
+            self._compact(["frontier", "url_seen", "crawl_log"])
+
         # -- snapshot the driver state (the round checkpoint) ----------
-        self.t_log.commit_state(rnd, self._state_dict())
+        self.t_log.commit_state(self._state_dict())
         # watermarks advance only after the checkpoint LANDS: a failed
         # commit leaves the deltas pending for the next attempt
         self._ckpt_events = len(self.events)
         self._ckpt_metrics = len(self.metrics)
         self.round_no += 1
-        if self.compact_every and self.round_no % self.compact_every == 0:
-            self._compact(["frontier", "url_seen", "crawl_log"])
 
     def _build_generations(self, hosts: list, schedule: "DataFrame | None",
                            stats_df: "DataFrame | None" = None):
@@ -652,8 +648,9 @@ class CrawlEngine:
         nxt = nxt.persist()
         # the two commits touch different tables and both read only the
         # pre-filled cand cache; a mid-round kill discards BOTH tables'
-        # uncheckpointed deltas on resume (rollback is per-table by round,
-        # engine.resume), so commit order between them is immaterial —
+        # uncheckpointed deltas on resume (each table rolls back to the
+        # head the last round checkpoint names, engine.resume), so commit
+        # order between them is immaterial —
         # overlap them so the frontier job's tail backfills the seen
         # write's idle executors (guide §2.6 shape)
         from concurrent.futures import ThreadPoolExecutor
@@ -693,7 +690,9 @@ class CrawlEngine:
     # run / resume / results
     # ------------------------------------------------------------------
     def _state_dict(self) -> dict:
-        """Round-checkpoint payload. ``dom`` is the full mutable state
+        """Round-checkpoint payload. ``heads`` names the frontier and
+        url_seen snapshots this round ended on (crawl_log's is the
+        checkpoint snapshot itself). ``dom`` is the full mutable state
         (O(active + seen hosts), compact 3-field entries for inactive
         hosts); events/metrics are PER-ROUND DELTAS — serializing the
         full accumulated lists made the checkpoint an O(rounds x hosts)
@@ -701,7 +700,9 @@ class CrawlEngine:
         over a 10-round 1000-host crawl). ``resume`` replays the deltas
         of every state snapshot in commit order, so the reconstructed
         lists are identical to the in-memory ones."""
-        return {"round": self.round_no, "dom": self.dom,
+        heads = {n: (self._table(n).snapshot() or {}).get("id")
+                 for n in ("frontier", "url_seen")}
+        return {"round": self.round_no, "heads": heads, "dom": self.dom,
                 "events_delta": [list(e) for e in
                                  self.events[self._ckpt_events:]],
                 "metrics_delta": self.metrics[self._ckpt_metrics:]}
@@ -742,62 +743,51 @@ class CrawlEngine:
                     "external_links bigint, fetched_200 bigint, "
                     "fetched_404 bigint, host string, "
                     "internal_links bigint, round bigint, scheduled bigint")
-                .repartition(1), self.round_no)
+                .repartition(1))
         if self.events:
             self.cat.table("domain_events").overwrite(
                 self.spark.createDataFrame(
                     [(r, h, m) for r, h, m in self.events],
                     "round int, host string, event string")
-                .repartition(1), self.round_no)
+                .repartition(1))
         # drop cached deltas; later reads come from the committed snapshots
         self._drop_views()
         return {"rounds": self.round_no,
                 "states": {h: d["state"] for h, d in self.dom.items()}}
 
     @classmethod
-    def resume(cls, spark, pages, robots_corpus, host_attrs, warehouse,
-               config=None) -> "CrawlEngine":
-        """Rebuild an engine from the latest committed round checkpoint.
+    def resume(cls, *args, **kwargs) -> "CrawlEngine":
+        """Build an engine from the constructor's arguments, then restore
+        the latest round checkpoint: the newest crawl_log state snapshot.
 
-        Crash-safe against mid-round kills: a round's table appends land
-        before its ``commit_state`` checkpoint, so after an abort the head
-        snapshots can be op='append' deltas of a round that never finished.
-        Recovery scans history for the newest real checkpoint (op='state')
-        and ROLLS BACK frontier/url_seen/crawl_log to their last snapshot of
-        that round — aborted deltas are discarded from every view, and the
-        re-run round recomputes them identically (the engine is
-        deterministic given the checkpoint state)."""
-        eng = cls(spark, pages, robots_corpus, host_attrs, warehouse,
-                  config=config)
+        Crash-safe against mid-round kills: a round's appends and
+        compactions land before its checkpoint, so after an abort each
+        table can hold snapshots of a round that never finished. Every
+        table rolls back to the head the checkpoint names (crawl_log to
+        the checkpoint itself; all three to empty when no round finished,
+        leaving the constructor's seeded state), which discards the
+        aborted snapshots and their data dirs; the re-run round recomputes
+        them identically (the engine is deterministic given the
+        checkpoint state)."""
+        eng = cls(*args, **kwargs)
         ckpt = next((s for s in reversed(eng.t_log.history())
-                     if s["op"] == "state" and s.get("state")), None)
+                     if s["op"] == "state"), None)
+        st = eng.t_log.load_state(ckpt["state"]) if ckpt else {"heads": {}}
+        heads = {**st["heads"], "crawl_log": ckpt and ckpt["id"]}
+        for name in ("frontier", "url_seen", "crawl_log"):
+            eng._table(name).rollback(heads.get(name))
         if ckpt is None:
-            # no finished round: start over from scratch
-            for name in ("frontier", "url_seen", "crawl_log"):
-                eng._table(name).rollback(None)
             return eng
-        st = eng.t_log.load_state(ckpt["state"])
-        eng.round_no = st["round"] + 1 if "round" in st else 0
+        eng.round_no = st["round"] + 1
         eng.dom = st["dom"]
-        # events/metrics are per-round deltas (one per state snapshot):
-        # replay every checkpoint up to and including the chosen one, in
-        # commit order.
-        eng.events, eng.metrics = [], []
+        # events/metrics are per-round deltas, one per state snapshot:
+        # replay them all in commit order
         for s in eng.t_log.history():
-            if s["op"] != "state" or not s.get("state"):
-                continue
-            if s["id"] > ckpt["id"]:
-                break
-            ss = s["state"]
-            eng.events.extend(tuple(e) for e in ss.get("events_delta", []))
-            eng.metrics.extend(ss.get("metrics_delta", []))
+            if s["op"] == "state":
+                eng.events.extend(tuple(e) for e in s["state"]["events_delta"])
+                eng.metrics.extend(s["state"]["metrics_delta"])
         eng._ckpt_events = len(eng.events)
         eng._ckpt_metrics = len(eng.metrics)
-        ckpt_round = st.get("round", -1)
-        for name in ("frontier", "url_seen", "crawl_log"):
-            t = eng._table(name)
-            good = [s for s in t.history() if s["round"] <= ckpt_round]
-            t.rollback(good[-1]["id"] if good else None)
         return eng
 
     def crawl_order(self) -> list:

@@ -10,13 +10,15 @@ the same API shape, over plain parquet + JSON manifests:
   manifest);
 - **cheap appends**: an append snapshot = parent's data dirs + new dirs (no
   rewrite), exactly like Iceberg manifests;
-- **time travel / resume**: any snapshot id can be read back; the crawl
-  engine commits one snapshot per round, which IS the checkpoint
+- **time travel / resume**: any snapshot id can be read back, and
+  ``rollback`` makes an older one the head again; the crawl engine's
+  round checkpoint is one ``commit_state`` snapshot that names every
+  state table's head, and resume rolls each table back to it
   (north_star: resumable mid-crawl);
 - **per-partition lineage**: each commit records its data files as
   ``{file, rows}`` entries, row counts read from parquet footers (no
   extra Spark job), plus engine-supplied state on ``commit_state``
-  snapshots (round number, domain cursors).
+  snapshots (domain state, event/metric deltas, table heads).
 
 At production scale this maps 1:1 onto Iceberg: append→fast-append commit,
 overwrite→REPLACE, meta→snapshot summary, read(snapshot)→time travel. Swap
@@ -60,11 +62,11 @@ class Table:
     # -- inspection ---------------------------------------------------
     def history(self) -> list:
         """Raw snapshot records (file lineage stored as per-commit DELTAS:
-        ``files_delta`` + ``files_reset``; use ``snapshot()`` /
-        ``current_snapshot()`` for a record with the full ``files`` list
-        materialized). Storing full lists per snapshot made _meta.json —
-        rewritten on EVERY commit — grow O(commits^2): measured as the
-        round checkpoint cost climbing every crawl round."""
+        ``files_delta`` + ``files_reset``; use ``snapshot()`` for a record
+        with the full ``files`` list materialized). Storing full lists per
+        snapshot made _meta.json — rewritten on EVERY commit — grow
+        O(commits^2): measured as the round checkpoint cost climbing
+        every crawl round."""
         return self._load_meta()["snapshots"]
 
     @staticmethod
@@ -80,30 +82,20 @@ class Table:
                 cur = cur + list(s.get("files_delta") or [])
         return cur
 
-    def _hydrated(self, meta: dict, snap: "dict | None") -> "dict | None":
-        if snap is None:
-            return None
-        out = dict(snap)
-        out["files"] = self._files_at(meta["snapshots"], snap["id"])
-        return out
-
-    def current_snapshot(self) -> "dict | None":
+    def snapshot(self, snapshot_id: "int | None" = None) -> "dict | None":
+        """The snapshot record with its ``files`` list materialized
+        (default: the head); None when there is no such snapshot."""
         m = self._load_meta()
-        for s in m["snapshots"]:
-            if s["id"] == m["current"]:
-                return self._hydrated(m, s)
-        return None
-
-    def snapshot(self, snapshot_id: int) -> "dict | None":
-        m = self._load_meta()
+        if snapshot_id is None:
+            snapshot_id = m["current"]
         for s in m["snapshots"]:
             if s["id"] == snapshot_id:
-                return self._hydrated(m, s)
+                return {**s, "files": self._files_at(m["snapshots"], s["id"])}
         return None
 
     # -- writes -------------------------------------------------------
-    def _write_data(self, df, round_no: int) -> "tuple[str, list]":
-        rel = f"data/r{round_no:05d}-{uuid.uuid4().hex[:8]}"
+    def _write_data(self, df) -> "tuple[str, list]":
+        rel = f"data/{uuid.uuid4().hex}"
         out = os.path.join(self.path, rel)
         df.write.mode("overwrite").parquet(out)
         # per-file lineage: row counts from parquet footers, no extra
@@ -113,12 +105,14 @@ class Table:
                  for f in pads.dataset(out, format="parquet").files]
         return rel, files
 
-    def _new_snapshot(self, data_dirs: list, round_no: int, op: str,
-                      files_delta: list, state: "dict | None" = None,
-                      files_reset: bool = False) -> int:
-        """Commit a snapshot. ``files_delta`` lists only the files THIS
-        commit adds (``files_reset`` starts the lineage over — overwrite /
-        compaction); the full list is replayed on read (``_files_at``).
+    def _new_snapshot(self, op: str, data_dir: "str | None" = None,
+                      files_delta: "list | None" = None,
+                      files_reset: bool = False,
+                      state: "dict | None" = None) -> int:
+        """Commit a snapshot. ``data_dir``/``files_delta`` are what THIS
+        commit adds; ``files_reset`` starts the data dirs and the lineage
+        over (overwrite / compaction), otherwise both extend the parent's.
+        The full file list is replayed on read (``_files_at``).
         A ``state`` payload's ``dom`` dict is externalized to one
         write-once JSON file per checkpoint and referenced as
         ``dom_ref`` — _meta.json is rewritten on every commit, so holding
@@ -128,6 +122,10 @@ class Table:
         meta = self._load_meta()
         last = meta["snapshots"][-1] if meta["snapshots"] else None
         sid = (last["id"] + 1) if last else 0
+        files_delta = files_delta or []
+        data = [] if files_reset or not last else list(last["data"])
+        if data_dir is not None:
+            data.append(data_dir)
         if files_reset:
             rows = sum(f["rows"] for f in files_delta) if files_delta else None
         else:
@@ -144,9 +142,8 @@ class Table:
         snap = {
             "id": sid,
             "parent": meta["current"],
-            "round": round_no,
             "op": op,
-            "data": data_dirs,
+            "data": data,
             "files_delta": files_delta,
             "files_reset": files_reset,
             "rows": rows,
@@ -166,45 +163,35 @@ class Table:
                 st["dom"] = json.load(f)["dom"]
         return st
 
-    def append(self, df, round_no: int = 0) -> "tuple[int, str]":
+    def append(self, df) -> "tuple[int, str]":
         """Commit an append snapshot; returns (snapshot_id, new data dir) so
         callers can cheaply re-read just the delta."""
-        meta = self._load_meta()
-        last = meta["snapshots"][-1] if meta["snapshots"] else None
-        prev_dirs = last["data"] if last else []
-        rel, files = self._write_data(df, round_no)
-        sid = self._new_snapshot(prev_dirs + [rel], round_no, "append",
-                                 files)
+        rel, files = self._write_data(df)
+        sid = self._new_snapshot("append", rel, files)
         return sid, os.path.join(self.path, rel)
 
-    def overwrite(self, df, round_no: int = 0) -> "tuple[int, str]":
-        rel, files = self._write_data(df, round_no)
-        sid = self._new_snapshot([rel], round_no, "overwrite", files,
-                                 files_reset=True)
+    def overwrite(self, df) -> "tuple[int, str]":
+        rel, files = self._write_data(df)
+        sid = self._new_snapshot("overwrite", rel, files, files_reset=True)
         return sid, os.path.join(self.path, rel)
 
-    def commit_state(self, round_no: int, state: dict) -> int:
+    def commit_state(self, state: dict) -> int:
         """Metadata-only snapshot (no data change) — used for driver-side
-        domain-state checkpoints. Inherits the parent's data/file lineage
+        round checkpoints. Inherits the parent's data/file lineage
         without copying it."""
-        meta = self._load_meta()
-        last = meta["snapshots"][-1] if meta["snapshots"] else None
-        return self._new_snapshot(last["data"] if last else [], round_no,
-                                  "state", [], state)
+        return self._new_snapshot("state", state=state)
 
     # -- reads --------------------------------------------------------
     def read(self, spark, snapshot_id: "int | None" = None):
         """DataFrame of the table at a snapshot (default: current).
         Returns None when the table has no data yet."""
-        snap = (self.snapshot(snapshot_id) if snapshot_id is not None
-                else self.current_snapshot())
+        snap = self.snapshot(snapshot_id)
         if not snap or not snap["data"]:
             return None
         return spark.read.parquet(
             *[os.path.join(self.path, d) for d in snap["data"]])
 
-    def compact(self, spark, round_no: int = 0,
-                target_files: "int | None" = None,
+    def compact(self, spark, target_files: "int | None" = None,
                 sort_cols: "list | None" = None) -> "int | None":
         """Iceberg ``rewrite_data_files`` equivalent: rewrite the current
         snapshot's accumulated delta files (one dir per append at the
@@ -217,7 +204,7 @@ class Table:
         output files (the Iceberg sort-order + rewrite recipe), so a
         filter on them skips row groups by their parquet footer stats.
         Returns the new snapshot id, or None for an empty table."""
-        cur = self.current_snapshot()
+        cur = self.snapshot()
         if not cur or not cur["data"]:
             return None
         df = spark.read.parquet(
@@ -227,29 +214,34 @@ class Table:
                   if sort_cols else df.repartition(target_files))
         if sort_cols:
             df = df.sortWithinPartitions(*sort_cols)
-        rel, files = self._write_data(df, round_no)
-        return self._new_snapshot([rel], round_no, "compact", files,
-                                  files_reset=True)
+        rel, files = self._write_data(df)
+        return self._new_snapshot("compact", rel, files, files_reset=True)
+
+    def _retain(self, meta: dict, snapshots: list):
+        """Commit ``snapshots`` as the whole history, then GC every data
+        dir none of them lists — including a dir whose write finished but
+        whose snapshot never committed."""
+        meta["snapshots"] = snapshots
+        self._commit(meta)
+        keep = {d for s in snapshots for d in s["data"]}
+        data_root = os.path.join(self.path, "data")
+        for d in os.listdir(data_root):
+            if f"data/{d}" not in keep:
+                shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
 
     def rollback(self, snapshot_id: "int | None"):
         """Iceberg ``rollback_to_snapshot`` equivalent: make snapshot_id the
         head again, drop newer snapshots, and GC their orphaned data dirs.
         ``None`` truncates the table to empty (rollback past the first
-        commit). Used by crash recovery to discard aborted-round deltas."""
+        commit). Crash recovery rolls each state table back to the head
+        the engine's round checkpoint names."""
         meta = self._load_meta()
         if snapshot_id is not None and not any(
                 s["id"] == snapshot_id for s in meta["snapshots"]):
             raise ValueError(f"unknown snapshot {snapshot_id}")
-        keep_snaps = ([] if snapshot_id is None else
-                      [s for s in meta["snapshots"] if s["id"] <= snapshot_id])
-        keep_dirs = {d for s in keep_snaps for d in s["data"]}
-        meta["snapshots"] = keep_snaps
         meta["current"] = snapshot_id
-        self._commit(meta)
-        data_root = os.path.join(self.path, "data")
-        for d in os.listdir(data_root):
-            if f"data/{d}" not in keep_dirs:
-                shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
+        self._retain(meta, [] if snapshot_id is None else
+                     [s for s in meta["snapshots"] if s["id"] <= snapshot_id])
 
     def expire_before(self, keep_snapshot_id: int):
         """GC data dirs unreachable from snapshots >= keep_snapshot_id
@@ -257,17 +249,10 @@ class Table:
         to the current snapshot so the table's head always survives expiry
         (an id past the head would otherwise silently empty the table)."""
         meta = self._load_meta()
-        if meta.get("current") is not None:
+        if meta["current"] is not None:
             keep_snapshot_id = min(keep_snapshot_id, meta["current"])
-        keep = {d for s in meta["snapshots"] if s["id"] >= keep_snapshot_id
-                for d in s["data"]}
-        meta["snapshots"] = [s for s in meta["snapshots"]
-                             if s["id"] >= keep_snapshot_id]
-        self._commit(meta)
-        data_root = os.path.join(self.path, "data")
-        for d in os.listdir(data_root):
-            if f"data/{d}" not in keep:
-                shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
+        self._retain(meta, [s for s in meta["snapshots"]
+                            if s["id"] >= keep_snapshot_id])
 
 
 class Catalog:

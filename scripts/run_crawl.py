@@ -59,11 +59,8 @@ def main():
         pages = pages_frame(spark, c)
         attrs, robots, seeds = c.hosts, c.robots, (args.seeds or c.seeds)
 
-    if args.resume:
-        eng = CrawlEngine.resume(spark, pages, robots, attrs, args.warehouse)
-    else:
-        eng = CrawlEngine(spark, pages, robots, attrs, args.warehouse,
-                          seeds=seeds)
+    build = CrawlEngine.resume if args.resume else CrawlEngine
+    eng = build(spark, pages, robots, attrs, args.warehouse, seeds=seeds)
     eng.run(max_rounds=eng.round_no + args.rounds)
     order = eng.crawl_order()
     summary = {

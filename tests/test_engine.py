@@ -3,13 +3,17 @@ simulator — the north_rule checks: identical crawl ordering, identical
 URL-seen set, byte-identical extracted text — plus checkpoint/resume."""
 
 import importlib.util
+import itertools
 import os
+import shutil
+import tempfile
 
 import pytest
 
 from disco_crawl_spark import corpus as corpus_mod, refsem, refsim
 from disco_crawl_spark.engine import CrawlEngine
 from disco_crawl_spark.sources import pages_frame
+from disco_crawl_spark.tables import Catalog, Table
 
 
 # small corpus keeps the e2e suite fast while covering dual/robots/govcms/
@@ -115,24 +119,6 @@ def test_round_phases_traceable_without_engine_code(engine):
     assert sum(tr.duration(s) for s in children) <= tr.duration(step)
 
 
-def test_engine_resume_equals_uninterrupted(spark, c, sim, tmp_warehouse):
-    # run 3 rounds, drop the engine, resume from the snapshot, finish;
-    # final state must equal the oracle's
-    eng = CrawlEngine(spark, pages_frame(spark, c), c.robots, c.hosts,
-                      tmp_warehouse, seeds=c.seeds)
-    for _ in range(3):
-        eng.step()
-    del eng
-    eng2 = CrawlEngine.resume(spark, pages_frame(spark, c), c.robots, c.hosts,
-                              tmp_warehouse)
-    assert eng2.round_no == 3
-    eng2.run()
-    assert eng2.crawl_order() == sim.order
-    sim_seen = {(g, k) for g, ks in sim.url_seen.items() for k in ks}
-    assert eng2.url_seen_set() == sim_seen
-    assert set(eng2.events) == set(sim.events)
-
-
 def test_engine_cap_resume_matches_oracle(spark, c, tmp_warehouse):
     # low per-domain cap exercises cap-exit + crawl-log resume on both sides
     cfg = refsim.SimConfig(max_pages=15)
@@ -145,67 +131,145 @@ def test_engine_cap_resume_matches_oracle(spark, c, tmp_warehouse):
     assert eng.url_seen_set() == sim_seen
 
 
-def test_engine_resume_after_midround_kill(spark, c, sim, tmp_warehouse):
-    # a kill AFTER a round's table appends but BEFORE its state checkpoint
-    # must not lose or double-count the aborted round: resume rolls the
-    # state tables back to the last op='state' snapshot and replays
-    eng = CrawlEngine(spark, pages_frame(spark, c), c.robots, c.hosts,
-                      tmp_warehouse, seeds=c.seeds)
+class Killed(Exception):
+    pass
+
+
+def _kill_at(monkeypatch, k, killed_ops):
+    """Make the k-th icelite snapshot commit from now on raise. The write
+    before it has landed (an append's or compaction's data dir is on
+    disk), its manifest entry has not."""
+    real, calls = Table._new_snapshot, itertools.count()
+
+    def dying(self, op, *a, **kw):
+        if next(calls) == k:
+            killed_ops.append(op)
+            raise Killed(f"killed at snapshot commit {k} ({op})")
+        return real(self, op, *a, **kw)
+
+    monkeypatch.setattr(Table, "_new_snapshot", dying)
+
+
+def _unreached_dirs(warehouse) -> list:
+    """Data dirs on disk that no snapshot in their table's manifest lists."""
+    cat, out = Catalog(warehouse), []
+    for name in os.listdir(warehouse):
+        t = cat.table(name)
+        listed = {d for s in t.history() for d in s["data"]}
+        out += [f"{name}/data/{d}"
+                for d in os.listdir(os.path.join(t.path, "data"))
+                if f"data/{d}" not in listed]
+    return out
+
+
+@pytest.fixture(scope="module")
+def killed_crawl(spark, c):
+    """One compact_every=2 crawl of the module corpus, killed once before
+    round 0's checkpoint and then at every snapshot commit of round 3 (a
+    compacting round: append, compaction or the checkpoint itself), resumed
+    after each kill, resumed once more from the clean round-4 checkpoint
+    and finished. Records what the three resume tests below check, so they
+    share one crawl instead of each re-crawling from scratch."""
+    warehouse = tempfile.mkdtemp(prefix="disco_wh_")
+    mp = pytest.MonkeyPatch()
+    rec = {"tables_before": {t.name for t in spark.catalog.listTables()},
+           "killed_ops": [], "resumed": []}
+    args = (spark, pages_frame(spark, c), c.robots, c.hosts, warehouse)
+    kw = dict(seeds=c.seeds, compact_every=2)
+
+    def step_killed_at(eng, k) -> bool:
+        """Run eng's round with its k-th commit killed; False if killed."""
+        _kill_at(mp, k, rec["killed_ops"])
+        try:
+            eng.step()
+            return True
+        except Killed:
+            return False
+        finally:
+            mp.undo()
+
+    def resume(dead):
+        dead.pages.unpersist()
+        eng = CrawlEngine.resume(*args, **kw)
+        rec["resumed"].append((eng.round_no, _unreached_dirs(warehouse)))
+        return eng
+
+    # a kill before round 0's checkpoint resumes to the seeded start
+    eng = CrawlEngine(*args, **kw)
+    rec["round0_completed"] = step_killed_at(eng, 0)
+    eng = resume(eng)
+    rec["round0_dom"] = set(eng.dom)
     for _ in range(3):
         eng.step()
+    # round 3: kill its k-th commit for k = 0, 1, ... until one completes
+    k = 0
+    while not step_killed_at(eng, k):
+        eng = resume(eng)
+        k += 1
+    rec["completed_round_no"] = eng.round_no
+    # the clean checkpoint names the compacted heads; resume must keep them
+    rec["heads"] = {t.name: t.snapshot() for t in (eng.t_frontier, eng.t_seen)}
+    eng = resume(eng)
+    rec["resumed_heads"] = {t.name: t.snapshot()
+                            for t in (eng.t_frontier, eng.t_seen)}
+    rec["seen_rows_read"] = eng.t_seen.read(spark).count()
+    eng.run()
+    rec["order"] = eng.crawl_order()
+    rec["seen"] = eng.url_seen_set()
+    rec["events"] = set(eng.events)
+    rec["tables_after"] = {t.name for t in spark.catalog.listTables()}
+    eng.pages.unpersist()
+    yield rec
+    shutil.rmtree(warehouse, ignore_errors=True)
 
-    def boom(*a, **k):
-        raise RuntimeError("killed mid-round")
 
-    eng.t_log.commit_state = boom  # the crash point: appends landed, no ckpt
-    with pytest.raises(RuntimeError):
-        eng.step()
-    del eng
-    eng2 = CrawlEngine.resume(spark, pages_frame(spark, c), c.robots, c.hosts,
-                              tmp_warehouse)
-    assert eng2.round_no == 3  # the aborted round 3 replays from scratch
-    eng2.run()
-    assert eng2.crawl_order() == sim.order
+def _assert_matches_oracle(rec, sim):
+    assert rec["order"] == sim.order
     sim_seen = {(g, k) for g, ks in sim.url_seen.items() for k in ks}
-    assert eng2.url_seen_set() == sim_seen
-    assert set(eng2.events) == set(sim.events)
+    assert rec["seen"] == sim_seen
+    assert rec["events"] == set(sim.events)
+
+
+def test_engine_resume_equals_uninterrupted(killed_crawl, sim):
+    # a resume from a clean checkpoint (after round 4) lands on the next
+    # round, and the finished crawl's state equals the oracle's
+    assert killed_crawl["completed_round_no"] == 4
+    assert killed_crawl["resumed"][-1] == (4, [])
+    _assert_matches_oracle(killed_crawl, sim)
+
+
+def test_engine_resume_after_midround_kill(killed_crawl, sim, c):
+    # a kill at ANY snapshot commit of a round, after some of its appends
+    # landed and before its checkpoint, must not lose or double-count the
+    # aborted round: resume rolls every table back to the heads the last
+    # checkpoint names, leaves no data dir its manifest does not reach, and
+    # the aborted round replays from scratch
+    rec = killed_crawl
+    assert not rec["round0_completed"]
+    assert rec["resumed"][0] == (0, [])
+    assert rec["round0_dom"] == set(c.seeds)
+    round3 = rec["resumed"][1:-1]
+    assert round3 and all(r == (3, []) for r in round3)
+    assert {"append", "compact", "state"} <= set(rec["killed_ops"][1:])
+    _assert_matches_oracle(rec, sim)
 
 
 def test_engine_compaction_preserves_resume_and_pruned_reads(
-        spark, c, sim, tmp_warehouse):
-    # the icelite maintenance pass (VERDICT r4 #4): natural-parallelism
-    # delta commits trade small files for scaling; compaction must
-    # (a) actually shrink the file count, (b) leave mid-crawl resume
-    # bit-identical to the oracle run, and (c) register nothing in the
-    # session catalog
-    tables_before = {t.name for t in spark.catalog.listTables()}
-    eng = CrawlEngine(spark, pages_frame(spark, c), c.robots, c.hosts,
-                      tmp_warehouse, seeds=c.seeds, compact_every=2)
-    for _ in range(4):      # compaction fires after rounds 2 and 4
-        eng.step()
-    snap = eng.t_frontier.current_snapshot()
-    assert snap["op"] == "compact"
-    n_files = len(snap["files"])
-    assert n_files <= max(2, spark.sparkContext.defaultParallelism // 2)
-    seen_head = eng.t_seen.current_snapshot()
-    del eng
-    # resume lands ON the compact snapshots (stamped with the finished
-    # round) and the finished crawl still matches the oracle exactly
-    eng2 = CrawlEngine.resume(spark, pages_frame(spark, c), c.robots, c.hosts,
-                              tmp_warehouse)
-    assert eng2.round_no == 4
-    assert eng2.t_frontier.current_snapshot()["op"] == "compact"
-    seen_after = eng2.t_seen.current_snapshot()
-    assert (seen_after["id"], seen_after["op"]) == \
-        (seen_head["id"], seen_head["op"])
-    assert seen_after["rows"] == eng2.t_seen.read(spark).count()
-    assert seen_after["files"]
-    eng2.run()
-    assert eng2.crawl_order() == sim.order
-    sim_seen = {(g, k) for g, ks in sim.url_seen.items() for k in ks}
-    assert eng2.url_seen_set() == sim_seen
-    assert set(eng2.events) == set(sim.events)
-    assert {t.name for t in spark.catalog.listTables()} <= tables_before
+        spark, killed_crawl, sim):
+    # the icelite maintenance pass: natural-parallelism delta commits trade
+    # small files for scaling; compaction must (a) actually shrink the file
+    # count, (b) survive resume, since the checkpoint names the compact
+    # heads, and (c) register nothing in the session catalog
+    rec = killed_crawl
+    heads = rec["heads"]
+    assert heads["frontier"]["op"] == "compact"
+    assert len(heads["frontier"]["files"]) <= max(
+        2, spark.sparkContext.defaultParallelism // 2)
+    assert rec["resumed_heads"] == heads
+    assert heads["url_seen"]["rows"] == rec["seen_rows_read"]
+    assert heads["url_seen"]["files"]
+    _assert_matches_oracle(rec, sim)
+    assert rec["tables_after"] <= rec["tables_before"]
 
 
 def test_dual_domain_computed_from_probes_not_flag(spark, tmp_warehouse):

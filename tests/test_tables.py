@@ -12,18 +12,19 @@ from disco_crawl_spark.tables import Catalog, Table
 def test_append_overwrite_timetravel(spark, tmp_warehouse):
     t = Catalog(tmp_warehouse).table("t1")
     assert t.read(spark) is None
-    sid0, _ = t.append(spark.range(5).selectExpr("id", "id*2 as v"), round_no=0)
-    sid1, _ = t.append(spark.range(5, 8).selectExpr("id", "id*2 as v"),
-                       round_no=1)
+    sid0, _ = t.append(spark.range(5).selectExpr("id", "id*2 as v"))
+    sid1, _ = t.append(spark.range(5, 8).selectExpr("id", "id*2 as v"))
     assert t.read(spark).count() == 8
     # time travel to the first snapshot
     assert t.read(spark, snapshot_id=sid0).count() == 5
-    sid2, _ = t.overwrite(spark.range(2).selectExpr("id", "id*2 as v"),
-                          round_no=2)
+    sid2, _ = t.overwrite(spark.range(2).selectExpr("id", "id*2 as v"))
     assert t.read(spark).count() == 2
     assert t.read(spark, snapshot_id=sid1).count() == 8  # history intact
     hist = t.history()
     assert [s["op"] for s in hist] == ["append", "append", "overwrite"]
+    assert t.snapshot()["id"] == sid2
+    # a snapshot records what was committed, not when: no round stamp
+    assert all("round" not in s for s in hist)
     # per-file lineage row counts recorded
     assert hist[0]["rows"] == 5 and hist[1]["rows"] == 8
     files = t.snapshot(sid1)["files"]
@@ -33,10 +34,10 @@ def test_append_overwrite_timetravel(spark, tmp_warehouse):
 
 def test_state_commit_and_gc(spark, tmp_warehouse):
     t = Catalog(tmp_warehouse).table("t2")
-    t.append(spark.range(3), round_no=0)
-    sid, _ = t.append(spark.range(3, 6), round_no=1)
-    st = t.commit_state(1, {"round": 1, "cursor": {"a": 2}})
-    snap = t.current_snapshot()
+    t.append(spark.range(3))
+    sid, _ = t.append(spark.range(3, 6))
+    st = t.commit_state({"cursor": {"a": 2}})
+    snap = t.snapshot()
     assert snap["op"] == "state" and snap["state"]["cursor"]["a"] == 2
     assert t.read(spark).count() == 6  # state commit keeps data
     # expire everything before the state snapshot: reads still work
@@ -45,9 +46,34 @@ def test_state_commit_and_gc(spark, tmp_warehouse):
     assert all(s["id"] >= st for s in t.history())
 
 
+def test_rollback_drops_newer_snapshots_and_orphan_dirs(spark,
+                                                        tmp_warehouse):
+    # crash recovery: rollback makes an older snapshot the head and GCs
+    # every data dir no kept snapshot lists, including one whose write
+    # finished but whose snapshot never committed
+    t = Catalog(tmp_warehouse).table("t4")
+    sid0, _ = t.append(spark.range(3))
+    t.append(spark.range(3, 5))
+    t._write_data(spark.range(5, 9))        # killed before its commit
+
+    def dirs():
+        return {f"data/{d}" for d in os.listdir(os.path.join(t.path, "data"))}
+
+    assert len(dirs()) == 3
+    t.rollback(sid0)
+    assert [s["id"] for s in t.history()] == [sid0]
+    assert dirs() == set(t.snapshot()["data"])
+    assert t.read(spark).count() == 3
+    with pytest.raises(ValueError):
+        t.rollback(sid0 + 1)
+    t.rollback(None)
+    assert t.history() == [] and t.snapshot() is None
+    assert dirs() == set() and t.read(spark) is None
+
+
 def test_atomic_manifest_swap(spark, tmp_warehouse):
     t = Catalog(tmp_warehouse).table("t3")
-    t.append(spark.range(4), round_no=0)
+    t.append(spark.range(4))
     # no temp manifests left behind
     leftovers = [f for f in os.listdir(t.path) if ".tmp." in f]
     assert leftovers == []
@@ -66,7 +92,7 @@ def test_append_footer_failure_commits_nothing(spark, tmp_warehouse,
                             "id as n")
                 .repartitionByRange(4, "host"))
 
-    t.append(hosts_df(0, 40), round_no=0)
+    t.append(hosts_df(0, 40))
     before = t.history()
     real = tables.papq.ParquetFile
     calls = []
@@ -79,7 +105,7 @@ def test_append_footer_failure_commits_nothing(spark, tmp_warehouse,
 
     monkeypatch.setattr(tables.papq, "ParquetFile", flaky)
     with pytest.raises(OSError, match="injected"):
-        t.append(hosts_df(40, 80), round_no=1)
+        t.append(hosts_df(40, 80))
     monkeypatch.undo()
     assert t.history() == before
     assert t.read(spark).count() == 40
@@ -95,12 +121,12 @@ def test_compact_rewrites_small_files(spark, tmp_warehouse):
               .selectExpr("concat('h', lpad(cast(id as string), 4, '0')) as host",
                           "id as n")
               .repartition(4))  # 4 files per append, like a wide writer
-        t.append(df, round_no=batch)
-    pre = t.current_snapshot()
+        t.append(df)
+    pre = t.snapshot()
     assert len(pre["files"]) == 16
     rows_pre = {(r["host"], r["n"]) for r in t.read(spark).collect()}
-    sid = t.compact(spark, round_no=4, target_files=2, sort_cols=["host"])
-    snap = t.current_snapshot()
+    sid = t.compact(spark, target_files=2, sort_cols=["host"])
+    snap = t.snapshot()
     assert snap["id"] == sid and snap["op"] == "compact"
     assert len(snap["files"]) == 2          # lineage reset to the rewrite
     assert snap["rows"] == 200
