@@ -47,11 +47,12 @@ engine-vs-oracle equivalence check.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from . import functions as cf, lifecycle, robots as robots_mod, udfs
+from . import functions as cf, lifecycle, refsem, robots as robots_mod, udfs
 from .refsim import SimConfig
 from .tables import Catalog
 
@@ -217,6 +218,18 @@ class CrawlEngine:
         return {"frontier": self.t_frontier, "url_seen": self.t_seen,
                 "crawl_log": self.t_log}[name]
 
+    def _frame(self, rows: list, schema: str) -> DataFrame:
+        """A driver-built frame in ONE slice. ``createDataFrame`` over a
+        list makes ``defaultParallelism`` slices and each costs a Python
+        pass: ``coalesce(1)`` runs those one after another and
+        ``repartition(1)`` adds a shuffle job. Writing 300 rows on a
+        4-core box at local[4] / local[8]: coalesce(1) 0.74-0.93 /
+        1.3-1.7 s, repartition(1) 0.44-0.59 / 0.55-0.88 s, one slice
+        0.29-0.39 / 0.25-0.36 s, one job and one file
+        (BENCH/CRAWL_BISECT.md)."""
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.parallelize(rows, 1), schema)
+
     def _append(self, name: str, delta: DataFrame):
         # Commit the delta to parquet (ONE Spark action), then use the
         # written files as the in-run view. Reading back the files both
@@ -291,11 +304,6 @@ class CrawlEngine:
         """Compact frontier and crawl_log (see ``_compact``)."""
         self._compact(["frontier", "crawl_log"])
 
-    def _drop_views(self):
-        # drop in-run views (the committed snapshots hold the same rows);
-        # later reads re-load from them
-        self._mem = {k: None for k in self._mem}
-
     # ------------------------------------------------------------------
     # generation preparation (worker.py:685-693): normalize + robots filter,
     # dense positions in raw order
@@ -341,33 +349,40 @@ class CrawlEngine:
                       gen=1, cursor=0, crawled=0, gen_size=0,
                       session=st["session"] + 1)
             started.append(host)
-        if started:
-            self._first_generation(started)
+        return self._first_generation(started)
 
-    def _first_generation(self, hosts: list):
-        """Commit the started hosts' first generation, as refsim's
+    def _first_generation(self, hosts: list) -> "DataFrame | None":
+        """Set the started hosts' first generation, as refsim's
         ``_start_domain``: kick links from the crawl log, else the root.
+
+        A fresh host's generation is its root alone, built on the driver
+        with the functions the UDFs wrap (robots filter, ``normalize_href``,
+        pos 0), as refsim's ``_prepare_generation``. These rows are
+        returned uncommitted: the round schedules from ``frontier ∪ rows``
+        and commits them in its one frontier append.
+
         A host crawled in an earlier session resumes from its log
-        (worker.py:244-280): url_seen is blacklist-seeded with every
-        previously fetched URL's key, and the kickstart is their internal
-        links minus fetched, sorted, capped. Kickstart links are NOT
-        seen-inserted (reference-faithful). A host with no kick links,
-        fresh or with every logged link already crawled (worker.py:678-679
-        'if not next_links'), starts from its root."""
-        # one slice: the frame is <= steward_batch rows, and a
-        # parallelized local relation pays ~0.15 s per SLICE on every
-        # downstream interaction in this environment (the repartition(1)
-        # end-of-run lesson) — 32 four-row slices made round 0's frontier
-        # prepare+commit a multi-second job
-        sess = self.spark.createDataFrame(
-            [(h, self.dom[h]["session"], self.dom[h]["scheme"])
-             for h in hosts],
-            "host string, session int, scheme string").repartition(1)
-        roots = sess
-        kick = None
-        resumed = [h for h in hosts if self.dom[h]["ever_crawled"]]
+        (worker.py:244-280) on the Spark path, committed here: url_seen is
+        blacklist-seeded with every previously fetched URL's key, and the
+        kickstart is their internal links minus fetched, sorted, capped.
+        Kickstart links are NOT seen-inserted (reference-faithful). A
+        resumed host with every logged link already crawled
+        (worker.py:678-679 'if not next_links') starts from its root; the
+        choice is made on the raw kick list, before the robots filter."""
+        fresh, resumed = [], []
+        for h in hosts:
+            d = self.dom[h]
+            root = f"{d['scheme']}://{h}/"
+            if d["ever_crawled"]:
+                resumed.append((h, d["session"], 1, 0, root))
+            elif self.robots.allow(h, root):
+                d["gen_size"] = 1
+                fresh.append((h, d["session"], 1, 0, refsem.normalize_href(root)))
         if resumed:
-            logs = self._view("crawl_log").filter(F.col("host").isin(resumed))
+            sess = self._frame(resumed, "host string, session int, gen int, "
+                               "ord int, link_raw string")
+            logs = self._view("crawl_log").filter(
+                F.col("host").isin([r[0] for r in resumed]))
             crawled = (logs.select("host", "url").distinct()
                        .withColumn("url_key", udfs.url_seen_key(F.col("url"))))
             sk = F.broadcast(sess.select("host", "session"))
@@ -387,24 +402,19 @@ class CrawlEngine:
                             "link_raw"))
             roots = sess.join(kick.select("host").distinct(), "host",
                               "left_anti")
-        raw = roots.select("host", "session", F.lit(1).alias("gen"),
-                           F.lit(0).alias("ord"),
-                           F.concat(F.col("scheme"), F.lit("://"),
-                                    F.col("host"), F.lit("/")).alias("link_raw"))
-        if kick is not None:
-            raw = kick.unionByName(raw)
-        delta = self._append("frontier", self._prepare(raw))
-        counts = {r["host"]: r["count"]
-                  for r in delta.groupBy("host").count().collect()}
-        for h in hosts:
-            self.dom[h]["gen_size"] = counts.get(h, 0)
+            delta = self._append("frontier",
+                                 self._prepare(kick.unionByName(roots)))
+            for r in delta.groupBy("host").count().collect():
+                self.dom[r["host"]]["gen_size"] = r["count"]
+        return self._frame(fresh, "host string, session int, gen int, "
+                           "pos int, link string") if fresh else None
 
     # ------------------------------------------------------------------
     # one crawl round
     # ------------------------------------------------------------------
     def step(self):
         rnd = self.round_no
-        self._start_domains()
+        fresh = self._start_domains()
 
         # -- schedule: per-host pos range [cursor, cursor+budget) ------
         bounds_rows = []
@@ -414,13 +424,17 @@ class CrawlEngine:
                 bounds_rows.append((h, d["session"], d["gen"], d["cursor"],
                                     min(d["cursor"] + d["budget"],
                                         d["gen_size"]), d["scheme"]))
-        results = None
-        schedule = None
+        results = stats_df = None
         if bounds_rows:
             bounds = self.spark.createDataFrame(
                 bounds_rows,
                 "host string, session int, gen int, lo int, hi int, scheme string")
+            # fresh hosts' driver-built roots join the committed frontier
+            # here and are committed in the round's one frontier append
             frontier = self._view("frontier")
+            if fresh is not None:
+                frontier = (fresh if frontier is None
+                            else frontier.unionByName(fresh))
             # generation pushdown: the frontier view unions every
             # generation's delta files, but a round only schedules from
             # the handful of generations active hosts sit in. The isin
@@ -514,8 +528,6 @@ class CrawlEngine:
                 F.sum(F.size("external_links")).alias("external_links"),
                 F.flatten(F.collect_set("discovered")).alias("discovered"),
             )
-        else:
-            stats_df = None
 
         # -- driver cursor/crawl accounting ----------------------------
         ended = []
@@ -532,23 +544,30 @@ class CrawlEngine:
                 ended.append(h)
 
         # -- generation end --------------------------------------------
-        capped = [h for h in ended if self.dom[h]["crawled"] >= self.cfg.max_pages]
-        build = [h for h in ended if h not in capped]
-        for h in capped:
-            self.dom[h]["state"] = "seen"  # cap exit: NOT finished
+        build = []
+        for h in ended:
+            d = self.dom[h]
+            if d["crawled"] >= self.cfg.max_pages:
+                d["state"] = "seen"  # cap exit: NOT finished
+            elif d["gen_size"]:
+                build.append(h)
+            else:
+                # an empty generation (e.g. a root robots disallows) logged
+                # no links, so the next one is empty too: finish it here
+                self._event(rnd, h, "finished")
+                self._finish_host(h)
         if build:
-            stats_rows = self._build_generations(build, schedule, stats_df)
-        elif stats_df is not None:
-            stats_rows = stats_df.collect()
+            stats_rows = self._build_generations(build, results, stats_df,
+                                                 fresh)
         else:
-            stats_rows = []
+            if fresh is not None:
+                self._append("frontier", fresh)
+            stats_rows = stats_df.collect() if stats_df is not None else []
 
         # -- per-host fetch/parse metrics + new-domain discovery -------
         discovered_all = set()
         for r in stats_rows:
-            sch = r["scheduled"] if "scheduled" in r else None
-            if sch is None:
-                continue
+            sch = r["scheduled"]
             self.metrics.append({
                 "round": rnd, "host": r["host"],
                 "scheduled": sch,
@@ -574,14 +593,17 @@ class CrawlEngine:
         self._ckpt_metrics = len(self.metrics)
         self.round_no += 1
 
-    def _build_generations(self, hosts: list, schedule: "DataFrame | None",
-                           stats_df: "DataFrame | None" = None):
+    def _build_generations(self, hosts: list, results: DataFrame,
+                           stats_df: DataFrame, fresh: "DataFrame | None"):
         """SURVEY.md §8.3 frontier-update rule, one distributed pass for all
-        generation-ending hosts. ``stats_df`` (the round's per-host
-        fetch/parse aggregation) rides along in the counts collect so the
-        whole round runs ONE driver action beyond its three table
-        commits; returns the collected rows for the caller's metrics
-        accounting."""
+        generation-ending hosts. The generation's last chunk is read from
+        ``results``, the round's crawl_log delta, which holds ``host, link``
+        for every scheduled row. The next generations and ``fresh`` (the
+        round's driver-built roots) land in the round's one frontier
+        append. ``stats_df`` (the round's per-host fetch/parse
+        aggregation) rides along in the counts collect so the whole round
+        runs ONE driver action beyond its table commits; returns the
+        collected rows for the caller's metrics accounting."""
         sess = self.spark.createDataFrame(
             [(h, self.dom[h]["session"], self.dom[h]["gen"],
               self.dom[h]["scheme"]) for h in hosts],
@@ -589,20 +611,14 @@ class CrawlEngine:
         # collected links are derived from the crawl log (the log stores
         # each page's raw internal links, exactly like the reference's ES
         # docs) — no separate table, no extra per-round write
-        log = self._view("crawl_log")
-        if log is None:
-            cand = self.spark.createDataFrame(
-                [], "host string, link string, scheme string")
-        else:
-            cand = (log.join(F.broadcast(sess), ["host", "session", "gen"])
-                    .select("host", F.explode("links").alias("link"), "scheme")
-                    .distinct())
+        cand = (self._view("crawl_log")
+                .join(F.broadcast(sess), ["host", "session", "gen"])
+                .select("host", F.explode("links").alias("link"), "scheme")
+                .distinct())
         # minus the generation's LAST chunk (this round's schedule)
-        if schedule is not None:
-            last_chunk = (schedule.filter(F.col("host").isin(hosts))
-                          .select("host", "link").distinct())
-            cand = cand.join(last_chunk, ["host", "link"], "left_anti")
-        cand = (cand
+        last_chunk = (results.filter(F.col("host").isin(hosts))
+                      .select("host", "link").distinct())
+        cand = (cand.join(last_chunk, ["host", "link"], "left_anti")
                 .withColumn("url_key", udfs.url_seen_key(F.col("link")))
                 .withColumn("host_group", cf.host_group(F.col("host"))))
         # anti-join against this session's seen keys
@@ -617,65 +633,69 @@ class CrawlEngine:
         wk = Window.partitionBy("host", "url_key").orderBy("link")
         cand = (cand.withColumn("rn", F.row_number().over(wk))
                 .filter(F.col("rn") == 1).drop("rn").persist())
-        # fill the shared cand cache ONCE at natural parallelism (one
-        # cheap parallel count over the round's delta). This (a) lets the
-        # two table commits below run CONCURRENTLY — the r4 experiment
-        # that measured concurrent commits slower raced both jobs into
-        # materializing this cache; with the cache pre-filled the race is
-        # gone — and (b) returns the exact candidate count that sizes the
-        # seen append's output files from DATA instead of inheriting the
-        # cached plan's partition count (32 near-empty files per round at
-        # bench widths; ~1.5 M keys ≈ 100 MB per file at any width, so
-        # wide rounds keep writing many files in parallel)
-        n_cand = cand.count()
-        # every survivor is seen-inserted, even ones the cap then drops
-        new_seen = (cand.join(F.broadcast(sess.select("host", "session")), "host")
-                    .select("host", "session", "host_group", "url_key")
-                    .coalesce(int(n_cand // 1_500_000) + 1))
-        nxt = cand.withColumn("link_raw", udfs.domainize(
-            F.col("host"), F.col("link"), F.col("scheme")))
-        if schedule is not None:
-            nxt = nxt.join(
-                last_chunk.select("host", F.col("link").alias("link_raw")),
-                ["host", "link_raw"], "left_anti")
         w = Window.partitionBy("host").orderBy("link")
-        nxt = (nxt.withColumn("ord", F.row_number().over(w))
+        nxt = (cand.withColumn("link_raw", udfs.domainize(
+                   F.col("host"), F.col("link"), F.col("scheme")))
+               .join(last_chunk.select("host", F.col("link").alias("link_raw")),
+                     ["host", "link_raw"], "left_anti")
+               .withColumn("ord", F.row_number().over(w))
                .filter(F.col("ord") <= self.cfg.max_pages)
                .join(F.broadcast(sess.select(
                    "host", "session", (F.col("gen") + 1).alias("gen"))),
                    ["host"])
-               .select("host", "session", "gen", "ord", "link_raw"))
-        nxt = nxt.persist()
-        # the two commits touch different tables and both read only the
-        # pre-filled cand cache; a mid-round kill discards BOTH tables'
-        # uncheckpointed deltas on resume (each table rolls back to the
-        # head the last round checkpoint names, engine.resume), so commit
-        # order between them is immaterial —
-        # overlap them so the frontier job's tail backfills the seen
-        # write's idle executors (guide §2.6 shape)
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_seen = pool.submit(self._append, "url_seen", new_seen)
-            f_front = pool.submit(
-                lambda: self._append("frontier", self._prepare(nxt)))
-            prepared_delta = f_front.result()
-            f_seen.result()
-        # ONE collect for everything the driver needs this round: raw
-        # next-gen size (finish decision — an all-robots-filtered gen
-        # still stays active one round, like the reference), prepared
-        # size (the schedule cursor bound), and — when the caller hands
-        # one in — the round's per-host fetch/parse stats
-        counts_df = (nxt.groupBy("host").agg(F.count(F.lit(1)).alias("raw_n"))
-                     .join(prepared_delta.groupBy("host")
-                           .agg(F.count(F.lit(1)).alias("prep_n")),
-                           "host", "full_outer"))
-        if stats_df is not None:
-            counts_df = stats_df.join(counts_df, "host", "full_outer")
-        stats = counts_df.collect()
+               .select("host", "session", "gen", "ord", "link_raw").persist())
+        front = self._prepare(nxt)
+        if fresh is not None:
+            front = front.unionByName(fresh)
+        # both caches are released however the round ends: a commit that
+        # raises must not leave them pinned in the session
+        try:
+            # fill the shared cand cache ONCE at natural parallelism (one
+            # cheap parallel count over the round's delta). This (a) lets
+            # the two table commits below run CONCURRENTLY — the r4
+            # experiment that measured concurrent commits slower raced both
+            # jobs into materializing this cache; with the cache pre-filled
+            # the race is gone — and (b) returns the exact candidate count
+            # that sizes the seen append's output files from DATA instead
+            # of inheriting the cached plan's partition count (32
+            # near-empty files per round at bench widths; ~1.5 M keys ≈
+            # 100 MB per file at any width, so wide rounds keep writing
+            # many files in parallel)
+            n_cand = cand.count()
+            # every survivor is seen-inserted, even ones the cap then drops
+            new_seen = (cand.join(F.broadcast(sess.select("host", "session")),
+                                  "host")
+                        .select("host", "session", "host_group", "url_key")
+                        .coalesce(int(n_cand // 1_500_000) + 1))
+            # the two commits touch different tables and both read only
+            # the pre-filled cand cache; a mid-round kill discards BOTH
+            # tables' uncheckpointed deltas on resume (each table rolls
+            # back to the head the last round checkpoint names,
+            # engine.resume), so commit order between them is immaterial —
+            # overlap them so the frontier job's tail backfills the seen
+            # write's idle executors (guide §2.6 shape)
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                f_seen = pool.submit(self._append, "url_seen", new_seen)
+                f_front = pool.submit(self._append, "frontier", front)
+                prepared_delta = f_front.result()
+                f_seen.result()
+            # ONE collect for everything the driver needs this round: raw
+            # next-gen size (finish decision — an all-robots-filtered gen
+            # still stays active one round, like the reference), prepared
+            # size (the schedule cursor bound; gen > 1 leaves out the
+            # fresh roots, which are every gen-1 row of this delta), and
+            # the round's per-host fetch/parse stats
+            stats = stats_df.join(
+                nxt.groupBy("host").agg(F.count(F.lit(1)).alias("raw_n"))
+                .join(prepared_delta.filter(F.col("gen") > 1)
+                      .groupBy("host").agg(F.count(F.lit(1)).alias("prep_n")),
+                      "host", "full_outer"),
+                "host", "full_outer").collect()
+        finally:
+            cand.unpersist()
+            nxt.unpersist()
         raw_counts = {r["host"]: (r["raw_n"] or 0) for r in stats}
         counts = {r["host"]: (r["prep_n"] or 0) for r in stats}
-        cand.unpersist()
-        nxt.unpersist()
         for h in hosts:
             d = self.dom[h]
             if raw_counts.get(h, 0) == 0:
@@ -726,7 +746,8 @@ class CrawlEngine:
         # persist the metrics + domain-event tables (queryable forms of the
         # per-round stats carried in the state snapshots; events mirror the
         # reference's domain-lifecycle ES index, worker.py:535-547)
-        # driver-built frames are small: always a single file each
+        # driver-built frames are small: one slice, so one file and one
+        # job each
         if self.metrics:
             # explicit schema + tuple rows: createDataFrame over a list of
             # dicts pays a full-list schema-inference pass on the driver
@@ -734,24 +755,18 @@ class CrawlEngine:
             # column order/types match what dict inference produced
             # (alphabetical keys, longs) so downstream readers see the
             # identical table schema
-            self.t_metrics.overwrite(
-                self.spark.createDataFrame(
-                    [(m["external_links"], m["fetched_200"],
-                      m["fetched_404"], m["host"], m["internal_links"],
-                      m["round"], m["scheduled"])
-                     for m in self.metrics],
-                    "external_links bigint, fetched_200 bigint, "
-                    "fetched_404 bigint, host string, "
-                    "internal_links bigint, round bigint, scheduled bigint")
-                .repartition(1))
+            self.t_metrics.overwrite(self._frame(
+                [(m["external_links"], m["fetched_200"], m["fetched_404"],
+                  m["host"], m["internal_links"], m["round"], m["scheduled"])
+                 for m in self.metrics],
+                "external_links bigint, fetched_200 bigint, "
+                "fetched_404 bigint, host string, "
+                "internal_links bigint, round bigint, scheduled bigint"))
         if self.events:
-            self.cat.table("domain_events").overwrite(
-                self.spark.createDataFrame(
-                    [(r, h, m) for r, h, m in self.events],
-                    "round int, host string, event string")
-                .repartition(1))
-        # drop cached deltas; later reads come from the committed snapshots
-        self._drop_views()
+            self.cat.table("domain_events").overwrite(self._frame(
+                self.events, "round int, host string, event string"))
+        # drop the in-run views; later reads load the committed snapshots
+        self._mem = {k: None for k in self._mem}
         return {"rounds": self.round_no,
                 "states": {h: d["state"] for h, d in self.dom.items()}}
 

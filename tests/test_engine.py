@@ -50,7 +50,21 @@ def engine(spark, c, tmp_warehouse):
 
 def test_engine_matches_oracle(engine, sim, c):
     assert engine.pages.rdd.getNumPartitions() == 7
+    # record the round of every frontier append and generation build
+    appends, builds = [], []
+    for obj, name, calls in ((engine.t_frontier, "append", appends),
+                             (engine, "_build_generations", builds)):
+        def counted(*a, _inner=getattr(obj, name), _calls=calls, **kw):
+            _calls.append(engine.round_no)
+            return _inner(*a, **kw)
+        setattr(obj, name, counted)
     engine.run()
+    # 0. fresh hosts' roots and next generations share one frontier
+    # append: exactly one per round in which any host started or built
+    started = {r for r, _, m in engine.events if m == "started"}
+    assert started and builds
+    for rnd in range(engine.round_no):
+        assert appends.count(rnd) == int(rnd in started or rnd in builds), rnd
     # 1. identical (round, host, seq, url) crawl ordering
     assert engine.crawl_order() == sim.order
     # 2. identical cumulative URL-seen key set
@@ -172,8 +186,10 @@ def killed_crawl(spark, c):
     share one crawl instead of each re-crawling from scratch."""
     warehouse = tempfile.mkdtemp(prefix="disco_wh_")
     mp = pytest.MonkeyPatch()
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keySet())
     rec = {"tables_before": {t.name for t in spark.catalog.listTables()},
-           "killed_ops": [], "resumed": []}
+           "killed_ops": [], "resumed": [], "cached_after_kill": []}
     args = (spark, pages_frame(spark, c), c.robots, c.hosts, warehouse)
     kw = dict(seeds=c.seeds, compact_every=2)
 
@@ -190,6 +206,9 @@ def killed_crawl(spark, c):
 
     def resume(dead):
         dead.pages.unpersist()
+        # whatever the dead engine left cached in the session
+        rec["cached_after_kill"].append(
+            set(jsc.getPersistentRDDs().keySet()) - cached_before)
         eng = CrawlEngine.resume(*args, **kw)
         rec["resumed"].append((eng.round_no, _unreached_dirs(warehouse)))
         return eng
@@ -251,6 +270,10 @@ def test_engine_resume_after_midround_kill(killed_crawl, sim, c):
     round3 = rec["resumed"][1:-1]
     assert round3 and all(r == (3, []) for r in round3)
     assert {"append", "compact", "state"} <= set(rec["killed_ops"][1:])
+    # a commit that raises inside the generation build leaves no cache
+    # pinned in the session
+    assert rec["cached_after_kill"]
+    assert all(not ids for ids in rec["cached_after_kill"])
     _assert_matches_oracle(rec, sim)
 
 
@@ -333,3 +356,26 @@ def test_engine_probes_match_refsem_root_probes(spark, tmp_warehouse):
               "params.gov.au"):
         assert expected[h]["root"], h
     assert not expected["fragq.gov.au"]["root"]
+
+
+def test_engine_disallowed_root_matches_oracle(spark, tmp_warehouse):
+    # a fresh host whose robots.txt disallows / gets a 0-row first
+    # generation (its root is robots-filtered on the driver) and finishes
+    # in its start round, as in refsim
+    c3 = corpus_mod.generate(n_agencies=2, n_govcms=1, n_state=1,
+                             n_sections=1, pages_per_section=2,
+                             hot_multiplier=1)
+    host = "agency01.gov.au"
+    assert host in c3.seeds and c3.hosts[host].n_sections
+    c3.robots[host] = "User-agent: *\nDisallow: /"
+    sim3 = refsim.Simulator(c3).run()
+    eng = CrawlEngine(spark, pages_frame(spark, c3), c3.robots, c3.hosts,
+                      tmp_warehouse, seeds=c3.seeds)
+    eng.run()
+    assert eng.crawl_order() == sim3.order
+    sim_seen = {(g, k) for g, ks in sim3.url_seen.items() for k in ks}
+    assert eng.url_seen_set() == sim_seen
+    assert set(eng.events) == set(sim3.events)
+    assert {(0, host, "started"), (0, host, "finished")} <= set(eng.events)
+    assert host not in {h for _, h, _, _ in eng.crawl_order()}
+    eng.pages.unpersist()
