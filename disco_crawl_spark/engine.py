@@ -21,9 +21,12 @@ Design (SURVEY.md §1.3/§3.1 'Spark rewrite'):
   bound each host's rows per round via the schedule's pos-range — the
   window-rank equivalent; govCMS-style groups are serialized by the
   steward's group lock.
-- **two shuffles per round** on the hot path: the fetch join (by url) and
-  the generation-build distinct/anti-join (by host,link). Everything else
-  is broadcast (bounds, robots) or narrow (parse UDF, explode).
+- **shuffles per round**, read from the plans (``plans.shuffle_count``;
+  DESIGN.md §3 names each): the fetch join exchanges the schedule by url
+  (the pages side is the url-partitioned cache, broadcast when small); a
+  warm round's generation build runs 10, 4 in the candidates checkpoint,
+  3 in the frontier delta and 3 in the counts collect. Everything else is
+  broadcast (bounds, robots) or narrow (parse UDF, explode).
 
 Scale notes (100 TB / 10^10-URL design; local runs verify correctness):
 - **pages** can be a url-bucketed catalog table (``pages_bucketed=True``
@@ -53,6 +56,7 @@ from functools import cached_property
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import functions as cf, lifecycle, refsem, robots as robots_mod, udfs
+from .operators.ckpt import CheckpointScope
 from .refsim import SimConfig
 from .tables import Catalog
 
@@ -632,48 +636,38 @@ class CrawlEngine:
         # marks keys sequentially in sorted order)
         wk = Window.partitionBy("host", "url_key").orderBy("link")
         cand = (cand.withColumn("rn", F.row_number().over(wk))
-                .filter(F.col("rn") == 1).drop("rn").persist())
+                .filter(F.col("rn") == 1).drop("rn"))
         w = Window.partitionBy("host").orderBy("link")
-        nxt = (cand.withColumn("link_raw", udfs.domainize(
-                   F.col("host"), F.col("link"), F.col("scheme")))
-               .join(last_chunk.select("host", F.col("link").alias("link_raw")),
-                     ["host", "link_raw"], "left_anti")
-               .withColumn("ord", F.row_number().over(w))
-               .filter(F.col("ord") <= self.cfg.max_pages)
-               .join(F.broadcast(sess.select(
-                   "host", "session", (F.col("gen") + 1).alias("gen"))),
-                   ["host"])
-               .select("host", "session", "gen", "ord", "link_raw").persist())
-        front = self._prepare(nxt)
-        if fresh is not None:
-            front = front.unionByName(fresh)
-        # both caches are released however the round ends: a commit that
-        # raises must not leave them pinned in the session
-        try:
-            # fill the shared cand cache ONCE at natural parallelism (one
-            # cheap parallel count over the round's delta). This (a) lets
-            # the two table commits below run CONCURRENTLY — the r4
-            # experiment that measured concurrent commits slower raced both
-            # jobs into materializing this cache; with the cache pre-filled
-            # the race is gone — and (b) returns the exact candidate count
-            # that sizes the seen append's output files from DATA instead
-            # of inheriting the cached plan's partition count (32
-            # near-empty files per round at bench widths; ~1.5 M keys ≈
-            # 100 MB per file at any width, so wide rounds keep writing
-            # many files in parallel)
-            n_cand = cand.count()
+        # the scope frees both cached frames however the round ends
+        with CheckpointScope(self.spark.sparkContext) as scope:
+            # eager: the candidates settle here, partitioned by AQE from
+            # the data, before either commit reads them
+            cand = scope.ckpt(cand)
+            nxt = scope.persist(
+                cand.withColumn("link_raw", udfs.domainize(
+                    F.col("host"), F.col("link"), F.col("scheme")))
+                .join(last_chunk.select("host",
+                                        F.col("link").alias("link_raw")),
+                      ["host", "link_raw"], "left_anti")
+                .withColumn("ord", F.row_number().over(w))
+                .filter(F.col("ord") <= self.cfg.max_pages)
+                .join(F.broadcast(sess.select(
+                    "host", "session", (F.col("gen") + 1).alias("gen"))),
+                    ["host"])
+                .select("host", "session", "gen", "ord", "link_raw"))
+            front = self._prepare(nxt)
+            if fresh is not None:
+                front = front.unionByName(fresh)
             # every survivor is seen-inserted, even ones the cap then drops
             new_seen = (cand.join(F.broadcast(sess.select("host", "session")),
                                   "host")
-                        .select("host", "session", "host_group", "url_key")
-                        .coalesce(int(n_cand // 1_500_000) + 1))
-            # the two commits touch different tables and both read only
-            # the pre-filled cand cache; a mid-round kill discards BOTH
-            # tables' uncheckpointed deltas on resume (each table rolls
-            # back to the head the last round checkpoint names,
-            # engine.resume), so commit order between them is immaterial —
-            # overlap them so the frontier job's tail backfills the seen
-            # write's idle executors (guide §2.6 shape)
+                        .select("host", "session", "host_group", "url_key"))
+            # the two commits touch different tables and read the settled
+            # checkpoint; a mid-round kill discards both tables'
+            # uncheckpointed deltas on resume (engine.resume), so their
+            # order is immaterial. Overlapped, the frontier job's tail
+            # backfills the seen write's idle executors: run one after the
+            # other they measured ~0.4 s slower per warm round (4 cores)
             with ThreadPoolExecutor(max_workers=2) as pool:
                 f_seen = pool.submit(self._append, "url_seen", new_seen)
                 f_front = pool.submit(self._append, "frontier", front)
@@ -691,9 +685,6 @@ class CrawlEngine:
                       .groupBy("host").agg(F.count(F.lit(1)).alias("prep_n")),
                       "host", "full_outer"),
                 "host", "full_outer").collect()
-        finally:
-            cand.unpersist()
-            nxt.unpersist()
         raw_counts = {r["host"]: (r["raw_n"] or 0) for r in stats}
         counts = {r["host"]: (r["prep_n"] or 0) for r in stats}
         for h in hosts:

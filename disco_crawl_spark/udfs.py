@@ -100,8 +100,7 @@ def goose_text(html: pd.Series) -> pd.Series:
 @pandas_udf(StringType())
 def url_seen_key(url: pd.Series) -> pd.Series:
     """md5 of the scheme/netloc-stripped URL (worker.py:120-128). Must stay
-    md5 (not xxhash) — it IS the reference's authoritative seen key; a Bloom
-    pre-pass may hash differently, the stored key may not."""
+    md5 (not xxhash): it IS the reference's authoritative seen key."""
     return url.map(refsem.url_seen_key)
 
 

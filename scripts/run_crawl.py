@@ -41,8 +41,6 @@ def main():
 
     spark = (SparkSession.builder.appName("disco-crawl")
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                     "false")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .getOrCreate())
 

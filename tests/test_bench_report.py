@@ -37,3 +37,17 @@ def test_scaling_report_keeps_best_run_and_full_history(tmp_path):
     rows = [json.loads(l) for l in
             open(os.path.join(bdir, "scaling_history.jsonl"))]
     assert len(rows) == 3
+
+
+def test_reported_queries_are_benched_and_keep_perfbench_sentinels():
+    # the emitted line reads every REPORTED query from the benched map, and
+    # carries perfbench's operator_queries sentinels whatever their rank
+    import ast
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench", "workloads.py")
+    (sentinels,) = [ast.literal_eval(node.value)
+                    for node in ast.parse(open(path).read()).body
+                    if isinstance(node, ast.Assign)
+                    and getattr(node.targets[0], "id", None) == "SENTINELS"]
+    assert set(bench.REPORTED) <= set(bench.HEADLINE)
+    assert set(sentinels) <= set(bench.REPORTED)

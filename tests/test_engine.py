@@ -109,7 +109,12 @@ def test_round_phases_traceable_without_engine_code(engine):
     for t in (engine.t_frontier, engine.t_seen, engine.t_log):
         tr.wrap(t, "append", f"append.{t.name}")
     tr.wrap(engine.t_log, "commit_state", "commit_state")
+    jsc = engine.spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keySet())
     engine.step()
+    # a clean round leaves no cache or checkpoint of its own pinned in the
+    # session: what stays is what was there before it (the pages cache)
+    assert set(jsc.getPersistentRDDs().keySet()) - cached_before == set()
 
     (step,) = tr.named("step")
     by_id = {s["id"]: s for s in tr.spans}
