@@ -10,15 +10,28 @@ registers, so an operator states only WHICH tables live how long:
 * ``scope.ckpt(df, replaces=prev)`` eagerly checkpoints ``df`` and frees
   the superseded generation ``prev`` (a frame or a tuple of frames), so a
   loop holds at most two generations of each table;
+* ``scope.ckpt(df, observe={name: agg})`` also returns the dict of those
+  aggregates over ``df``'s rows, computed by the checkpoint job itself;
 * ``scope.persist(df)`` pins a layout (an edge table every round joins);
 * ``scope.keep(df)`` leaves the blocks of a checkpoint that backs the
   operator's result live past the scope.
 
 Leaving the ``with`` block, by return or by raise, frees everything else,
 so no exit path can leak a table or free the one the caller reads.
+
+Observed metrics are the one way an operator reads a driver scalar (a
+count, a mass, a norm) off a table it just materialized: one fresh
+``pyspark.sql.Observation`` rides on ``df`` into the eager
+``localCheckpoint``, so the aggregate is computed in the checkpoint's own
+result stage, every task's update is applied exactly once, and
+``Observation.get`` returns at once because the action it waits on has
+already run. A separate ``agg().collect()`` or ``isEmpty()`` over the
+checkpoint would cost its own Spark jobs (two under AQE) for one number.
 """
 
 from __future__ import annotations
+
+from pyspark.sql import Observation
 
 
 class CheckpointScope:
@@ -45,16 +58,20 @@ class CheckpointScope:
             if jmap.containsKey(i):  # context GC may have collected it
                 jmap.get(i).unpersist()
 
-    def ckpt(self, df, replaces=None):
+    def ckpt(self, df, replaces=None, observe=None):
         """Eagerly localCheckpoint ``df``; then free ``replaces``. A
         replaced frame this scope did not checkpoint (a lazy round-0
-        projection) owns no blocks and frees nothing."""
+        projection) owns no blocks and frees nothing. With ``observe``
+        ({name: aggregate Column}) returns ``(frame, {name: value})``."""
+        if observe:
+            obs = Observation()
+            df = df.observe(obs, *(c.alias(k) for k, c in observe.items()))
         before = self._rdd_ids()
         out = df.localCheckpoint(eager=True)
         self._live[id(out)] = (out, self._rdd_ids() - before)
         for prev in replaces if isinstance(replaces, tuple) else (replaces,):
             self._free(self._live.pop(id(prev), (None, ()))[1])
-        return out
+        return (out, obs.get) if observe else out
 
     def persist(self, df):
         out = df.persist()

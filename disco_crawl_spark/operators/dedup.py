@@ -343,12 +343,13 @@ def connected_components(vertices: DataFrame, pairs: DataFrame,
     round's materialization: the old label rides through the aggregation
     (``max`` of the labels-branch rows — there is exactly one per vertex),
     so the checkpointed output already carries a per-row ``chg`` flag and
-    the convergence test is a take(1) over the materialized blocks, not a
-    second join+count job. A graph that somehow fails to converge within
-    ``max_iters`` (diameter > 2^max_iters) RAISES rather than returning
-    silently non-minimal components — dedup_keep marking two canonicals
-    in one cluster would corrupt a corpus. Deterministic: min over a set,
-    no RNG, no iteration-order dependence.
+    the convergence test is a count of it observed by the round's own
+    checkpoint job, not a second join+count job. A graph that somehow
+    fails to converge within ``max_iters`` (diameter > 2^max_iters)
+    RAISES rather than returning silently non-minimal components —
+    dedup_keep marking two canonicals in one cluster would corrupt a
+    corpus. Deterministic: min over a set, no RNG, no iteration-order
+    dependence.
 
     Pair endpoints are semi-joined to ``vertices`` up front (once, not
     per round): a pair id absent from the vertex set would otherwise leak
@@ -409,15 +410,15 @@ def connected_components(vertices: DataFrame, pairs: DataFrame,
             unioned = branches[0]
             for br in branches[1:]:
                 unioned = unioned.unionByName(br)
-            cur = scope.ckpt(
+            cur, m = scope.ckpt(
                 unioned
                 .groupBy("id").agg(F.min("comp").alias("comp"),
                                    F.max("old").alias("old"))
                 .select("id", "comp",
                         (F.col("comp") < F.col("old")).alias("chg")),
-                replaces=cur)
+                replaces=cur, observe={"chg": F.count_if("chg")})
             labels = cur.select("id", "comp")
-            if cur.filter("chg").isEmpty():
+            if not m["chg"]:
                 break
         else:
             raise RuntimeError(

@@ -17,14 +17,14 @@ Scale notes (the 100 TB reading):
   ``src`` and persisted ONCE so every round's rank-join co-locates against
   the same layout instead of re-shuffling the (much larger) edge side.
   Ranks are a narrow (node, rank) table — the only thing that moves per
-  round. Dangling mass is folded in via a broadcast of a 1-row aggregate,
-  never a driver collect.
-* Each round's ranks are ``localCheckpoint``-ed: the rank plan is
-  referenced three times per iteration (contributions, dangling mass,
-  the outer node join), so without lineage truncation the logical plan
-  grows ~3^k and planning itself becomes the bottleneck — the same
-  failure mode measured for connected_components (dedup.py). Superseded
-  checkpoints are freed by the operator's ``ckpt.CheckpointScope``.
+  round. The dangling mass is observed by the checkpoint that
+  materializes the ranks (``CheckpointScope.ckpt(observe=)``) and folded
+  into the next round as a literal: no aggregate job, no broadcast.
+* Rounds are ``localCheckpoint``-ed (every round on graphs with dangling
+  nodes, whose mass the driver reads; every ``_PAGERANK_CKPT_EVERY``
+  otherwise) so the logical plan stays flat — the failure mode measured
+  for connected_components (dedup.py). Superseded checkpoints are freed
+  by the operator's ``ckpt.CheckpointScope``.
 * ``anchor_text_agg`` is two map-side-combinable hash aggregations and
   nothing else — no window, no sort: the per-target winner is elected
   with ``max(struct(cnt, anchor))`` exactly like the passage-dedup winner
@@ -92,14 +92,14 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Round materialization policy (round-6 shape): the FINAL round is
     always eagerly localCheckpoint-ed (consumers read settled blocks and
-    a downstream ``count()`` measures real work). On dangling-free
-    graphs a round references the previous ranks exactly once, so up to
+    a downstream ``count()`` measures real work). A round references the
+    previous ranks exactly once, so on dangling-free graphs up to
     ``_PAGERANK_CKPT_EVERY`` intermediate rounds chain lazily as a
-    straight-line plan (linear work — verified with a noop sink); with
-    dangling nodes present the per-round 1-row dangling aggregate adds a
-    second reference, and lazily chained copies stop being stage-cache-
-    deduplicatable once column pruning de-canonicalizes them (O(2^k)
-    real work), so those graphs checkpoint every round.
+    straight-line plan (linear work — verified with a noop sink). With
+    dangling nodes present every round is checkpointed: its checkpoint
+    observes D_t, which the next round's blend reads as a literal. The
+    setup counts (N, |S|, and the dangling node and seed counts that
+    give D_0) are observed by the state checkpoint the same way.
     """
     with CheckpointScope(edges.sparkSession.sparkContext) as scope:
         # the deduped edge table feeds THREE derivations (node set,
@@ -126,8 +126,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         # operators AND three setup materializations the previous shape
         # paid for — the dangling anti-join against deg, the outer join
         # against nodes, and (for TrustRank) the pvec join — so a round is
-        # exactly: one edge join + one (dst) aggregation [+ one
-        # conditional 1-row aggregate] + one outer join back to the state.
+        # exactly: one edge join + one (dst) aggregation + one outer join
+        # back to the state.
         state = (nodes.join(deg, nodes["n"] == deg["src"], "left")
                  .select("n", F.col("outdeg").isNull().alias("dangling")))
         if personalization is not None:
@@ -141,20 +141,16 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                              .alias("seed")))
         else:
             state = state.select("n", "dangling", F.lit(False).alias("seed"))
-        flags = scope.ckpt(state)
-        # three bounded driver scalars (one row) over the materialized
-        # blocks — NOT a per-row collect. n_dangling == 0 lets every round
-        # skip the dangling aggregation + broadcast outright (dmass ≡ 0
-        # exactly): a data-dependent fast path that is exact at any scale,
-        # and real link graphs deduped on (src, dst) usually have few or
-        # no dangling nodes
-        counts = flags.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(F.col("dangling").cast("long")).alias("__d"),
-            F.sum(F.col("seed").cast("long")).alias("__s")).collect()[0]
-        n_nodes = counts["__n"]
-        n_dangling = counts["__d"] or 0
-        n_seeds = counts["__s"] or 0
+        # the state checkpoint observes the counts the run reads on the
+        # driver. n_dangling == 0 lets every round skip the dangling mass
+        # outright (D_t ≡ 0 exactly): a data-dependent fast path that is
+        # exact at any scale, and real link graphs deduped on (src, dst)
+        # usually have few or no dangling nodes
+        flags, c = scope.ckpt(state, observe={
+            "n": F.count(F.lit(1)), "d": F.count_if("dangling"),
+            "s": F.count_if("seed"),
+            "ds": F.count_if(F.col("dangling") & F.col("seed"))})
+        n_nodes, n_seeds = c["n"], c["s"]
         if personalization is not None and n_seeds == 0:
             raise ValueError("pagerank personalization: no seed node is "
                              "present in the graph")
@@ -165,26 +161,29 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
             (F.when(F.col("seed"), F.lit(1.0 / n_seeds))
              .otherwise(F.lit(0.0))
              if personalization is not None else F.lit(0.0)).alias("p"))
-        # ranks carries the dangling flag so the per-round 1-row dangling
-        # aggregate scans the rank table alone (no join back to state)
+        # ranks carries the dangling flag so each round's checkpoint can
+        # observe the next round's dangling mass
         ranks = state.select(
             "n", "dangling",
             (F.col("p") if personalization is not None
              else F.lit(1.0 / n_nodes)).alias("r"))
+        # D_0 = the r0 mass on dangling nodes: c["d"] addends of 1/N, or
+        # (TrustRank) c["ds"] addends of 1/|S| — only seeds hold r0 mass
+        dmass = (c["ds"] * (1.0 / n_seeds) if personalization is not None
+                 else c["d"] * (1.0 / n_nodes))
         # Round chaining: the final round is ALWAYS eagerly
         # localCheckpoint-ed (materializing every column — so a downstream
         # count() measures the real computation and consumers read settled
-        # blocks). Intermediate rounds are chained lazily only on
-        # dangling-free graphs, where each round references the previous
-        # ranks exactly ONCE (the contrib join) — the chained segment is a
-        # straight-line plan whose materialization executes every exchange
-        # once (linear work, verified with a noop sink), it just pays one
-        # job-dispatch sequence instead of one per round. With dangling
-        # nodes present the per-round 1-row dangling aggregate adds a
-        # second reference to ranks (2^k duplicated subtrees per k-round
-        # segment once column pruning de-canonicalizes the copies), so
-        # those graphs keep the eager per-round checkpoint.
-        every = 1 if n_dangling > 0 else _PAGERANK_CKPT_EVERY
+        # blocks). A round references the previous ranks exactly ONCE (the
+        # contrib join), so on dangling-free graphs intermediate rounds
+        # chain lazily — the chained segment is a straight-line plan whose
+        # materialization executes every exchange once (linear work,
+        # verified with a noop sink), it just pays one job-dispatch
+        # sequence instead of one per round. With dangling nodes present
+        # the next round needs D_t on the driver, so every round is
+        # checkpointed and its checkpoint observes that mass; it enters
+        # the blend as a literal (the HITS norm idiom).
+        every = 1 if c["d"] else _PAGERANK_CKPT_EVERY
         last = None
         for t in range(1, iters + 1):
             r_src = ranks.select(F.col("n").alias("src"), "r")
@@ -193,33 +192,19 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                        .agg(F.sum(F.col("r") / F.col("outdeg"))
                             .alias("contrib")))
             joined = state.join(contrib, state["n"] == contrib["dst"], "left")
-            if n_dangling > 0:
-                # dangling mass: conditional 1-row aggregate over the rank
-                # table (same addend set as the former deg anti-join —
-                # summation order is already nondeterministic across
-                # partitions, which the 6dp round-trip tolerates by
-                # construction)
-                dangling = ranks.agg(
-                    F.coalesce(F.sum(F.when(F.col("dangling"), F.col("r"))),
-                               F.lit(0.0)).alias("dmass"))
-                joined = joined.crossJoin(F.broadcast(dangling))
-                dmass = F.col("dmass")
-            else:
-                dmass = F.lit(0.0)
+            recv = F.coalesce(F.col("contrib"), F.lit(0.0))
             if personalization is None:
-                ranks = joined.select(
-                    "n", "dangling",
-                    (F.lit(base) + F.lit(damping)
-                     * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + dmass / F.lit(float(n_nodes)))).alias("r"))
+                r = F.lit(base) + F.lit(damping) * (
+                    recv + F.lit(dmass) / F.lit(float(n_nodes)))
             else:
-                ranks = joined.select(
-                    "n", "dangling",
-                    (F.lit(1.0 - damping) * F.col("p") + F.lit(damping)
-                     * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + dmass * F.col("p"))).alias("r"))
+                r = (F.lit(1.0 - damping) * F.col("p") + F.lit(damping)
+                     * (recv + F.lit(dmass) * F.col("p")))
+            ranks = joined.select("n", "dangling", r.alias("r"))
             if t % every == 0 or t == iters:
-                ranks = last = scope.ckpt(ranks, replaces=last)
+                ranks, m = scope.ckpt(ranks, replaces=last, observe={
+                    "dmass": F.sum(F.when(F.col("dangling"), F.col("r")))})
+                last = ranks
+                dmass = m["dmass"] or 0.0
         # iters=0 returns r0, a projection over the state blocks
         scope.keep(ranks if iters else flags)
         return ranks.select(F.col("n").alias("node"),
@@ -268,12 +253,12 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     authority→hub pull), the standard space-for-shuffle trade; only the
     narrow, SPARSE (node, score) tables move per round (zero rows carry
     no L1 mass and no join contribution — zeros are re-attached once at
-    the end). Each half-step checkpoints its RAW sums; the L1 norm is one
-    bounded driver scalar collected over the materialized blocks and
-    folded back as a literal (bit-identical IEEE division, no broadcast
-    exchange, and the norm never re-runs the edge join — the simhash
-    lesson applied to a 1-row aggregate). Superseded blocks are released
-    by the operator's ``CheckpointScope``."""
+    the end). Each half-step checkpoints its RAW sums and observes their
+    L1 norm in that same job (``CheckpointScope.ckpt(observe=)``); the
+    norm is folded back as a literal (bit-identical IEEE division, no
+    aggregate or broadcast job, and the norm never re-runs the edge
+    join). Superseded blocks are released by the operator's
+    ``CheckpointScope``."""
     if iters < 1:
         raise ValueError("hits() needs iters >= 1 (scores are only "
                          "L1-normalized after a full round)")
@@ -293,18 +278,16 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         by_dst = scope.persist(e.repartition("dst")
                                .sortWithinPartitions("dst"))
 
-        def _l1_over_ckpt(ckpted, key, col):
-            # ckpted is a materialized (localCheckpointed) raw-score
-            # table: the 1-row L1 norm is collected as a bounded driver
-            # scalar over its blocks (one double — the pagerank n_nodes
-            # idiom) and folded back as a literal; a Python float IS an
-            # IEEE-754 double, so the division is bit-identical to the
-            # former broadcast-column form while skipping one
-            # broadcast-exchange job per half-step
-            norm = ckpted.agg(F.sum(col)).collect()[0][0]
-            return ckpted.select(F.col(key).alias("n"),
-                                 F.round(F.col(col) / F.lit(norm),
-                                         round_dp).alias(col))
+        def _l1_over_ckpt(df, key, col, prev):
+            # checkpoint the raw scores, observing their L1 norm in the
+            # same job; the norm is folded back as a literal — a Python
+            # float IS an IEEE-754 double, so the division is
+            # bit-identical to a broadcast-column form
+            raw, m = scope.ckpt(df, replaces=prev,
+                                observe={"norm": F.sum(col)})
+            return raw, raw.select(F.col(key).alias("n"),
+                                   F.round(F.col(col) / F.lit(m["norm"]),
+                                           round_dp).alias(col))
 
         # Internal states are SPARSE: a score table only carries nodes
         # whose raw sum has a contributing edge — a dense zero row neither
@@ -314,26 +297,22 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         # left join at the END that re-attaches 0.0 for never-scored
         # nodes. A half-step checkpoint is now exactly: edge join +
         # (dst|src) aggregation — the eager per-half-step cadence stays,
-        # because the L1 norm aggregate references the raw scores a second
-        # time (a lazily chained segment would re-execute each half-step's
-        # join once per reference after column pruning de-canonicalizes
-        # the copies).
+        # because the next half-step needs the observed L1 norm on the
+        # driver.
         # h0 over out-edge sources only (other nodes' hub 1.0 feeds no push).
         h = by_src.select(F.col("src").alias("n")).distinct() \
             .select("n", F.lit(1.0).alias("hub"))
         raw_a = raw_h = None
         for _ in range(iters):
-            raw_a = scope.ckpt(
+            raw_a, a = _l1_over_ckpt(
                 by_src.join(h.select(F.col("n").alias("src"), "hub"), "src")
                 .groupBy("dst").agg(F.sum("hub").alias("authority")),
-                replaces=raw_a)
-            a = _l1_over_ckpt(raw_a, "dst", "authority")
-            raw_h = scope.ckpt(
+                "dst", "authority", raw_a)
+            raw_h, h = _l1_over_ckpt(
                 by_dst.join(a.select(F.col("n").alias("dst"), "authority"),
                             "dst")
                 .groupBy("src").agg(F.sum("authority").alias("hub")),
-                replaces=raw_h)
-            h = _l1_over_ckpt(raw_h, "src", "hub")
+                "src", "hub", raw_h)
         # materialize the full output once (every column — a downstream
         # count() then measures the real computation, and the zero-attach
         # left joins cannot be pruned away)
@@ -377,9 +356,9 @@ def bfs_depth(edges: DataFrame, seeds: DataFrame, src: str = "src",
     Each round is one join + distinct + anti-join — all hash-partitioned
     on the node id; total work is O(edges within the reached subgraph),
     the textbook frontier BFS bound, in O(diameter) synchronized rounds.
-    The emptiness test reads the round's already-materialized frontier
-    blocks (no second job over lineage); the output is consolidated into
-    ONE checkpoint at the end and the per-round blocks are released."""
+    The emptiness test is a row count the round's frontier checkpoint
+    observes (no job of its own); the output is consolidated into ONE
+    checkpoint at the end and the per-round blocks are released."""
     if seed_col is None:
         seed_col = seeds.columns[0]
     with CheckpointScope(edges.sparkSession.sparkContext) as scope:
@@ -414,13 +393,14 @@ def _expand_frontiers(scope, e, frontier, carry, level, max_iters, name):
         settled = frontiers[0]
         for f in frontiers[1:]:
             settled = settled.unionByName(f)
-        frontier = scope.ckpt(
+        frontier, m = scope.ckpt(
             e.join(frontiers[-1].select(F.col("node").alias("src"), *carry),
                    "src")
             .select(F.col("dst").alias("node"), *carry).distinct()
             .join(settled.select(*keys), keys, "left_anti")
-            .withColumn(level, F.lit(t).cast("long")))
-        if frontier.isEmpty():
+            .withColumn(level, F.lit(t).cast("long")),
+            observe={"rows": F.count(F.lit(1))})
+        if not m["rows"]:
             return settled
         frontiers.append(frontier)
     raise RuntimeError(
@@ -662,10 +642,10 @@ def opic(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Scale shape mirrors ``pagerank``: the edge table pays ONE
     src-partitioned shuffle for the whole run, each round is one
-    co-partitioned join + one dst-keyed aggregation, the dangling mass
-    is a broadcast 1-row scalar, and per-round states are
-    localCheckpoint-ed with superseded blocks released — O(iters) flat
-    plans, no driver-side per-node state.
+    co-partitioned join + one dst-keyed aggregation, the dangling cash
+    is observed by each round's state checkpoint and enters the next
+    round as a literal, and superseded states are released — O(iters)
+    flat plans, no driver-side per-node state.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if dedup_edges:
@@ -678,32 +658,34 @@ def opic(edges: DataFrame, src: str = "src", dst: str = "dst",
         contrib_edges = scope.persist(e.join(deg, "src")
                                       .repartition("src")
                                       .sortWithinPartitions("src"))
-        nodes = scope.ckpt(nodes)
-        deg = scope.ckpt(deg)
-        n_nodes = nodes.count()  # bounded driver scalar, like pagerank's
-
+        # the node table carries the dangling flag (the pagerank state
+        # shape), and its checkpoint observes the two counts the driver
+        # reads
+        nodes, c = scope.ckpt(
+            nodes.join(deg, nodes["n"] == deg["src"], "left")
+            .select("n", F.col("outdeg").isNull().alias("dangling")),
+            observe={"n": F.count(F.lit(1)), "d": F.count_if("dangling")})
+        n_nodes = max(c["n"], 1)  # an empty graph divides no row
+        dcash = int(cash0) * c["d"]  # round 0: every node holds cash0
         state = nodes.select(
-            "n", F.lit(int(cash0)).cast("long").alias("cash"),
+            "n", "dangling", F.lit(int(cash0)).cast("long").alias("cash"),
             F.lit(0).cast("long").alias("hist"))
         for _ in range(iters):
             c_src = state.select(F.col("n").alias("src"), "cash")
             recv = (contrib_edges.join(c_src, "src")
                     .groupBy("dst")
                     .agg(F.sum(F.expr("cash div outdeg")).alias("recv")))
-            dangling = (state.join(deg, state["n"] == deg["src"],
-                                   "left_anti")
-                        .agg(F.coalesce(F.sum("cash"), F.lit(0))
-                             .cast("long").alias("dcash")))
             new_state = (state.join(recv, state["n"] == recv["dst"], "left")
-                         .crossJoin(F.broadcast(dangling))
                          .select(
-                             state["n"],
+                             state["n"], "dangling",
                              (F.coalesce(F.col("recv"), F.lit(0))
-                              + F.expr(f"dcash div {n_nodes}"))
+                              + F.lit(dcash // n_nodes))
                              .cast("long").alias("cash"),
                              (F.col("hist") + F.col("cash")).cast("long")
                              .alias("hist")))
-            state = scope.ckpt(new_state, replaces=state)
+            state, m = scope.ckpt(new_state, replaces=state, observe={
+                "dcash": F.sum(F.when(F.col("dangling"), F.col("cash")))})
+            dcash = m["dcash"] or 0
         # iters=0 returns the round-0 state, a projection over the nodes
         scope.keep(state if iters else nodes)
     return state.select(F.col("n").alias("node"), "cash", "hist",

@@ -3,6 +3,7 @@ each verified against an independent pure-Python recomputation (and, where
 used by __spark_entry__, against DuckDB in test_queries.py)."""
 
 import hashlib
+import uuid
 
 import numpy as np
 import pytest
@@ -354,6 +355,19 @@ def test_connected_components_ignores_foreign_pair_endpoints(spark):
     assert out == {3: 3, 4: 3, 5: 5, 6: 6, 7: 7}
 
 
+def test_connected_components_converges_in_round_one(spark):
+    # pairs that join nothing (a self-pair, a foreign endpoint) change no
+    # label in round one, so its observed change count ends the loop
+    # there: max_iters=1 must not raise, and every vertex is its own
+    # component
+    docs = spark.createDataFrame([(i, "x") for i in range(4)],
+                                 "doc_id long, text string")
+    pairs = spark.createDataFrame([(2, 2), (1, 99)], "a long, b long")
+    out = dedup.connected_components(docs, pairs, "doc_id", max_iters=1)
+    assert {r["id"]: r["comp"] for r in out.collect()} == {
+        0: 0, 1: 1, 2: 2, 3: 3}
+
+
 def _edges(spark, rows):
     return spark.createDataFrame(rows, "src int, dst int")
 
@@ -461,6 +475,42 @@ def test_iterative_operator_block_lifetime(spark, case):
     assert len(live) <= blocks, f"{case} leaked blocks: {live}"
     if raises is None:
         assert out.collect()
+
+
+def _jobs(spark, run):
+    """Spark jobs ``run()`` submits: its own job group's ids in the
+    driver's statusTracker, read once the listener bus has drained."""
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4()}"
+    sc.setJobGroup(gid, gid)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_iterative_operator_jobs_per_iteration(spark):
+    # a loop's driver scalars (dangling mass, L1 norm, frontier size) are
+    # observed by the checkpoint that materializes the round, so an extra
+    # iteration adds only that round's own jobs: no aggregate, collect,
+    # broadcast or isEmpty job of its own. AQE runs each shuffle stage as
+    # its own Spark job, so a pin counts shuffle stages plus the
+    # checkpoint's result stage, not driver actions.
+    from disco_crawl_spark.operators import graph
+    edf = _edges(spark, _HUB_EDGES)   # node 3 has no out-edge
+    tr = {k: _jobs(spark, lambda: graph.pagerank(
+        edf, iters=k, personalization=_seeds(spark, [0, 3])))
+        for k in (2, 3)}
+    assert tr[3] - tr[2] == 5, tr      # + aggregate and broadcast: 7
+    hits = {k: _jobs(spark, lambda: graph.hits(edf, iters=k))
+            for k in (2, 3)}
+    assert hits[3] - hits[2] == 6, hits  # + a collect per half-step: 10
+    bfs = {n: _jobs(spark, lambda: graph.bfs_depth(
+        _edges(spark, [(i, i + 1) for i in range(n)]), _seeds(spark, [0])))
+        for n in (3, 4)}
+    assert bfs[4] - bfs[3] == 5, bfs   # + an isEmpty per level: 6
 
 
 def test_lsh_batch_query_prunes_and_matches_per_query_path(spark, tmp_path):
@@ -1332,18 +1382,20 @@ def test_trustrank_matches_numpy_and_uniform_path_unchanged(spark):
     from disco_crawl_spark.operators import graph
     edges = [(0, 1), (0, 2), (0, 3), (1, 2), (2, 1), (2, 3), (4, 0)]
     edf = spark.createDataFrame(edges, "src int, dst int")
-    seeds = spark.createDataFrame([(0,), (4,), (99,)], "n int")  # 99 absent
-    # independent numpy recomputation: teleport uniform over seeds {0, 4}
     nodes = sorted({n for e in edges for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
     out = {}
     for s, t in edges:
         out.setdefault(s, []).append(t)
     d = 0.85
-    p = np.zeros(len(nodes))
-    for sd in (0, 4):
-        p[idx[sd]] = 1.0 / 2
-    for iters in (5, 0):  # iters=0 is r0 = p
+    # independent numpy recomputation: teleport uniform over the seeds
+    # present in the graph (99 is absent); seed 3 is dangling, so D_0 > 0
+    for seed_ids, iters in [((0, 4), 5), ((0, 4), 0), ((0, 3), 5)]:
+        seeds = spark.createDataFrame([(i,) for i in (*seed_ids, 99)],
+                                      "n int")
+        p = np.zeros(len(nodes))
+        for sd in seed_ids:
+            p[idx[sd]] = 1.0 / 2
         got = {r["node"]: r["pagerank"]
                for r in graph.pagerank(edf, iters=iters,
                                        personalization=seeds).collect()}
