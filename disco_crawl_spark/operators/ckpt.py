@@ -4,7 +4,10 @@ an operator call pins.
 ``localCheckpoint(eager=True)`` truncates lineage (an iterative plan that
 references the previous round more than once otherwise grows
 exponentially) but registers blocks that ``DataFrame.unpersist`` does not
-free. A ``CheckpointScope`` records the persistent-RDD ids each checkpoint
+free. Its scan carries no partitioning (``UnknownPartitioning(0)`` under
+AQE), so a key join against a checkpoint shuffles it again; a persisted
+``repartition`` layout does keep its hash partitioning. A
+``CheckpointScope`` records the persistent-RDD ids each checkpoint
 registers, so an operator states only WHICH tables live how long:
 
 * ``scope.ckpt(df, replaces=prev)`` eagerly checkpoints ``df`` and frees

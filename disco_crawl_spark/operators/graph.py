@@ -11,15 +11,22 @@ can join it into the priority expression.
 
 Scale notes (the 100 TB reading):
 
-* ``pagerank`` is the standard synchronous power iteration expressed as
-  DataFrame joins: each round is ONE shuffle on ``src`` (contributions)
-  plus one hash aggregation on ``dst``; the edge table is repartitioned by
-  ``src`` and persisted ONCE so every round's rank-join co-locates against
-  the same layout instead of re-shuffling the (much larger) edge side.
-  Ranks are a narrow (node, rank) table — the only thing that moves per
-  round. The dangling mass is observed by the checkpoint that
-  materializes the ranks (``CheckpointScope.ckpt(observe=)``) and folded
-  into the next round as a literal: no aggregate job, no broadcast.
+* ``pagerank`` is the standard synchronous power iteration with ONE
+  exchange per round: the edge join's message rows (dst, r/outdeg) and
+  the fixed state rows (n, dangling, p) meet in one ``groupBy`` on the
+  node id (the ``connected_components`` round shape), with no key join
+  back to the state. Such a join is never exchange-free: under AQE a
+  ``localCheckpoint`` reports ``UnknownPartitioning(0)``, so the join
+  would re-shuffle the state every round, and AQE would re-plan it as a
+  broadcast that runs as one more job. The edge table is joined with
+  outdeg, repartitioned by ``src`` and persisted ONCE; that persisted
+  layout does keep its hash partitioning, so only the narrow ranks move
+  to meet it, and at small sizes (the benchmark's 200-node graph) the
+  planner broadcasts the layout once per round instead. ``opic`` and
+  the BFS frontier expansion share the round shape. The dangling mass
+  is observed by the checkpoint that materializes the ranks
+  (``CheckpointScope.ckpt(observe=)``) and folded into the next round
+  as a literal: no aggregate job, no broadcast.
 * Rounds are ``localCheckpoint``-ed (every round on graphs with dangling
   nodes, whose mass the driver reads; every ``_PAGERANK_CKPT_EVERY``
   otherwise) so the logical plan stays flat — the failure mode measured
@@ -82,8 +89,10 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Seeds absent from the node set are ignored (they can neither receive
     nor forward mass); an empty effective seed set raises. p rides in the
-    one checkpointed state table (n, dangling, p) every round's blend
-    joins — never a driver-side structure.
+    one checkpointed state table (n, dangling, p) whose rows every round
+    groups with its messages — never a driver-side structure. A NULL
+    endpoint is one dangling node that receives no link mass and is never
+    a seed (``_node_table``).
 
     Multi-edges are collapsed first when ``dedup_edges`` (a crawl link
     graph counts a link once per (src, dst) page pair); self-loops are
@@ -102,54 +111,21 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     give D_0) are observed by the state checkpoint the same way.
     """
     with CheckpointScope(edges.sparkSession.sparkContext) as scope:
-        # the deduped edge table feeds THREE derivations (node set,
-        # outdeg, the per-round join layout) — materialize it once so
-        # none of them re-runs the upstream lineage
+        # the deduped edge table feeds two derivations (the node table and
+        # the per-round edge layout) — materialize it once so neither
+        # re-runs the upstream lineage
         e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
         if dedup_edges:
             e = e.distinct()
-        e = scope.ckpt(e)
-        nodes = (e.select(F.col("src").alias("n"))
-                 .union(e.select(F.col("dst").alias("n")))
-                 .distinct())
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double")
-                                   .alias("outdeg"))
-        # one edge-side shuffle for the whole run: pre-joined with outdeg,
-        # laid out by src so every round's rank join is exchange-free on
-        # the (big) edge side
-        contrib_edges = scope.persist(e.join(deg, "src")
-                                      .repartition("src")
-                                      .sortWithinPartitions("src"))
         # ONE state table carries everything a round needs beside the
-        # edges: (n, dangling, p). Folding outdeg-existence and the
-        # teleport vector into the state removes three per-round
-        # operators AND three setup materializations the previous shape
-        # paid for — the dangling anti-join against deg, the outer join
-        # against nodes, and (for TrustRank) the pvec join — so a round is
-        # exactly: one edge join + one (dst) aggregation + one outer join
-        # back to the state.
-        state = (nodes.join(deg, nodes["n"] == deg["src"], "left")
-                 .select("n", F.col("outdeg").isNull().alias("dangling")))
-        if personalization is not None:
-            scol = (seed_col if seed_col is not None
-                    else personalization.columns[0])
-            seeds = (personalization.select(F.col(scol).alias("n"))
-                     .distinct().withColumn("__seed", F.lit(True)))
-            state = (state.join(seeds, "n", "left")
-                     .select("n", "dangling",
-                             F.coalesce("__seed", F.lit(False))
-                             .alias("seed")))
-        else:
-            state = state.select("n", "dangling", F.lit(False).alias("seed"))
-        # the state checkpoint observes the counts the run reads on the
-        # driver. n_dangling == 0 lets every round skip the dangling mass
-        # outright (D_t ≡ 0 exactly): a data-dependent fast path that is
-        # exact at any scale, and real link graphs deduped on (src, dst)
-        # usually have few or no dangling nodes
-        flags, c = scope.ckpt(state, observe={
-            "n": F.count(F.lit(1)), "d": F.count_if("dangling"),
-            "s": F.count_if("seed"),
-            "ds": F.count_if(F.col("dangling") & F.col("seed"))})
+        # edges: (n, dangling, p). The state checkpoint observes the
+        # counts the run reads on the driver. n_dangling == 0 lets every
+        # round skip the dangling mass outright (D_t ≡ 0 exactly): a
+        # data-dependent fast path that is exact at any scale, and real
+        # link graphs deduped on (src, dst) usually have few or no
+        # dangling nodes
+        flags, c, contrib_edges = _node_table(
+            scope, scope.ckpt(e), personalization, seed_col)
         n_nodes, n_seeds = c["n"], c["s"]
         if personalization is not None and n_seeds == 0:
             raise ValueError("pagerank personalization: no seed node is "
@@ -175,7 +151,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         # localCheckpoint-ed (materializing every column — so a downstream
         # count() measures the real computation and consumers read settled
         # blocks). A round references the previous ranks exactly ONCE (the
-        # contrib join), so on dangling-free graphs intermediate rounds
+        # message join; its state rows come from the fixed flags
+        # checkpoint), so on dangling-free graphs intermediate rounds
         # chain lazily — the chained segment is a straight-line plan whose
         # materialization executes every exchange once (linear work,
         # verified with a noop sink), it just pays one job-dispatch
@@ -186,12 +163,19 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         every = 1 if c["d"] else _PAGERANK_CKPT_EVERY
         last = None
         for t in range(1, iters + 1):
-            r_src = ranks.select(F.col("n").alias("src"), "r")
-            contrib = (contrib_edges.join(r_src, "src")
-                       .groupBy("dst")
-                       .agg(F.sum(F.col("r") / F.col("outdeg"))
-                            .alias("contrib")))
-            joined = state.join(contrib, state["n"] == contrib["dst"], "left")
+            # one exchange per round: the message rows (n=dst, c) and the
+            # state rows (n, dangling, p) meet in ONE groupBy on n — the
+            # connected_components round shape; a state row's NULL c adds
+            # nothing to the sum
+            msgs = (contrib_edges
+                    .join(ranks.select(F.col("n").alias("src"), "r"), "src")
+                    .select(F.col("dst").alias("n"),
+                            (F.col("r") / F.col("outdeg")).alias("c")))
+            grouped = (state.unionByName(msgs, allowMissingColumns=True)
+                       .groupBy("n")
+                       .agg(F.max("dangling").alias("dangling"),
+                            F.max("p").alias("p"),
+                            F.sum("c").alias("contrib")))
             recv = F.coalesce(F.col("contrib"), F.lit(0.0))
             if personalization is None:
                 r = F.lit(base) + F.lit(damping) * (
@@ -199,7 +183,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
             else:
                 r = (F.lit(1.0 - damping) * F.col("p") + F.lit(damping)
                      * (recv + F.lit(dmass) * F.col("p")))
-            ranks = joined.select("n", "dangling", r.alias("r"))
+            ranks = grouped.select("n", "dangling", r.alias("r"))
             if t % every == 0 or t == iters:
                 ranks, m = scope.ckpt(ranks, replaces=last, observe={
                     "dmass": F.sum(F.when(F.col("dangling"), F.col("r")))})
@@ -209,6 +193,49 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         scope.keep(ranks if iters else flags)
         return ranks.select(F.col("n").alias("node"),
                             F.col("r").alias("pagerank"))
+
+
+def _node_table(scope, e, seeds=None, seed_col=None):
+    """The setup of ``pagerank`` and ``opic``: ONE union-aggregate over
+    the edge table ``e`` (src, dst) builds the node table
+    (n, outdeg, dangling, seed) — src rows count the out-degree, dst rows
+    only name a node, and seed rows set ``seed`` and are kept only if an
+    edge names the node. Returns the checkpointed node table, the counts
+    its checkpoint observes (nodes n, dangling d, seeds s, dangling seeds
+    ds) and the edge table joined with outdeg, laid out by src and
+    persisted.
+
+    NULL ids keep the semantics of an equi-join: a NULL endpoint is one
+    node that is dangling (its out-edges join nothing) and is never a
+    seed; an edge into NULL counts in its source's out-degree, and its
+    share leaves the graph."""
+    rows = (e.select(F.col("src").alias("n"),
+                     F.col("src").isNotNull().cast("long").alias("o"),
+                     F.lit(False).alias("s"))
+            .union(e.select(F.col("dst").alias("n"),
+                            F.lit(0).cast("long").alias("o"),
+                            F.lit(False).alias("s"))))
+    if seeds is not None:
+        scol = F.col(seed_col if seed_col is not None else seeds.columns[0])
+        # seed rows carry a NULL out-degree term, so a node named by seed
+        # rows alone sums to NULL and is dropped; a NULL seed sets no flag
+        rows = rows.union(seeds.select(scol.alias("n"),
+                                       F.lit(None).cast("long").alias("o"),
+                                       scol.isNotNull().alias("s")))
+    nodes, c = scope.ckpt(
+        rows.groupBy("n").agg(F.sum("o").alias("outdeg"),
+                              F.max("s").alias("seed"))
+        .filter(F.col("outdeg").isNotNull())
+        .select("n", "outdeg", (F.col("outdeg") == 0).alias("dangling"),
+                "seed"),
+        observe={"n": F.count(F.lit(1)), "d": F.count_if("dangling"),
+                 "s": F.count_if("seed"),
+                 "ds": F.count_if(F.col("dangling") & F.col("seed"))})
+    contrib_edges = scope.persist(
+        e.filter(F.col("dst").isNotNull())
+        .join(nodes.select(F.col("n").alias("src"), "outdeg"), "src")
+        .repartition("src").sortWithinPartitions("src"))
+    return nodes, c, contrib_edges
 
 
 def anchor_text_agg(links: DataFrame, target: str = "target",
@@ -347,15 +374,20 @@ def bfs_depth(edges: DataFrame, seeds: DataFrame, src: str = "src",
     a deeper graph means the caller's bound, and the oracle's recursion
     bound, must rise together).
 
-    Scale shape: the edge table is shuffled ONCE (repartitioned by src,
-    persisted) and every round's expansion joins the narrow frontier
-    against that fixed layout; each round checkpoints ONLY its frontier
-    (flat plans — the connected_components lesson), and the settled set
-    is the lazy union of those O(diameter) materialized narrow blocks,
-    so no round pays a second materialization for a dense settled table.
-    Each round is one join + distinct + anti-join — all hash-partitioned
-    on the node id; total work is O(edges within the reached subgraph),
-    the textbook frontier BFS bound, in O(diameter) synchronized rounds.
+    Scale shape: the edge table is repartitioned by src and persisted
+    ONCE (a layout that keeps its hash partitioning), and every round's
+    expansion joins the narrow frontier against it; each round
+    checkpoints ONLY its frontier (flat plans — the connected_components
+    lesson), and the settled set is the lazy union of those O(diameter)
+    materialized narrow blocks, so no round pays a second
+    materialization for a dense settled table. Each round is ONE
+    exchange: settled ∪ reached grouped on the node id with
+    ``min(depth)``, kept where the minimum is the new level — a
+    distinct + anti-join against the checkpointed settled set would
+    shuffle both again (a checkpoint carries no partitioning) and AQE
+    would broadcast the join as a further job. Edge work totals O(edges
+    within the reached subgraph), the textbook frontier BFS bound, and
+    each of the O(diameter) rounds rescans the narrow settled set.
     The emptiness test is a row count the round's frontier checkpoint
     observes (no job of its own); the output is consolidated into ONE
     checkpoint at the end and the per-round blocks are released."""
@@ -379,26 +411,30 @@ def _expand_frontiers(scope, e, frontier, carry, level, max_iters, name):
     ``e`` — the BFS loop of ``bfs_depth`` and exact
     ``harmonic_centrality``. ``frontier`` holds the level-0 rows
     ``(node, *carry, level)``; round t checkpoints exactly the
-    ``(node, *carry)`` keys first reached at distance t. Returns the lazy
-    union of every round's checkpointed frontier; raises if a frontier is
-    still non-empty after ``max_iters`` rounds."""
+    ``(node, *carry)`` keys first reached at distance t: one union +
+    ``groupBy(node, *carry)`` with ``min(level)``, filtered to level t.
+    Returns the lazy union of every round's checkpointed frontier; raises
+    if a frontier is still non-empty after ``max_iters`` rounds."""
     keys = ["node", *carry]
     frontiers = [scope.ckpt(frontier)]
     for t in range(1, max_iters + 1):
         # settled is a LAZY union of the checkpointed per-round frontiers
-        # — each round's anti-join scans the union of O(diameter)
+        # — each round's groupBy scans the union of O(diameter)
         # materialized narrow blocks instead of paying a second
         # materialization per round for a dense settled table (halves the
         # round's checkpoint jobs; web diameters keep the union width tiny)
         settled = frontiers[0]
         for f in frontiers[1:]:
             settled = settled.unionByName(f)
+        # one exchange per round: the reached keys, tagged t, meet the
+        # settled ones in ONE groupBy; a key whose min level is t is new
+        reached = (e.join(frontiers[-1].select(F.col("node").alias("src"),
+                                               *carry), "src")
+                   .select(F.col("dst").alias("node"), *carry,
+                           F.lit(t).cast("long").alias(level)))
         frontier, m = scope.ckpt(
-            e.join(frontiers[-1].select(F.col("node").alias("src"), *carry),
-                   "src")
-            .select(F.col("dst").alias("node"), *carry).distinct()
-            .join(settled.select(*keys), keys, "left_anti")
-            .withColumn(level, F.lit(t).cast("long")),
+            settled.unionByName(reached).groupBy(*keys)
+            .agg(F.min(level).alias(level)).filter(F.col(level) == t),
             observe={"rows": F.count(F.lit(1))})
         if not m["rows"]:
             return settled
@@ -640,49 +676,42 @@ def opic(edges: DataFrame, src: str = "src", dst: str = "dst",
     per node·round) are retired, a documented sub-ppm mass decay instead
     of a float-summation-order hazard.
 
-    Scale shape mirrors ``pagerank``: the edge table pays ONE
-    src-partitioned shuffle for the whole run, each round is one
-    co-partitioned join + one dst-keyed aggregation, the dangling cash
-    is observed by each round's state checkpoint and enters the next
-    round as a literal, and superseded states are released — O(iters)
-    flat plans, no driver-side per-node state.
+    Scale shape mirrors ``pagerank``: one union-aggregate builds the node
+    table, the edge table is joined with outdeg and laid out by src ONCE,
+    and each round is ONE exchange — the message rows (dst, cash DIV
+    outdeg) and the previous state's rows grouped on the node id, no key
+    join back to the checkpointed state. The dangling cash is observed by
+    each round's state checkpoint and enters the next round as a
+    literal, and superseded states are released — O(iters) flat plans,
+    no driver-side per-node state. A NULL endpoint is one dangling node
+    that receives no cash (``_node_table``).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if dedup_edges:
         e = e.distinct()
-    nodes = (e.select(F.col("src").alias("n"))
-             .union(e.select(F.col("dst").alias("n")))
-             .distinct())
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     with CheckpointScope(edges.sparkSession.sparkContext) as scope:
-        contrib_edges = scope.persist(e.join(deg, "src")
-                                      .repartition("src")
-                                      .sortWithinPartitions("src"))
-        # the node table carries the dangling flag (the pagerank state
-        # shape), and its checkpoint observes the two counts the driver
-        # reads
-        nodes, c = scope.ckpt(
-            nodes.join(deg, nodes["n"] == deg["src"], "left")
-            .select("n", F.col("outdeg").isNull().alias("dangling")),
-            observe={"n": F.count(F.lit(1)), "d": F.count_if("dangling")})
+        nodes, c, contrib_edges = _node_table(scope, e)
         n_nodes = max(c["n"], 1)  # an empty graph divides no row
         dcash = int(cash0) * c["d"]  # round 0: every node holds cash0
         state = nodes.select(
             "n", "dangling", F.lit(int(cash0)).cast("long").alias("cash"),
             F.lit(0).cast("long").alias("hist"))
         for _ in range(iters):
-            c_src = state.select(F.col("n").alias("src"), "cash")
-            recv = (contrib_edges.join(c_src, "src")
-                    .groupBy("dst")
-                    .agg(F.sum(F.expr("cash div outdeg")).alias("recv")))
-            new_state = (state.join(recv, state["n"] == recv["dst"], "left")
-                         .select(
-                             state["n"], "dangling",
-                             (F.coalesce(F.col("recv"), F.lit(0))
-                              + F.lit(dcash // n_nodes))
-                             .cast("long").alias("cash"),
-                             (F.col("hist") + F.col("cash")).cast("long")
-                             .alias("hist")))
+            # the pagerank round: message rows (n=dst, recv) and the
+            # state rows meet in ONE groupBy on n
+            msgs = (contrib_edges
+                    .join(state.select(F.col("n").alias("src"), "cash"),
+                          "src")
+                    .select(F.col("dst").alias("n"),
+                            F.expr("cash div outdeg").alias("recv")))
+            new_state = (
+                state.unionByName(msgs, allowMissingColumns=True)
+                .groupBy("n")
+                .agg(F.max("dangling").alias("dangling"),
+                     (F.coalesce(F.sum("recv"), F.lit(0))
+                      + F.lit(dcash // n_nodes)).cast("long").alias("cash"),
+                     (F.max("hist") + F.max("cash")).cast("long")
+                     .alias("hist")))
             state, m = scope.ckpt(new_state, replaces=state, observe={
                 "dcash": F.sum(F.when(F.col("dangling"), F.col("cash")))})
             dcash = m["dcash"] or 0
@@ -712,8 +741,8 @@ def harmonic_centrality(edges: DataFrame, src: str = "src",
     * ``mode="exact"`` — all-pairs BFS by pair-frontier expansion:
       settled (node, origin, dist) triples grow one synchronous round at
       a time; round t settles exactly the pairs at shortest distance t
-      (the anti-join keeps minima, like bfs_depth). Output per reached
-      node: ``harmonic_micro`` = sum of floor(1e6 / d) per reaching
+      (a min-level groupBy keeps minima, like bfs_depth). Output per
+      reached node: ``harmonic_micro`` = sum of floor(1e6 / d) per reaching
       origin (per-term integer floor, then integer sum — exact in any
       order, so a DuckDB recursive-CTE oracle matches bit-for-bit) and
       ``n_reachers``. Pair tuples are O(n^2) worst case — this is the
@@ -732,12 +761,16 @@ def harmonic_centrality(edges: DataFrame, src: str = "src",
       host graph fit; estimates carry standard HLL error (~1.04/sqrt(m)).
       Returns (node, harmonic_est) for every node.
 
-    Both modes shuffle the edge table ONCE (repartitioned by src,
-    persisted); every round joins the narrow frontier/sketch table
-    against that fixed layout. Round state is localCheckpoint-ed with
-    superseded blocks released (``CheckpointScope``). Exact mode
-    raises past ``max_iters`` non-empty frontiers, mirroring the oracle's
-    recursion bound; hyperball stops early when no register rises.
+    Both modes lay the edge table out ONCE (repartitioned by src and
+    persisted, a layout that keeps its hash partitioning); every round
+    joins the narrow frontier/sketch table against it, and at small sizes
+    the planner broadcasts the layout once per round. Exact mode's round
+    is the one-exchange union + ``groupBy`` of ``_expand_frontiers``;
+    each round rescans the settled pairs. Round state is
+    localCheckpoint-ed with superseded blocks released
+    (``CheckpointScope``). Exact mode raises past ``max_iters`` non-empty
+    frontiers, mirroring the oracle's recursion bound; hyperball stops
+    early when no register rises.
     """
     if mode not in ("exact", "hyperball"):
         raise ValueError(f"unknown mode {mode!r}")

@@ -497,20 +497,27 @@ def test_iterative_operator_jobs_per_iteration(spark):
     # iteration adds only that round's own jobs: no aggregate, collect,
     # broadcast or isEmpty job of its own. AQE runs each shuffle stage as
     # its own Spark job, so a pin counts shuffle stages plus the
-    # checkpoint's result stage, not driver actions.
+    # checkpoint's result stage, not driver actions. A pagerank, opic or
+    # BFS round is one exchange (its message and state rows meet in one
+    # groupBy) plus, at this size, the edge-layout broadcast and the
+    # result stage; a key join back to the checkpointed state re-shuffles
+    # it and AQE's broadcast of that join runs as a further job (5).
     from disco_crawl_spark.operators import graph
     edf = _edges(spark, _HUB_EDGES)   # node 3 has no out-edge
     tr = {k: _jobs(spark, lambda: graph.pagerank(
         edf, iters=k, personalization=_seeds(spark, [0, 3])))
         for k in (2, 3)}
-    assert tr[3] - tr[2] == 5, tr      # + aggregate and broadcast: 7
+    assert tr[3] - tr[2] == 3, tr      # with a join back to the state: 5
     hits = {k: _jobs(spark, lambda: graph.hits(edf, iters=k))
             for k in (2, 3)}
     assert hits[3] - hits[2] == 6, hits  # + a collect per half-step: 10
     bfs = {n: _jobs(spark, lambda: graph.bfs_depth(
         _edges(spark, [(i, i + 1) for i in range(n)]), _seeds(spark, [0])))
         for n in (3, 4)}
-    assert bfs[4] - bfs[3] == 5, bfs   # + an isEmpty per level: 6
+    assert bfs[4] - bfs[3] == 3, bfs   # distinct + anti-join: 5
+    op = {k: _jobs(spark, lambda: graph.opic(edf, iters=k))
+          for k in (2, 3)}
+    assert op[3] - op[2] == 3, op
 
 
 def test_lsh_batch_query_prunes_and_matches_per_query_path(spark, tmp_path):
@@ -691,6 +698,45 @@ def test_pagerank_collapses_multi_edges_and_releases_checkpoints(spark):
     want = _numpy_pagerank([(0, 1), (1, 0), (1, 2)], iters=6)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-12
+
+
+def test_graph_operators_null_endpoints(spark):
+    # a NULL id is one node: it is dangling (its out-edges join nothing),
+    # receives no link mass and is never a seed; an edge into NULL counts
+    # in its source's out-degree and its share leaves the graph. BFS
+    # reaches NULL once, through 3 -> NULL, and never expands it.
+    from disco_crawl_spark.operators import graph
+    edf = _edges(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (None, 2),
+                         (3, None), (1, 3)])
+    # independent power iteration over the nodes 0-3 plus NULL (index 4);
+    # the one dangling node is NULL, and the (3, NULL) share is dropped
+    out = {0: [1], 1: [2, 3], 2: [0, 3], 3: [4]}
+
+    def power(p, iters=4, d=0.85):
+        r = p.copy() if p is not None else np.full(5, 0.2)
+        tele = p if p is not None else np.full(5, 0.2)
+        for _ in range(iters):
+            nxt = (1 - d) * tele + d * r[4] * tele
+            for a, targets in out.items():
+                for b in targets:
+                    if b != 4:
+                        nxt[b] += d * r[a] / len(targets)
+            r = nxt
+        return r
+
+    seeds = spark.createDataFrame([(0,), (None,), (9,)], "n int")
+    for kw, want in [({}, power(None)),
+                     ({"personalization": seeds},
+                      power(np.array([1.0, 0, 0, 0, 0])))]:
+        got = {r["node"]: r["pagerank"]
+               for r in graph.pagerank(edf, iters=4, **kw).collect()}
+        assert set(got) == {0, 1, 2, 3, None}
+        for i, n in enumerate([0, 1, 2, 3, None]):
+            assert abs(got[n] - want[i]) < 1e-12, (kw, n, got[n], want[i])
+    got = sorted((r["node"] is None, r["node"], r["depth"]) for r in
+                 graph.bfs_depth(edf, _seeds(spark, [0, 9])).collect())
+    assert got == [(False, 0, 0), (False, 1, 1), (False, 2, 2),
+                   (False, 3, 2), (False, 9, 0), (True, None, 3)]
 
 
 def test_anchor_text_agg_winner_tiebreak(spark):
