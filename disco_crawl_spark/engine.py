@@ -23,10 +23,14 @@ Design (SURVEY.md §1.3/§3.1 'Spark rewrite'):
   steward's group lock.
 - **shuffles per round**, read from the plans (``plans.shuffle_count``;
   DESIGN.md §3 names each): the fetch join exchanges the schedule by url
-  (the pages side is the url-partitioned cache, broadcast when small); a
-  warm round's generation build runs 10, 4 in the candidates checkpoint,
-  3 in the frontier delta and 3 in the counts collect. Everything else is
-  broadcast (bounds, robots) or narrow (parse UDF, explode).
+  (the pages side is the url-partitioned cache, broadcast when small);
+  the round's one collect, of the per-host fetch stats, runs 1; a warm
+  round's generation build runs 3: the link distinct and the per-key
+  dedup window in the candidates checkpoint (the seen-key anti-join adds
+  its two sides when the seen keys are too many to broadcast) and the
+  per-host windows of the frontier delta. Everything else is broadcast
+  (bounds, the last chunk) or narrow (the parse and link kernels,
+  explode).
 
 Scale notes (100 TB / 10^10-URL design; local runs verify correctness):
 - **pages** can be a url-bucketed catalog table (``pages_bucketed=True``
@@ -53,7 +57,8 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import (DataFrame, Observation, SparkSession, Window,
+                         functions as F)
 
 from . import functions as cf, lifecycle, refsem, robots as robots_mod, udfs
 from .operators.ckpt import CheckpointScope
@@ -84,7 +89,7 @@ class CrawlEngine:
         self.t_seen = self.cat.table("url_seen")
         self.t_log = self.cat.table("crawl_log")
         self.t_metrics = self.cat.table("metrics")
-        self.robots_allow = udfs.make_robots_allow(spark, robots_corpus)
+        self.link_kernel = udfs.make_link_kernel(spark, robots_corpus)
         if "redirect_to" not in pages.columns:
             pages = pages.withColumn("redirect_to", F.lit(None).cast("string"))
         if pages_bucketed:
@@ -269,6 +274,18 @@ class CrawlEngine:
             self._mem[name] = self._table(name).read(self.spark)
         return self._mem[name]
 
+    @staticmethod
+    def _observe_sizes(df: DataFrame, first, size):
+        """``df`` with ``size`` (an aggregate) over each host's rows, and
+        the Observation that reports it as ``get["n"]``, a list of
+        ``(host, size)`` taken from the rows ``first`` marks (one a host).
+        The write of ``df`` computes it; read ``get`` only after that
+        write returned, since it blocks until the action has run."""
+        obs = Observation()
+        df = df.withColumn("_n", size.over(Window.partitionBy("host")))
+        return df.observe(obs, F.collect_list(
+            F.when(first, F.struct("host", "_n"))).alias("n")), obs
+
     def _compact(self, names):
         """Iceberg ``rewrite_data_files`` maintenance pass over the
         delta-accumulating tables. The r4 scaling fix commits every
@@ -307,21 +324,6 @@ class CrawlEngine:
     def compact_tables(self):
         """Compact frontier and crawl_log (see ``_compact``)."""
         self._compact(["frontier", "crawl_log"])
-
-    # ------------------------------------------------------------------
-    # generation preparation (worker.py:685-693): normalize + robots filter,
-    # dense positions in raw order
-    # ------------------------------------------------------------------
-    def _prepare(self, raw: DataFrame) -> DataFrame:
-        """raw: (host, session, gen, ord, link_raw) → frontier rows."""
-        allowed = raw.filter(self.robots_allow(F.col("host"), F.col("link_raw")))
-        w = Window.partitionBy("host", "session", "gen").orderBy("ord")
-        return (
-            allowed
-            .withColumn("link", udfs.normalize_href(F.col("link_raw")))
-            .withColumn("pos", F.row_number().over(w) - 1)
-            .select("host", "session", "gen", "pos", "link")
-        )
 
     # ------------------------------------------------------------------
     # domain starts (steward + start gauntlet)
@@ -377,14 +379,15 @@ class CrawlEngine:
         for h in hosts:
             d = self.dom[h]
             root = f"{d['scheme']}://{h}/"
+            ok, link = self.robots.allow(h, root), refsem.normalize_href(root)
             if d["ever_crawled"]:
-                resumed.append((h, d["session"], 1, 0, root))
-            elif self.robots.allow(h, root):
+                resumed.append((h, d["session"], 0, ok, link))
+            elif ok:
                 d["gen_size"] = 1
-                fresh.append((h, d["session"], 1, 0, refsem.normalize_href(root)))
+                fresh.append((h, d["session"], 1, 0, link))
         if resumed:
-            sess = self._frame(resumed, "host string, session int, gen int, "
-                               "ord int, link_raw string")
+            sess = self._frame(resumed, "host string, session int, ord int, "
+                               "allowed boolean, link string")
             logs = self._view("crawl_log").filter(
                 F.col("host").isin([r[0] for r in resumed]))
             crawled = (logs.select("host", "url").distinct()
@@ -393,23 +396,29 @@ class CrawlEngine:
             self._append("url_seen", crawled.join(sk, "host")
                          .withColumn("host_group", cf.host_group(F.col("host")))
                          .select("host", "session", "host_group", "url_key"))
-            kick = (logs.select("host", F.explode("links").alias("link_raw"))
+            # kick links are not domainized: the kernel gets no scheme
+            kick = (logs.select("host", F.explode("links").alias("src"))
                     .distinct()
-                    .withColumn("url_key", udfs.url_seen_key(F.col("link_raw")))
+                    .withColumn("k", self.link_kernel(
+                        F.col("host"), F.col("src"), F.lit(None).cast("string")))
+                    .select("host", "src", "k.url_key", "k.allowed", "k.link")
                     .join(crawled.select("host", "url_key"),
                           ["host", "url_key"], "left_anti"))
-            w = Window.partitionBy("host").orderBy("link_raw")
+            w = Window.partitionBy("host").orderBy("src")
             kick = (kick.withColumn("ord", F.row_number().over(w))
                     .filter(F.col("ord") <= self.cfg.max_pages)
-                    .join(sk, "host")
-                    .select("host", "session", F.lit(1).alias("gen"), "ord",
-                            "link_raw"))
+                    .join(sk, "host"))
             roots = sess.join(kick.select("host").distinct(), "host",
                               "left_anti")
-            delta = self._append("frontier",
-                                 self._prepare(kick.unionByName(roots)))
-            for r in delta.groupBy("host").count().collect():
-                self.dom[r["host"]]["gen_size"] = r["count"]
+            front = (kick.select(*roots.columns).unionByName(roots)
+                     .filter("allowed").withColumn("pos", F.row_number().over(
+                         Window.partitionBy("host").orderBy("ord")) - 1))
+            front, obs = self._observe_sizes(front, F.col("pos") == 0,
+                                             F.count(F.lit(1)))
+            self._append("frontier", front.select(
+                "host", "session", F.lit(1).alias("gen"), "pos", "link"))
+            for h, n in obs.get["n"]:
+                self.dom[h]["gen_size"] = n
         return self._frame(fresh, "host string, session int, gen int, "
                            "pos int, link string") if fresh else None
 
@@ -428,7 +437,7 @@ class CrawlEngine:
                 bounds_rows.append((h, d["session"], d["gen"], d["cursor"],
                                     min(d["cursor"] + d["budget"],
                                         d["gen_size"]), d["scheme"]))
-        results = stats_df = None
+        results, stats_rows = None, []
         if bounds_rows:
             bounds = self.spark.createDataFrame(
                 bounds_rows,
@@ -519,19 +528,16 @@ class CrawlEngine:
             # one aggregation drives BOTH new-domain discovery and the
             # per-host fetch/parse metrics (statsd-counter taxonomy of
             # worker.py:466,492,499-501), recorded in the round-state
-            # snapshot. NOT collected here: when a generation ends this
-            # round, _build_generations folds it into its own counts
-            # collect — one driver action per round instead of two (the
-            # per-action dispatch latency is the round loop's serial
-            # floor)
-            stats_df = results.groupBy("host").agg(
+            # snapshot. It is the round's one collect: the generation
+            # build reads its per-host sizes off its frontier write
+            stats_rows = results.groupBy("host").agg(
                 F.count(F.lit(1)).alias("scheduled"),
                 F.sum(F.when(F.col("status") == 200, 1).otherwise(0))
                  .alias("fetched_200"),
                 F.sum(F.size("links")).alias("internal_links"),
                 F.sum(F.size("external_links")).alias("external_links"),
                 F.flatten(F.collect_set("discovered")).alias("discovered"),
-            )
+            ).collect()
 
         # -- driver cursor/crawl accounting ----------------------------
         ended = []
@@ -561,12 +567,9 @@ class CrawlEngine:
                 self._event(rnd, h, "finished")
                 self._finish_host(h)
         if build:
-            stats_rows = self._build_generations(build, results, stats_df,
-                                                 fresh)
-        else:
-            if fresh is not None:
-                self._append("frontier", fresh)
-            stats_rows = stats_df.collect() if stats_df is not None else []
+            self._build_generations(build, results, fresh)
+        elif fresh is not None:
+            self._append("frontier", fresh)
 
         # -- per-host fetch/parse metrics + new-domain discovery -------
         discovered_all = set()
@@ -598,70 +601,78 @@ class CrawlEngine:
         self.round_no += 1
 
     def _build_generations(self, hosts: list, results: DataFrame,
-                           stats_df: DataFrame, fresh: "DataFrame | None"):
-        """SURVEY.md §8.3 frontier-update rule, one distributed pass for all
-        generation-ending hosts. The generation's last chunk is read from
-        ``results``, the round's crawl_log delta, which holds ``host, link``
-        for every scheduled row. The next generations and ``fresh`` (the
-        round's driver-built roots) land in the round's one frontier
-        append. ``stats_df`` (the round's per-host fetch/parse
-        aggregation) rides along in the counts collect so the whole round
-        runs ONE driver action beyond its table commits; returns the
-        collected rows for the caller's metrics accounting."""
-        sess = self.spark.createDataFrame(
+                           fresh: "DataFrame | None"):
+        """SURVEY.md §8.3 frontier-update rule (refsim ``_end_generation``),
+        one distributed pass for all generation-ending hosts: one
+        checkpoint of the candidates, then two commits that read it. The
+        generation's last chunk is read from ``results``, the round's
+        crawl_log delta, which holds ``host, link`` for every scheduled
+        row. The next generations and ``fresh`` (the round's driver-built
+        roots) land in the round's one frontier append, and each host's
+        next generation size is observed on that write."""
+        sess = self._frame(
             [(h, self.dom[h]["session"], self.dom[h]["gen"],
               self.dom[h]["scheme"]) for h in hosts],
             "host string, session int, gen int, scheme string")
+        # the last chunk, read by both joins below through one reused
+        # broadcast: the anti-join ignores repeated rows, and the key
+        # dedup drops the identical copies a repeat makes in the left join
+        chunk = results.filter(F.col("host").isin(hosts)).select(
+            F.col("host").alias("c_host"), F.col("link").alias("c_link"))
+
+        def in_chunk(col: str):
+            return ((F.col("host") == F.col("c_host"))
+                    & (F.col(col) == F.col("c_link")))
         # collected links are derived from the crawl log (the log stores
         # each page's raw internal links, exactly like the reference's ES
-        # docs) — no separate table, no extra per-round write
+        # docs), minus the last chunk; one kernel pass per distinct link
         cand = (self._view("crawl_log")
                 .join(F.broadcast(sess), ["host", "session", "gen"])
-                .select("host", F.explode("links").alias("link"), "scheme")
-                .distinct())
-        # minus the generation's LAST chunk (this round's schedule)
-        last_chunk = (results.filter(F.col("host").isin(hosts))
-                      .select("host", "link").distinct())
-        cand = (cand.join(last_chunk, ["host", "link"], "left_anti")
-                .withColumn("url_key", udfs.url_seen_key(F.col("link")))
-                .withColumn("host_group", cf.host_group(F.col("host"))))
+                .select("host", "session", "gen",
+                        F.explode("links").alias("src"), "scheme")
+                .distinct()
+                .join(chunk, in_chunk("src"), "left_anti")
+                .withColumn("k", self.link_kernel(
+                    F.col("host"), F.col("src"), F.col("scheme")))
+                .select("host", "session", "gen", "src", "k.*"))
         # anti-join against this session's seen keys
         seen = self._view("url_seen")
         if seen is not None:
-            seen = (seen.join(F.broadcast(sess.select("host", "session")),
-                              ["host", "session"])
-                    .select("host", "url_key").distinct())
-            cand = cand.join(seen, ["host", "url_key"], "left_anti")
-        # within-batch key dedup: first raw link per key wins (the oracle
-        # marks keys sequentially in sorted order)
-        wk = Window.partitionBy("host", "url_key").orderBy("link")
-        cand = (cand.withColumn("rn", F.row_number().over(wk))
+            cand = cand.join(seen.filter(F.col("host").isin(hosts))
+                             .select("host", "session", "url_key"),
+                             ["host", "session", "url_key"], "left_anti")
+        # ``dup`` flags the links whose domainized form is in the last
+        # chunk: seen-inserted, not crawled again. Then the within-batch
+        # key dedup: first raw link per key wins (the oracle marks keys
+        # sequentially in sorted order); session is fixed per host, so the
+        # window keeps the anti-join's partitioning
+        wk = Window.partitionBy("host", "session", "url_key").orderBy("src")
+        cand = (cand.join(chunk, in_chunk("link_raw"), "left")
+                .withColumn("dup", F.col("c_link").isNotNull())
+                .drop("c_host", "c_link")
+                .withColumn("rn", F.row_number().over(wk))
                 .filter(F.col("rn") == 1).drop("rn"))
-        w = Window.partitionBy("host").orderBy("link")
-        # the scope frees both cached frames however the round ends
+        w = Window.partitionBy("host").orderBy("src")
+        # the scope frees the checkpoint however the round ends
         with CheckpointScope(self.spark.sparkContext) as scope:
-            # eager: the candidates settle here, partitioned by AQE from
-            # the data, before either commit reads them
             cand = scope.ckpt(cand)
-            nxt = scope.persist(
-                cand.withColumn("link_raw", udfs.domainize(
-                    F.col("host"), F.col("link"), F.col("scheme")))
-                .join(last_chunk.select("host",
-                                        F.col("link").alias("link_raw")),
-                      ["host", "link_raw"], "left_anti")
-                .withColumn("ord", F.row_number().over(w))
-                .filter(F.col("ord") <= self.cfg.max_pages)
-                .join(F.broadcast(sess.select(
-                    "host", "session", (F.col("gen") + 1).alias("gen"))),
-                    ["host"])
-                .select("host", "session", "gen", "ord", "link_raw"))
-            front = self._prepare(nxt)
+            new_seen = cand.select(
+                "host", "session",
+                cf.host_group(F.col("host")).alias("host_group"), "url_key")
+            # cap in raw order, then robots: every window partitions by
+            # host, so the frontier delta exchanges once. A host with no
+            # raw row finishes; one whose rows robots all drop stays
+            # active one round with an empty generation, like the reference
+            nxt = (cand.filter(~F.col("dup"))
+                   .withColumn("ord", F.row_number().over(w))
+                   .filter(F.col("ord") <= self.cfg.max_pages))
+            nxt, obs = self._observe_sizes(nxt, F.col("ord") == 1,
+                                           F.count_if("allowed"))
+            front = nxt.filter("allowed").select(
+                "host", "session", (F.col("gen") + 1).alias("gen"),
+                (F.row_number().over(w) - 1).alias("pos"), "link")
             if fresh is not None:
                 front = front.unionByName(fresh)
-            # every survivor is seen-inserted, even ones the cap then drops
-            new_seen = (cand.join(F.broadcast(sess.select("host", "session")),
-                                  "host")
-                        .select("host", "session", "host_group", "url_key"))
             # the two commits touch different tables and read the settled
             # checkpoint; a mid-round kill discards both tables'
             # uncheckpointed deltas on resume (engine.resume), so their
@@ -671,31 +682,17 @@ class CrawlEngine:
             with ThreadPoolExecutor(max_workers=2) as pool:
                 f_seen = pool.submit(self._append, "url_seen", new_seen)
                 f_front = pool.submit(self._append, "frontier", front)
-                prepared_delta = f_front.result()
+                f_front.result()
                 f_seen.result()
-            # ONE collect for everything the driver needs this round: raw
-            # next-gen size (finish decision — an all-robots-filtered gen
-            # still stays active one round, like the reference), prepared
-            # size (the schedule cursor bound; gen > 1 leaves out the
-            # fresh roots, which are every gen-1 row of this delta), and
-            # the round's per-host fetch/parse stats
-            stats = stats_df.join(
-                nxt.groupBy("host").agg(F.count(F.lit(1)).alias("raw_n"))
-                .join(prepared_delta.filter(F.col("gen") > 1)
-                      .groupBy("host").agg(F.count(F.lit(1)).alias("prep_n")),
-                      "host", "full_outer"),
-                "host", "full_outer").collect()
-        raw_counts = {r["host"]: (r["raw_n"] or 0) for r in stats}
-        counts = {r["host"]: (r["prep_n"] or 0) for r in stats}
+        # read once both commits returned: one that raised never gets here
+        sizes = dict(obs.get["n"])
         for h in hosts:
             d = self.dom[h]
-            if raw_counts.get(h, 0) == 0:
+            if h not in sizes:
                 self._event(self.round_no, h, "finished")
                 self._finish_host(h)
             else:
-                d.update(gen=d["gen"] + 1, cursor=0,
-                         gen_size=counts.get(h, 0))
-        return stats
+                d.update(gen=d["gen"] + 1, cursor=0, gen_size=sizes[h])
 
     # ------------------------------------------------------------------
     # run / resume / results

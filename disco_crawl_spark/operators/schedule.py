@@ -545,7 +545,7 @@ def robots_wildcard_gate(urls: DataFrame, rules: DataFrame,
     """RFC 9309 / Googlebot-style robots matching with ``*`` and ``$``
     wildcards and longest-match-wins precedence — the modern superset of
     the stdlib prefix matcher the reference relies on (robotparser via
-    reppy, worker.py:180-200; ``udfs.make_robots_allow`` pins that exact
+    reppy, worker.py:180-200; ``udfs.make_link_kernel`` pins that exact
     legacy semantics).  Real robots.txt files in a Common-Crawl-scale
     corpus use wildcards heavily, so a frontier needs this gate too.
 

@@ -2093,7 +2093,7 @@ def robots_gate(spark, sf):
     URLs: even doc_ids land under /private/ which the corpus robots denies."""
     from . import udfs as _udfs
     robots = {"x.gov.au": "User-agent: *\nDisallow: /private/\n"}
-    allow = _udfs.make_robots_allow(spark, robots)
+    kernel = _udfs.make_link_kernel(spark, robots)
     d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
     url = (F.when(F.col("doc_id") % 2 == 0,
                   F.concat(F.lit("https://x.gov.au/private/d"),
@@ -2101,7 +2101,9 @@ def robots_gate(spark, sf):
            .otherwise(F.concat(F.lit("https://x.gov.au/public/d"),
                                F.col("doc_id"))))
     return (d.select("doc_id", url.alias("url"))
-            .withColumn("allowed", allow(F.lit("x.gov.au"), F.col("url"))))
+            .withColumn("allowed", kernel(F.lit("x.gov.au"), F.col("url"),
+                                          F.lit(None).cast("string"))
+                        ["allowed"]))
 
 
 @q("rollup_revenue", """

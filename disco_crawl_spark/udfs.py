@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    ArrayType, BooleanType, LongType, StringType, StructField, StructType,
+    ArrayType, LongType, StringType, StructField, StructType,
 )
 
 from . import refsem, robots as robots_mod
@@ -118,26 +118,39 @@ def domainize(host: pd.Series, link: pd.Series, scheme: pd.Series) -> pd.Series:
     ])
 
 
-def make_robots_allow(spark, robots_corpus: dict):
-    """Robots filter as a broadcast-join-style UDF: the (tiny) robots corpus
-    is a Spark broadcast; each executor parses a host's robots.txt once
-    (RobotsCache) and evaluates stdlib RobotFileParser.can_fetch — identical
-    semantics to worker.py:97-101 with zero reimplementation risk. The
-    iterator form constructs the per-host matcher cache once per TASK and
-    amortizes it over every batch (guide §4.5) — the series form rebuilt
-    it per batch, re-parsing each host's robots.txt every ~10k rows."""
+# seen key of the input link; the link domainized (when a scheme is
+# given); the robots verdict on that; its normalize_href form
+LINK_SCHEMA = "url_key string, link_raw string, allowed boolean, link string"
+
+
+def make_link_kernel(spark, robots_corpus: dict):
+    """The generation end's per-link pass (worker.py:734-753 then 685-693)
+    in one Arrow round-trip: seen key, domainize, robots, normalize. A NULL
+    ``scheme`` leaves the link as it is (a resumed host's kick links are
+    not domainized, worker.py:668-680). The robots corpus is a Spark
+    broadcast; each executor parses a host's robots.txt once (RobotsCache)
+    and evaluates stdlib RobotFileParser.can_fetch, as worker.py:97-101.
+    The iterator form builds that cache once per TASK, not per batch.
+    Marked nondeterministic so the optimizer keeps it where it stands:
+    otherwise it pushes a later anti-join on ``url_key`` below the
+    distinct the kernel reads, and the kernel runs twice, once per raw
+    link."""
     bc = spark.sparkContext.broadcast(robots_corpus)
 
-    @pandas_udf(BooleanType())
-    def robots_allow(
-            it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
+    @pandas_udf(LINK_SCHEMA)
+    def link_kernel(it: Iterator[Tuple[pd.Series, pd.Series, pd.Series]]
+                    ) -> Iterator[pd.DataFrame]:
         cache = robots_mod.RobotsCache(bc.value)
-        for host, link in it:
-            yield pd.Series([
-                cache.allow(h, l) for h, l in zip(host, link)
-            ])
+        for host, link, scheme in it:
+            raw = [refsem.domainize_link(h, l, s) if s else l
+                   for h, l, s in zip(host, link, scheme)]
+            yield pd.DataFrame({
+                "url_key": [refsem.url_seen_key(l) for l in link],
+                "link_raw": raw,
+                "allowed": [cache.allow(h, r) for h, r in zip(host, raw)],
+                "link": [refsem.normalize_href(r) for r in raw]})
 
-    return robots_allow
+    return link_kernel.asNondeterministic()
 
 
 # ---------------------------------------------------------------------------

@@ -384,3 +384,63 @@ def test_engine_disallowed_root_matches_oracle(spark, tmp_warehouse):
     assert {(0, host, "started"), (0, host, "finished")} <= set(eng.events)
     assert host not in {h for _, h, _, _ in eng.crawl_order()}
     eng.pages.unpersist()
+
+
+def test_link_kernel_matches_refsem(spark, c):
+    # the generation build's one Python crossing returns, per link, what
+    # the four refsem/RobotsCache calls return, over every internal link
+    # the test corpus's pages yield, with and without a scheme (a resumed
+    # host's kick links are not domainized)
+    from urllib.parse import urlsplit
+
+    from disco_crawl_spark import robots as robots_mod, udfs
+    rows = set()
+    for url, page in c.pages.items():
+        u = urlsplit(url)
+        internal, _, _ = refsem.classify_links(
+            refsem.extract_links(page["html"].decode("utf-8"), url),
+            u.netloc, u.scheme)
+        rows.update((u.netloc, link, u.scheme) for link in internal)
+    host = next(h for h, t in sorted(c.robots.items())
+                if t and "Disallow: /private/" in t)
+    rows.update((host, link, "https") for link in
+                ("/private/x.html", "rel/page.html", "/about#frag", ""))
+    rows |= {(h, link, None) for h, link, _ in rows}
+    df = spark.createDataFrame(sorted(rows, key=str),
+                               "host string, link string, scheme string")
+    kernel = udfs.make_link_kernel(spark, c.robots)
+    got = {(r["host"], r["link"], r["scheme"]): tuple(r["k"]) for r in
+           df.withColumn("k", kernel("host", "link", "scheme")).collect()}
+    cache = robots_mod.RobotsCache(c.robots)
+    want = {}
+    for h, link, scheme in rows:
+        raw = refsem.domainize_link(h, link, scheme) if scheme else link
+        want[(h, link, scheme)] = (refsem.url_seen_key(link), raw,
+                                   cache.allow(h, raw),
+                                   refsem.normalize_href(raw))
+    assert got == want
+    assert {False, True} == {v[2] for v in want.values()}
+    assert any(k[1] == "rel/page.html" and v[1].startswith("https://")
+               for k, v in want.items())
+    assert any("#" in k[1] and "#" not in v[3] for k, v in want.items())
+
+
+def test_warm_round_job_count(engine):
+    # a warm round (one whose hosts build their next generation against
+    # the session's seen keys) runs the fetch, parse and crawl_log
+    # commit, one checkpoint of the candidates, the url_seen and frontier
+    # commits (the next generation's sizes are observed on the frontier
+    # write) and one collect of the fetch stats. AQE runs each shuffle
+    # stage and each broadcast as its own job, so the pin counts those
+    sc = engine.spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    engine.step()
+    before = job_ids()
+    engine.step()
+    jobs = len(job_ids() - before)
+    assert jobs <= 14, jobs     # with a second last-chunk pass, the
+    # persisted next generation and a counts collect: 25
