@@ -440,28 +440,11 @@ def dedup_keep(df: DataFrame, pairs: DataFrame, id_col: str,
                     (F.col("comp") == F.col(id_col)).alias("is_canonical")))
 
 
-def write_minhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                             path: str, num_hashes: int = 32,
-                             shingle_len: int = 3, seed: int = 42,
-                             buckets: int = 32) -> None:
-    """Materialize a corpus's MinHash signature table, bucketed by id —
-    the write-once artifact the incremental pipeline reuses: every later
-    ``cross_corpus_dedup`` batch passes the read-back table as
-    ``ref_sig_df`` and skips re-shingling the (huge) reference corpus
-    entirely. The (family, shingle, seed) parameters are baked into the
-    signatures; pass the same ones when querying."""
-    sigs = minhash_signatures(parallelize_input(df), text_col, id_col,
-                              num_hashes, shingle_len, seed)
-    (sigs.repartition(buckets, id_col)
-     .write.mode("overwrite").parquet(path))
-
-
 def cross_corpus_dedup(new_df: DataFrame, ref_df: DataFrame, text_col: str,
                        id_col: str, threshold: float = 0.5,
                        num_hashes: int = 32, bands: int = 8,
                        shingle_len: int = 3, seed: int = 42,
-                       max_bucket: int = 1000,
-                       ref_sig_df: "DataFrame | None" = None) -> DataFrame:
+                       max_bucket: int = 1000) -> DataFrame:
     """Dedup a NEW corpus against an existing REFERENCE corpus (the
     incremental-ingest form of near-dup removal: this month's crawl vs the
     corpus already trained on). Returns, per new-side document that
@@ -469,13 +452,9 @@ def cross_corpus_dedup(new_df: DataFrame, ref_df: DataFrame, text_col: str,
     ``(id, best_ref, best_jaccard, n_ref_matches)`` — the rows a pipeline
     anti-joins away (or routes to audit) before appending the rest.
 
-    Same seeded MinHash family and banding as ``minhash_dedup_pairs``, so
-    a signature table written once for the reference corpus
-    (``write_minhash_signatures``) is reusable across every incremental
-    batch — pass it as ``ref_sig_df`` and the reference side is never
-    re-shingled (its text column is still read for the verify stage, but
-    only for candidate rows). The bucket join is new-side×ref-side on (band, bucket) — never
-    a self-join of the union, so the (huge) reference corpus never pairs
+    Same seeded MinHash family and banding as ``minhash_dedup_pairs``. The
+    bucket join is new-side×ref-side on (band, bucket) — never a
+    self-join of the union, so the (huge) reference corpus never pairs
     with itself; both sides carry the ``max_bucket`` bound. The verify
     stage re-reads only the candidate pairs' texts; the winner per new doc
     is elected with one ``max(struct)`` aggregation (highest Jaccard, ties
@@ -483,9 +462,8 @@ def cross_corpus_dedup(new_df: DataFrame, ref_df: DataFrame, text_col: str,
     """
     sig_new = minhash_signatures(parallelize_input(new_df), text_col, id_col,
                                  num_hashes, shingle_len, seed)
-    sig_ref = (ref_sig_df if ref_sig_df is not None else
-               minhash_signatures(parallelize_input(ref_df), text_col,
-                                  id_col, num_hashes, shingle_len, seed))
+    sig_ref = minhash_signatures(parallelize_input(ref_df), text_col,
+                                 id_col, num_hashes, shingle_len, seed)
     bn = (_band_buckets(sig_new, id_col, bands, max_bucket)
           .select(F.col(id_col).alias("a"), "band", "bucket"))
     br = (_band_buckets(sig_ref, id_col, bands, max_bucket)
@@ -544,25 +522,21 @@ def token_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
 
 
 def passage_dedup(df: DataFrame, text_col: str, id_col: str,
-                  k_tokens: int = 32,
-                  segmenter: str = "tokens") -> DataFrame:
+                  k_tokens: int = 32) -> DataFrame:
     """Remove every repeated PASSAGE across the corpus, keeping its first
     occurrence, and reconstruct each document from its surviving passages
     — the passage-level exact dedup CCNet/FineWeb run before document-level
     near-dup (CCNet deduplicates SHA1-hashed paragraphs corpus-wide; docs
     whose every passage was seen elsewhere vanish entirely).
 
-    Segmenters (one deterministic rule per run, mirrored in the oracle):
-      * ``"tokens"`` (default): fixed ``k_tokens``-token blocks — the
-        uniform rule that stays meaningful on single-line text (newline-
-        free corpora make newline paragraphs degenerate: 1 passage = the
-        whole doc = plain exact dedup).
-      * ``"newline"``: split on ``\\n`` — classic paragraph dedup for
-        corpora that carry real line structure.
+    Passages are fixed ``k_tokens``-token blocks (mirrored in the oracle)
+    — the uniform rule that stays meaningful on single-line text
+    (newline-free corpora make newline paragraphs degenerate: 1 passage =
+    the whole doc = plain exact dedup).
 
     First occurrence = minimum ``(doc_id, passage_idx)`` over the md5 of
-    the passage text; a doc re-assembles as its kept passages joined in
-    original order (space for "tokens", newline for "newline").
+    the passage text; a doc re-assembles as its kept passages joined by
+    spaces in original order.
 
     Scale shape (100 TB): one hash-partitioned aggregation to elect
     winners — ``min(struct(id, idx))`` is algebraic, so a boilerplate
@@ -575,23 +549,14 @@ def passage_dedup(df: DataFrame, text_col: str, id_col: str,
     # stage the token array before the per-segment lambda (the
     # fingerprints O(n^3) lesson: interpreted higher-order eval would
     # re-tokenize the document per segment otherwise)
-    if segmenter == "tokens":
-        s0 = df.select(F.col(id_col).alias("__id"),
-                       F.split(F.col(text_col), " ").alias("__tk"))
-        n_seg_c = F.ceil(F.size("__tk") / F.lit(k_tokens)).cast("int")
-        pre = s0.select("__id", F.transform(
-            F.sequence(F.lit(0), n_seg_c - 1),
-            lambda i: F.array_join(
-                F.slice("__tk", i * k_tokens + 1, k_tokens), " "))
-            .alias("__segs"))
-        joiner = " "
-    elif segmenter == "newline":
-        pre = df.select(F.col(id_col).alias("__id"),
-                        F.split(F.col(text_col), "\n").alias("__segs"))
-        joiner = "\n"
-    else:
-        raise ValueError(f"unknown segmenter {segmenter!r}")
-
+    s0 = df.select(F.col(id_col).alias("__id"),
+                   F.split(F.col(text_col), " ").alias("__tk"))
+    n_seg_c = F.ceil(F.size("__tk") / F.lit(k_tokens)).cast("int")
+    pre = s0.select("__id", F.transform(
+        F.sequence(F.lit(0), n_seg_c - 1),
+        lambda i: F.array_join(
+            F.slice("__tk", i * k_tokens + 1, k_tokens), " "))
+        .alias("__segs"))
     segs = (pre.select("__id",
                        F.posexplode("__segs").alias("seg_idx", "seg"))
             .withColumn("h", F.md5(F.col("seg"))))
@@ -607,7 +572,7 @@ def passage_dedup(df: DataFrame, text_col: str, id_col: str,
                          F.array_sort(F.collect_list(
                              F.struct("seg_idx", "seg"))),
                          lambda s: s["seg"]),
-                     joiner).alias("text_kept"))
+                     " ").alias("text_kept"))
             .join(pre.select("__id", F.size("__segs").cast("long")
                              .alias("n_segments")),
                   "__id")

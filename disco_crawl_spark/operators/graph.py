@@ -60,7 +60,6 @@ _PAGERANK_CKPT_EVERY = 6
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              iters: int = 5, damping: float = 0.85,
-             dedup_edges: bool = True,
              personalization: DataFrame | None = None,
              seed_col: str | None = None) -> DataFrame:
     """Power-iteration PageRank over an edge table; returns (node, pagerank).
@@ -94,10 +93,10 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     endpoint is one dangling node that receives no link mass and is never
     a seed (``_node_table``).
 
-    Multi-edges are collapsed first when ``dedup_edges`` (a crawl link
-    graph counts a link once per (src, dst) page pair); self-loops are
-    kept as ordinary edges if present upstream — filter before calling if
-    the graph semantics exclude them.
+    Multi-edges are collapsed first (a crawl link graph counts a link
+    once per (src, dst) page pair); self-loops are kept as ordinary edges
+    if present upstream — filter before calling if the graph semantics
+    exclude them.
 
     Round materialization policy (round-6 shape): the FINAL round is
     always eagerly localCheckpoint-ed (consumers read settled blocks and
@@ -114,9 +113,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         # the deduped edge table feeds two derivations (the node table and
         # the per-round edge layout) — materialize it once so neither
         # re-runs the upstream lineage
-        e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-        if dedup_edges:
-            e = e.distinct()
+        e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+             .distinct())
         # ONE state table carries everything a round needs beside the
         # edges: (n, dangling, p). The state checkpoint observes the
         # counts the run reads on the driver. n_dangling == 0 lets every
@@ -408,13 +406,13 @@ def bfs_depth(edges: DataFrame, seeds: DataFrame, src: str = "src",
 
 def _expand_frontiers(scope, e, frontier, carry, level, max_iters, name):
     """Synchronous frontier expansion over the src-partitioned edge table
-    ``e`` — the BFS loop of ``bfs_depth`` and exact
-    ``harmonic_centrality``. ``frontier`` holds the level-0 rows
-    ``(node, *carry, level)``; round t checkpoints exactly the
-    ``(node, *carry)`` keys first reached at distance t: one union +
-    ``groupBy(node, *carry)`` with ``min(level)``, filtered to level t.
-    Returns the lazy union of every round's checkpointed frontier; raises
-    if a frontier is still non-empty after ``max_iters`` rounds."""
+    ``e`` — the BFS loop of ``bfs_depth`` and ``harmonic_centrality``.
+    ``frontier`` holds the level-0 rows ``(node, *carry, level)``; round
+    t checkpoints exactly the ``(node, *carry)`` keys first reached at
+    distance t: one union + ``groupBy(node, *carry)`` with ``min(level)``,
+    filtered to level t. Returns the lazy union of every round's
+    checkpointed frontier; raises if a frontier is still non-empty after
+    ``max_iters`` rounds."""
     keys = ["node", *carry]
     frontiers = [scope.ckpt(frontier)]
     for t in range(1, max_iters + 1):
@@ -646,8 +644,7 @@ def reciprocity(edges: DataFrame, src: str = "src",
 
 
 def opic(edges: DataFrame, src: str = "src", dst: str = "dst",
-         iters: int = 5, cash0: int = 1_000_000,
-         dedup_edges: bool = True) -> DataFrame:
+         iters: int = 5, cash0: int = 1_000_000) -> DataFrame:
     """OPIC — On-line Page Importance Computation (Abiteboul, Preda &
     Cobéna, WWW 2003): the importance estimator built FOR crawling.
     Unlike PageRank (a batch fixpoint over a frozen snapshot), OPIC's
@@ -661,8 +658,7 @@ def opic(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Semantics (exact, so the DuckDB oracle can unroll it):
 
-    * node set = distinct src ∪ dst endpoints; multi-edges collapse when
-      ``dedup_edges``
+    * node set = distinct src ∪ dst endpoints; multi-edges collapse
     * cash_0(v) = ``cash0`` micros, history_0(v) = 0 (what ``iters=0``
       returns)
     * each round, synchronously: every node banks its cash into history
@@ -686,9 +682,8 @@ def opic(edges: DataFrame, src: str = "src", dst: str = "dst",
     no driver-side per-node state. A NULL endpoint is one dangling node
     that receives no cash (``_node_table``).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if dedup_edges:
-        e = e.distinct()
+    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+         .distinct())
     with CheckpointScope(edges.sparkSession.sparkContext) as scope:
         nodes, c, contrib_edges = _node_table(scope, e)
         n_nodes = max(c["n"], 1)  # an empty graph divides no row
@@ -723,9 +718,7 @@ def opic(edges: DataFrame, src: str = "src", dst: str = "dst",
 
 
 def harmonic_centrality(edges: DataFrame, src: str = "src",
-                        dst: str = "dst", max_iters: int = 32,
-                        mode: str = "exact", log2m: int = 6,
-                        seed: int = 7) -> DataFrame:
+                        dst: str = "dst", max_iters: int = 32) -> DataFrame:
     """Harmonic centrality H(v) = sum over u != v reaching v of 1/d(u, v)
     — the ranking Common Crawl publishes for its host graph (Boldi &
     Vigna, "Axioms for centrality", 2014) and the standard crawl-priority
@@ -736,44 +729,25 @@ def harmonic_centrality(edges: DataFrame, src: str = "src",
     its frontier by hash + budget only (worker.py:563-640); harmonic is
     the between-rounds authority signal its scheduler lacks.
 
-    Two physical strategies behind one semantic:
+    All-pairs BFS by pair-frontier expansion: settled (node, origin,
+    dist) triples grow one synchronous round at a time; round t settles
+    exactly the pairs at shortest distance t (a min-level groupBy keeps
+    minima, like bfs_depth). Output per reached node: ``harmonic_micro``
+    = sum of floor(1e6 / d) per reaching origin (per-term integer floor,
+    then integer sum — exact in any order, so a DuckDB recursive-CTE
+    oracle matches bit-for-bit) and ``n_reachers``. Pair tuples are
+    O(n^2) worst case — this is the oracle-parity / small-graph path,
+    NOT the 100 TB plan.
 
-    * ``mode="exact"`` — all-pairs BFS by pair-frontier expansion:
-      settled (node, origin, dist) triples grow one synchronous round at
-      a time; round t settles exactly the pairs at shortest distance t
-      (a min-level groupBy keeps minima, like bfs_depth). Output per
-      reached node: ``harmonic_micro`` = sum of floor(1e6 / d) per reaching
-      origin (per-term integer floor, then integer sum — exact in any
-      order, so a DuckDB recursive-CTE oracle matches bit-for-bit) and
-      ``n_reachers``. Pair tuples are O(n^2) worst case — this is the
-      oracle-parity / small-graph path, NOT the 100 TB plan.
-    * ``mode="hyperball"`` — the scale path (HyperBall, Boldi & Vigna
-      2013): each node carries a 2^log2m-register HyperLogLog sketch of
-      its in-ball B(v, t); one synchronous round unions every node's
-      sketch with its in-neighbors' (register-wise max), and the harmonic
-      sum accumulates (|B(v,t)| - |B(v,t-1)|) / t from the HLL estimates.
-      Registers are held SPARSE as (node, idx, rho) rows — absent
-      register == 0 — so a round is one join on ``src`` plus one
-      (node, idx) max-aggregation: all built-ins, no UDF, rows bounded by
-      n * 2^log2m, and the union is the same map-side-combinable max the
-      seen-filter sketches use. Per-node state is 2^log2m registers
-      regardless of graph size — the property that lets a 10^10-node
-      host graph fit; estimates carry standard HLL error (~1.04/sqrt(m)).
-      Returns (node, harmonic_est) for every node.
-
-    Both modes lay the edge table out ONCE (repartitioned by src and
-    persisted, a layout that keeps its hash partitioning); every round
-    joins the narrow frontier/sketch table against it, and at small sizes
-    the planner broadcasts the layout once per round. Exact mode's round
-    is the one-exchange union + ``groupBy`` of ``_expand_frontiers``;
-    each round rescans the settled pairs. Round state is
-    localCheckpoint-ed with superseded blocks released
-    (``CheckpointScope``). Exact mode raises past ``max_iters`` non-empty
-    frontiers, mirroring the oracle's recursion bound; hyperball stops
-    early when no register rises.
+    The edge table is laid out ONCE (repartitioned by src and persisted,
+    a layout that keeps its hash partitioning); every round joins the
+    narrow frontier against it, and at small sizes the planner
+    broadcasts the layout once per round. A round is the one-exchange
+    union + ``groupBy`` of ``_expand_frontiers``; each round rescans the
+    settled pairs. Round state is localCheckpoint-ed with superseded
+    blocks released (``CheckpointScope``). Raises past ``max_iters``
+    non-empty frontiers, mirroring the oracle's recursion bound.
     """
-    if mode not in ("exact", "hyperball"):
-        raise ValueError(f"unknown mode {mode!r}")
     with CheckpointScope(edges.sparkSession.sparkContext) as scope:
         e = scope.persist(
             edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -782,88 +756,25 @@ def harmonic_centrality(edges: DataFrame, src: str = "src",
         nodes = (e.select(F.col("src").alias("node"))
                  .union(e.select(F.col("dst").alias("node")))
                  .distinct())
-        if mode == "exact":
-            settled = _expand_frontiers(
-                scope, e, nodes.select("node", F.col("node").alias("origin"),
-                                       F.lit(0).cast("long").alias("dist")),
-                ["origin"], "dist", max_iters, "harmonic_centrality(exact)")
-            return scope.keep(scope.ckpt(
-                settled.filter(F.col("dist") > 0)
-                .groupBy("node")
-                .agg(F.sum(F.floor(F.lit(1000000) / F.col("dist")))
-                     .cast("long").alias("harmonic_micro"),
-                     F.count(F.lit(1)).cast("long").alias("n_reachers"))))
-        return scope.keep(_hyperball(scope, e, nodes, max_iters, log2m,
-                                     seed))
-
-
-def _hyperball(scope, e, nodes, max_iters, log2m, seed):
-    """The ``mode="hyperball"`` rounds of ``harmonic_centrality``; returns
-    the checkpointed (node, harmonic_est) table."""
-    m = 1 << log2m
-    if m >= 128:
-        alpha = 0.7213 / (1.0 + 1.079 / m)
-    else:
-        alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213)
-    h = F.xxhash64(F.col("node"), F.lit(seed))
-    idx = h.bitwiseAND(F.lit(m - 1)).cast("int")
-    # 48 uniform bits above the index; rho = trailing zeros + 1 (the
-    # lowest set bit w & -w is an exact power of two < 2^53, so log2 of
-    # its double is exact)
-    w = F.shiftright(h, log2m).bitwiseAND(F.lit((1 << 48) - 1))
-    rho = (F.when(w == 0, F.lit(49))
-           .otherwise(F.log2((w.bitwiseAND(-w)).cast("double"))
-                      .cast("int") + 1)).cast("int")
-
-    def estimate(regs: DataFrame) -> DataFrame:
-        per = regs.groupBy("node").agg(
-            F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("s_present"),
-            F.count(F.lit(1)).alias("c_present"))
-        z = F.col("s_present") + (F.lit(float(m)) - F.col("c_present"))
-        raw = F.lit(alpha * m * m) / z
-        v_zero = F.lit(float(m)) - F.col("c_present")
-        est = F.when((raw <= 2.5 * m) & (v_zero > 0),
-                     F.lit(float(m)) * F.log(F.lit(float(m)) / v_zero)
-                     ).otherwise(raw)
-        return per.select("node", est.alias("est"))
-
-    regs = scope.ckpt(nodes.select("node", idx.alias("idx"),
-                                   rho.alias("rho")))
-    acc = scope.ckpt(estimate(regs).select(
-        "node", F.lit(0.0).alias("h"), F.col("est").alias("prev_est")))
-    for t in range(1, max_iters + 1):
-        nbr = (e.join(regs.select(F.col("node").alias("src"),
-                                  "idx", "rho"), "src")
-               .select(F.col("dst").alias("node"), "idx", "rho"))
-        merged = scope.ckpt(regs.unionByName(nbr)
-                            .groupBy("node", "idx")
-                            .agg(F.max("rho").alias("rho")))
-        changed = (merged.alias("m")
-                   .join(regs.alias("r"), ["node", "idx"], "left")
-                   .filter(F.col("r.rho").isNull()
-                           | (F.col("m.rho") > F.col("r.rho"))))
-        if changed.isEmpty():
-            break
-        new_acc = (acc.join(estimate(merged), "node")
-                   .select("node",
-                           (F.col("h")
-                            + F.greatest(F.col("est") - F.col("prev_est"),
-                                         F.lit(0.0)) / F.lit(float(t)))
-                           .alias("h"),
-                           F.col("est").alias("prev_est")))
-        # the (regs, acc) generation is superseded together
-        acc = scope.ckpt(new_acc, replaces=(regs, acc))
-        regs = merged
-    return scope.ckpt(acc.select("node", F.col("h").alias("harmonic_est")))
+        settled = _expand_frontiers(
+            scope, e, nodes.select("node", F.col("node").alias("origin"),
+                                   F.lit(0).cast("long").alias("dist")),
+            ["origin"], "dist", max_iters, "harmonic_centrality")
+        return scope.keep(scope.ckpt(
+            settled.filter(F.col("dist") > 0)
+            .groupBy("node")
+            .agg(F.sum(F.floor(F.lit(1000000) / F.col("dist")))
+                 .cast("long").alias("harmonic_micro"),
+                 F.count(F.lit(1)).cast("long").alias("n_reachers"))))
 
 
 def degree_powerlaw(edges: DataFrame, src: str = "src", dst: str = "dst",
-                    direction: str = "out", d_min: int = 1,
-                    dedup_edges: bool = True) -> DataFrame:
-    """Degree-distribution audit for a link graph: the full degree
-    histogram with exact integer CCDF plus the Hill (1975) MLE of the
-    power-law tail exponent, alpha = 1 + n / sum ln(d_i / d_min) over
-    nodes with d_i >= d_min — the web-graph sanity check (in/out degrees
+                    d_min: int = 1) -> DataFrame:
+    """Out-degree-distribution audit for a link graph (multi-edges
+    collapse first): the full degree histogram with exact integer CCDF
+    plus the Hill (1975) MLE of the power-law tail exponent,
+    alpha = 1 + n / sum ln(d_i / d_min) over nodes with d_i >= d_min —
+    the web-graph sanity check (in/out degrees
     are famously Zipfian, alpha ~ 2.1/2.7 for the web) and the input to
     skew planning: the histogram IS the evidence for whether a
     hot-host/hot-digest key needs salting, and alpha says how bad the
@@ -881,11 +792,9 @@ def degree_powerlaw(edges: DataFrame, src: str = "src", dst: str = "dst",
     scale), not by nodes; the Hill sum is a 1-row broadcast aggregate
     over the degree table. Nothing row-scale is sorted.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if dedup_edges:
-        e = e.distinct()
-    deg = (e.groupBy(F.col("src" if direction == "out" else "dst")
-                     .alias("node"))
+    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+         .distinct())
+    deg = (e.groupBy(F.col("src").alias("node"))
            .agg(F.count(F.lit(1)).cast("long").alias("degree")))
     hist = (deg.groupBy("degree")
             .agg(F.count(F.lit(1)).cast("long").alias("n_nodes")))

@@ -34,8 +34,7 @@ __all__ = ["budget_waterfill", "trap_templates", "recrawl_change_rates",
 
 def budget_waterfill(demands: DataFrame, budget: int,
                      host_col: str = "host",
-                     demand_col: str = "demand",
-                     group_col: "str | None" = None) -> DataFrame:
+                     demand_col: str = "demand") -> DataFrame:
     """Max-min fair integer allocation of ``budget`` fetch slots across
     hosts with pending-URL ``demand``: find the water level L such that
     ``sum(min(demand, L))`` exhausts the budget; hosts below the level
@@ -46,9 +45,7 @@ def budget_waterfill(demands: DataFrame, budget: int,
     Returns (host, demand, allocated) with the invariants
     ``allocated <= demand``, ``sum(allocated) == min(budget,
     sum(demand))``, and no satisfied host ever receives less than an
-    unsatisfied one.  With ``group_col``, the same waterfill runs
-    independently per group with ``budget`` slots EACH (the per-steward-
-    batch form), and the group column is carried in the output.
+    unsatisfied one.
 
     Pure integer window algebra: rank hosts by (demand, host), prefix-sum
     the demands, pick the largest rank k whose demand could be granted to
@@ -56,27 +53,22 @@ def budget_waterfill(demands: DataFrame, budget: int,
     B``); the 1-row (k, prefix[k], n) aggregate is broadcast back and the
     allocation is a closed-form expression per row.
 
-    100 TB shape: ungrouped, the ranking window is a single-task global
-    sort — DELIBERATE and bounded: the input is the per-HOST demand
-    table (10^4-10^6 rows of 3 narrow columns at a 10^10-URL frontier,
-    the same class as the steward pick and ``frontier_priority``'s
-    global oracle variant), never URL-cardinality data.  When even that
-    bound is unwanted, ``group_col`` (steward batch / politeness group)
-    partitions every window and the scalar aggregate by group — no
-    global sort anywhere, one narrow (group, host, demand) shuffle.
+    100 TB shape: the ranking window is a single-task global sort —
+    DELIBERATE and bounded: the input is the per-HOST demand table
+    (10^4-10^6 rows of 3 narrow columns at a 10^10-URL frontier, the same
+    class as the steward pick and ``frontier_priority``'s global oracle
+    variant), never URL-cardinality data.
     """
-    gcols = [group_col] if group_col else []
-    d = demands.select(*gcols,
-                       F.col(host_col).alias("host"),
+    d = demands.select(F.col(host_col).alias("host"),
                        F.col(demand_col).cast("long").alias("demand"))
-    w = Window.partitionBy(*gcols).orderBy("demand", "host")
+    w = Window.orderBy("demand", "host")
     # materialize the ranked demand table once: the 1-row level aggregate
     # AND the final allocation projection both consume it — without the
     # checkpoint the broadcast subtree re-executes the caller's whole
     # upstream demand pipeline a second time. Host-cardinality rows, so
     # the materialization is bounded at any corpus scale.
     ranked = d.select(
-        *gcols, "host", "demand",
+        "host", "demand",
         F.row_number().over(w).alias("rn"),
         F.sum("demand").over(w).alias("prefix"),
     ).localCheckpoint(eager=True)
@@ -84,22 +76,17 @@ def budget_waterfill(demands: DataFrame, budget: int,
     # largest k with prefix[k-1] + d[k] * (n - k + 1) <= B  (the level
     # test: grant host k's full demand to it and every larger host)
     okd = (ranked
-           .withColumn("n", F.max("rn").over(Window.partitionBy(*gcols)))
+           .withColumn("n", F.max("rn").over(Window.partitionBy()))
            .withColumn(
                "ok",
                (F.col("prefix") - F.col("demand")
                 + F.col("demand") * (F.col("n") - F.col("rn") + 1)) <= b))
-    aggs = [F.max(F.when(F.col("ok"), F.col("rn"))
-                  .otherwise(0)).alias("k"),
-            F.max(F.when(F.col("ok"), F.col("prefix"))
-                  .otherwise(0)).alias("pk"),
-            F.max("rn").alias("n")]
-    if gcols:
-        scalar = okd.groupBy(*gcols).agg(*aggs)
-        out = ranked.join(F.broadcast(scalar), gcols)
-    else:
-        scalar = okd.agg(*aggs)
-        out = ranked.crossJoin(F.broadcast(scalar))
+    scalar = okd.agg(
+        F.max(F.when(F.col("ok"), F.col("rn")).otherwise(0)).alias("k"),
+        F.max(F.when(F.col("ok"), F.col("prefix")).otherwise(0))
+        .alias("pk"),
+        F.max("rn").alias("n"))
+    out = ranked.crossJoin(F.broadcast(scalar))
     rem_hosts = F.col("n") - F.col("k")
     leftover = b - F.col("pk")
     # greatest(...,1) guards the k == n (everyone satisfied) case: the
@@ -111,7 +98,7 @@ def budget_waterfill(demands: DataFrame, budget: int,
              .otherwise(level
                         + F.when(F.col("rn") - F.col("k") <= extra, 1)
                         .otherwise(0)))
-    return (out.select(*gcols, "host", "demand",
+    return (out.select("host", "demand",
                        alloc.cast("long").alias("allocated")))
 
 

@@ -84,25 +84,20 @@ def cms_estimate(counters: DataFrame, keys: DataFrame, key_col: str,
 
 
 def cms_heavy_hitters(df: DataFrame, key_col: str, threshold: int,
-                      depth: int = 4, width: int = 1024, seed: int = 42,
-                      candidates: "DataFrame | None" = None) -> DataFrame:
+                      depth: int = 4, width: int = 1024,
+                      seed: int = 42) -> DataFrame:
     """Keys whose sketch estimate reaches ``threshold``, with the exact
     count alongside: (key, est, exact, overcount).  ``est >= exact``
     always (CMS error is one-sided), so the report can never MISS a true
     heavy hitter — only audit a few false candidates, each exposed by
     its ``overcount``.
 
-    ``candidates`` is the table of keys worth point-querying; it
-    defaults to ``df`` itself (distinct over the full input — fine up to
-    ~10^7 keys).  At a 10^10-URL frontier pass the bounded table the
-    pipeline already maintains (the steward schedule's hosts) so neither
-    the estimate nor the exact audit ever shuffles full key cardinality;
-    only the counter build touches every row, and it exchanges counters,
-    not keys.  Two scans of ``df`` total: the counter build, and the
-    exact audit filtered to sketch-flagged candidates."""
+    The point-queried keys are the distinct keys of ``df`` (fine up to
+    ~10^7 keys); the counter build exchanges counters, not keys.  Two
+    scans of ``df`` total: the counter build, and the exact audit
+    filtered to sketch-flagged candidates."""
     counters = cms_counters(df, key_col, depth, width, seed)
-    est = cms_estimate(counters, candidates if candidates is not None
-                       else df, key_col, depth, width, seed)
+    est = cms_estimate(counters, df, key_col, depth, width, seed)
     hot = est.filter(F.col("est") >= threshold)
     exact = (df.join(F.broadcast(hot.select(key_col)), key_col, "semi")
              .groupBy(key_col).agg(F.count(F.lit(1)).alias("exact")))

@@ -6,8 +6,8 @@ behind one politeness group (govcms/README.md:15-17). The engine serializes
 those at the *scheduling* level (group lock), but at the *data* level a hot
 host still concentrates its URLs in one hash partition. ``salt_repartition``
 splits a hot key across ``salt_n`` partitions deterministically;
-``unsalted`` aggregations then need one extra partial-merge step, which
-Spark's partial aggregation already provides.
+aggregations over the salted layout then need one extra partial-merge
+step, which Spark's partial aggregation already provides.
 
 AQE's skew-join splitting handles the join case adaptively; explicit
 salting is for aggregations/windows over a skewed key and for engines
@@ -37,22 +37,3 @@ def salt_repartition(df: DataFrame, hot_key: str, spread_col: str,
         salt = F.when(F.col(hot_key).isin(hot_keys), salt).otherwise(F.lit(0))
     out = df.withColumn("__salt", salt)
     return out.repartition(F.col(hot_key), F.col("__salt"))
-
-
-def salted_count(df: DataFrame, hot_key: str, spread_col: str,
-                 salt_n: int = 16) -> DataFrame:
-    """Two-phase count over a skewed key: partial count per (key, salt),
-    then merge — the manual form of map-side combine for operators that
-    lack it (e.g. exact distinct over a hot key)."""
-    partial = (df.withColumn("__salt", salt_col(F.col(spread_col), salt_n))
-               .groupBy(hot_key, "__salt")
-               .agg(F.count(F.lit(1)).alias("__n")))
-    return partial.groupBy(hot_key).agg(F.sum("__n").alias("n"))
-
-
-def partition_sizes(df: DataFrame) -> list:
-    """Rows per partition — the straggler check (SURVEY §5 skew test:
-    no partition > 4x median)."""
-    rows = (df.withColumn("__pid", F.spark_partition_id())
-            .groupBy("__pid").count().collect())
-    return sorted(r["count"] for r in rows)

@@ -86,14 +86,11 @@ def quality_score(df: DataFrame, text_col: str, id_col: str,
 
 
 def domain_quality_gate(df: DataFrame, text_col: str, id_col: str,
-                        domain_col: str,
-                        min_avg_quality: "float | None" = None,
-                        top_k: "int | None" = None) -> DataFrame:
+                        domain_col: str, top_k: int) -> DataFrame:
     """Domain-level quality gating (the FineWeb/C4 'bad domain' filter):
     score every document, aggregate the mean score per domain, and keep
-    documents from domains that clear the gate — either an absolute
-    ``min_avg_quality`` threshold or the ``top_k`` domains ranked by
-    (mean quality desc, domain asc) (deterministic tie-break).
+    documents from the ``top_k`` domains ranked by (mean quality desc,
+    domain asc) (deterministic tie-break).
 
     Scale shape: one narrow (domain, quality) shuffle with map-side
     partial aggregation builds the domain table — domains are orders of
@@ -105,19 +102,14 @@ def domain_quality_gate(df: DataFrame, text_col: str, id_col: str,
     sides of the plan is a re-scan of pruned columns, not cached python
     work. Domain means round to 4dp before the gate so the keep-set is
     stable under aggregation order."""
-    if (min_avg_quality is None) == (top_k is None):
-        raise ValueError("exactly one of min_avg_quality / top_k required")
     scored = quality_score(df, text_col, id_col, keep_cols=[domain_col]) \
         .select(id_col, domain_col, "quality")
     dom = (scored.groupBy(domain_col)
            .agg(F.round(F.avg("quality"), 4).alias("domain_quality"),
                 F.count(F.lit(1)).alias("domain_docs")))
-    if top_k is not None:
-        w = Window.orderBy(F.col("domain_quality").desc(), F.col(domain_col))
-        good = (dom.withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= top_k).drop("rnk"))
-    else:
-        good = dom.filter(F.col("domain_quality") >= min_avg_quality)
+    w = Window.orderBy(F.col("domain_quality").desc(), F.col(domain_col))
+    good = (dom.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= top_k).drop("rnk"))
     return scored.join(F.broadcast(good), domain_col).select(
         id_col, domain_col, "quality", "domain_quality", "domain_docs")
 
@@ -278,8 +270,7 @@ def _segment_lines(df: DataFrame, cols: list, t, segmenter: str,
 
 
 def lm_perplexity(df: DataFrame, text_col: str, id_col: str,
-                  ref_df: "DataFrame | None" = None,
-                  approx: bool = False) -> DataFrame:
+                  ref_df: DataFrame) -> DataFrame:
     """CCNet-style language-model quality bucketing: score every document
     by unigram cross-entropy under an add-one-smoothed LM trained on a
     reference corpus, then split the corpus into ``head`` / ``middle`` /
@@ -289,8 +280,8 @@ def lm_perplexity(df: DataFrame, text_col: str, id_col: str,
 
     Returns (id, n_tokens, cross_entropy, perplexity, bucket).
 
-    * LM: p(tok) = (cnt + 1) / (T + V + 1) over ``ref_df`` (defaults to
-      ``df`` itself); unseen tokens get the floor 1 / (T + V + 1).
+    * LM: p(tok) = (cnt + 1) / (T + V + 1) over ``ref_df``; unseen
+      tokens get the floor 1 / (T + V + 1).
     * cross_entropy = -mean log p (nats), rounded 6dp; empty docs → 0.
     * buckets: exact tertile cut points of the rounded cross-entropy
       (lower = more fluent = head).
@@ -300,12 +291,10 @@ def lm_perplexity(df: DataFrame, text_col: str, id_col: str,
     broadcast, and aggregates (id, Σlog p, n) with map-side combine — one
     narrow exchange. T/V and the tertile cut points ride in as broadcast
     1-row aggregates (no driver collect). The exact percentile gathers the
-    per-doc entropy column onto one reducer — fine to ~10^8 docs; pass
-    ``approx=True`` at 10^9+ to use ``approx_percentile`` (t-digest,
-    fully distributed) at the cost of oracle-exactness of the cut points.
+    per-doc entropy column onto one reducer — fine to ~10^8 docs.
     """
-    ref = ref_df if ref_df is not None else df
-    counts = (ref.select(F.explode(_ws_tokens(F.col(text_col))).alias("tok"))
+    counts = (ref_df
+              .select(F.explode(_ws_tokens(F.col(text_col))).alias("tok"))
               .groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")))
     tv = counts.agg(F.sum("cnt").alias("_t"),
                     F.count(F.lit(1)).alias("_v"))
@@ -328,9 +317,8 @@ def lm_perplexity(df: DataFrame, text_col: str, id_col: str,
                            F.lit(0.0)), 6)
     per_doc = per_doc.select(F.col(id_col), F.col("n_tokens"),
                              h.alias("cross_entropy"))
-    pct = (F.approx_percentile if approx else F.percentile)
     cuts = per_doc.agg(
-        pct(F.col("cross_entropy"),
+        F.percentile(F.col("cross_entropy"),
             F.lit([0.3333333333333333, 0.6666666666666666])).alias("_q"))
     bucket = (F.when(F.col("cross_entropy") <= F.col("_q")[0], "head")
               .when(F.col("cross_entropy") <= F.col("_q")[1], "middle")
@@ -354,8 +342,7 @@ def _hash_bucket(col, buckets: int):
 
 def dsir_importance(df: DataFrame, text_col: str, id_col: str,
                     target_filter, buckets: int = 4096,
-                    keep_frac: float = 0.3,
-                    approx: bool = False) -> DataFrame:
+                    keep_frac: float = 0.3) -> DataFrame:
     """DSIR-style importance resampling (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every raw
     document by how target-like its hashed n-gram profile is, and keep the
@@ -381,9 +368,8 @@ def dsir_importance(df: DataFrame, text_col: str, id_col: str,
     log-ratio table; the document side explodes features, probes the
     broadcast, and aggregates (id, Σ, count) with map-side combine — one
     narrow exchange over (id, bucket) pairs, nothing wider than the
-    corpus' token stream. The quantile gathers one double column; pass
-    ``approx=True`` at 10^9+ docs for a t-digest cut (loses oracle
-    exactness of the boundary)."""
+    corpus' token stream. The exact quantile gathers one double column
+    onto one reducer."""
     toks = _ws_tokens(F.col(text_col))
     bigr = F.when(
         F.size(toks) >= 2,
@@ -417,9 +403,8 @@ def dsir_importance(df: DataFrame, text_col: str, id_col: str,
                     F.round(F.coalesce(
                         F.sum(F.when(F.col("b").isNotNull(), F.col("lr"))),
                         F.lit(0.0)), 6).alias("log_weight")))
-    pct = (F.approx_percentile if approx else F.percentile)
-    cut = per_doc.agg(pct(F.col("log_weight"),
-                          F.lit(1.0 - keep_frac)).alias("_c"))
+    cut = per_doc.agg(F.percentile(F.col("log_weight"),
+                                   F.lit(1.0 - keep_frac)).alias("_c"))
     return (per_doc.crossJoin(F.broadcast(cut))
             .select(id_col, "n_feats", "log_weight",
                     (F.col("log_weight") >= F.col("_c")).alias("keep")))
@@ -745,9 +730,7 @@ def fingerprints(df: DataFrame, text_col: str, id_col: str,
 
 def fingerprint_overlap_pairs(df: DataFrame, text_col: str, id_col: str,
                               min_shared: int = 2,
-                              max_df: int = 10,
-                              sketch_partitions: "int | None" = None
-                              ) -> DataFrame:
+                              max_df: int = 10) -> DataFrame:
     """Copy-detection join: explode fingerprints, self-join on hash, count
     shared hashes per pair — the scalable (inverted-index) form.
 
@@ -774,17 +757,11 @@ def fingerprint_overlap_pairs(df: DataFrame, text_col: str, id_col: str,
     generation is repartitioned up front so a narrow input cannot pin
     the md5 work to a few cores — a single-row-group parquet file is
     unsplittable, so the work would otherwise run on ONE core no
-    matter the cluster. The repartition is unconditional with an
-    explicit ``sketch_partitions`` (default: cluster parallelism): the
-    previous ``rdd.getNumPartitions()`` width probe forced a driver-side
-    RDD conversion of the logical plan on every invocation (ADVICE r5);
-    a caller whose scan is already wide passes ``sketch_partitions=0``
-    to skip the exchange entirely."""
-    sc = df.sparkSession.sparkContext
-    if sketch_partitions is None:
-        sketch_partitions = sc.defaultParallelism
-    if sketch_partitions:
-        df = df.repartition(sketch_partitions)
+    matter the cluster. The repartition to cluster parallelism is
+    unconditional: a ``rdd.getNumPartitions()`` width probe would force a
+    driver-side RDD conversion of the logical plan on every invocation
+    (ADVICE r5)."""
+    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     fps = fingerprints(df, text_col, id_col).localCheckpoint(eager=True)
     ex = fps.select(F.col(id_col), F.explode("fingerprint").alias("h"))
     rare = (ex.groupBy("h").agg(F.count(F.lit(1)).alias("df_"))
@@ -1701,8 +1678,8 @@ def quality_percentile_gate(df: DataFrame, group_col: str, id_col: str,
 
 
 def temperature_mix(df: DataFrame, lang_col: str, id_col: str,
-                    budget: int, alpha: float = 0.7, seed: int = 42,
-                    exact: bool = True) -> DataFrame:
+                    budget: int, alpha: float = 0.7,
+                    seed: int = 42) -> DataFrame:
     """Temperature-based multilingual sampling (mBERT / XLM-R §3.1; the
     standard fix for "English swamps everything and tail languages
     starve"): with corpus shares p_l = n_l / N, a language's target count
@@ -1715,21 +1692,12 @@ def temperature_mix(df: DataFrame, lang_col: str, id_col: str,
     re-visiting tail docs across epochs — an epoch scheduler's job, not
     a corpus selector's).
 
-    Two selection strategies behind the same target counts:
-
-    * ``exact=True`` — rank docs inside each language by md5(seed|id)
-      (the stratified_sample idiom: reproducible across retries,
-      repartitions, cluster sizes; ties impossible) and keep the first
-      target_l. One shuffle on lang; per-language work bounded by the
-      language's own size, with the same salted two-phase remedy
-      stratified_sample documents if one language outgrows a task.
-    * ``exact=False`` — the 10^10-row path: hash-threshold selection
-      (first 8 md5 hex chars of (seed|id) as a u32, selected iff
-      < floor(2^32 * target_l / n_l) — an INTEGER compare, no float
-      draw). Pure projection + one broadcast join of the tiny per-lang
-      threshold table: NO per-language sort anywhere, at the price of
-      Binomial(n_l, target_l/n_l) count noise; rk is then the selection
-      hash's rank surrogate (the u32 itself) rather than a dense rank.
+    Selection ranks docs inside each language by md5(seed|id) (the
+    stratified_sample idiom: reproducible across retries, repartitions,
+    cluster sizes; ties impossible) and keeps the first target_l. One
+    shuffle on lang; per-language work bounded by the language's own
+    size, with the same salted two-phase remedy stratified_sample
+    documents if one language outgrows a task.
 
     Per-language targets are tiny-table math (few hundred languages):
     two 1-row broadcast scalars (N, sum q_l) and one floor at the end;
@@ -1752,27 +1720,14 @@ def temperature_mix(df: DataFrame, lang_col: str, id_col: str,
            .select("lang", "n_l",
                    F.floor(F.lit(int(budget)) * F.col("q_l") / F.col("z"))
                    .cast("long").alias("target")))
-    if exact:
-        key = F.md5(F.concat_ws(
-            "|", F.lit(str(seed)), F.col(id_col).cast("string")))
-        w = Window.partitionBy(lang_col).orderBy(key, F.col(id_col))
-        ranked = df.select(F.col(id_col), F.col(lang_col),
-                           F.row_number().over(w).cast("long").alias("rk"))
-        tt = tgt.select(F.col("lang").alias("__lang"), "target")
-        return (ranked.join(F.broadcast(tt),
-                            ranked[lang_col] == tt["__lang"])
-                .filter(F.col("rk") <= F.col("target"))
-                .select(F.col(id_col), F.col(lang_col), "rk"))
-    h = F.conv(F.substring(
-        F.md5(F.concat_ws("|", F.lit(str(seed)),
-                          F.col(id_col).cast("string"))), 1, 8),
-        16, 10).cast("bigint")
-    thr = (F.floor(F.lit(float(1 << 32)) * F.col("target") / F.col("n_l"))
-           .cast("long").alias("thr"))
-    tt = tgt.select(F.col("lang").alias("__lang"), thr)
-    sel = df.select(F.col(id_col), F.col(lang_col), h.alias("rk"))
-    return (sel.join(F.broadcast(tt), sel[lang_col] == tt["__lang"])
-            .filter(F.col("rk") < F.col("thr"))
+    key = F.md5(F.concat_ws(
+        "|", F.lit(str(seed)), F.col(id_col).cast("string")))
+    w = Window.partitionBy(lang_col).orderBy(key, F.col(id_col))
+    ranked = df.select(F.col(id_col), F.col(lang_col),
+                       F.row_number().over(w).cast("long").alias("rk"))
+    tt = tgt.select(F.col("lang").alias("__lang"), "target")
+    return (ranked.join(F.broadcast(tt), ranked[lang_col] == tt["__lang"])
+            .filter(F.col("rk") <= F.col("target"))
             .select(F.col(id_col), F.col(lang_col), "rk"))
 
 

@@ -470,7 +470,7 @@ def degree_powerlaw_q(spark, sf):
     edges = (e.select((F.col("user_id") % 200).alias("src"),
                       (F.col("event_id") % 200).alias("dst"))
              .filter(F.col("src") != F.col("dst")))
-    return graph.degree_powerlaw(edges, direction="out", d_min=1)
+    return graph.degree_powerlaw(edges, d_min=1)
 
 
 @q("temperature_mix", """
@@ -493,12 +493,10 @@ def temperature_mix_q(spark, sf):
     md5-rank inside each language. alpha is 0.5 HERE so the weight math
     is IEEE-exact in both engines (sqrt and / are correctly-rounded by
     the standard; pow(x, 0.7) is implementation-defined in the last ulp
-    and feeds a floor) — the operator takes any alpha; the scale path
-    (exact=False) swaps the per-lang rank for an integer hash-threshold
-    projection."""
+    and feeds a floor) — the operator takes any alpha."""
     d = _t(spark, sf, "documents")
     return textstats.temperature_mix(d, "lang", "doc_id", budget=200,
-                                     alpha=0.5, seed=42, exact=True)
+                                     alpha=0.5, seed=42)
 
 
 _PSL2_SQL = ", ".join(f"'{s}'" for s in cf.PSL2)
@@ -679,8 +677,8 @@ FROM ranked WHERE rn = 1
 GROUP BY doc_id
 """)
 def dedup_passages(spark, sf):
-    # CCNet-style passage-level exact dedup (32-token blocks; the corpus is
-    # newline-free, so fixed blocks are the non-degenerate segmenter): keep
+    # CCNet-style passage-level exact dedup (32-token blocks, the rule
+    # that stays non-degenerate on this newline-free corpus): keep
     # each passage's first (doc_id, idx) occurrence corpus-wide, rebuild
     # docs from surviving passages. Oracle mirrors the winner rule as a
     # row_number()=1 window; the engine elects winners with an algebraic
@@ -2857,8 +2855,8 @@ def c4_line_filter_q(spark, sf):
     have no newline/punctuation structure, so the driver query uses the
     fixed-12-token segmenter with the word-count + javascript + page
     rules (the terminal-punctuation rule is exercised in the unit tests
-    on crafted lines instead — same honest degradation as
-    passage_dedup's segmenter)."""
+    on crafted lines instead — the same fixed-block rule passage_dedup
+    runs)."""
     d = _t(spark, sf, "documents")
     # mirror the oracle's lowercased tokenization so segments compare
     # byte-identically (the operator segments the raw column)
@@ -3158,10 +3156,8 @@ def harmonic_centrality_q(spark, sf):
     link_bfs_depth, in exact per-term fixed point (floor(1e6/d) summed
     as integers, order-free). The oracle unrolls the all-pairs shortest
     distances with a bounded recursive CTE (d < 62 mirrors the
-    operator's max_iters=63 raise bound); the operator's exact mode is
-    the pair-frontier BFS, and its hyperball mode (pytest-parity, HLL
-    error bars) is the register-sketch path a 10^10-node host graph
-    actually runs."""
+    operator's max_iters=63 raise bound); the operator is the
+    pair-frontier BFS, an O(n^2)-pair small-graph path."""
     e = _t(spark, sf, "events")
     edges = (e.select((F.col("user_id") % 200).alias("src"),
                       (F.col("event_id") % 200).alias("dst"),
@@ -3169,7 +3165,7 @@ def harmonic_centrality_q(spark, sf):
                       .alias("__k"))
              .filter((F.col("src") != F.col("dst")) & (F.col("__k") == 0))
              .drop("__k"))
-    return graph.harmonic_centrality(edges, max_iters=63, mode="exact")
+    return graph.harmonic_centrality(edges, max_iters=63)
 
 
 @q("link_trustrank", _trustrank_oracle_sql())
